@@ -408,9 +408,9 @@ def _rewrite_version(envelope: dict, validated_with: str) -> None:
 
 
 def _check_event(reg: SchemaRegistry, strict: bool, ue_json, co_json, derived):
-    """Per-event validation core, shared by the Arrow-batched and
-    row-at-a-time UDF wrappers. Returns (errors, ue_json, co_json, vinfo)
-    and NEVER throws (hostile JSON → an `sdj` error entry)."""
+    """Per-event validation core of the Arrow-batched UDF. Returns
+    (errors, ue_json, co_json, vinfo) and NEVER throws (hostile JSON →
+    an `sdj` error entry)."""
     errs: list[str] = []
     vinfo: list[dict] = []
     new_ue, new_co = ue_json, co_json
@@ -456,8 +456,7 @@ def _check_event(reg: SchemaRegistry, strict: bool, ue_json, co_json, derived):
     return (errs, new_ue, new_co, vinfo or None)
 
 
-def validate_sdjs(df: DataFrame, registry: SchemaRegistry, strict: bool = False,
-                  batched: bool = True) -> DataFrame:
+def validate_sdjs(df: DataFrame, registry: SchemaRegistry, strict: bool = False) -> DataFrame:
     """Validate ue_json / co_json inputs and the derived contexts
     (EnrichmentManager phases 1 + 3). Appends failures to ``_errors``.
 
@@ -467,25 +466,19 @@ def validate_sdjs(df: DataFrame, registry: SchemaRegistry, strict: bool = False,
     ``validation_info`` context recording (originalSchema, validatedWith)
     joins the derived contexts.
 
-    batched=True (default) validates via an Arrow-batched pandas UDF —
-    this stage touches 100% of events when Iglu is configured, and the
-    win is the same JVM↔Python amortization measured on the thrift
-    decoder (loaders/thrift.py:230). batched=False keeps the
-    row-at-a-time F.udf as an Arrow-less fallback."""
+    Validation runs as an Arrow-batched pandas UDF — this stage touches
+    100% of events when Iglu is configured, and the win is the same
+    JVM↔Python amortization measured on the thrift decoder
+    (loaders/thrift.py)."""
     reg = registry  # captured in closure → shipped once per executor
 
-    if batched:
-        @F.pandas_udf(_VALIDATE_RESULT)
-        def check(ue: pd.Series, co: pd.Series, derived: pd.Series) -> pd.DataFrame:
-            return pd.DataFrame(
-                [_check_event(reg, strict, u, c, d)
-                 for u, c, d in zip(ue, co, derived)],
-                columns=["errors", "ue_json", "co_json", "vinfo"],
-            )
-    else:
-        @F.udf(returnType=_VALIDATE_RESULT)
-        def check(ue_json, co_json, derived):
-            return _check_event(reg, strict, ue_json, co_json, derived)
+    @F.pandas_udf(_VALIDATE_RESULT)
+    def check(ue: pd.Series, co: pd.Series, derived: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [_check_event(reg, strict, u, c, d)
+             for u, c, d in zip(ue, co, derived)],
+            columns=["errors", "ue_json", "co_json", "vinfo"],
+        )
 
     derived_col = F.col("_derived") if "_derived" in df.columns else F.lit(None).cast(
         "array<struct<schema:string,data:string>>"

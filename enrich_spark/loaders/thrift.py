@@ -228,8 +228,6 @@ def _decode_row(data):
     )
 
 
-_decode_udf = F.udf(_decode_row, PAYLOAD_SCHEMA)
-
 _PAYLOAD_COLS = [f.name for f in PAYLOAD_SCHEMA.fields]
 
 
@@ -258,16 +256,10 @@ def _make_arrow_decoder():
 _decode_udf_arrow = _make_arrow_decoder()
 
 
-def load_thrift(df: DataFrame, bytes_col: str = "value",
-                batched: bool = True) -> DataFrame:
-    """BINARY column → CollectorPayload columns (+ loader_error).
-
-    batched=True (default) decodes via an Arrow-batched pandas UDF;
-    batched=False keeps the row-at-a-time F.udf (kept for comparison and
-    as a fallback where Arrow is unavailable).
-    """
-    udf = _decode_udf_arrow if batched else _decode_udf
-    decoded = df.withColumn("_payload", udf(F.col(bytes_col)))
+def load_thrift(df: DataFrame, bytes_col: str = "value") -> DataFrame:
+    """BINARY column → CollectorPayload columns (+ loader_error), decoded
+    by an Arrow-batched pandas UDF."""
+    decoded = df.withColumn("_payload", _decode_udf_arrow(F.col(bytes_col)))
     return decoded.select("*", "_payload.*").drop("_payload", bytes_col)
 
 

@@ -55,7 +55,7 @@ _RESULT = T.ArrayType(
 
 
 def _infer_row(by_schema, ue_json, co_json):
-    """Per-event spec match, shared by the Arrow-batched and row UDFs."""
+    """Per-event spec match — the per-row core of the Arrow-batched UDF."""
     try:
         ue_schema = None
         if ue_json:
@@ -100,24 +100,18 @@ def _infer_row(by_schema, ue_json, co_json):
         return []
 
 
-def event_spec_contexts(df: DataFrame, conf: EventSpecConf,
-                        batched: bool = True) -> DataFrame:
+def event_spec_contexts(df: DataFrame, conf: EventSpecConf) -> DataFrame:
     df = ensure_derived(df)
     # compile: event_schema -> [spec...]; shipped in the UDF closure (broadcast)
     by_schema: dict[str | None, list[EventSpec]] = {}
     for s in conf.specs:
         by_schema.setdefault(s.event_schema, []).append(s)
 
-    if batched:
-        # Arrow-batched: one Python invocation per ~10k-row batch — same
-        # amortization as the thrift decoder (loaders/thrift.py:230)
-        @F.pandas_udf(_RESULT)
-        def infer(ue: pd.Series, co: pd.Series) -> pd.Series:
-            return pd.Series([_infer_row(by_schema, u, c) for u, c in zip(ue, co)])
-    else:
-        @F.udf(returnType=_RESULT)
-        def infer(ue_json, co_json):
-            return _infer_row(by_schema, ue_json, co_json)
+    # Arrow-batched: one Python invocation per ~10k-row batch — same
+    # amortization as the thrift decoder (loaders/thrift.py)
+    @F.pandas_udf(_RESULT)
+    def infer(ue: pd.Series, co: pd.Series) -> pd.Series:
+        return pd.Series([_infer_row(by_schema, u, c) for u, c in zip(ue, co)])
 
     ctxs = infer(F.col("ue_json"), F.col("co_json"))
     return df.withColumn(

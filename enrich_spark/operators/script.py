@@ -6,8 +6,7 @@ The reference's JavaScript enrichment
 over a mutable event. Our equivalent extension surface is a Python
 callable with the same contract, executed as an Arrow-batched pandas-UDF
 stage over the mutable-field struct rendered as a dict (the whole
-per-row JSON serialization is amortized across Arrow record batches;
-``batched=False`` falls back to a row-at-a-time udf):
+per-row JSON serialization is amortized across Arrow record batches):
 
     fn(event: dict, params: dict, headers: list[str])
         -> None                      # keep, unchanged
@@ -75,8 +74,7 @@ def _escape_mut(s: str) -> str:
 
 def _script_run_one(fn, params, mutable, event_json, headers):
     """Per-event hook invocation → result tuple (drop, error, contexts,
-    replace, *mutations). Shared by the Arrow-batched and row-at-a-time
-    wrappers."""
+    replace, *mutations) — the per-row core of the Arrow-batched UDF."""
     event = json.loads(event_json) if event_json else {}
     hs = [] if headers is None else list(headers)
     nil = tuple([None] * len(mutable))
@@ -179,8 +177,7 @@ def _raw_result_to_row(res, mutable):
     return (False, None, ctxs, replace) + muts
 
 
-def script_enrichment(df: DataFrame, conf: JavascriptScriptConf,
-                      batched: bool = True) -> DataFrame:
+def script_enrichment(df: DataFrame, conf: JavascriptScriptConf) -> DataFrame:
     df = ensure_enrich_errors(ensure_derived(df))
     fn = conf.function
     params = dict(conf.params)
@@ -198,32 +195,27 @@ def script_enrichment(df: DataFrame, conf: JavascriptScriptConf,
                 "_script_replace"] + [f"_m_{c}" for c in mutable]
     batch_fn = getattr(conf, "batch_function", None)
 
-    if batched:
-        @F.pandas_udf(result_type)
-        def run(ev: pd.Series, hdr: pd.Series) -> pd.DataFrame:
-            if batch_fn is not None:
-                # JS sidecar path: the whole Arrow batch crosses the
-                # node pipe in ONE round trip
-                hs = [list(h) if h is not None else [] for h in hdr]
-                if getattr(batch_fn, "raw", False):
-                    # batch2 protocol: raw JSON strings both ways — all
-                    # per-event JSON work happens in V8, not Python
-                    rows = [_raw_result_to_row(r, mutable)
-                            for r in batch_fn(list(ev), hs)]
-                else:
-                    events = [json.loads(e) if e else {} for e in ev]
-                    rows = [
-                        _engine_result_to_row(r, e, mutable)
-                        for r, e in zip(batch_fn(events, hs), events)
-                    ]
+    @F.pandas_udf(result_type)
+    def run(ev: pd.Series, hdr: pd.Series) -> pd.DataFrame:
+        if batch_fn is not None:
+            # JS sidecar path: the whole Arrow batch crosses the
+            # node pipe in ONE round trip
+            hs = [list(h) if h is not None else [] for h in hdr]
+            if getattr(batch_fn, "raw", False):
+                # batch2 protocol: raw JSON strings both ways — all
+                # per-event JSON work happens in V8, not Python
+                rows = [_raw_result_to_row(r, mutable)
+                        for r in batch_fn(list(ev), hs)]
             else:
-                rows = [_script_run_one(fn, params, mutable, e, h)
-                        for e, h in zip(ev, hdr)]
-            return pd.DataFrame(rows, columns=out_cols)
-    else:
-        @F.udf(returnType=result_type)
-        def run(event_json, headers):
-            return _script_run_one(fn, params, mutable, event_json, headers)
+                events = [json.loads(e) if e else {} for e in ev]
+                rows = [
+                    _engine_result_to_row(r, e, mutable)
+                    for r, e in zip(batch_fn(events, hs), events)
+                ]
+        else:
+            rows = [_script_run_one(fn, params, mutable, e, h)
+                    for e, h in zip(ev, hdr)]
+        return pd.DataFrame(rows, columns=out_cols)
 
     # arbitrary user code is not provably deterministic — and marking it
     # so stops Catalyst pushing the Python stage below an upstream

@@ -422,7 +422,7 @@ def _pii_mutate_one(locators, scramble, ue_json, co_json, derived):
     """Per-event JSON mutator: hash string values addressed by (entity,
     schemaCriterion, jsonPath) locators inside ue/co/derived JSON
     (ScrambleMapFunction semantics, PiiPseudonymizerEnrichment.scala:252-387).
-    Pure function shared by the Arrow-batched and row-at-a-time wrappers."""
+    Pure per-row core of the Arrow-batched UDF."""
     import json as _json
     import re as _re
 
@@ -516,17 +516,14 @@ def _pii_mutate_one(locators, scramble, ue_json, co_json, derived):
     return (new_ue, new_co, new_derived, modified)
 
 
-def _pii_json_mutate(df: DataFrame, conf: PiiPseudonymizerConf,
-                     batched: bool = True):
+def _pii_json_mutate(df: DataFrame, conf: PiiPseudonymizerConf):
     """Hash string values addressed by (entity, schemaCriterion, jsonPath)
     locators inside ue_json / co_json / _derived. Returns (df, modified)
     where `modified` is the array column of JsonModifiedField records.
 
-    batched=True (default) runs the mutator as an Arrow-batched pandas
-    UDF — when json_fields are configured this touches every event with
-    ue/co/derived JSON, the same hot-path shape Iglu validation has
-    (functions/iglu.py:478). batched=False keeps the row-at-a-time
-    F.udf as an Arrow-less fallback."""
+    The mutator runs as an Arrow-batched pandas UDF — when json_fields
+    are configured this touches every event with ue/co/derived JSON, the
+    same hot-path shape Iglu validation has (functions/iglu.py)."""
     import hashlib
 
     locators = [
@@ -541,18 +538,13 @@ def _pii_json_mutate(df: DataFrame, conf: PiiPseudonymizerConf,
     def scramble(value: str) -> str:
         return hash_fn((salt + value).encode("utf-8")).hexdigest()
 
-    if batched:
-        @F.pandas_udf(_PII_JSON_RESULT)
-        def mutate(ue: pd.Series, co: pd.Series, derived: pd.Series) -> pd.DataFrame:
-            return pd.DataFrame(
-                [_pii_mutate_one(locators, scramble, u, c, d)
-                 for u, c, d in zip(ue, co, derived)],
-                columns=["ue_json", "co_json", "derived", "modified"],
-            )
-    else:
-        @F.udf(returnType=_PII_JSON_RESULT)
-        def mutate(ue_json, co_json, derived):
-            return _pii_mutate_one(locators, scramble, ue_json, co_json, derived)
+    @F.pandas_udf(_PII_JSON_RESULT)
+    def mutate(ue: pd.Series, co: pd.Series, derived: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [_pii_mutate_one(locators, scramble, u, c, d)
+             for u, c, d in zip(ue, co, derived)],
+            columns=["ue_json", "co_json", "derived", "modified"],
+        )
 
     derived_col = F.col(DERIVED_COL) if DERIVED_COL in df.columns else F.lit(None).cast(
         "array<struct<schema:string,data:string>>"

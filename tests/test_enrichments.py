@@ -333,10 +333,50 @@ def test_javascript_config_adapter(spark):
     assert _json.loads(ctx.data)["n"] == 2
 
 
+def _script_core_rows(df, conf):
+    """Expected script_enrichment output from the pure per-row core
+    (operators/script._script_run_one) called directly in Python, with
+    the operator's projection rules applied: a drop removes the row, an
+    error appends to the enrichment errors, a mutation overrides the
+    field (NULL_MUT clears it), and contexts append to — or, with
+    replace, substitute for — the derived contexts."""
+    from pyspark.sql import Row
+
+    from enrich_spark.operators.script import (
+        ESC_MUT, NULL_MUT, _MUTABLE_KINDS, _script_run_one,
+    )
+    from enrich_spark.schema import ATOMIC_FIELDS
+
+    kinds = dict(ATOMIC_FIELDS)
+    mutable = [c for c in df.columns if kinds.get(c) in _MUTABLE_KINDS]
+    out = []
+    for row in df.collect():
+        d = row.asDict()
+        event = {c: d[c] for c in mutable if d[c] is not None}
+        drop, err, ctxs, replace, *muts = _script_run_one(
+            conf.function, dict(conf.params), mutable, json.dumps(event),
+            d.get("headers"))
+        if drop:
+            continue
+        for c, m in zip(mutable, muts):
+            if m == NULL_MUT:
+                d[c] = None
+            elif m is not None:
+                d[c] = m[len(ESC_MUT):] if m.startswith(ESC_MUT) else m
+        new = [Row(schema=x["schema"], data=x["data"])
+               for x in json.loads(ctxs or "[]")]
+        prior = list(d.get("_derived") or [])
+        d["_derived"] = new if replace else prior + new
+        d["_enrich_errors"] = [err] if err else []
+        out.append(Row(**d))
+    return out
+
+
 def test_javascript_node_execution(spark):
     """Real JS execution through the Node sidecar (functions/jsengine.py):
-    mutate / contexts / drop / throw / replace-contexts, batched and
-    row modes, against reference semantics
+    mutate / contexts / drop / throw / replace-contexts, through the
+    Arrow-batched operator and the per-row core (the per-event hook
+    called directly), against reference semantics
     (JavascriptScriptEnrichment.scala:62-228)."""
     import base64
 
@@ -377,12 +417,9 @@ def test_javascript_node_execution(spark):
         F.lit("iglu:com.acme/prior/jsonschema/1-0-0").alias("schema"),
         F.lit("{}").alias("data"))))
 
-    def run(batched):
-        rows = script_enrichment(df, hook, batched=batched).collect()
-        return {r.app_id: r for r in rows}
-
-    for batched in (True, False):
-        got = run(batched)
+    arrow = script_enrichment(df, hook).collect()
+    for rows in (arrow, _script_core_rows(df, hook)):
+        got = {r.app_id: r for r in rows}
         assert set(got) == {"A1-js", "a3", "A4-js"}  # drop row vanished
         a1 = got["A1-js"]
         assert [c.schema.split("/")[1] for c in a1._derived] == ["prior", "tag"]
@@ -462,8 +499,8 @@ def test_javascript_sidecar_isolation_timeout_and_null_mutation(spark):
         [("a1", "u1", "srv", None)],
         "app_id STRING, user_id STRING, platform STRING, headers ARRAY<STRING>",
     )
-    for batched in (True, False):
-        out = script_enrichment(df, hook, batched=batched).collect()[0]
+    for out in (script_enrichment(df, hook).collect()[0],
+                _script_core_rows(df, hook)[0]):
         assert out.user_id is None and out.app_id is None
         assert out.platform == "web"
 
@@ -478,7 +515,7 @@ def test_javascript_sidecar_isolation_timeout_and_null_mutation(spark):
     assert out.user_id is None and out.app_id == "a1"
 
 
-def test_pii_json_mutator_batched_matches_row_mode(spark):
+def test_pii_json_mutator_arrow_matches_row_core(spark):
     from enrich_spark.config import PiiJsonFieldConf
 
     ue = json.dumps({
@@ -514,15 +551,29 @@ def test_pii_json_mutator_batched_matches_row_mode(spark):
         ],
     )
 
-    def run(batched):
-        out, mod = sql_ops._pii_json_mutate(df, conf, batched=batched)
-        got = out.select("event_id", "ue_json", "co_json", "_derived",
-                         mod.alias("modified")).collect()
-        return {r.event_id: (r.ue_json, r.co_json,
-                             [tuple(d) for d in (r._derived or [])],
-                             [tuple(m) for m in r.modified]) for r in got}
+    out, mod = sql_ops._pii_json_mutate(df, conf)
+    got = out.select("event_id", "ue_json", "co_json", "_derived",
+                     mod.alias("modified")).collect()
+    b = {r.event_id: (r.ue_json, r.co_json,
+                      [tuple(d) for d in (r._derived or [])],
+                      [m.asDict() for m in r.modified]) for r in got}
 
-    b, r = run(True), run(False)
+    # the pure per-row core, called directly with the operator's
+    # locators and salted SHA-256 scramble
+    locators = [(jf.entity, sql_ops._criterion_regex(jf.schema_criterion),
+                 jf.json_path) for jf in conf.json_fields]
+
+    def scramble(v):
+        return hashlib.sha256(("s" + v).encode()).hexdigest()
+
+    r = {}
+    for eid, u, c, d in rows:
+        derived = [{"schema": sc, "data": da} for sc, da in d] \
+            if d is not None else None
+        nu, nc, nd, modified = sql_ops._pii_mutate_one(
+            locators, scramble, u, c, derived)
+        r[eid] = (nu, nc, [(x["schema"], x["data"]) for x in (nd or [])],
+                  modified)
     assert b == r
     # sanity on the batched result itself, not just parity
     ue1 = json.loads(b["e1"][0])["data"]["data"]
@@ -533,11 +584,11 @@ def test_pii_json_mutator_batched_matches_row_mode(spark):
     der1 = json.loads(b["e1"][2][0][1])
     assert der1["token"] == hashlib.sha256(b"ssecret").hexdigest()
     assert b["e3"][0] == "not json"  # malformed input passes through
-    mods = {m[0] for m in b["e1"][3]}
+    mods = {m["fieldName"] for m in b["e1"][3]}
     assert mods == {"email", "tags", "emails", "token"}
 
 
-def test_script_enrichment_batched_matches_row_mode(spark):
+def test_script_enrichment_arrow_matches_row_core(spark):
     from enrich_spark.config import JavascriptScriptConf
     from enrich_spark.operators.script import script_enrichment
 
@@ -562,16 +613,15 @@ def test_script_enrichment_batched_matches_row_mode(spark):
     )
     conf = JavascriptScriptConf(function=hook, params={"p": "v"})
 
-    def run(batched):
-        rows = script_enrichment(df, conf, batched=batched).collect()
+    def norm(rows):
         return sorted(
             (r.app_id, r.se_label,
              tuple(tuple(c) for c in r._derived), tuple(r._enrich_errors))
             for r in rows
         )
 
-    b, r = run(True), run(False)
-    assert b == r
+    b = norm(script_enrichment(df, conf).collect())
+    assert b == norm(_script_core_rows(df, conf))
     assert [x[0] for x in b] == ["a1", "fail-me", "quiet"]  # drop-me gone
     a1 = b[0]
     assert a1[1] == "a1:1:v"
@@ -580,7 +630,7 @@ def test_script_enrichment_batched_matches_row_mode(spark):
 
 def test_javascript_batch_watchdog_fallback(spark):
     """The sidecar arms ONE vm watchdog per batch (per-event watchdogs
-    cost +45% on the script stage, measured via tools/bench_one.py); a
+    cost +45% on the script stage, measured in fresh-JVM runs); a
     batch that trips it harvests the completed prefix and re-isolates
     the remainder per event — so one hostile event errors alone and
     every other event in its batch still succeeds."""

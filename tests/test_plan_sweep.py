@@ -1,14 +1,13 @@
-"""Registry-wide physical-plan lint (r13): every bench query's plan is
+"""Registry-wide physical-plan lint: every queries() row's plan is
 checked for the global scale invariants, with a pinned AUDIT for the
 survivors — the per-operator plan-contract specs cover the named heavy
 ops; this sweep guarantees no query ANYWHERE in the registry quietly
 grows a cartesian product, a row-at-a-time Python stage, or an
 unaudited single-partition exchange / nested-loop join.
 
-Every allowlist entry is an audited bounded shape (one-row scalar
-rollups, tiny literal dimension tables, brute-force ANN baselines whose
-scale path is a different row) — adding a name here requires the same
-audit, which is the point.
+Every allowlist entry is an audited bounded shape — adding a name here
+requires the same audit, which is the point. An entry whose row no
+longer exists is removed, so a dead entry cannot hide a regression.
 """
 
 from __future__ import annotations
@@ -21,45 +20,28 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF = "/root/testdata/sf0.001"
 
 # name -> why the BroadcastNestedLoopJoin is bounded
-BNLJ_AUDITED = {
-    "ann_cosine_topk": "brute-force baseline (scale path = IVF/LSH rows)",
-    "ann_recall": "recall joins the brute ground truth by construction",
-    "bm25_rank": "fixed literal query-terms table (a few rows)",
-    "key_skew": "one-row corpus-total scalar",
-    "kmv_overlap": "one-row sketch scalars",
-    "lm_score": "one-row total-token scalar (T)",
-    "pq_adc_topk": "codebook broadcast (k x m literals)",
-    "text_analysis": "bundle carries the lm one-row scalar",
-    "token_drift": "two one-row (T, V) scalars",
-}
+BNLJ_AUDITED: dict[str, str] = {}
 
 # name -> why the Exchange SinglePartition is bounded (one-row rollups:
 # partial aggregate below the exchange, exactly one row through it)
-SINGLE_PARTITION_AUDITED = {
-    "ann_recall": "recall@k one-row summary",
-    "bm25_rank": "one-row corpus stats (avgdl, N)",
-    "data_card": "the data card IS a one-row aggregate",
-    "data_mix": "one-row mix totals",
-    "key_skew": "one-row total",
-    "lm_score": "one-row total-token scalar",
-    "pii_pseudonymize": "k-anonymity one-row risk report (kanon_rpt)",
-    "text_analysis": "lm part's one-row scalar",
-    "token_drift": "one-row divergence summary",
-}
+SINGLE_PARTITION_AUDITED: dict[str, str] = {}
 
-# name -> why the BatchEvalPython is acceptable (FIXTURE synthesis only
-# — the operator under test stays Arrow/native; a production input
-# arrives already encoded). Keep this list MINIMAL: a dead entry here
-# masks a real operator-path regression.
+# name -> why the BatchEvalPython is acceptable: fixture synthesis (a
+# production input arrives already encoded), or an operator whose
+# per-event external call is cached per key. Keep this list MINIMAL: a
+# dead entry here masks a real operator-path regression.
 BATCH_EVAL_AUDITED = {
     "thrift_loader": "fixture-side thrift ENCODE udf; decode is Arrow",
+    "sql_lookup_join": "json part: per-event cached SQL query mode "
+                       "(lookups.sql_query_enrichment_udf) — one external "
+                       "query per distinct key behind an LRU+TTL cache",
 }
 
 
-def test_every_bench_query_plan_passes_the_lint(spark):
+def test_every_query_plan_passes_the_lint(spark):
     import __spark_entry__ as e
 
-    queries = e.bench_queries()
+    queries = e.queries()
     failures = []
     for name, fn in sorted(queries.items()):
         plan = fn(spark, SF)._jdf.queryExecution().executedPlan() \

