@@ -6,8 +6,8 @@ is a record-level enrichment engine (not a SQL engine), enrich-side
 queries first derive deterministic tracker-protocol inputs from the
 ``events`` table with pure SQL — the identical derivation appears in the
 DuckDB oracle — then run the actual pipeline and project the operator's
-output columns. Data-pipeline queries run the curate ops directly on
-``documents``.
+output columns. Data-pipeline queries run directly on ``documents`` /
+``embeddings``.
 
 All outputs are cast to BIGINT/DOUBLE/STRING and timestamps to epoch
 micros so Spark↔DuckDB value hashing is type-stable; floats are rounded
@@ -18,10 +18,46 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from enrich_spark.datapipe.bpe import apply_bpe_sql as _bpe_apply_sql
+from enrich_spark.datapipe.unigram import (
+    apply_unigram_sql as _unigram_apply_sql,
+)
+from enrich_spark.datapipe.curation import (
+    domain_cap_sql as _dcap_sql,
+    leakage_safe_split_sql as _lss_sql,
+    quantile_bins_grouped_sql as _gqbins_sql,
+    quantile_bins_sql as _qbins_sql,
+    select_token_budget_sql as _stb_sql,
+)
+from enrich_spark.datapipe.datacard import data_card_sql as _dc_sql
+from enrich_spark.datapipe.chat import chat_assemble_sql as _chat_sql
+from enrich_spark.datapipe.lm import (
+    lm_counts_sql as _lm_counts_sql,
+    lm_score_sql as _lm_score_sql,
+    token_divergence_sql as _tok_div_sql,
+)
+from enrich_spark.datapipe.dsir import apply_dsir_sql as _dsir_sql
+from enrich_spark.datapipe.layout import key_skew_topn_sql as _kskew_sql
+from enrich_spark.datapipe.sketches import (
+    kmv_overlap_estimate_sql as _kmv_overlap_sql,
+    kmv_sketch_sql as _kmv_sk_sql,
+)
+from enrich_spark.datapipe.text import code_profile_sql as _code_sql
+from enrich_spark.datapipe.text import (
+    extract_code_blocks_sql as _fence_sql,
+)
+from enrich_spark.datapipe.text import (
+    fence_language_mix_sql as _fmix_sql,
+)
+from enrich_spark.datapipe.text import script_profile_sql as _script_sql
+from enrich_spark.datapipe.layout import weighted_sample_k_sql as _wsk_sql
+from enrich_spark.datapipe.similarity import (
+    negative_samples_sql as _negs_sql,
+)
 from enrich_spark.datapipe.text import _MOJIBAKE as _MOJI
 
 # deterministic "dirt" spliced into every doc for the text-normalization
@@ -47,29 +83,313 @@ def _text_norm_oracle_sql() -> str:
             f"CAST(({expr}) <> text AS BIGINT) AS norm_changed, "
             f"CAST(len(text) - len({expr}) AS BIGINT) AS norm_delta_chars "
             f"FROM {fixture}")
-
+from enrich_spark.datapipe.regress import fit_ridge_2f_sql as _ridge_sql
+from enrich_spark.datapipe.sketches import (
+    hll_distinct_portable_sql as _hll_sql,
+)
+from enrich_spark.datapipe.text import bm25_score_sql as _bm25_sql
+from enrich_spark.datapipe.webtext import url_normalize_sql as _url_norm_sql
 
 SF001 = "/root/testdata/sf0.001"
 
 
 def _fan(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Local fan-out: the testdata parquet files are single-split
+    """Local-bench fan-out: the testdata parquet files are single-split
     (one small row group), which would serialize the whole enrichment
     projection onto one core. On a real cluster the input has thousands
     of splits and this repartition is unnecessary — it exists only to
     make local[N] behave like N input splits."""
     return df.repartition(spark.sparkContext.defaultParallelism)
 
-
+US = "\x1f"  # fingerprint unit separator
 DUCK_US = "chr(31)"
 
 # Synthesized-fixture cache: queries that persist() a generated input
-# (thrift payloads, gzip archives) must reuse ONE
+# (thrift payloads, gzip archives, media bytes) must reuse ONE
 # materialized copy per (fixture, sf_dir, session) — re-persisting on
 # every invocation stacks never-freed storage blocks that squeeze
 # execution memory for every LATER query in the same JVM (measured as a
-# creeping suite-wide slowdown across a full oracle pass).
+# creeping suite-wide slowdown across a bench run).
 _FIXTURE_CACHE: dict = {}
+
+# BPE merge table learned by datapipe/bpe.train_bpe from the sf0.001
+# documents corpus (48 merges, deterministic tie-break; golden-tested in
+# tests/test_datapipe.py) — a fixed vocabulary literal shared by the
+# Spark query and the DuckDB oracle, same pattern as the quality-
+# classifier weights below
+_BPE_MERGES = [
+    ("e", "r"), ("e", "_"), ("n", "_"), ("o", "r"), ("t", "_"),
+    ("er", "_"), ("o", "w"), ("ow", "_"), ("l", "u"), ("i", "n"),
+    ("y", "_"), ("a", "r"), ("p", "ar"), ("g", "_"), ("a", "s"),
+    ("h", "_"), ("a", "_"), ("s", "t"), ("a", "t"), ("a", "n_"),
+    ("c", "an_"), ("s", "can_"), ("c", "o"), ("co", "lu"), ("colu", "m"),
+    ("colum", "n_"), ("d", "ow_"), ("in", "dow_"), ("w", "indow_"),
+    ("d", "er_"), ("or", "der_"), ("or", "t_"), ("s", "ort_"),
+    ("p", "_"), ("par", "t_"), ("u", "p_"), ("a", "g"), ("ag", "g_"),
+    ("a", "lu"), ("alu", "e_"), ("v", "alue_"), ("in", "e_"),
+    ("l", "ine_"), ("e", "y_"), ("k", "ey_"), ("i", "n_"), ("j", "o"),
+    ("jo", "in_"),
+]
+
+# Unigram-LM piece table learned by datapipe/unigram.train_unigram from
+# the sf0.001 documents corpus (vocab 96, seed 2000, max piece 5, 4 EM
+# iterations — deterministic; golden-tested in tests/test_datapipe.py).
+# Costs are integer micro-nats; shared verbatim by the native Viterbi
+# plan and the DuckDB recursive-CTE oracle.
+_UNIGRAM_PIECES = [
+    ("a", 3586297), ("agg", 3562950), ("am", 20590579), ("b", 104178431),
+    ("batch", 3609119), ("big", 3631342), ("c", 4312793), ("co", 16667866),
+    ("col", 17068104), ("colu", 15955125), ("colum", 4153916),
+    ("ctor", 28878211), ("cus", 9404456), ("cust", 9292526),
+    ("custo", 3639085), ("d", 7055267), ("dat", 17628549),
+    ("data", 3624624), ("dow", 19807510), ("e", 24055558),
+    ("eam", 19428573), ("ector", 23276503), ("er", 14670650),
+    ("f", 23840725), ("fast", 3605828), ("fi", 29730563),
+    ("fil", 29243424), ("filt", 15527752), ("filte", 3601463),
+    ("g", 48608821), ("gg", 17566874), ("group", 3583087),
+    ("h", 67085451), ("hash", 3594934), ("i", 33641810),
+    ("ilter", 24082917), ("indow", 4234042), ("j", 96979470),
+    ("join", 3580948), ("k", 51327436), ("key", 3571379),
+    ("l", 33127291), ("line", 3570321), ("lter", 29730563),
+    ("lumn", 16667440), ("m", 8620095), ("mer", 3639094),
+    ("merge", 3582017), ("mn", 16733475), ("n", 4153903),
+    ("ndow", 19820322), ("o", 19397334), ("olumn", 4312806),
+    ("omer", 9292538), ("or", 19526337), ("order", 3540126),
+    ("ow", 8986297), ("p", 7055268), ("par", 36151623),
+    ("part", 3552510), ("q", 132368623), ("query", 3583087),
+    ("r", 2899379), ("ream", 12845560), ("row", 3661519),
+    ("s", 3605978), ("scan", 3530943), ("slow", 3597104),
+    ("small", 3622394), ("sort", 3541152), ("spark", 3609119),
+    ("st", 12844404), ("str", 21045236), ("stre", 17858014),
+    ("strea", 8621897), ("t", 22966354), ("table", 3616841),
+    ("ter", 29243731), ("the", 3609119), ("tomer", 9404229),
+    ("tor", 28662429), ("tream", 3605984), ("u", 7055246),
+    ("umn", 17070189), ("v", 23276503), ("value", 3566102),
+    ("ve", 28862716), ("vec", 28675067), ("vect", 19523130),
+    ("vecto", 3586304), ("w", 3540894), ("wi", 19803153),
+    ("win", 19692314), ("wind", 9863699), ("windo", 4234042),
+    ("y", 99478368),
+]
+
+
+# DSIR importance log-ratio table (datapipe/dsir.train_dsir on the
+# sf0.001 documents corpus: target = sources src0/src1/src2, source =
+# full corpus; 128 md5-prefix hash buckets, Laplace alpha=1, integer
+# micro-nats — deterministic; same fixed-literal pattern as _BPE_MERGES
+# / _UNIGRAM_PIECES so the Spark plan and the DuckDB oracle replay the
+# identical integers)
+_DSIR_RATIOS = [
+    (0, -10959), (1, 62303), (2, 116274), (3, -17309), (4, -9828),
+    (5, -10041), (6, 233464), (7, -147702), (8, 114458), (9, 15470),
+    (10, -6903), (11, 80556), (12, -98785), (13, 45465), (14, -140115),
+    (15, -113213), (16, 37071), (17, 279685), (18, -1815), (19, 92979),
+    (20, 14456), (21, 113617), (22, -69063), (23, -37227), (24, -34755),
+    (25, -81725), (26, -253646), (27, 228192), (28, -56418),
+    (29, -62956), (30, -90261), (31, -183706), (32, -31922),
+    (33, -31070), (34, 59937), (35, 420639), (36, 143387), (37, -181808),
+    (38, -283666), (39, 112992), (40, 295213), (41, 64427), (42, 65052),
+    (43, -245445), (44, -180253), (45, 116550), (46, -262836),
+    (47, -59206), (48, 139053), (49, -20796), (50, 77982), (51, 59937),
+    (52, 57026), (53, 38950), (54, -80067), (55, -125296), (56, 156929),
+    (57, 4304), (58, 121227), (59, 53157), (60, 494679), (61, 65518),
+    (62, -42504), (63, 97948), (64, 23861), (65, -51371), (66, 185917),
+    (67, -283666), (68, 123116), (69, 179929), (70, 68722), (71, 3477),
+    (72, 270313), (73, 123116), (74, -110184), (75, -262388),
+    (76, -34578), (77, -83993), (78, 73636), (79, -4001), (80, -298933),
+    (81, -36168), (82, 32123), (83, 145459), (84, -435519),
+    (85, -122473), (86, -43876), (87, -168183), (88, 47766),
+    (89, -51102), (90, -51371), (91, -212321), (92, -90592),
+    (93, -101765), (94, 53157), (95, 45005), (96, -42169), (97, -60522),
+    (98, 11147), (99, 121874), (100, 176404), (101, 314171),
+    (102, 144206), (103, 25294), (104, 44189), (105, 61138),
+    (106, 44087), (107, 60556), (108, -87108), (109, 97709),
+    (110, 57026), (111, -30344), (112, -134713), (113, 25421),
+    (114, 329179), (115, -55110), (116, 17377), (117, -49756),
+    (118, 517770), (119, -47144), (120, -289569), (121, 150666),
+    (122, -162005), (123, -98492), (124, 5049), (125, -116612),
+    (126, -146501), (127, -60361)
+]
+
+
+# Product-quantization codebook (datapipe/pq.train_pq on the sf0.001
+# embeddings, m=8 subspaces x 16 centroids x 8 dims, fixed-point 1e4
+# integers, seed 7 — deterministic; plan-literal model like _DSIR_RATIOS)
+_PQ_MODEL = [
+    [  # subspace 0
+        [-1337, 432, 596, 481, 1062, -28, -553, 788],
+        [-307, -315, 839, -212, 481, 1302, 364, -1356],
+        [401, 221, 1310, -95, -1061, 1473, 1318, 707],
+        [917, 1085, 101, 410, 654, -865, 548, -2228],
+        [184, -1114, -396, 1941, -874, 762, 771, -49],
+        [-360, -59, -1867, -263, 68, 1135, 524, -515],
+        [-454, -287, 753, 1434, -670, -408, -755, -1256],
+        [710, 896, -903, -319, 237, -1017, 560, 74],
+        [-459, -767, -321, -158, -1358, -590, -799, 959],
+        [-142, -231, 1167, -609, 1308, -309, 1116, 930],
+        [856, -836, 729, -1718, -284, -117, -8, -256],
+        [-1339, -409, -1308, -230, -402, -897, 1609, 345],
+        [-1515, -762, -149, -1320, 131, 2023, -1777, -2201],
+        [1617, 662, -307, 576, 102, 1334, -151, 980],
+        [-409, 1283, 976, -399, -925, -671, -539, -422],
+        [1034, -481, -756, 882, 795, -871, -1675, -329],
+    ],
+    [  # subspace 1
+        [-1190, 520, 1173, 398, 492, 1231, -680, 353],
+        [151, 756, 38, -735, 1581, 250, -343, 899],
+        [1225, -1052, -666, -766, -840, 472, -352, 255],
+        [-552, -1311, 711, 317, 765, -1766, -768, 222],
+        [382, 628, 1148, 572, -1150, -1607, 542, 84],
+        [-297, -37, -41, -898, -820, -375, 1539, -888],
+        [-2141, 373, -552, 737, -105, -368, -276, -801],
+        [437, -444, 1349, 180, -240, 144, -1101, -1508],
+        [804, 2045, -827, 454, -221, 90, -1323, 104],
+        [125, -1156, 313, 688, 1391, 269, 1519, -122],
+        [-1136, -1254, -488, -1284, -392, -600, 505, 766],
+        [-1183, -520, 1342, -205, -1729, -323, -312, 1236],
+        [1566, 148, 432, -303, 352, 813, 619, 325],
+        [-118, -2, -1721, -407, 132, -1220, -869, -663],
+        [-731, -396, -1062, -615, 514, 2163, -206, 41],
+        [-193, 1407, -369, 477, -821, 1529, 1080, 154],
+    ],
+    [  # subspace 2
+        [-681, 567, 213, -1560, 752, -505, 1379, 432],
+        [-808, -149, -425, -489, 1030, 916, -103, -266],
+        [317, -106, 955, -579, -191, 1969, 24, 649],
+        [-70, -749, -177, 1265, 1208, -21, 1335, -675],
+        [1518, -1261, -800, -618, 1376, -128, -910, 1353],
+        [-739, -1350, -461, -430, -1787, -534, 377, 283],
+        [538, 701, -1350, 156, -507, -117, -80, 1166],
+        [555, -193, -394, 2013, -1074, 436, 677, -256],
+        [392, -94, 1673, 434, 444, -1262, 569, 1359],
+        [1194, -518, -359, 320, -45, 633, -1671, -1042],
+        [-281, -62, 535, 637, -546, -1047, -94, -1631],
+        [-327, -153, -847, 164, -1052, 1114, 605, -2001],
+        [1820, -802, 402, -717, -181, 108, 331, -349],
+        [33, 946, 457, -588, 571, -740, -1616, -334],
+        [-1743, 1246, 642, 509, 243, -95, -289, 616],
+        [-686, 1020, -1635, -552, -946, -1136, 233, -871],
+    ],
+    [  # subspace 3
+        [-560, -397, 996, 166, -640, 1491, -1439, -483],
+        [-654, 1522, 407, -1449, 415, 531, 161, -1177],
+        [945, -1006, -500, 658, 134, 718, 611, -1214],
+        [155, 1381, -706, -380, 512, 277, -1132, 838],
+        [359, 1079, 478, -1065, -1576, -492, -69, -968],
+        [50, -346, -1150, -976, 1115, -1039, -660, -849],
+        [-574, -1082, 269, -331, 745, 278, 376, 1688],
+        [129, -432, -882, -1842, -1031, 828, -545, 482],
+        [-577, -830, -815, 1031, 1459, 156, -859, -415],
+        [-269, -420, -442, -90, -1483, -449, -578, 1035],
+        [1784, -1204, 389, 957, -200, -1468, -12, -214],
+        [-1125, 293, -919, 725, -574, 279, 1489, 561],
+        [675, 840, -989, 1627, -687, 87, -713, -628],
+        [-1020, 111, 471, 748, 750, -2291, 38, 568],
+        [527, 785, 1248, 432, 77, 925, 559, 1122],
+        [-54, -799, 1348, -583, 322, -632, 620, -905],
+    ],
+    [  # subspace 4
+        [-1013, -121, -772, 360, -154, 1280, 88, -1127],
+        [935, -1345, -698, 799, 1115, 191, -555, -737],
+        [-1159, 878, -796, -1101, -930, 39, 808, -41],
+        [773, 1537, -674, 790, -1674, -738, -345, -59],
+        [8, 1360, 1461, -346, 795, 975, 548, 420],
+        [1201, 522, -1399, 277, 748, 561, -103, 606],
+        [-822, -556, -243, -1404, 782, -12, -16, 1507],
+        [70, 542, -167, 768, 1185, -924, 1106, -319],
+        [727, 885, 653, -1759, -115, 903, -1631, 241],
+        [1270, -677, -135, -992, -600, -482, -651, -864],
+        [114, -982, 290, 619, -520, 1059, -1407, 1397],
+        [-259, -268, 1880, 39, -60, -856, -171, -536],
+        [320, -695, 546, 360, -1030, -355, 758, 758],
+        [-576, 130, -802, 770, 315, -1226, -1340, -340],
+        [707, -549, -985, -316, -597, 1000, 2021, -304],
+        [-622, -41, 735, 1954, 890, -545, -358, 1145],
+    ],
+    [  # subspace 5
+        [-94, 672, 197, -769, -341, 1309, 334, -1535],
+        [-170, -1421, 411, 457, 349, -519, -633, 1409],
+        [-1369, 1011, 1012, -397, 860, -518, -190, 216],
+        [-539, 12, -1278, -639, -989, 195, 1063, 332],
+        [-50, 300, 1073, 1001, -828, 150, -937, 185],
+        [538, -1291, 930, -1476, -317, 688, 390, 647],
+        [-350, -1133, -135, 525, 1651, 559, 571, -1218],
+        [48, -1966, -417, 62, -918, 587, -56, -751],
+        [-1166, 359, -254, 225, -496, -1371, -438, -1750],
+        [1027, -635, 200, 1324, 409, -1775, 1171, 288],
+        [15, -601, 183, 2286, -1889, 1505, -463, -1247],
+        [62, -581, -193, -864, -831, -2084, -437, 310],
+        [-926, 551, -1629, 816, 1767, 87, -342, 255],
+        [864, 933, -68, 93, -120, 135, 149, 2009],
+        [1377, 664, -462, -645, 315, 264, -1291, -465],
+        [562, 1108, 106, 1036, 88, 395, 1460, -67],
+    ],
+    [  # subspace 6
+        [1341, 279, -206, -131, 506, -350, -854, 1237],
+        [184, -405, 1098, -1816, -620, 971, 1095, -198],
+        [-1562, 1390, -132, 492, 8, -269, 1190, -904],
+        [-841, -1384, -373, -644, 571, -201, 243, -841],
+        [1546, -1266, -1090, -866, -894, 505, -429, -1056],
+        [-79, 848, -211, 483, -1575, 60, -896, -169],
+        [-87, 683, -536, 89, -147, 1795, 751, 820],
+        [996, 391, 423, -1406, -1076, -1675, -101, -894],
+        [803, -1058, 1309, 119, 870, 1020, 153, 500],
+        [-139, 1173, -465, -1634, 1398, 311, -1276, -221],
+        [713, 225, -82, 1551, -588, -180, 1267, -109],
+        [559, 147, 771, 643, 93, 871, -792, -1859],
+        [-507, -1287, -738, 1141, -173, -162, -170, 746],
+        [-1048, 402, 999, 42, -304, -632, -411, 834],
+        [-72, 24, -1945, -1068, -431, -366, 853, 261],
+        [35, 51, 418, 392, 2096, 13, 795, 182],
+    ],
+    [  # subspace 7
+        [188, -1363, 224, -317, -166, 935, -679, -822],
+        [14, 51, -906, -201, -887, 2072, -535, 1074],
+        [-58, -298, -1324, 612, -170, 1295, 1728, -77],
+        [366, 229, -2327, 136, -552, -654, 54, -627],
+        [93, 916, 542, -245, -1715, -100, -878, 166],
+        [737, 790, 156, -1003, 419, 768, -878, 1353],
+        [-323, -696, -190, 531, 1483, 4, 502, 970],
+        [-1122, 614, 3074, -559, 228, -694, 626, -880],
+        [8, -183, 95, -497, 599, -1169, -1984, 544],
+        [910, -183, 1592, 1140, -622, 182, 1193, 380],
+        [353, 2122, -403, -75, 119, -484, 709, -143],
+        [-1383, 35, -40, -340, -216, -1077, 473, -920],
+        [294, -1623, 150, -102, -790, -969, 797, 782],
+        [1125, -450, 75, -1576, 568, -118, 1207, -307],
+        [-185, 46, -432, 1949, -723, -55, -1391, 376],
+        [-412, 750, 47, 675, 1130, 213, -629, -1351],
+    ],
+]
+
+
+def _pca_fixed_model():
+    """Hand-pinned PCA model for the gated projection part: the
+    eigensolve itself is driver-side numpy (not SQL-replayable), so
+    the gate exercises the PROJECTION algebra — zip_with/aggregate
+    fold minus the mean offset, whitened — against fixed components
+    (the deterministic md5-seeded hyperplane family, same constants
+    DuckDB inlines) — the _PQ_MODEL plan-literal pattern."""
+    from enrich_spark.datapipe.pca import PcaModel
+    from enrich_spark.datapipe.similarity import _hyperplane
+
+    return PcaModel(
+        mean=[((i % 7) - 3) / 100.0 for i in range(64)],
+        components=[_hyperplane(64, 9 + j, 3) for j in range(4)],
+        eigenvalues=[4.0, 2.0, 1.0, 0.5],
+        scale=1000, n=0)
+
+
+# sparse rate-validity windows for the as-of join part (literal shared
+# with the DuckDB ASOF JOIN oracle): GBP re-rates twice mid-month, USD
+# has NO rate before Jan 5 (unmatched period), JPY never changes
+_ASOF_RATES = [
+    ("GBP", "2024-01-01 00:00:00", 1.15),
+    ("GBP", "2024-01-10 00:00:00", 1.16),
+    ("GBP", "2024-01-20 00:00:00", 1.17),
+    ("USD", "2024-01-05 00:00:00", 0.90),
+    ("USD", "2024-01-15 00:00:00", 0.91),
+    ("JPY", "2024-01-01 00:00:00", 0.0064),
+]
 
 
 def _cached_fixture(spark: SparkSession, name: str, sf_dir: str, builder):
@@ -82,11 +402,11 @@ def _cached_fixture(spark: SparkSession, name: str, sf_dir: str, builder):
 
 
 def _union_parts(parts, fill=()):
-    """Merge several sub-queries into ONE registered query: union by
-    name with a `part` discriminator, filling columns absent from a
-    part — and real NULLs in numeric columns — with a -1 sentinel
-    (NULL ints round-trip as NaN through a pandas comparator; strings
-    are safe as NULL)."""
+    """Merge several sub-queries into ONE registered query (the driver's
+    correctness gate caps at 50 rows): union by name with a `part`
+    discriminator, filling columns absent from a part — and real NULLs in
+    numeric columns — with a -1 sentinel (NULL ints round-trip as NaN
+    through the driver's pandas comparator; strings are safe as NULL)."""
     from enrich_spark.plans.stagecut import stage_boundary
 
     out = None
@@ -97,6 +417,8 @@ def _union_parts(parts, fill=()):
         d = stage_boundary(df.withColumn("part", F.lit(label)))
         out = d if out is None else out.unionByName(d, allowMissingColumns=True)
     if fill:
+        # tolerate fill names absent from this union (a core-parts bench
+        # variant shares the full bundle's fill tuple)
         out = out.na.fill(-1, subset=[c for c in fill if c in out.columns])
     return out
 
@@ -162,6 +484,10 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _load_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fan(spark.read.parquet(f"{sf_dir}/documents.parquet"), spark)
+
+
+def _load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _fan(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), spark)
 
 
 def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,7 +570,7 @@ def _memo_plan(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     Same rationale as _enriched: DataFrames are immutable plans, and the
     custom-config enrichment chains cost seconds of py4j/analysis time to
     construct. Production builds each plan once; re-invocations here
-    (repeated oracle checks, plan sweeps) should pay execution
+    (bench warm runs, driver correctness passes) should pay execution
     cost, not reconstruction cost.
     """
     key = (spark, sf_dir, name)
@@ -441,9 +767,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.unix_micros("refr_dvce_tstamp").alias("refr_dvce_us"),
         )
 
+    def q_pagerank(spark, sf):
+        # fixed-point PageRank (datapipe/graph.pagerank): all-integer
+        # power iteration, exact on any engine — the oracle unrolls the
+        # same 5 iterations in SQL. Edge list derived deterministically
+        # from events (41-node domain graph with natural skew).
+        from enrich_spark.datapipe.graph import pagerank
+
+        ev = _load_events(spark, sf)
+        edges = ev.select(
+            (F.col("user_id") % 41).cast("long").alias("src"),
+            ((F.col("user_id") * 7 + F.col("event_id")) % 41)
+            .cast("long").alias("dst"))
+        return pagerank(edges, iters=5).select(
+            F.col("node").cast("long").alias("node"), "rank")
+
     q["cross_navigation"] = lambda spark, sf: _union_parts(
-        [("nav", q_cross_nav(spark, sf))],
-        fill=("src_event_id", "refr_dvce_us"),
+        [("nav", q_cross_nav(spark, sf)),
+         ("pagerank", q_pagerank(spark, sf))],
+        fill=("src_event_id", "refr_dvce_us", "node", "rank"),
     )
 
     def q_schema_fields(spark, sf):
@@ -607,9 +949,38 @@ config:
             "base_currency",
         )
 
+    def q_asof(spark, sf):
+        # general-purpose as-of join (plans/asof.asof_join, union-sort
+        # scale path): each event picks the latest rate whose
+        # valid_from <= ts — sparse validity windows, keys with gaps,
+        # and an unmatched period (USD before Jan 5). DuckDB's native
+        # ASOF LEFT JOIN is the oracle: two independent engines, one
+        # hash-checked result.
+        from enrich_spark.plans.asof import asof_join
+
+        ev = _load_events(spark, sf)
+        trades = ev.select(
+            F.col("event_id").alias("src_event_id"),
+            F.element_at(
+                F.array(F.lit("GBP"), F.lit("USD"), F.lit("JPY")),
+                (F.col("user_id") % 3 + 1).cast("int")).alias("ccy"),
+            F.col("ts").alias("t"))
+        rates = spark.createDataFrame(
+            _ASOF_RATES, "ccy string, valid_from_s string, rate double"
+        ).select("ccy", F.col("valid_from_s").cast("timestamp")
+                 .alias("valid_from"), "rate")
+        out = asof_join(trades, rates, on=["ccy"], left_ts="t",
+                        right_ts="valid_from")
+        return out.select(
+            F.col("src_event_id").cast("long").alias("src_event_id"),
+            "ccy", F.col("rate").alias("rate"),
+            F.col("_asof_ts").cast("date").cast("string")
+            .alias("rate_day"))
+
     q["currency_conversion"] = lambda spark, sf: _union_parts(
-        [("convert", q_currency(spark, sf))],
-        fill=("tr_total", "tr_total_base"),
+        [("convert", q_currency(spark, sf)),
+         ("asof", q_asof(spark, sf))],
+        fill=("tr_total", "tr_total_base", "rate"),
     )
 
     def q_adapter_explode(spark, sf):
@@ -1115,8 +1486,354 @@ config:
             F.array_join("entity_schemas", ",").alias("entity_schemas"),
         )
 
+    def q_manifest(spark, sf):
+        # dataset manifest (plans/manifest.dataset_manifest, md5 mode):
+        # order/partitioning-independent content commitment per source
+        # group — the same xor/count/bytes algebra replays in DuckDB
+        from enrich_spark.plans.manifest import dataset_manifest
+
+        docs = _load_docs(spark, sf).select(
+            "source", F.col("doc_id").cast("long").alias("doc_id"), "text")
+        return dataset_manifest(
+            docs, cols=["doc_id", "text"], group_cols=["source"],
+            hash="md5")
+
+    def q_datacard(spark, sf):
+        # corpus data card (datapipe/datacard.data_card): one algebraic
+        # global aggregate — the dataset-documentation artifact
+        from enrich_spark.datapipe.datacard import data_card
+
+        return data_card(_load_docs(spark, sf))
+
+    def q_datacard_comp(spark, sf):
+        # the card's per-source composition table (integer share bp)
+        from enrich_spark.datapipe.datacard import source_table
+
+        return source_table(_load_docs(spark, sf)).select(
+            "source", F.col("n_docs").alias("src_docs"),
+            F.col("n_tokens").alias("src_tokens"), "share_bp")
+
+    def q_zorder(spark, sf):
+        # Z-order (Morton) clustering key — the lakehouse ZORDER BY
+        # layout primitive (datapipe/layout.py): pure integer bit
+        # interleave, native shift/and/or, zero Python
+        from enrich_spark.datapipe.layout import zorder_key
+
+        docs = _load_docs(spark, sf)
+        return docs.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            zorder_key(F.col("doc_id") % 65536,
+                       F.col("n_chars") % 65536)
+            .cast("long").alias("zkey"))
+
+    def q_ksample(spark, sf):
+        # deterministic exact-k sample (TakeOrderedAndProject top-k on
+        # a seeded md5 rank — never a single-partition sort)
+        from enrich_spark.datapipe.layout import sample_exact_k
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"))
+        return sample_exact_k(docs, 100)
+
+    def q_kgroup(spark, sf):
+        # per-stratum exactly-k (one partitioned window — per-domain
+        # caps, the scale-safe sibling of the global exact-k sample)
+        from enrich_spark.datapipe.layout import sample_exact_k_per_group
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "source")
+        return sample_exact_k_per_group(docs, 20, "source")
+
+    def q_wsample(spark, sf):
+        # weighted sampling without replacement (Efraimidis–Spirakis
+        # A-ES, integer-exact max-of-w-hashes keys — layout.py): rank by
+        # the largest of w md5 draws, distributed top-k, never a global
+        # sort; weight = 1 + n_chars % 16 exercises the full clamp band
+        from enrich_spark.datapipe.layout import weighted_sample_k
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            (1 + F.col("n_chars") % 16).cast("long").alias("weight"))
+        return weighted_sample_k(docs, 50, "weight")
+
+    def q_ridge_fit(spark, sf):
+        # one-pass distributed ridge fit (normal equations over integer
+        # Gram sums; driver Cramer solve — datapipe/regress.py):
+        # n_chars ~ word_count + (doc_id % 97)
+        from enrich_spark.datapipe.regress import fit_ridge_2f_df
+
+        docs = _load_docs(spark, sf)
+        words = F.size(F.filter(
+            F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " "),
+            lambda w: w != ""))
+        feats = docs.select(
+            words.alias("x1"),
+            (F.col("doc_id") % 97).alias("x2"),
+            F.col("n_chars").alias("y"))
+        return fit_ridge_2f_df(feats, "x1", "x2", "y")
+
+    def q_key_skew(spark, sf):
+        # exact key-skew diagnostic (layout.key_skew_topn): heaviest
+        # join/groupBy keys with corpus share — the pre-flight check
+        # before any big keyed shuffle (salting / AQE skew decision);
+        # one map-side-combined groupBy + broadcast rollup +
+        # distributed top-n
+        from enrich_spark.datapipe.layout import key_skew_topn
+
+        ev = _load_events(spark, sf)
+        return key_skew_topn(ev, ["event_type"], top_n=10)
+
+    def q_shard_manifest(spark, sf):
+        # r12: sharded-export assignment + per-shard manifests
+        # (layout.shard_assign / shard_manifest): md5(seed:id) mod N
+        # shard ids — a PUBLISHED membership contract any engine can
+        # replay — with the dataset_manifest xor/count/bytes algebra
+        # per shard; write_shards (pytest-covered) adds the physical
+        # one-file-per-shard parquet export on the same assignment
+        from enrich_spark.datapipe.layout import (
+            shard_assign, shard_manifest,
+        )
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text")
+        return shard_manifest(shard_assign(docs, 16),
+                              cols=["doc_id", "text"])
+
     q["metadata_aggregation"] = lambda spark, sf: _union_parts(
-        [("meta", q_metadata_agg(spark, sf))], fill=("n_events",))
+        [("meta", q_metadata_agg(spark, sf)),
+         ("manifest", q_manifest(spark, sf)),
+         ("card", q_datacard(spark, sf)),
+         ("comp", q_datacard_comp(spark, sf)),
+         ("zorder", q_zorder(spark, sf)),
+         ("ksample", q_ksample(spark, sf)),
+         ("kgroup", q_kgroup(spark, sf)),
+         ("wsample", q_wsample(spark, sf)),
+         ("fit", q_ridge_fit(spark, sf)),
+         ("skew", q_key_skew(spark, sf)),
+         ("shards", q_shard_manifest(spark, sf))],
+        fill=("n_events", "n_rows", "content_xor", "bytes_total",
+              "n_docs", "total_chars", "total_bytes", "total_tokens",
+              "n_sources", "n_langs", "n_unique_texts", "n_exact_dups",
+              "min_tokens", "max_tokens", "p50_tokens", "p90_tokens",
+              "pii_emails", "pii_ipv4", "n_docs_10plus_tokens",
+              "n_fenced_docs", "n_fences", "fenced_code_chars",
+              "n_code_docs",
+              "src_docs", "src_tokens", "share_bp", "doc_id", "zkey",
+              "weight", "b0", "b1", "b2", "n", "cnt", "total_rows",
+              "n_keys", "shard_id"),
+    )
+
+    def q_sessionize(spark, sf):
+        # gap-based sessionization as an engine operator (datapipe/session.py):
+        # one shuffle on user_id, windowed boundary flags, partial-agg rollup
+        from enrich_spark.datapipe.session import session_stats
+
+        ev = _load_events(spark, sf)
+        return session_stats(ev, "user_id", "ts", ("event_id",), 1800).select(
+            "user_id",
+            F.col("n_sessions").cast("long").alias("n_sessions"),
+            F.col("n_events").cast("long").alias("n_events"),
+        )
+
+    def q_sessionize_stream(spark, sf):
+        # STREAMING sessionize (applyInPandasWithState, session.py:49) run
+        # as a real file-stream over the same events; emits CLOSED sessions.
+        # With watermark=0 the final watermark is max(ts) ms-truncated, so
+        # the closed set is exactly SQL-expressible: every session except
+        # those still within gap of the stream's end (oracle mirrors the
+        # strict `timeout < watermark` rule at ms resolution).
+        import os
+        import tempfile
+
+        from enrich_spark.datapipe.session import streaming_sessionize
+
+        ev = _load_events(spark, sf).select(
+            F.col("user_id").cast("string").alias("user_id"), "ts", "event_id"
+        )
+        tmp = tempfile.mkdtemp(prefix="enrich_spark_sess_stream_")
+        src = os.path.join(tmp, "in")
+        ev.write.parquet(src)
+        source = spark.readStream.schema(
+            "user_id STRING, ts TIMESTAMP, event_id BIGINT"
+        ).parquet(src)
+        out = streaming_sessionize(source, gap_seconds=1800, watermark="0 seconds")
+        qname = "sess_stream_" + os.path.basename(tmp).rsplit("_", 1)[-1]
+        sq = (out.writeStream.format("memory").queryName(qname)
+              .outputMode("append")
+              .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
+        try:
+            sq.processAllAvailable()
+        finally:
+            sq.stop()
+        return spark.table(qname).select(
+            F.col("user").cast("long").alias("user_id"),
+            F.col("session_index").cast("long").alias("session_index"),
+            F.unix_micros("session_start").alias("ss_us"),
+            F.unix_micros("session_end").alias("se_us"),
+            F.col("n_events").cast("long").alias("n_events"),
+        )
+
+    def q_stream_dedup(spark, sf):
+        # STREAMING cross-batch dedup (dropDuplicatesWithinWatermark,
+        # dedup.py streaming_dedup): replay the events with every
+        # event_id % 3 == 0 row re-delivered as a second copy; the
+        # deduped stream must equal the distinct event set. State is
+        # bounded by keys-per-watermark-window, not stream lifetime.
+        import os
+        import tempfile
+
+        from enrich_spark.datapipe.dedup import streaming_dedup
+
+        ev = _load_events(spark, sf).select("event_id", "user_id", "ts")
+        dup = ev.unionAll(ev.where(F.col("event_id") % 3 == 0))
+        tmp = tempfile.mkdtemp(prefix="enrich_spark_dedup_stream_")
+        src = os.path.join(tmp, "in")
+        dup.write.parquet(src)
+        source = spark.readStream.schema(
+            "event_id BIGINT, user_id BIGINT, ts TIMESTAMP"
+        ).parquet(src)
+        out = streaming_dedup(source, key_cols=("event_id",),
+                              ts_col="ts", watermark="1 hour")
+        qname = "dedup_stream_" + os.path.basename(tmp).rsplit("_", 1)[-1]
+        sq = (out.writeStream.format("memory").queryName(qname)
+              .outputMode("append")
+              .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
+        try:
+            sq.processAllAvailable()
+        finally:
+            sq.stop()
+        return spark.table(qname).select(
+            F.col("event_id").cast("long").alias("event_id"),
+            F.col("user_id").cast("long").alias("user_id"),
+        )
+
+    def q_chat_assemble(spark, sf):
+        # r12: conversation assembly + loss-mask spans (datapipe/
+        # chat.py) — turns synthesized from documents by pure doc_id
+        # arithmetic (conv = doc_id div 4, turn = doc_id mod 4; every
+        # 7th conv opens with a system turn; every 11th conv carries a
+        # deliberate double-user alternation violation — turn 1 forced
+        # to 'user' so it collides with turn 0/2's default 'user'; the
+        # r12 version targeted turn 2, which the default branch already
+        # made 'user', so the violation path was never exercised), so
+        # the SQL oracle rebuilds the same dialogue table and replays
+        # the cumsum span arithmetic exactly
+        from enrich_spark.datapipe.chat import chat_assemble
+
+        docs = _load_docs(spark, sf)
+        t = F.col("doc_id") % 4
+        c = F.expr("doc_id div 4")
+        role = (F.when((c % 7 == 0) & (t == 0), F.lit("system"))
+                .when((c % 11 == 0) & (t == 1), F.lit("user"))
+                .otherwise(F.when(t % 2 == 0, F.lit("user"))
+                           .otherwise(F.lit("assistant"))))
+        turns = docs.select(
+            c.cast("long").alias("conv_id"),
+            t.cast("long").alias("turn_idx"),
+            role.alias("role"),
+            F.substring("text", 1, 60).alias("text"))
+        return chat_assemble(turns).select(
+            "conv_id", "n_turns", "n_mask_turns",
+            F.md5("text").alias("chat_md5"),
+            "mask_spans_str", "total_chars", "mask_chars",
+            "alternation_ok", "roles_ok", "ends_with_mask", "no_empty")
+
+    def q_sft_dedup(spark, sf):
+        # r13: SFT-aware masked dedup (chat.sft_masked_dedup) — dedup
+        # conversations on the ASSISTANT content only. Planned dups
+        # (r14 comment fix, r13 advice): every 13th conv (c % 13 == 0,
+        # c >= 13) takes its assistant bodies from the RAW doc text at
+        # doc_id−52 (conv c−13's turn positions) while keeping its OWN
+        # user prompts. Because c−13 is itself a multiple of 13, every
+        # reuser EXCEPT c=13 copies raw text whose owner's effective
+        # content was substituted away — so the only planned content
+        # dup is the pair (13, 0) (verified: one 2-cluster at
+        # sf0.001), exercising masked-content clustering without the
+        # prompts matching; the oracle
+        # rebuilds the same dialogue, extracts the masked side as
+        # string_agg of assistant bodies (cross-checking the span
+        # arithmetic), and replays simhash + connected components +
+        # keep-policy in SQL
+        from enrich_spark.datapipe.chat import sft_masked_dedup
+        from enrich_spark.datapipe.dedup import md5_hash_family
+
+        docs = _load_docs(spark, sf).select("doc_id", "text")
+        t = F.col("doc_id") % 4
+        c = F.expr("doc_id div 4")
+        src = F.when((c % 13 == 0) & (c >= 13) & (t % 2 == 1),
+                     F.col("doc_id") - 52).otherwise(F.col("doc_id"))
+        base = docs.select(
+            c.cast("long").alias("conv_id"),
+            t.cast("long").alias("turn_idx"),
+            F.when(t % 2 == 0, F.lit("user"))
+            .otherwise(F.lit("assistant")).alias("role"),
+            src.cast("long").alias("src_doc"))
+        turns = base.join(
+            docs.select(F.col("doc_id").alias("src_doc"),
+                        F.substring("text", 1, 60).alias("text")),
+            "src_doc").drop("src_doc")
+        return sft_masked_dedup(turns, max_hamming=8,
+                                hasher=md5_hash_family(0)).select(
+            F.col("conv_id").cast("long").alias("conv_id"),
+            F.col("cluster_id").cast("long").alias("cluster_id"),
+            F.col("cluster_size").cast("long").alias("cluster_size"),
+            F.col("is_kept").cast("long").alias("is_kept"))
+
+    def q_pref_pairs(spark, sf):
+        # r13: preference-pair prep (datapipe/rlhf.py) for RM/DPO
+        # training — responses synthesized by doc_id arithmetic
+        # (prompt = doc_id div 5, score = doc_id·13 mod 7 with planned
+        # ties; every (doc_id%5==3 & %3==0) response reuses the
+        # previous response's text so the VERBATIM guard is exercised);
+        # both modes in one part, discriminated by pmode
+        from enrich_spark.datapipe.rlhf import preference_pairs
+
+        docs = _load_docs(spark, sf).select("doc_id", "text")
+        src = F.when((F.col("doc_id") % 5 == 3)
+                     & (F.col("doc_id") % 3 == 0),
+                     F.col("doc_id") - 1).otherwise(F.col("doc_id"))
+        base = docs.select(
+            F.expr("doc_id div 5").cast("long").alias("prompt_id"),
+            F.col("doc_id").alias("response_id"),
+            src.cast("long").alias("_src"),
+            ((F.col("doc_id") * 13) % 7).cast("long").alias("score"))
+        resp = base.join(
+            docs.select(F.col("doc_id").alias("_src"),
+                        F.substring("text", 1, 80).alias("text")),
+            "_src").drop("_src")
+        bvw = preference_pairs(resp).withColumn("pmode", F.lit("bvw"))
+        allp = preference_pairs(resp, margin=3, mode="all_pairs") \
+            .withColumn("pmode", F.lit("all"))
+        # r14: the dirty-key caps, gate-verified — R=4 bites (5
+        # responses per prompt, extremes kept), P=3 bites (margin-1
+        # expansion exceeds it on full-fanout prompts)
+        capped = preference_pairs(
+            resp, margin=1, mode="all_pairs",
+            max_responses_per_prompt=4, max_pairs_per_prompt=3,
+            salt_factor=1).withColumn("pmode", F.lit("cap"))
+        return bvw.unionByName(allp).unionByName(capped).select(
+            F.col("prompt_id").cast("long").alias("prompt_id"),
+            F.col("chosen_id").cast("long").alias("chosen_id"),
+            F.col("rejected_id").cast("long").alias("rejected_id"),
+            F.col("score_margin").cast("long").alias("score_margin"),
+            "pmode")
+
+    q["sessionize"] = lambda spark, sf: _union_parts(
+        [("stats", q_sessionize(spark, sf)),
+         ("stream_closed", q_sessionize_stream(spark, sf)),
+         ("stream_dedup", q_stream_dedup(spark, sf)),
+         ("chat", q_chat_assemble(spark, sf)),
+         ("sftdedup", q_sft_dedup(spark, sf)),
+         ("pref", q_pref_pairs(spark, sf))],
+        fill=("user_id", "n_sessions", "n_events", "session_index",
+              "ss_us", "se_us", "event_id",
+              "conv_id", "n_turns", "n_mask_turns", "chat_md5",
+              "mask_spans_str", "total_chars", "mask_chars",
+              "alternation_ok", "roles_ok", "ends_with_mask",
+              "no_empty", "cluster_id", "cluster_size", "is_kept",
+              "prompt_id", "chosen_id", "rejected_id", "score_margin",
+              "pmode"),
+    )
 
     def q_sql_lookup(spark, sf):
         from enrich_spark.operators.lookups import SqlQueryConf, sql_query_enrichment
@@ -1663,10 +2380,44 @@ config:
 
     # scalar mutators ('scalar'), JsonPath mutators ('json'), and the
     # pii_transformation companion event stream ('companion') in one row
+    def q_kanon(spark, sf):
+        # k-anonymity / l-diversity audit (curation.k_anonymity_audit):
+        # QI = (segment, banded balance), sensitive = nationkey; one
+        # groupBy shuffle, audit + corpus rollup in the same row
+        from enrich_spark.datapipe.curation import (generalize_numeric,
+                                                    k_anonymity_audit)
+
+        cust = _fan(spark.read.parquet(f"{sf}/customer.parquet"), spark)
+        qi = cust.select(
+            F.col("c_mktsegment").alias("segment"),
+            generalize_numeric(F.col("c_acctbal"), 1000).alias("bal_band"),
+            F.col("c_nationkey").alias("nat"))
+        return k_anonymity_audit(
+            qi, ["segment", "bal_band"], k=20, sensitive_col="nat").select(
+            "segment", F.col("bal_band").cast("long").alias("bal_band"),
+            "n", "l_div", "at_risk", "homogeneous")
+
+    def q_kanon_report(spark, sf):
+        from enrich_spark.datapipe.curation import (generalize_numeric,
+                                                    k_anonymity_report)
+
+        cust = _fan(spark.read.parquet(f"{sf}/customer.parquet"), spark)
+        qi = cust.select(
+            F.col("c_mktsegment").alias("segment"),
+            generalize_numeric(F.col("c_acctbal"), 1000).alias("bal_band"),
+            F.col("c_nationkey").alias("nat"))
+        return k_anonymity_report(
+            qi, ["segment", "bal_band"], k=20, sensitive_col="nat")
+
     q["pii_pseudonymize"] = lambda spark, sf: _union_parts(
         [("scalar", q_pii(spark, sf)), ("json", q_pii_json(spark, sf)),
-         ("companion", q_pii_companion(spark, sf))],
-        fill=("src_event_id", "n_json"),
+         ("companion", q_pii_companion(spark, sf)),
+         ("kanon", q_kanon(spark, sf)),
+         ("kanon_rpt", q_kanon_report(spark, sf))],
+        fill=("src_event_id", "n_json", "bal_band", "n", "l_div",
+              "at_risk", "homogeneous", "n_classes", "at_risk_classes",
+              "at_risk_rows", "total_rows", "risk_bp", "min_class_size",
+              "homogeneous_classes"),
     )
 
     def q_cookie_header(spark, sf):
@@ -1814,10 +2565,95 @@ config:
                 build, "batch_id long, archive binary"))
         return _debatch_aggregate(archives)
 
+    def q_warc(spark, sf):
+        # WARC source-format round-trip (sources/warc.parse_warc):
+        # docs are packed into real WARC/1.0 files (20 records/file;
+        # every 5th payload gets a decoy version-line + CRLF CRLF
+        # prefix so only a Content-Length-honoring parser survives),
+        # then parsed back; the oracle predicts every record field
+        # arithmetically from documents (same discipline as the gzip
+        # fixture above)
+        import pandas as pd
+
+        from enrich_spark.sources.warc import parse_warc
+
+        docs = _load_docs(spark, sf).select(
+            "doc_id", "text", F.expr("doc_id DIV 20").alias("file_id"))
+
+        def build(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf = pdf.sort_values("doc_id")
+            buf = bytearray()
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                did = int(did)
+                payload = (text or "").replace("\r", "").encode("utf-8")
+                if did % 5 == 0:
+                    payload = b"decoy WARC/1.0\r\n\r\n" + payload
+                rtype = b"metadata" if did % 7 == 0 else b"response"
+                buf += b"WARC/1.0\r\nWARC-Type: " + rtype
+                buf += b"\r\nWARC-Target-URI: http://docs.example/"
+                buf += str(did).encode()
+                buf += b"\r\nWARC-Date: 2024-01-01T00:00:00Z\r\n"
+                buf += b"Content-Length: " + str(len(payload)).encode()
+                buf += b"\r\n\r\n" + payload + b"\r\n\r\n"
+            return pd.DataFrame(
+                {"file_id": [int(pdf["file_id"].iloc[0])],
+                 "content": [bytes(buf)]})
+
+        files = _cached_fixture(
+            spark, "warc_files", sf,
+            lambda: docs.groupBy("file_id").applyInPandas(
+                build, "file_id long, content binary"))
+        rec = parse_warc(files)
+        return rec.select(
+            F.regexp_extract("target_uri", r"/(\d+)$", 1).cast("long")
+            .alias("doc_id"),
+            "warc_type",
+            F.col("content_length").cast("long").alias("content_length"),
+            F.col("payload_len").cast("long").alias("payload_len"),
+            F.substring("payload", 1, 24).alias("payload_head"),
+            F.col("n_headers").cast("long").alias("n_headers"),
+            F.col("parse_error").isNotNull().cast("long").alias("has_err"),
+        )
+
+    # gzip de-batch + WARC source formats in one oracle row
+    def q_robots(spark, sf):
+        # robots.txt politeness filter (webtext.parse_robots_rules +
+        # robots_filter): deterministic per-domain rule bodies, parsed
+        # by the REAL parser; the oracle predicts the end-to-end
+        # allow/deny + deciding-rule length from the same formulas
+        from enrich_spark.datapipe.webtext import (parse_robots_rules,
+                                                   robots_filter)
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"))
+        k = (F.col("doc_id") % 10).cast("string")
+        m = F.col("doc_id") % 4
+        path = (
+            F.when(m == 0, F.concat(F.lit("/p"), k, F.lit("/x")))
+            .when(m == 1, F.concat(F.lit("/p"), k, F.lit("/pub/y")))
+            .when(m == 2, F.concat(F.lit("/t"), k, F.lit("z")))
+            .otherwise(F.concat(F.lit("/ok/"),
+                                F.col("doc_id").cast("string"))))
+        urls = docs.select(
+            "doc_id",
+            F.concat(F.lit("https://d"), k, F.lit(".example"), path)
+            .alias("url"))
+        robots = spark.createDataFrame(
+            [(f"d{i}.example",
+              f"User-agent: *\nDisallow: /p{i}/\nAllow: /p{i}/pub/\n"
+              f"Disallow: /t{i}*\n")
+             for i in range(10)], "domain STRING, content STRING")
+        return robots_filter(urls, parse_robots_rules(robots)).select(
+            "doc_id", "host", "path", "allowed", "deciding_rule_len")
+
     q["payload_decompress"] = lambda spark, sf: _union_parts(
         [("gzip", q_decompress(spark, sf)),
-         ("zstd", q_decompress_zstd(spark, sf))],
-        fill=("batch_id", "n_ok", "n_too_big", "bytes_ok", "digit_sum"),
+         ("zstd", q_decompress_zstd(spark, sf)),
+         ("warc", q_warc(spark, sf)),
+         ("robots", q_robots(spark, sf))],
+        fill=("batch_id", "n_ok", "n_too_big", "bytes_ok", "digit_sum",
+              "doc_id", "content_length", "payload_len", "n_headers",
+              "has_err", "allowed", "deciding_rule_len"),
     )
 
     def q_thrift(spark, sf):
@@ -1956,8 +2792,68 @@ config:
             F.get_json_object(ctx, "$.snowplowId").alias("snowplow_id"),
         )
 
+    def q_cdc_merge(spark, sf):
+        # CDC latest-wins snapshot merge (plans/merge.merge_snapshot):
+        # upserts, a stale change that must lose, tombstones, inserts —
+        # all derived deterministically from the orders table so the
+        # oracle replays the same change stream
+        from enrich_spark.plans.merge import merge_snapshot
+
+        # no _fan here: the fixture re-scans orders for base / updates /
+        # update-keys, and a round-robin Exchange per scan would be pure
+        # scaffolding cost (the merge's own shuffle is the delta window)
+        base = spark.read.parquet(f"{sf}/orders.parquet") \
+            .select(F.col("o_orderkey").cast("long").alias("okey"),
+                    F.col("o_orderstatus").alias("status"),
+                    F.lit(0).cast("long").alias("seq"))
+        k = F.col("okey")
+
+        def upd(cond, key, status, seq, deleted):
+            return F.when(cond, F.struct(
+                key.alias("okey"), status.alias("status"),
+                seq.cast("long").alias("seq"), deleted.alias("deleted")))
+
+        # single-pass change-stream derivation: one scan, explode the
+        # per-row applicable changes (upsert / stale / tombstone / insert)
+        changes = F.array_compact(F.array(
+            upd(k % 7 == 0, k, F.lit("U"), F.lit(10), F.lit(False)),
+            upd(k % 13 == 0, k, F.lit("S"), F.lit(-5), F.lit(False)),
+            upd(k % 11 == 0, k, F.lit(None).cast("string"), F.lit(20),
+                F.lit(True)),
+            upd(k % 17 == 0, k + 10000000, F.lit("N"), F.lit(10),
+                F.lit(False)),
+        ))
+        updates = base.select(F.explode(changes).alias("u")).select("u.*")
+        return merge_snapshot(base, updates, ["okey"], "seq",
+                              delete_col="deleted")
+
+    def q_snapdiff(spark, sf):
+        # corpus snapshot diff (plans/merge.snapshot_diff): old = the
+        # documents table; new = deterministic mutations (doc_id%13
+        # removed, %7 text-changed, %11 re-added under +1e6 ids) — one
+        # full-outer join, md5 change detection, engine-exact statuses
+        from enrich_spark.plans.merge import snapshot_diff
+
+        docs = _load_docs(spark, sf).select("doc_id", "text")
+        new = (docs.where(F.col("doc_id") % 13 != 0)
+               .select("doc_id",
+                       F.when(F.col("doc_id") % 7 == 0,
+                              F.concat(F.col("text"), F.lit("!")))
+                       .otherwise(F.col("text")).alias("text"))
+               .unionByName(
+                   docs.where(F.col("doc_id") % 11 == 0).select(
+                       (F.col("doc_id") + 1_000_000).alias("doc_id"),
+                       "text")))
+        return snapshot_diff(docs, new, ["doc_id"]).select(
+            F.col("doc_id").cast("long").alias("okey"),
+            "status", "hash_old", "hash_new")
+
     q["identity_stitch"] = lambda spark, sf: _union_parts(
-        [("identity", q_identity(spark, sf))], fill=("src_event_id",))
+        [("identity", q_identity(spark, sf)),
+         ("merge", q_cdc_merge(spark, sf)),
+         ("snapdiff", q_snapdiff(spark, sf))],
+        fill=("src_event_id", "okey", "seq"),
+    )
 
     def q_script(spark, sf):
         # §2.5 #21: the user-extension hook with the JS-enrichment contract
@@ -2192,7 +3088,291 @@ config:
 
     q["streaming_parity"] = q_streaming_parity
 
-    # ---- data-pipeline side: the curate ops (datapipe/pipeline.py) ----
+    # ---- data-pipeline side ------------------------------------------------
+    def _exact_part(spark, sf):
+        from enrich_spark.datapipe.dedup import exact_dedup
+
+        return exact_dedup(_load_docs(spark, sf)).select(
+            "content_hash",
+            F.col("doc_id").cast("long").alias("keep_id"),
+            F.col("dup_count").cast("long").alias("dup_count"),
+        )
+
+    def q_leakage_split(spark, sf):
+        # leakage-safe train/val/test assignment (datapipe/curation
+        # .leakage_safe_split) — deterministic pair fixture (2k ~ 2k+1
+        # for k < 10) so near-dup clusters land in ONE split;
+        # md5-bucket assignment, DuckDB-replayable
+        from enrich_spark.datapipe.curation import leakage_safe_split
+
+        pair_fix = spark.createDataFrame(
+            [(2 * k, 2 * k + 1) for k in range(10)], "id_a LONG, id_b LONG")
+        return leakage_safe_split(
+            _load_docs(spark, sf).select("doc_id"), pair_fix).select(
+            F.col("doc_id").cast("long").alias("keep_id"),
+            F.col("cluster_id").cast("long").alias("cluster_id"),
+            "split")
+
+    def q_dedup_exact(spark, sf):
+        # part "exact": hash-groupBy dedup; part "substr": exact
+        # substring-duplication marking (Lee et al. 2022 style —
+        # datapipe/dedup.duplicate_substring_windows): every k-word
+        # window hashed, corpus-wide counts via one window function,
+        # duplicated fraction per doc
+        from enrich_spark.datapipe.dedup import (
+            contamination_check, duplicate_substring_windows,
+        )
+
+        docs = _load_docs(spark, sf)
+        exact = _exact_part(spark, sf)
+        # fracs as INTEGER basis points (floor(n*10000/d), pure integer
+        # arithmetic in BOTH engines): this row went driver-red twice on
+        # hash while the replica stayed green — the divergence class is
+        # harness float formatting / round-half behavior on a DOUBLE
+        # column, so the compared row is now float-free by construction
+        sub = duplicate_substring_windows(docs, k=8).select(
+            F.col("doc_id").cast("long").alias("keep_id"),
+            F.col("n_windows").cast("long").alias("n_windows"),
+            F.col("n_dup_windows").cast("long").alias("n_dup_windows"),
+            F.when(F.col("n_windows") > 0,
+                   F.expr("n_dup_windows * 10000 div n_windows"))
+            .otherwise(F.lit(0)).cast("long").alias("dup_frac_bp"),
+        )
+        # decontamination against a benchmark slice (doc_id % 17 == 0):
+        # broadcast benchmark gram set, map-side join over corpus grams
+        bench = docs.where(F.col("doc_id") % 17 == 0).select(
+            F.col("doc_id").alias("bench_id"), "text")
+        contam = contamination_check(docs, bench, k=8).select(
+            F.col("doc_id").cast("long").alias("keep_id"),
+            F.col("contaminated_windows").cast("long").alias("contam_windows"),
+            F.when(F.col("n_windows") > 0,
+                   F.expr("contaminated_windows * 10000 div n_windows"))
+            .otherwise(F.lit(0)).cast("long").alias("contam_frac_bp"),
+            F.size("hit_benchmarks").cast("long").alias("n_bench_hits"),
+        )
+        return _union_parts(
+            [("exact", exact), ("substr", sub), ("contam", contam),
+             ("split", q_leakage_split(spark, sf))],
+            fill=("dup_count", "n_windows", "n_dup_windows", "dup_frac_bp",
+                  "contam_windows", "contam_frac_bp", "n_bench_hits",
+                  "cluster_id"),
+        )
+
+    q["dedup_exact"] = q_dedup_exact
+
+    def q_despan_part(spark, sf):
+        # apply the Lee et al. 2022 spans: CUT corpus-duplicated runs out
+        # of the text (datapipe/dedup.remove_duplicate_spans) — cleaned
+        # text in normalized word coordinates + removal accounting
+        from enrich_spark.datapipe.dedup import remove_duplicate_spans
+
+        docs = _load_docs(spark, sf)
+        return remove_duplicate_spans(docs, k=8).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "cleaned_text",
+            F.col("n_words").cast("long").alias("n_words"),
+            F.col("removed_words").cast("long").alias("removed_words"),
+            F.col("n_spans").cast("long").alias("n_spans"),
+        )
+
+    def q_boiler_lines(spark, sf):
+        # corpus-level boilerplate LINE removal (MassiveText/RefinedWeb
+        # cross-document line dedup, dedup.remove_boilerplate_lines).
+        # documents.parquet is single-line, so synthesize a deterministic
+        # multi-line corpus with genuinely shared chrome lines (the
+        # text_pii_scrub synthetic-PII pattern): two injected boilerplate
+        # lines repeat across docs and must be cut; substring lines
+        # survive unless the corpus itself repeats them
+        from enrich_spark.datapipe.dedup import remove_boilerplate_lines
+
+        docs = _load_docs(spark, sf)
+        syn = docs.select(
+            "doc_id",
+            F.concat_ws(
+                "\n",
+                F.substring("text", 1, 40),
+                F.lit("subscribe to our newsletter today"),
+                F.substring("text", 41, 40),
+                F.when(F.col("doc_id") % 2 == 0,
+                       F.lit("all rights reserved worldwide"))
+                .otherwise(F.substring("text", 81, 40)),
+                F.col("text"),
+            ).alias("text"))
+        return remove_boilerplate_lines(syn).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("clean_text").alias("cleaned_text"),
+            F.col("n_lines").cast("long").alias("n_lines"),
+            F.col("kept_lines").cast("long").alias("kept_lines"),
+            F.col("removed_lines").cast("long").alias("removed_lines"),
+        )
+
+    def q_ngram_novelty(spark, sf):
+        # per-doc novel n-gram share (dedup.ngram_novelty): distinct
+        # 3-gram explode → ONE doc-frequency groupBy on the md5 gram
+        # hash → same-key join back → per-doc rollup; the measurement
+        # complement of despan's removal
+        from enrich_spark.datapipe.dedup import ngram_novelty
+
+        docs = _load_docs(spark, sf)
+        return ngram_novelty(docs, n=3).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "n_grams", "n_novel", "novelty_bp")
+
+    q["dedup_despan"] = lambda spark, sf: _union_parts(
+        [("despan", q_despan_part(spark, sf)),
+         ("lines", q_boiler_lines(spark, sf)),
+         ("novelty", q_ngram_novelty(spark, sf))],
+        fill=("n_words", "removed_words", "n_spans",
+              "n_lines", "kept_lines", "removed_lines",
+              "n_grams", "n_novel", "novelty_bp"),
+    )
+
+    def q_decontam_multi(spark, sf):
+        # multi-eval-set decontamination with per-set n-gram size (8 and
+        # 13 grams) and a min_overlap_windows=2 threshold — broadcast
+        # gram maps, one (doc, set) groupBy per distinct k
+        from enrich_spark.datapipe.dedup import contamination_check_multi
+
+        docs = _load_docs(spark, sf)
+        b17 = docs.where(F.col("doc_id") % 17 == 0).select("text")
+        b23 = docs.where(F.col("doc_id") % 23 == 0).select("text")
+        out = contamination_check_multi(
+            docs, [("eval17", b17, 8), ("eval23", b23, 13)],
+            min_overlap_windows=2)
+        # contam_frac as integer basis points — see q_dedup_exact
+        return out.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "benchmark",
+            F.col("k").cast("long").alias("k"),
+            F.col("n_windows").cast("long").alias("n_windows"),
+            F.col("contaminated_windows").cast("long").alias("contam_windows"),
+            F.expr("contaminated_windows * 10000 div n_windows")
+            .cast("long").alias("contam_frac_bp"),
+            F.col("contaminated").cast("long").alias("contaminated"),
+        )
+
+    def q_decontam_bloom(spark, sf):
+        # Bloom-filter decontamination scale path
+        # (dedup.contamination_check_bloom): fixed-size bit-array
+        # broadcast + exact confirm join — output is bit-identical to
+        # the exact operator, so the oracle is the PLAIN decontam SQL
+        from enrich_spark.datapipe.dedup import contamination_check_bloom
+
+        docs = _load_docs(spark, sf)
+        bench = docs.where(F.col("doc_id") % 17 == 0).select(
+            F.col("doc_id").alias("bench_id"), "text")
+        out = contamination_check_bloom(docs, bench, k=8, m_bits=1 << 16)
+        nw = F.col("n_windows")
+        return out.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.lit(8).cast("long").alias("k"),
+            nw.cast("long").alias("n_windows"),
+            F.col("contaminated_windows").cast("long")
+            .alias("contam_windows"),
+            F.when(nw > 0,
+                   F.expr("contaminated_windows * 10000 div n_windows"))
+            .otherwise(F.lit(0)).cast("long").alias("contam_frac_bp"),
+            F.size("hit_benchmarks").cast("long").alias("n_hit_sets"),
+            F.coalesce(F.get("hit_benchmarks", 0), F.lit(-1))
+            .cast("long").alias("first_hit"),
+        )
+
+    def q_kmv_overlap(spark, sf):
+        # cross-corpus overlap from two KMV sketches (sketches.
+        # kmv_sketch / kmv_overlap_estimate): "how much of slice B is
+        # already in slice A" — the decontamination/dedup PLANNING
+        # number — answered from two k-row sketches instead of a
+        # corpus-sized join; every estimator integer/exact-double, so
+        # the one-row answer value-hashes across engines
+        from enrich_spark.datapipe.sketches import (
+            kmv_overlap_estimate, kmv_sketch,
+        )
+
+        docs = _load_docs(spark, sf)
+        half_a = docs.where(
+            F.regexp_extract("source", r"src(\d+)", 1).cast("int") < 10)
+        half_b = docs.where(
+            F.regexp_extract("source", r"src(\d+)", 1).cast("int") >= 10)
+        a = kmv_sketch(half_a, "text", k=64)
+        b = kmv_sketch(half_b, "text", k=64)
+        return kmv_overlap_estimate(a, b, k=64)
+
+    def q_token_drift(spark, sf):
+        # r12: cross-corpus token-distribution drift (datapipe/lm.py
+        # token_divergence) over the same src<10 / src>=10 halves the
+        # KMV part compares — KL both ways + Jensen-Shannon in integer
+        # micro-log10 units, one vocabulary-bounded outer join
+        from enrich_spark.datapipe.lm import (
+            divergence_summary, token_divergence_tagged,
+        )
+
+        docs = _load_docs(spark, sf)
+        srcn = F.regexp_extract("source", r"src(\d+)", 1).cast("int")
+        # r14: one-pass side-tagged divergence — same joint vocabulary
+        # and integer outputs as token_divergence(lm_counts(a),
+        # lm_counts(b)), one shuffle instead of three + an outer join
+        # (parity pinned by test_token_divergence_tagged_parity)
+        return divergence_summary(
+            token_divergence_tagged(docs, srcn < 10, srcn >= 10))
+
+    def q_sft_decontam(spark, sf):
+        # r14: cross-corpus SFT decontamination
+        # (chat.sft_decontaminate) — the sftdedup dialogue fixture
+        # (incl. the doc−52 assistant substitution) checked against an
+        # eval benchmark = the RAW assistant docs of every 19th conv.
+        # The laundering case rides the substitution: conv 13's
+        # assistant bodies ARE conv 0's raw docs, so when conv 0 is a
+        # benchmark member (0 % 19 == 0), conv 13 flags too — a
+        # benchmark answer under conv 13's OWN prompts, caught on the
+        # masked view
+        from enrich_spark.datapipe.chat import sft_decontaminate
+
+        docs = _load_docs(spark, sf).select("doc_id", "text")
+        t = F.col("doc_id") % 4
+        c = F.expr("doc_id div 4")
+        src = F.when((c % 13 == 0) & (c >= 13) & (t % 2 == 1),
+                     F.col("doc_id") - 52).otherwise(F.col("doc_id"))
+        base = docs.select(
+            c.cast("long").alias("conv_id"),
+            t.cast("long").alias("turn_idx"),
+            F.when(t % 2 == 0, F.lit("user"))
+            .otherwise(F.lit("assistant")).alias("role"),
+            src.cast("long").alias("src_doc"))
+        turns = base.join(
+            docs.select(F.col("doc_id").alias("src_doc"),
+                        F.substring("text", 1, 60).alias("text")),
+            "src_doc").drop("src_doc")
+        bench = docs.where(
+            (F.expr("doc_id div 4") % 19 == 0)
+            & ((F.col("doc_id") % 4) % 2 == 1)).select(
+            F.col("doc_id").alias("bench_id"),
+            F.substring("text", 1, 60).alias("text"))
+        out = sft_decontaminate(turns, [("eval19", bench, 6)],
+                                min_overlap_windows=2)
+        return out.select(
+            F.col("conv_id").cast("long").alias("doc_id"),
+            "benchmark",
+            F.col("k").cast("long").alias("k"),
+            F.col("n_windows").cast("long").alias("n_windows"),
+            F.col("contaminated_windows").cast("long")
+            .alias("contam_windows"),
+            F.expr("contaminated_windows * 10000 div n_windows")
+            .cast("long").alias("contam_frac_bp"),
+            F.col("contaminated").cast("long").alias("contaminated"))
+
+    q["decontam_multi"] = lambda spark, sf: _union_parts(
+        [("multi", q_decontam_multi(spark, sf)),
+         ("bloom", q_decontam_bloom(spark, sf)),
+         ("kmv", q_kmv_overlap(spark, sf)),
+         ("drift", q_token_drift(spark, sf)),
+         ("sftdecon", q_sft_decontam(spark, sf))],
+        fill=("doc_id", "k", "n_windows", "contam_windows",
+              "contam_frac_bp", "contaminated", "n_hit_sets", "first_hit",
+              "n_union_sketch", "n_both", "jaccard_bp", "est_union",
+              "est_intersection",
+              "vocab", "tokens_a", "tokens_b", "kl_ab_micro",
+              "kl_ba_micro", "js_micro"),
+    )
 
     def q_text_pii_scrub(spark, sf):
         # corpus PII scrubbing (datapipe/curation.scrub_text_pii):
@@ -2224,34 +3404,279 @@ config:
             F.col("n_ipv6").cast("long").alias("n_ipv6"),
         )
 
+    # known test PANs (public card-brand test numbers): 4 Luhn-valid,
+    # 2 Luhn-invalid — the fixture interleaves them by doc_id so the
+    # oracle replays exactly which candidates survive the checksum
+    _CC_FIXTURE = [
+        "4111 1111 1111 1111",      # valid (Visa test)
+        "5500-0000-0000-0004",      # valid (MC test, dashed)
+        "378282246310005",          # valid (Amex, 15 digits)
+        "4111 1111 1111 1112",      # invalid (checksum off by one)
+        "6011000000000004",         # valid (Discover)
+        "1234 5678 9012 3456",      # invalid
+    ]
+
+    def q_fin_pii(spark, sf):
+        # Luhn-validated credit-card + SSN scrubbing
+        # (datapipe/curation.scrub_financial_pii)
+        from enrich_spark.datapipe.curation import scrub_financial_pii
+
+        cc = F.element_at(
+            F.array(*[F.lit(c) for c in _CC_FIXTURE]),
+            (F.col("doc_id") % 6 + 1).cast("int"))
+        docs = _load_docs(spark, sf).select(
+            "doc_id",
+            F.concat(
+                F.col("text"), F.lit(" pay "), cc, F.lit(" ssn 123-45-"),
+                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+                F.lit(" end"),
+            ).alias("text"),
+        )
+        return scrub_financial_pii(docs).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "scrubbed_text",
+            F.col("n_ccs").cast("long").alias("n_ccs"),
+            F.col("n_cc_cands").cast("long").alias("n_cc_cands"),
+            F.col("n_ssns").cast("long").alias("n_ssns"),
+        )
+
     q["text_pii_scrub"] = lambda spark, sf: _union_parts(
-        [("base", q_text_pii_scrub(spark, sf))],
-        fill=("doc_id", "n_emails", "n_ips", "n_ipv6"),
+        [("base", q_text_pii_scrub(spark, sf)),
+         ("fin", q_fin_pii(spark, sf))],
+        fill=("doc_id", "n_emails", "n_ips", "n_ipv6",
+              "n_ccs", "n_cc_cands", "n_ssns"),
     )
 
-    def q_c4(spark, sf):
-        # the published C4 line/document heuristics
+    # quality-classifier vocabulary (terms from the synthetic corpus
+    # lexicon): shared by the Spark query and the DuckDB oracle
+    _QC_WEIGHTS = {"spark": 1.5, "join": 0.75, "merge": 0.5,
+                   "slow": -1.25, "dup": -2.0, "scan": -0.5}
+
+    def q_heavy_hitters(spark, sf):
+        # EXACT heavy-hitter tokens at bounded memory
+        # (datapipe/sketches.heavy_hitters) — per-partition Misra-Gries
+        # candidates + exact-confirm pass, so the output is the plain
+        # GROUP BY … HAVING semantics and hash-matches the oracle
+        from enrich_spark.datapipe.sketches import heavy_hitters
+
+        docs = _load_docs(spark, sf)
+        toks = docs.select(F.explode(F.split(F.trim(F.regexp_replace(
+            F.lower(F.col("text")), r"\s+", " ")), " ")).alias("token"))
+        return heavy_hitters(toks, "token", support=0.005).select(
+            "token", F.col("cnt").cast("long").alias("cnt"))
+
+    def q_dsir(spark, sf):
+        # DSIR importance weights (datapipe/dsir.apply_dsir, Xie et al.
+        # 2023): explode hashed grams → broadcast join the fixed
+        # 128-row _DSIR_RATIOS table → one map-side-combined groupBy.
+        # Integer micro-nats end-to-end, so the row is value-hash exact.
+        from enrich_spark.datapipe.dsir import apply_dsir
+
+        return apply_dsir(_load_docs(spark, sf), _DSIR_RATIOS,
+                          n_buckets=128).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("n_grams").cast("long").alias("n_grams"),
+            F.col("weight_unats").cast("long").alias("weight_unats"))
+
+    def _data_mix_core_parts(spark, sf):
+        # part "sample": deterministic stratified sampling (md5 bucket
+        # so DuckDB replays the exact kept-set; xxhash64 is the scale
+        # default); part "pack": fixed-budget sequence packing via one
+        # window cumsum per source group; parts "q_lit"/"q_join":
+        # linear quality-classifier scoring through BOTH vocab paths
+        # (map-literal zero-shuffle and broadcast-join big-vocab) —
+        # bundled here to keep the roster under the driver's 50-row cap
+        from enrich_spark.datapipe.curation import (
+            pack_sequences, score_linear_model, stratified_sample,
+        )
+
+        docs = _load_docs(spark, sf)
+        bucket = (
+            F.conv(F.substring(
+                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":7"))),
+                1, 15), 16, 10).cast("long") % 1_000_000
+        )
+        samp = stratified_sample(
+            docs, {"src0": 0.8, "src1": 0.5, "src2": 0.25},
+            seed=7, default_fraction=0.1, bucket=bucket,
+        ).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "source")
+        pack = pack_sequences(docs, budget_tokens=256).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("group").alias("source"),
+            F.col("n_tokens").cast("long").alias("n_tokens"),
+            "seq_id",
+            F.col("seq_pos").cast("long").alias("seq_pos"),
+        )
+        qsel = lambda df: df.select(  # noqa: E731
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("n_tokens").cast("long").alias("n_tokens"),
+            F.col("n_hits").cast("long").alias("n_hits"),
+            F.round("score", 6).alias("score"),
+        )
+        lit = qsel(score_linear_model(docs, _QC_WEIGHTS, bias=0.25))
+        wdf = spark.createDataFrame(
+            sorted(_QC_WEIGHTS.items()), "token STRING, weight DOUBLE")
+        joined = qsel(score_linear_model(docs, wdf, bias=0.25))
+        # part "mix": inverse-sqrt temperature-smoothed domain weights
+        # (datapipe/curation.domain_mix_weights) — all-integer basis
+        # points, so the mix replays bit-identically in the oracle
+        from enrich_spark.datapipe.curation import domain_mix_weights
+
+        mix = domain_mix_weights(docs, budget_docs=10000)
+        # part "salted": two-phase skew-safe aggregation
+        # (plans/bucketing.salted_agg) — algebraic aggregates compose
+        # across the salt phases, so the oracle is a plain GROUP BY
+        from enrich_spark.plans.bucketing import salted_agg
+
+        salted = salted_agg(
+            docs.select("source", "n_chars"), ["source"],
+            sums=["n_chars"], mins=["n_chars"], maxs=["n_chars"], salt=8,
+        ).select(
+            "source",
+            F.col("n").cast("long").alias("n_docs"),
+            F.col("sum_n_chars").cast("long").alias("sum_chars"),
+            F.col("min_n_chars").cast("long").alias("min_chars"),
+            F.col("max_n_chars").cast("long").alias("max_chars"),
+        )
+        # part "c4": the published C4 line/document heuristics
         # (terminal-punctuation lines, sentence floor, structural
         # marker blocklist) — every 4th doc gets injected chaff so both
         # verdict branches are exercised
         from enrich_spark.datapipe.curation import c4_filters
 
-        docs = _load_docs(spark, sf)
         chaff = F.when(F.col("doc_id") % 4 == 0, F.lit(
             "\nshort\nfunction x() { bad }\nlorem ipsum dolor sit."
         )).otherwise(F.lit("\ntail line with words but no period"))
-        return c4_filters(docs.select(
+        c4 = c4_filters(docs.select(
             "doc_id", F.concat(F.col("text"), chaff).alias("text"))).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             "n_lines", "n_kept_lines", "kept_chars", "n_sentences",
             "has_brace", "has_lorem", "has_jswarn", "is_kept")
+        # part "chunk": RAG-ingestion sentence chunking (same packing
+        # contract as pack_sequences, sentence granularity)
+        from enrich_spark.datapipe.curation import chunk_documents
 
-    q["c4_filters"] = lambda spark, sf: _union_parts(
-        [("c4", q_c4(spark, sf))],
-        fill=("doc_id", "n_lines", "n_kept_lines", "kept_chars",
-              "n_sentences", "has_brace", "has_lorem", "has_jswarn",
-              "is_kept"),
-    )
+        chunk = chunk_documents(docs, chunk_tokens=64).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("chunk_id").cast("long").alias("chunk_id"),
+            "n_sentences", "n_tokens",
+            F.substring("chunk_text", 1, 80).alias("chunk_head"))
+        return [("sample", samp), ("pack", pack),
+                ("q_lit", lit), ("q_join", joined), ("mix", mix),
+                ("salted", salted), ("c4", c4), ("chunk", chunk)]
+
+    _DATA_MIX_FILL = (
+        "n_tokens", "seq_pos", "n_hits", "score",
+        "doc_id", "n_docs", "isqrt_n", "weight_bp", "epochs_mbp",
+        "sum_chars", "min_chars", "max_chars",
+        "n_lines", "n_kept_lines", "kept_chars", "n_sentences",
+        "has_brace", "has_lorem", "has_jswarn", "is_kept",
+        "chunk_id", "cnt", "n_grams", "weight_unats",
+        "n_registers_set", "est_distinct", "qb_score", "qbin",
+        "tb_score", "tb_tokens", "dc_score", "domain_rank",
+        "gq_score", "gqbin")
+
+    def q_hll(spark, sf):
+        # portable HLL (md5-derived engine-exact registers) — the
+        # hash-gated representative of the sketch family
+        from enrich_spark.datapipe.sketches import hll_distinct_portable
+
+        docs = _load_docs(spark, sf)
+        return hll_distinct_portable(docs, "text", ("source",)).select(
+            "source",
+            F.col("n_registers_set").cast("long").alias("n_registers_set"),
+            "est_distinct")
+
+    def q_qbins(spark, sf):
+        # score-quantile binning (curation.quantile_bins): bin is a pure
+        # function of the score VALUE via a bounded driver threshold
+        # table + broadcast join — never a global ntile window
+        from enrich_spark.datapipe.curation import quantile_bins
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("n_chars").cast("long").alias("qb_score"))
+        return quantile_bins(docs, "qb_score", k=10).select(
+            "doc_id", "qb_score",
+            F.col("bin").cast("long").alias("qbin"))
+
+    def q_token_budget(spark, sf):
+        # "best N tokens" selection (curation.select_token_budget):
+        # iterative radix threshold search — O(log n) map-side-combined
+        # aggregates instead of a global sort, driver state ≤ max(256,
+        # cell_cap) rows; cell_cap=64 forces multi-round refinement so
+        # the gate exercises the recursion, not just the first level
+        from enrich_spark.datapipe.curation import select_token_budget
+
+        feats = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            (F.col("doc_id") % 11).cast("long").alias("tb_score"),
+            (1 + F.col("n_chars") % 500).cast("long").alias("tb_tokens"))
+        return select_token_budget(
+            feats, 30000, "tb_score", token_col="tb_tokens",
+            cell_cap=64).select("doc_id", "tb_score", "tb_tokens")
+
+    def q_gqbins(spark, sf):
+        # per-GROUP quantile bins (curation.quantile_bins_grouped):
+        # "top quartile within each source" — bounded (group, score)
+        # threshold table + broadcast join, never a per-group ntile
+        from enrich_spark.datapipe.curation import quantile_bins_grouped
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "source",
+            F.col("n_chars").cast("long").alias("gq_score"))
+        return quantile_bins_grouped(
+            docs, "gq_score", "source", k=4).select(
+            "doc_id", "source", "gq_score",
+            F.col("bin").cast("long").alias("gqbin"))
+
+    def q_domain_cap(spark, sf):
+        # per-domain frequency cap (curation.domain_cap): RefinedWeb/
+        # FineWeb-style "≤ N docs per domain, keep highest-scored" —
+        # ONE window partitioned by the domain key (bounded per-key
+        # state; output is skew-free by construction)
+        from enrich_spark.datapipe.curation import domain_cap
+
+        docs = _load_docs(spark, sf).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "source",
+            F.col("n_chars").cast("long").alias("dc_score"))
+        return domain_cap(docs, cap=400, domain_col="source",
+                          score_col="dc_score").select(
+            "doc_id", "source", "dc_score", "domain_rank")
+
+    def q_data_mix(spark, sf):
+        return _union_parts(
+            _data_mix_core_parts(spark, sf)
+            + [("hh", q_heavy_hitters(spark, sf)),
+               ("dsir", q_dsir(spark, sf)),
+               ("hll", q_hll(spark, sf)),
+               ("qbins", q_qbins(spark, sf)),
+               ("budget", q_token_budget(spark, sf)),
+               ("dcap", q_domain_cap(spark, sf)),
+               ("gqbins", q_gqbins(spark, sf))],
+            fill=_DATA_MIX_FILL,
+        )
+
+    q["data_mix"] = q_data_mix
+
+    def q_corpus_stats(spark, sf):
+        # per-source corpus profile with EXACT percentiles (replayable
+        # as quantile_cont, unlike percentile_approx) + dup fraction
+        from enrich_spark.datapipe.text import corpus_stats
+
+        return corpus_stats(_load_docs(spark, sf)).select(
+            F.col("group").alias("source"),
+            F.col("n_docs").cast("long").alias("n_docs"),
+            F.col("total_tokens").cast("long").alias("total_tokens"),
+            "mean_tokens",
+            F.col("p50_tokens").cast("double").alias("p50_tokens"),
+            F.col("p90_tokens").cast("double").alias("p90_tokens"),
+            F.col("total_chars").cast("long").alias("total_chars"),
+            F.col("dup_docs").cast("long").alias("dup_docs"),
+        )
 
     def q_minhash_sig(spark, sf):
         from enrich_spark.datapipe.dedup import md5_hash_family, minhash_signature, shingles
@@ -2263,6 +3688,8 @@ config:
             sig[0].alias("mh0"), sig[1].alias("mh1"),
             sig[2].alias("mh2"), sig[3].alias("mh3"),
         )
+
+    # (registered below, merged with the LSH pair join)
 
     def q_minhash_lsh(spark, sf):
         from enrich_spark.datapipe.dedup import md5_hash_family, minhash_lsh_pairs
@@ -2276,11 +3703,477 @@ config:
             F.round("jaccard", 4).alias("jaccard"),
         )
 
+    def q_incremental_dedup(spark, sf):
+        # incremental ingest: docs with doc_id%4==0 are the NEW crawl
+        # batch, the rest are the stored corpus index — only the new
+        # side pays signature compute (the production recurring shape)
+        from enrich_spark.datapipe.dedup import (
+            build_minhash_index, incremental_dedup_pairs, md5_hash_family,
+        )
+
+        docs = _load_docs(spark, sf)
+        new = docs.where(F.expr("doc_id % 4 = 0"))
+        # the corpus index is the PRECOMPUTED artifact (the operator's
+        # whole point: each ingest pays O(increment), the index is
+        # stored) — cache it like the other fixture inputs so the
+        # row measures the increment-side work, not re-deriving the
+        # corpus every run
+        index = _cached_fixture(
+            spark, "minhash_corpus_index", sf,
+            lambda: build_minhash_index(
+                docs.where(F.expr("doc_id % 4 != 0")), num_hashes=8,
+                bands=4, shingle_k=2, family=md5_hash_family))
+        return incremental_dedup_pairs(
+            new, index, num_hashes=8, bands=4, shingle_k=2,
+            sim_threshold=0.5, family=md5_hash_family,
+        ).select(F.col("new_id").cast("long").alias("new_id"),
+                 F.col("corpus_id").cast("long").alias("corpus_id"),
+                 "est_jaccard_bp")
+
+    # map-only signature ('sig' part) + band-bucket candidate join with
+    # exact-jaccard verify ('lsh' part) + new-batch-vs-stored-index join
+    # ('incr' part) in one oracle row
     q["dedup_minhash_lsh"] = lambda spark, sf: _union_parts(
         [("sig", q_minhash_sig(spark, sf)),
-         ("lsh", q_minhash_lsh(spark, sf))],
+         ("lsh", q_minhash_lsh(spark, sf)),
+         ("incr", q_incremental_dedup(spark, sf))],
         fill=("doc_id", "mh0", "mh1", "mh2", "mh3", "id_a", "id_b",
-              "jaccard"),
+              "jaccard", "new_id", "corpus_id", "est_jaccard_bp"),
+    )
+
+    def q_ngram_jaccard(spark, sf):
+        from enrich_spark.datapipe.dedup import ngram_jaccard_pairs
+
+        docs = _load_docs(spark, sf)
+        pairs = ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.15)
+        return pairs.select(
+            F.col("id_a").cast("long").alias("id_a"),
+            F.col("id_b").cast("long").alias("id_b"),
+            F.round("jaccard", 4).alias("jaccard"),
+        )
+
+    def q_ngram_prefix(spark, sf):
+        # PPJoin-style prefix filtering — exact-complete, so the oracle
+        # is plain brute-force all-pairs jaccard (no blocking clause)
+        from enrich_spark.datapipe.dedup import ngram_jaccard_pairs_prefix
+
+        docs = _load_docs(spark, sf)
+        return ngram_jaccard_pairs_prefix(docs, shingle_k=3, threshold=0.15).select(
+            F.col("id_a").cast("long").alias("id_a"),
+            F.col("id_b").cast("long").alias("id_b"),
+            F.round("jaccard", 4).alias("jaccard"),
+        )
+
+    def q_dup_clusters(spark, sf):
+        # connected components over the blocked pairs (keep-one dedup);
+        # oracle replays via a DuckDB recursive-CTE transitive closure
+        from enrich_spark.datapipe.dedup import dup_clusters, ngram_jaccard_pairs
+
+        docs = _load_docs(spark, sf)
+        pairs = ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.15)
+        return dup_clusters(pairs).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("cluster_id").cast("long").alias("cluster_id"),
+            F.col("is_keeper").cast("long").alias("is_keeper"),
+        )
+
+    def q_dedup_policy(spark, sf):
+        # apply-side keep-policy: clusters + quality-ranked representative
+        # (datapipe/dedup.apply_dedup_policy; quality = n_chars, ties to
+        # the lowest doc_id — deterministic on any engine)
+        from enrich_spark.datapipe.dedup import (
+            apply_dedup_policy, ngram_jaccard_pairs,
+        )
+
+        docs = _load_docs(spark, sf)
+        pairs = ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.15)
+        return apply_dedup_policy(docs, pairs, quality_col="n_chars").select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("cluster_id").cast("long").alias("cluster_id"),
+            F.col("cluster_size").cast("long").alias("cluster_size"),
+            F.col("is_kept").cast("long").alias("is_kept"),
+        )
+
+    # blocked pairs ('blocked'), exact prefix-filter pairs ('prefix'),
+    # connected-component clusters ('clusters'), and the quality-ranked
+    # keep-policy verdict ('policy') in one oracle row
+    def q_containment(spark, sf):
+        # asymmetric containment pairs (dedup.containment_pairs): the
+        # quote/mirror detector Jaccard misses — integer bp both
+        # directions, same blocked-candidate plan as the Jaccard part
+        from enrich_spark.datapipe.dedup import containment_pairs
+
+        docs = _load_docs(spark, sf)
+        return containment_pairs(docs, shingle_k=3, threshold_bp=5000)
+
+    def q_containment_prefix(spark, sf):
+        # r12: the production-scale containment path — prefix-filtered
+        # candidates (complete over ALL pairs, no Zipf-head first-word
+        # block), so the oracle is brute-force all-pairs containment
+        from enrich_spark.datapipe.dedup import containment_pairs_prefix
+
+        docs = _load_docs(spark, sf)
+        return containment_pairs_prefix(docs, shingle_k=3,
+                                        threshold_bp=5000)
+
+    q["dedup_ngram_jaccard"] = lambda spark, sf: _union_parts(
+        [("blocked", q_ngram_jaccard(spark, sf)),
+         ("prefix", q_ngram_prefix(spark, sf)),
+         ("clusters", q_dup_clusters(spark, sf)),
+         ("policy", q_dedup_policy(spark, sf)),
+         ("contain", q_containment(spark, sf)),
+         ("containp", q_containment_prefix(spark, sf))],
+        fill=("id_a", "id_b", "jaccard", "doc_id", "cluster_id", "is_keeper",
+              "cluster_size", "is_kept", "contain_a_bp", "contain_b_bp",
+              "jaccard_bp"),
+    )
+
+    def q_simhash(spark, sf):
+        from enrich_spark.datapipe.dedup import md5_hash_family, simhash_pairs
+
+        docs = _load_docs(spark, sf)
+        # md5-prefix 60-bit token hash = the SQL-replayable family; the
+        # xxhash64 default stays the scale path (see dedup.simhash64)
+        return simhash_pairs(docs, max_hamming=8, hasher=md5_hash_family(0)).select(
+            F.col("id_a").cast("long"), F.col("id_b").cast("long"),
+            F.col("hamming").cast("long"),
+        )
+
+    q["dedup_simhash"] = q_simhash
+
+    def _emb_queries(spark, sf, maxq):
+        """Shared ANN fixture: double-cast vectors + the first-maxq
+        query slice (ONE definition — the LSH/brute/recall variants
+        must all search the same sets or the gate compares different
+        problems)."""
+        vecs = _load_emb(spark, sf).select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double"))
+            .alias("embedding"))
+        queries_df = vecs.where(F.col("vec_id") < maxq).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"))
+        return vecs, queries_df
+
+    # the gated LSH search's parameters — one definition shared by the
+    # bundle parts and the recall parts (the oracle inlines the same
+    # constants)
+    _LSH_GATE = dict(dim=64, k=10, num_tables=4, bits=6, round_digits=4)
+
+    def _lsh_plain_probe(spark, sf):
+        from enrich_spark.datapipe.similarity import lsh_topk_plain_probe
+
+        vecs, queries_df = _emb_queries(spark, sf, maxq=3)
+        sel = lambda df: df.select(  # noqa: E731
+            F.col("query_id").cast("long"), F.col("vec_id").cast("long"),
+            "cosine_sim")
+        # r14: one shared candidate pass with an is_exact flag instead
+        # of two independent lsh_topk searches — row-identical results
+        # (plain = the flagged subset of the probe candidates), but the
+        # corpus signature Generate + candidate BHJ run once; the
+        # multiprobe part still probes, per table, the two Hamming-1
+        # buckets on the low signature bits (query-side-only fan-out)
+        plain, probe = lsh_topk_plain_probe(
+            vecs, queries_df, **_LSH_GATE, multiprobe=2)
+        return sel(plain), sel(probe)
+
+    def q_ann_brute(spark, sf, maxq=5):
+        # round before ranking so Spark/DuckDB agree on order at ties
+        from enrich_spark.datapipe.similarity import cosine
+
+        vecs, queries_df = _emb_queries(spark, sf, maxq)
+
+        scored = vecs.crossJoin(F.broadcast(queries_df)).select(
+            "query_id", "vec_id",
+            F.round(cosine(F.col("embedding"), F.col("query_vec")), 4).alias("cosine_sim"),
+        )
+        w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
+        return (
+            scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .where(F.col("rank") <= 10)
+            .select(
+                F.col("query_id").cast("long"), F.col("vec_id").cast("long"),
+                "cosine_sim", "rank",
+            )
+        )
+
+    q["ann_cosine_topk"] = q_ann_brute
+
+    def q_ann_lsh(spark, sf):
+        plain, probe = _lsh_plain_probe(spark, sf)
+        # recall@10 of the plain LSH result against the rounded brute
+        # ground truth (similarity.topk_recall) — the acceptance metric
+        # an approximate index is tuned by, gated so "approximate" has
+        # a hash-checked honesty number next to it. The summary rolls
+        # up the SAME per-query frame (summarize_topk_recall), not a
+        # second recall join.
+        from enrich_spark.datapipe.similarity import (
+            summarize_topk_recall, topk_recall,
+        )
+
+        exact3 = q_ann_brute(spark, sf, maxq=3)
+        recall = topk_recall(plain, exact3)
+        recall_sum = summarize_topk_recall(recall)
+        return _union_parts(
+            [("plain", plain), ("probe", probe),
+             ("recall", recall), ("recall_sum", recall_sum)],
+            fill=("query_id", "vec_id", "cosine_sim", "n_true",
+                  "n_hits", "recall_bp", "n_queries",
+                  "perfect_queries"),
+        )
+
+    q["ann_lsh_topk"] = q_ann_lsh
+
+    def q_ann_ivf(spark, sf):
+        from enrich_spark.datapipe.similarity import ivf_topk
+
+        vecs, queries_df = _emb_queries(spark, sf, maxq=5)
+        out = ivf_topk(vecs, queries_df, k=10, n_centroids=16, nprobe=4)
+        return out.select(
+            F.col("query_id").cast("long"), F.col("vec_id").cast("long"),
+            "cosine_sim", F.col("rank").cast("long"),
+        )
+
+    def q_cluster_stats(spark, sf):
+        # k-means document clustering rollup (similarity.cluster_stats):
+        # literal-centroid map-side assignment + one bounded groupBy;
+        # same deterministic centroids (vec_id < 16) as the IVF oracle,
+        # all-integer cohesion stats
+        from enrich_spark.datapipe.similarity import cluster_stats
+
+        emb = _load_emb(spark, sf)
+        vecs = emb.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double"))
+            .alias("embedding"))
+        cents = [
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in vecs.where(F.col("vec_id") < 16).collect()
+        ]
+        return cluster_stats(vecs, cents).select(
+            F.col("cid").cast("long").alias("cid"),
+            "n", "sum_sim_bp", "mean_sim_bp", "min_sim_bp", "max_sim_bp")
+
+    def q_pq_codes(spark, sf):
+        # PQ compression (datapipe/pq.apply_pq): map-side code
+        # assignment against the fixed _PQ_MODEL codebook; codes joined
+        # to one string so the value-hash comparator sees a scalar
+        from enrich_spark.datapipe.pq import apply_pq
+
+        emb = _load_emb(spark, sf).select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double"))
+            .alias("embedding"))
+        return apply_pq(emb, _PQ_MODEL).select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            F.array_join(
+                F.transform("codes", lambda c: c.cast("string")), ","
+            ).alias("codes_str"))
+
+    def q_pq_adc(spark, sf):
+        # asymmetric-distance top-k over the compressed corpus
+        # (datapipe/pq.adc_topk): per-query integer LUT broadcast, m
+        # array lookups per (vector, query) pair
+        from enrich_spark.datapipe.pq import adc_topk
+
+        emb = _load_emb(spark, sf).select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double"))
+            .alias("embedding"))
+        queries = emb.where(F.col("vec_id") < 4).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"))
+        return adc_topk(emb, queries, _PQ_MODEL, k=10).select(
+            F.col("query_id").cast("long").alias("query_id"),
+            F.col("vec_id").cast("long").alias("vec_id"),
+            F.col("adc_dist").cast("long").alias("adc_dist"),
+            F.col("rank").cast("long").alias("rank"))
+
+    def q_ivf_recall(spark, sf):
+        # recall@10 of the IVF search vs the rounded brute ground truth
+        # (similarity.topk_recall) — hash-gated per query
+        from enrich_spark.datapipe.similarity import topk_recall
+
+        return topk_recall(q_ann_ivf(spark, sf), q_ann_brute(spark, sf))
+
+    def q_kmeans_update(spark, sf):
+        # full-corpus distributed Lloyd update (similarity.
+        # kmeans_update_stats): map-side literal-centroid assignment +
+        # ONE k-row groupBy of integer micro-unit component sums — the
+        # training step itself, hash-gated (same deterministic
+        # vec_id<16 centroids as the cluster/IVF oracles)
+        from enrich_spark.datapipe.similarity import kmeans_update_stats
+
+        vecs, _ = _emb_queries(spark, sf, maxq=0)
+        cents = [
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in vecs.where(F.col("vec_id") < 16).collect()
+        ]
+        out = kmeans_update_stats(vecs, cents)
+        return out.select(
+            "cid", "n_members",
+            F.md5(F.concat_ws(",", F.transform(
+                "comp_sums", lambda s: s.cast("string"))))
+            .alias("sums_digest"))
+
+    def q_pca_gram(spark, sf):
+        # one-pass integer second-moment statistics (pca.pca_gram):
+        # Arrow-batched numpy q^T q partials, bounded d(d+1)/2-key
+        # groupBy — the distributed half of fit_pca; exact int64 sums
+        # replay bit-for-bit in DuckDB
+        from enrich_spark.datapipe.pca import pca_gram
+
+        emb = _load_emb(spark, sf)
+        return pca_gram(emb, dim=64).select(
+            F.col("i").cast("long").alias("i"),
+            F.col("j").cast("long").alias("j"), "v")
+
+    def q_pca_proj(spark, sf):
+        # native whitened projection (pca.pca_project) against the
+        # hand-pinned _pca_fixed_model — zero Python, zero shuffle
+        from enrich_spark.datapipe.pca import pca_project
+
+        emb = _load_emb(spark, sf)
+        out = pca_project(emb, _pca_fixed_model(), whiten=True)
+        return out.select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            *[F.round(F.element_at("pca", j + 1), 4).alias(f"pc{j}")
+              for j in range(4)])
+
+    # IVF top-k + clustering rollup + PQ compression/ADC + IVF recall
+    # + one-pass PCA (gram statistics, whitened projection) in one row
+    q["ann_ivf_topk"] = lambda spark, sf: _union_parts(
+        [("ivf", q_ann_ivf(spark, sf)),
+         ("cluster", q_cluster_stats(spark, sf)),
+         ("pq_codes", q_pq_codes(spark, sf)),
+         ("pq_adc", q_pq_adc(spark, sf)),
+         ("recall", q_ivf_recall(spark, sf)),
+         ("pca_gram", q_pca_gram(spark, sf)),
+         ("pca_proj", q_pca_proj(spark, sf)),
+         ("kmeans", q_kmeans_update(spark, sf))],
+        fill=("query_id", "vec_id", "cosine_sim", "rank", "cid", "n",
+              "sum_sim_bp", "mean_sim_bp", "min_sim_bp", "max_sim_bp",
+              "adc_dist", "n_true", "n_hits", "recall_bp", "i", "j",
+              "v", "pc0", "pc1", "pc2", "pc3", "n_members"),
+    )
+
+    def q_embedding_dup(spark, sf):
+        from enrich_spark.datapipe.similarity import dot, norm
+
+        emb = _load_emb(spark, sf)
+        # precompute each row's norm BEFORE the pair join: the per-pair
+        # expression drops from 3 array passes to 1 (dot only), and the
+        # double value is bit-identical to dot/(norm*norm) per pair
+        vecs = emb.select(
+            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
+        ).withColumn("nrm", norm(F.col("embedding")))
+        l = vecs.alias("l")
+        r = vecs.alias("r")
+        pairs = l.join(r, F.col("l.vec_id") < F.col("r.vec_id")).select(
+            F.col("l.vec_id").cast("long").alias("id_a"),
+            F.col("r.vec_id").cast("long").alias("id_b"),
+            F.round(
+                dot(F.col("l.embedding"), F.col("r.embedding"))
+                / (F.col("l.nrm") * F.col("r.nrm")),
+                4,
+            ).alias("cosine_sim"),
+        )
+        return pairs.where(F.col("cosine_sim") >= 0.4)
+
+    def q_embedding_lsh(spark, sf):
+        # the PRODUCTION dup-pair path (similarity.embedding_dup_pairs):
+        # random-hyperplane signatures explode to (tbl, sig) buckets and
+        # candidates come from a bucketed EQUI-join — the 100 TB plan,
+        # vs the brute all-pairs theta join of the `pairs` part (kept as
+        # the semantic oracle). Called at threshold 0.3999 on the raw
+        # cosine, then re-filtered on the 4dp-rounded value, so the gate
+        # condition is exactly round(cos,4) >= 0.4 on both engines (any
+        # pair with rounded >= 0.4 has raw >= 0.39995 > 0.3999).
+        from enrich_spark.datapipe.similarity import embedding_dup_pairs
+
+        emb = _load_emb(spark, sf)
+        vecs = emb.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double"))
+            .alias("embedding"))
+        out = embedding_dup_pairs(vecs, dim=64, threshold=0.3999,
+                                  num_tables=4, bits=8)
+        return (out.select(
+            F.col("id_a").cast("long").alias("id_a"),
+            F.col("id_b").cast("long").alias("id_b"),
+            F.round("cosine_sim", 4).alias("cosine_sim"))
+            .where(F.col("cosine_sim") >= 0.4))
+
+    def q_semantic_dedup(spark, sf):
+        # SemDeDup (similarity.semantic_dedup): literal-centroid
+        # assignment (same deterministic vec_id<16 centroids as the
+        # IVF/cluster oracles) + cluster-bounded pair prune
+        from enrich_spark.datapipe.similarity import semantic_dedup
+
+        emb = _load_emb(spark, sf)
+        vecs = emb.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double"))
+            .alias("embedding"))
+        cents = [
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in vecs.where(F.col("vec_id") < 16).collect()
+        ]
+        return semantic_dedup(vecs, cents, threshold=0.55).select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            "cid", "sim_bp", "n_dups",
+            F.round("max_sim", 4).alias("max_sim"), "is_kept")
+
+    def q_quantize_int8(spark, sf):
+        # symmetric per-vector int8 quantization (4x embedding
+        # compression, map-side zero-shuffle); the code array is
+        # hash-gated via an md5 digest
+        from enrich_spark.datapipe.similarity import quantize_int8
+
+        emb = _load_emb(spark, sf)
+        out = quantize_int8(emb)
+        return out.select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            F.md5(F.concat_ws(",", F.transform(
+                "q", lambda x: x.cast("string")))).alias("q_digest"),
+            "scale_1e9", "max_abs_err_1e6")
+
+    def q_margin_mine(spark, sf):
+        # margin-based pair mining (Artetxe & Schwenk 2019): src slice
+        # vs the rest, integer micro-unit cosines, ppm margin
+        from enrich_spark.datapipe.similarity import mine_margin_pairs
+
+        emb = _load_emb(spark, sf)
+        src = emb.where(F.col("vec_id") < 40)
+        tgt = emb.where(F.col("vec_id") >= 40)
+        return mine_margin_pairs(src, tgt, k=4,
+                                 margin_threshold_ppm=1_000_000).select(
+            F.col("x").cast("long").alias("x"),
+            F.col("y").cast("long").alias("y"),
+            "cos_u", "margin_ppm")
+
+    def q_neg_samples(spark, sf):
+        # deterministic contrastive negatives (similarity.
+        # negative_samples): bounded bucket-rep groupBy + ONE map
+        # literal — the sampling pass itself is map-side zero-shuffle
+        from enrich_spark.datapipe.similarity import negative_samples
+
+        docs = _load_docs(spark, sf)
+        return negative_samples(docs, k=3, n_buckets=64).select(
+            F.col("anchor_id").cast("long").alias("anchor_id"),
+            "j", F.col("neg_id").cast("long").alias("neg_id"))
+
+    q["embedding_dup_pairs"] = lambda spark, sf: _union_parts(
+        [("pairs", q_embedding_dup(spark, sf)),
+         ("lsh_pairs", q_embedding_lsh(spark, sf)),
+         ("semdedup", q_semantic_dedup(spark, sf)),
+         ("int8", q_quantize_int8(spark, sf)),
+         ("margin", q_margin_mine(spark, sf)),
+         ("negs", q_neg_samples(spark, sf))],
+        fill=("id_a", "id_b", "cosine_sim", "vec_id", "cid", "sim_bp",
+              "n_dups", "max_sim", "is_kept", "scale_1e9",
+              "max_abs_err_1e6", "x", "y", "cos_u", "margin_ppm",
+              "anchor_id", "j", "neg_id"),
     )
 
     def q_lang_id(spark, sf):
@@ -2290,6 +4183,7 @@ config:
         return language_id(docs).select(
             F.col("doc_id").cast("long").alias("doc_id"), "detected_lang"
         )
+
 
     def q_quality(spark, sf):
         from enrich_spark.datapipe.text import quality_score
@@ -2308,6 +4202,154 @@ config:
             F.round("top_bigram_char_ratio", 4).alias("top_bigram_char_ratio"),
             F.round("quality_score", 4).alias("quality_score"),
         )
+
+
+    def q_tokens(spark, sf):
+        from enrich_spark.datapipe.text import token_counts
+
+        docs = _load_docs(spark, sf)
+        return token_counts(docs).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("ws_tokens").cast("long").alias("ws_tokens"),
+            F.col("bpe_est_tokens").cast("long").alias("bpe_est_tokens"),
+        )
+
+
+    def q_fingerprint_doc(spark, sf):
+        from enrich_spark.datapipe.text import doc_fingerprint
+
+        docs = _load_docs(spark, sf)
+        out = doc_fingerprint(docs)
+        # oracle-parity winnow: md5-based variant
+        norm = F.regexp_replace(F.lower(F.col("text")), "\\s+", " ")
+        n = F.length(norm)
+        idx = F.sequence(F.lit(1), F.greatest(n - 7, F.lit(1)))
+        grams = F.transform(idx, lambda i: norm.substr(i, F.lit(8)))
+        winnow = F.array_min(
+            F.transform(grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"))
+        )
+        return docs.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.md5(norm).alias("content_hash"),
+            winnow.alias("winnow_hash"),
+        )
+
+
+    def q_repetition(spark, sf):
+        # Gopher repetition-filter suite (datapipe/text.repetition_signals):
+        # all-integer basis points, zero shuffles
+        from enrich_spark.datapipe.text import repetition_signals
+
+        out = repetition_signals(_load_docs(spark, sf))
+        return out.withColumn("doc_id", F.col("doc_id").cast("long"))
+
+    def q_bigram_lm(spark, sf):
+        # CCNet-style bigram-LM surprisal, quantized to whole bits so the
+        # result is exact (no float log-sum): model trained on the corpus
+        # via two groupBys, broadcast back, one per-doc agg
+        from enrich_spark.datapipe.text import bigram_lm_score
+
+        out = bigram_lm_score(_load_docs(spark, sf))
+        return out.withColumn("doc_id", F.col("doc_id").cast("long"))
+
+    def q_html_extract(spark, sf):
+        # web-page text extraction + boilerplate signals
+        # (datapipe/webtext.html_extract): deterministic HTML synthesized
+        # around each doc's text (nav-chrome-heavy every 7th doc) so the
+        # oracle replays the exact extraction chain; RE2-safe regexes by
+        # construction, all-integer density signals
+        from enrich_spark.datapipe.webtext import html_extract
+
+        docs = _load_docs(spark, sf)
+        body = F.substring(F.col("text"), 1, 400)
+        html = F.concat(
+            F.lit('<html><head><title>Doc '), F.col("doc_id").cast("string"),
+            F.lit('</title><script type="text/javascript">var x = 1 < 2 && "a";</script>'
+                  '<style>p { color: red }</style></head><body><!-- nav -->'
+                  '<NAV><ul>'),
+            F.when(
+                F.col("doc_id") % 7 == 0,
+                F.lit('<li><a href="/a">Home &amp; more</a></li>'
+                      '<li><a href="/b">About &nbsp;us</a></li>'
+                      '<li><a href="/c">Contact</a></li>'
+                      '<li><a href="/d">Shop &lt;new&gt;</a></li>'),
+            ).otherwise(F.lit('<li><a href="/a">Home</a></li>')),
+            F.lit('</ul></nav><h1>Title &quot;h&#39;s&quot;</h1><p>'), body,
+            F.lit('</p><div>tail &#160;x</div></body></html>'))
+        src = docs.select("doc_id", html.alias("html"))
+        return html_extract(src).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "extracted_text",
+            F.col("html_len").cast("long").alias("html_len"),
+            F.col("text_len").cast("long").alias("text_len"),
+            F.col("n_tags").cast("long").alias("n_tags"),
+            F.col("n_links").cast("long").alias("n_links"),
+            F.col("anchor_chars").cast("long").alias("anchor_chars"),
+            F.col("text_density_bp").cast("long").alias("text_density_bp"),
+            F.col("link_density_bp").cast("long").alias("link_density_bp"),
+            F.col("is_boilerplate").cast("long").alias("is_boilerplate"),
+        )
+
+    _BM25_TERMS = ["window", "join", "scan", "zebra"]  # last one absent
+
+    def q_bm25(spark, sf):
+        # Okapi BM25 relevance vs a fixed query (datapipe/text
+        # .bm25_score): one single-row stats agg broadcast back,
+        # map-side scoring with literal-chain float order
+        from enrich_spark.datapipe.text import bm25_score
+
+        return bm25_score(_load_docs(spark, sf), _BM25_TERMS).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("dl").alias("bm_dl"), F.col("bm25"),
+            F.col("n_hit_terms"))
+
+    def q_url_normalize(spark, sf):
+        # crawl-frontier URL canonicalization (datapipe/webtext
+        # .url_normalize): deterministic URL synthesized per doc —
+        # mixed case, default + explicit ports, duplicate slashes,
+        # tracking params, fragments, multi-label public suffixes
+        from enrich_spark.datapipe.webtext import url_normalize
+
+        docs = _load_docs(spark, sf)
+        host = F.element_at(
+            F.array(F.lit("WWW.Example.CO.UK:80"), F.lit("Shop.Example.COM"),
+                    F.lit("news.example.com.au:443"), F.lit("example.org:8080"),
+                    F.lit("a.b.co.jp"), F.lit("www.foo.net")),
+            (F.col("doc_id") % 6 + 1).cast("int"))
+        scheme = F.when(F.col("doc_id") % 2 == 0, F.lit("https://")) \
+            .otherwise(F.lit("HTTP://"))
+        url = F.concat(
+            scheme, host, F.lit("/Docs//"), F.col("source"), F.lit("/"),
+            F.col("doc_id").cast("string"),
+            F.lit("/?utm_source=feed&id="), F.col("doc_id").cast("string"),
+            F.lit("&b=2&a=1&gclid=x#sec"))
+        src = docs.select("doc_id", url.alias("url"))
+        return url_normalize(src).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "canonical_url", "host", "reg_domain",
+            "path_depth", "n_params", "n_tracking")
+
+    def q_bpe(spark, sf):
+        # BPE tokenization with the fixed _BPE_MERGES table (trained by
+        # datapipe/bpe.train_bpe — distributed word-freq agg + bounded
+        # driver merge loop; apply is a zero-Python literal replace
+        # chain, one stage boundary per pass)
+        from enrich_spark.datapipe.bpe import apply_bpe
+
+        return apply_bpe(_load_docs(spark, sf), _BPE_MERGES).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "n_words", "n_tokens", "tokens_head")
+
+    def q_unigram(spark, sf):
+        # unigram-LM tokenization with the fixed _UNIGRAM_PIECES table
+        # (datapipe/unigram.train_unigram — distributed word-freq agg +
+        # bounded driver EM; apply is a zero-Python aggregate-fold
+        # Viterbi with the piece table as ONE map literal)
+        from enrich_spark.datapipe.unigram import apply_unigram
+
+        return apply_unigram(_load_docs(spark, sf), _UNIGRAM_PIECES).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "n_words", "n_tokens", "cost_unats")
 
     def q_text_norm(spark, sf):
         # corpus text normalization (text.normalize_text): line-ending
@@ -2331,23 +4373,619 @@ config:
             .alias("norm_delta_chars"),
         )
 
+    def q_script_profile(spark, sf):
+        # Unicode script profile (text.script_profile): per-script char
+        # counts + dominant script + non-ASCII share, one native
+        # projection. The corpus is ascii, so a deterministic
+        # multi-script suffix keyed by doc_id exercises every range
+        from enrich_spark.datapipe.text import script_profile
+
+        docs = _load_docs(spark, sf)
+        probe = F.element_at(
+            F.array(F.lit("Привет мир"), F.lit("中文文本内容"),
+                    F.lit("مرحبا بالعالم"), F.lit("한국어 텍스트"),
+                    F.lit("ひらがな καλημέρα"), F.lit("שלום नमस्ते ৳")),
+            (F.col("doc_id") % 6 + 1).cast("int"))
+        mixed = docs.select(
+            "doc_id",
+            F.concat(F.substring("text", 1, 80), F.lit(" "), probe)
+            .alias("text"))
+        return script_profile(mixed).withColumn(
+            "doc_id", F.col("doc_id").cast("long"))
+
+    def q_sbo_lm(spark, sf):
+        # r12: stupid-backoff n-gram LM scoring (datapipe/lm.py — the
+        # CCNet-style quality signal): counts trained on the corpus,
+        # every doc scored with integer micro-log10 units (floored
+        # per token, so sums are order-independent). The counts table
+        # is persisted like any trained model artifact — lm_score
+        # references it four times (unigram, prefix, bigram, total)
+        # and a real pipeline LOADS a reference-corpus LM rather than
+        # retraining it inside every scoring query.
+        from enrich_spark.datapipe.lm import lm_counts, lm_score
+
+        docs = _load_docs(spark, sf)
+        counts = _cached_fixture(spark, "sbo_counts", sf,
+                                 lambda: lm_counts(docs))
+        return lm_score(docs, counts)
+
+    def q_code_profile(spark, sf):
+        # r13: code-vs-prose router (text.code_profile) — native
+        # regexp counts over RE2-safe patterns the oracle replays
+        # verbatim; the documents fixture has little real code, so the
+        # signal exercise lives in the unit fixtures — the gate checks
+        # engine parity of every count and the integer blend
+        from enrich_spark.datapipe.text import code_profile
+
+        return code_profile(_load_docs(spark, sf)).select(
+            "doc_id",
+            F.col("n_chars").alias("cp_chars"),
+            F.col("n_lines").alias("cp_lines"),
+            "n_sym", "n_ops", "n_indent_lines", "n_kw",
+            "code_score_bp", "is_code")
+
+    def q_fence_extract(spark, sf):
+        # r14: fenced-code extraction (text.extract_code_blocks) —
+        # fences synthesized by doc_id arithmetic (the corpus has
+        # none): every %3==0 doc gains a terminated fence whose body
+        # derives from its own doc_id, every %7==1 doc an UNTERMINATED
+        # fence that must stay in prose; both engines build the same
+        # string and split it with the same RE2-safe pattern
+        from enrich_spark.datapipe.text import extract_code_blocks
+
+        docs = _load_docs(spark, sf).select("doc_id", "text")
+        lang = F.element_at(
+            F.array(F.lit("py"), F.lit("js"), F.lit("rust"),
+                    F.lit("")),
+            (F.col("doc_id") % 4 + 1).cast("int"))
+        fenced = F.concat(
+            F.lit("\n```"), lang,
+            F.lit("\nx = "), F.col("doc_id").cast("string"),
+            F.lit(";\n    y[0] += 2;\n```\ntail "))
+        t = F.concat(
+            F.substring("text", 1, 120),
+            F.when(F.col("doc_id") % 3 == 0, fenced)
+            .otherwise(F.lit(" plain ")),
+            F.when(F.col("doc_id") % 7 == 1,
+                   F.lit("\n```js\nunterminated"))
+            .otherwise(F.lit("")))
+        out = extract_code_blocks(docs.select("doc_id",
+                                              t.alias("text")))
+        return out.select(
+            "doc_id",
+            F.md5("prose_text").alias("prose_md5"),
+            F.md5("code_text").alias("code_md5"),
+            "fence_langs",
+            "n_fences", "code_chars", "prose_chars")
+
+    def q_fence_mix(spark, sf):
+        # r14: corpus code-mix table over the SAME synthesized-fence
+        # fixture (text.fence_language_mix) — one row per fence
+        # language with block/char/doc counts, the ratio-planning
+        # aggregate
+        from enrich_spark.datapipe.text import fence_language_mix
+
+        docs = _load_docs(spark, sf).select("doc_id", "text")
+        lang = F.element_at(
+            F.array(F.lit("py"), F.lit("js"), F.lit("rust"),
+                    F.lit("")),
+            (F.col("doc_id") % 4 + 1).cast("int"))
+        fenced = F.concat(
+            F.lit("\n```"), lang,
+            F.lit("\nx = "), F.col("doc_id").cast("string"),
+            F.lit(";\n    y[0] += 2;\n```\ntail "))
+        t = F.concat(
+            F.substring("text", 1, 120),
+            F.when(F.col("doc_id") % 3 == 0, fenced)
+            .otherwise(F.lit(" plain ")))
+        return fence_language_mix(
+            docs.select("doc_id", t.alias("text"))).select(
+            F.col("lang").alias("fence_langs"),
+            "n_blocks", "code_chars",
+            F.col("n_docs").alias("n_docs"))
+
     def q_text_analysis(spark, sf):
-        # language-ID, Gopher quality signals and text normalization
-        # (the annotate/transform steps of the curate pipeline)
+        # the text-analysis operator family bundled into ONE oracle row
+        # (driver caps the correctness gate at 50 queries — standalone
+        # rows rotated OUT of the r6 gate and went driver-unverified):
+        # language-ID, Gopher quality signals, token counts, winnowing
+        # fingerprint, per-source corpus-stats rollup, the full Gopher
+        # repetition suite, bigram-LM surprisal scoring, and BPE
+        # subword tokenization
         return _union_parts(
             [("lang", q_lang_id(spark, sf)),
              ("quality", q_quality(spark, sf)),
-             ("clean", q_text_norm(spark, sf))],
+             ("tokens", q_tokens(spark, sf)),
+             ("fprint", q_fingerprint_doc(spark, sf)),
+             ("stats", q_corpus_stats(spark, sf)),
+             ("rep", q_repetition(spark, sf)),
+             ("lm", q_bigram_lm(spark, sf)),
+             ("html", q_html_extract(spark, sf)),
+             ("bpe", q_bpe(spark, sf)),
+             ("unigram", q_unigram(spark, sf)),
+             ("url", q_url_normalize(spark, sf)),
+             ("bm25", q_bm25(spark, sf)),
+             ("clean", q_text_norm(spark, sf)),
+             ("script", q_script_profile(spark, sf)),
+             ("sbo", q_sbo_lm(spark, sf)),
+             ("code", q_code_profile(spark, sf)),
+             ("fence", q_fence_extract(spark, sf)),
+             ("fmix", q_fence_mix(spark, sf))],
             fill=("doc_id", "n_chars", "n_words", "mean_word_len",
                   "punct_ratio", "stopword_ratio", "distinct_word_ratio",
                   "dup_line_ratio", "top_bigram_char_ratio", "quality_score",
-                  "norm_changed", "norm_delta_chars"),
+                  "ws_tokens", "bpe_est_tokens", "winnow_hash", "n_docs",
+                  "total_tokens", "mean_tokens", "p50_tokens", "p90_tokens",
+                  "total_chars", "dup_docs",
+                  "n_lines", "n_paras", "dup_line_bp", "dup_line_char_bp",
+                  "dup_para_bp", "dup_para_char_bp", "top2gram_bp",
+                  "top3gram_bp", "top4gram_bp", "dup5gram_bp", "dup10gram_bp",
+                  "n_bigrams", "oov_bigrams", "info_bits", "avg_info_bp",
+                  "html_len", "text_len", "n_tags", "n_links",
+                  "anchor_chars", "text_density_bp", "link_density_bp",
+                  "is_boilerplate", "n_tokens",
+                  "path_depth", "n_params", "n_tracking",
+                  "bm_dl", "bm25", "n_hit_terms", "cost_unats",
+                  "norm_changed", "norm_delta_chars",
+                  "n_latin", "n_cyrillic", "n_greek", "n_arabic",
+                  "n_hebrew", "n_devanagari", "n_cjk", "n_kana",
+                  "n_hangul", "n_other", "nonascii_bp",
+                  "logp_micro", "avg_logp_micro",
+                  "cp_chars", "cp_lines", "n_sym", "n_ops",
+                  "n_indent_lines", "n_kw", "code_score_bp",
+                  "is_code",
+                  "prose_md5", "code_md5", "fence_langs", "n_fences",
+                  "code_chars", "prose_chars", "n_blocks", "n_docs"),
         )
 
     q["text_analysis"] = q_text_analysis
 
+    def _media_docs(spark, sf, docs=None, m2="wav"):
+        # REAL media fixture: encode genuine PNG / BMP / WAV bytes
+        # (datapipe/media_codecs.py) whose decoded statistics are pure
+        # doc_id arithmetic, so a SQL oracle predicts every decoded value.
+        # `docs` lets callers pre-filter BEFORE the mapInPandas encode
+        # (filters don't push through Python stages).
+        import numpy as np
+        import pandas as pd
+
+        from enrich_spark.datapipe.jpeg import encode_jpeg
+        from enrich_spark.datapipe.media_codecs import (
+            encode_bmp, encode_png, encode_wav,
+        )
+
+        if docs is None:
+            docs = _load_docs(spark, sf)
+        docs = docs.select("doc_id", "text")
+
+        def gen(it):
+            for pdf in it:
+                medias = []
+                for did, text in zip(pdf["doc_id"], pdf["text"]):
+                    did, m = int(did), int(did) % 4
+                    if m == 0 and did % 32 == 20:
+                        # REAL LOSSLESS JPEG (SOF3 predictive, jpeg.py):
+                        # a flat gray plane round-trips bit-exact by
+                        # definition, so the oracle predicts the mean
+                        from enrich_spark.datapipe.jpeg import (
+                            encode_jpeg_lossless,
+                        )
+
+                        w, h, v = 1 + did % 11, 1 + did % 6, did % 256
+                        medias.append(encode_jpeg_lossless(
+                            w, h, np.full((h, w), v, np.uint16),
+                            predictor=1 + did % 7))
+                    elif m == 0:
+                        w, h, v = 1 + did % 13, 1 + did % 7, did % 256
+                        medias.append(encode_png(w, h, np.full((h, w * 3), v, np.uint8)))
+                    elif m == 1:
+                        w, h, v = 1 + did % 9, 1 + did % 5, (did * 3) % 256
+                        medias.append(encode_bmp(w, h, np.full((h, w * 3), v, np.uint8)))
+                    elif m == 2 and m2 == "avi":
+                        # real AVI container (media_codecs.encode_avi):
+                        # 25 fps × (did % 120) frames → 40·(did % 120) ms,
+                        # parsed NATIVELY by attach_media_meta
+                        from enrich_spark.datapipe.media_codecs import encode_avi
+
+                        medias.append(encode_avi(64, 48, 25, did % 120))
+                    elif m == 2 and did % 16 == 6:
+                        # REAL ISO-BMFF container (media_codecs.
+                        # encode_mp4_header): mvhd duration, video-trak
+                        # tkhd dims and stsd codec fourcc all pure
+                        # doc_id arithmetic the oracle predicts
+                        from enrich_spark.datapipe.media_codecs import (
+                            encode_mp4_header,
+                        )
+
+                        vc = ["avc1", "hev1", "av01", "vp09"][(did // 16) % 4]
+                        medias.append(encode_mp4_header(
+                            1000 + did % 977, 16 * (1 + did % 60),
+                            9 * (1 + did % 60), vc, audio=True,
+                            mvhd_version=(did // 32) % 2))
+                    elif m == 2:
+                        n, v = 800 + (did % 100) * 8, did % 127
+                        medias.append(encode_wav(8000, np.full(n, v, np.uint8)))
+                    elif did % 8 == 3:
+                        # REAL baseline JPEG (datapipe/jpeg.py): a solid
+                        # color is DC-only, quantization error < 0.5 →
+                        # decodes bit-exact, so the oracle predicts it
+                        w, h, v = 8 + did % 9, 8 + did % 5, (did * 7) % 256
+                        medias.append(encode_jpeg(
+                            w, h, np.full((h, w, 3), v, np.uint8), quality=90))
+                    elif did % 16 == 7:
+                        # REAL GIF (LZW, lossless): solid palette color
+                        from enrich_spark.datapipe.media_codecs import encode_gif
+
+                        w, h, v = 4 + did % 6, 3 + did % 4, (did * 11) % 256
+                        pal = np.array([[v, v, v], [0, 0, 0]], np.uint8)
+                        medias.append(encode_gif(w, h, pal, np.zeros((h, w), int)))
+                    elif did % 32 == 15:
+                        # REAL MP3 frame chain: duration from the exact
+                        # frame walk; the CBR header also parses natively
+                        from enrich_spark.datapipe.media_codecs import encode_mp3
+
+                        medias.append(encode_mp3(10 + did % 50))
+                    elif did % 32 == 31:
+                        # REAL 12-BIT JPEG (extended sequential SOF1):
+                        # flat gray at q=100 has unit quant tables and
+                        # DC-only blocks → decodes bit-exact to uint16,
+                        # so the oracle predicts the 12-bit mean
+                        w, h = 8 + did % 9, 8 + did % 5
+                        v12 = (did * 13) % 4096
+                        medias.append(encode_jpeg(
+                            w, h, np.full((h, w), v12, np.uint16),
+                            quality=100, precision=12))
+                    else:
+                        # no known magic (verified: no doc text collides)
+                        medias.append((text or "").encode("utf-8"))
+                yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": medias})
+
+        return docs.mapInPandas(gen, "doc_id long, media binary")
+
+    def q_media_decode(spark, sf):
+        # datapipe/multimodal: native magic-byte sniff + mapInPandas REAL
+        # decode (PNG inflate+unfilter / BMP / WAV kernels; digest stub
+        # only for the unknown-format branch, flagged by `codec`) in ONE
+        # pass — no self-join. Oracle checks genuine decoded width/height/
+        # channels/duration and pixel/sample means.
+        from enrich_spark.datapipe.multimodal import attach_media_meta, decode_features
+
+        df = attach_media_meta(_media_docs(spark, sf))
+        out = decode_features(
+            df, id_col="doc_id", binary_col="media", passthrough=("media_meta",)
+        )
+        return out.select(
+            F.col("id").alias("doc_id"),
+            F.col("media_meta.format").alias("format"),
+            F.col("media_meta.media_type").alias("media_type"),
+            F.coalesce(F.col("width").cast("long"), F.lit(-1)).alias("width"),
+            F.coalesce(F.col("height").cast("long"), F.lit(-1)).alias("height"),
+            F.coalesce(F.col("channels").cast("long"), F.lit(-1)).alias("channels"),
+            F.coalesce(F.col("duration_ms").cast("long"), F.lit(-1)).alias("duration_ms"),
+            F.coalesce(F.round("mean_val", 4), F.lit(-1.0)).alias("mean_val"),
+            F.col("codec"),
+            # native header parse (attach_media_meta — no Python): PNG/BMP
+            # dims and canonical-WAV duration verified independently of
+            # the decode kernel's values
+            F.coalesce(F.col("media_meta.width").cast("long"), F.lit(-1))
+            .alias("meta_width"),
+            F.coalesce(F.col("media_meta.height").cast("long"), F.lit(-1))
+            .alias("meta_height"),
+            F.coalesce(F.col("media_meta.duration_ms").cast("long"), F.lit(-1))
+            .alias("meta_duration_ms"),
+        )
+
+
+    def q_media_frames(spark, sf):
+        # datapipe/multimodal.frame_sample_plan: 1→N frame-timestamp
+        # explode driven by REAL container metadata — the AVI fixture's
+        # avih chunk (dwMicroSecPerFrame × dwTotalFrames) is parsed
+        # natively by attach_media_meta, no probe stub
+        from enrich_spark.datapipe.multimodal import attach_media_meta, frame_sample_plan
+
+        vid_docs = _load_docs(spark, sf).where(F.col("doc_id") % 4 == 2)
+        df = attach_media_meta(_media_docs(spark, sf, docs=vid_docs, m2="avi"))
+        return frame_sample_plan(df, every_ms=500).select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("frame_ts_ms").cast("long").alias("frame_ts_ms"),
+            F.col("media_meta.width").cast("long").alias("vid_width"),
+            F.col("media_meta.duration_ms").cast("long").alias("vid_duration_ms"),
+        )
+
+
+    def q_audio_features(spark, sf):
+        # real-DSP audio features (multimodal.audio_features): each doc
+        # carries an on-bin int16 sine (N=2000, rate=8000, bin k from
+        # doc_id), so dominant bin/frequency are exact integer
+        # arithmetic the oracle predicts without decoding anything
+        import numpy as np
+        import pandas as pd
+
+        from enrich_spark.datapipe.media_codecs import encode_wav
+        from enrich_spark.datapipe.multimodal import audio_features
+
+        docs = _load_docs(spark, sf).select("doc_id")
+
+        def gen(it):
+            for pdf in it:
+                medias = []
+                for did in pdf["doc_id"]:
+                    did = int(did)
+                    n, rate, k = 2000, 8000, 3 + did % 97
+                    amp = 4000 + (did % 10) * 100
+                    t = np.arange(n)
+                    sig = (amp * np.sin(2 * np.pi * k * t / n)).astype("<i2")
+                    medias.append(encode_wav(rate, sig))
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"].astype("int64"),
+                     "media": medias})
+
+        wavs = _cached_fixture(
+            spark, "audio_docs", sf,
+            lambda: docs.mapInPandas(gen, "doc_id long, media binary"))
+        return audio_features(wavs).select(
+            "doc_id", "rate", "n_samples",
+            F.col("channels").alias("a_channels"),
+            "dominant_bin", "dominant_freq_mhz")
+
+    def q_media_resize(spark, sf):
+        # real nearest-neighbor resize (multimodal.resize_images) over
+        # the constant-pixel PNG rows of the media fixture: a constant
+        # image resamples to the same constant, so target dims and the
+        # integer milli-mean are pure doc_id arithmetic for the oracle
+        from enrich_spark.datapipe.multimodal import resize_images
+
+        media = _cached_fixture(
+            spark, "media_docs_png", sf,
+            lambda: _media_docs(spark, sf, docs=_load_docs(spark, sf).where(
+                (F.col("doc_id") % 4 == 0) & (F.col("doc_id") % 32 != 20))))
+        out = resize_images(media, width=5, height=4)
+        return out.select(
+            "doc_id",
+            F.col("src_width").cast("long").alias("rz_src_w"),
+            F.col("src_height").cast("long").alias("rz_src_h"),
+            F.col("width").cast("long").alias("rz_w"),
+            F.col("height").cast("long").alias("rz_h"),
+            F.col("channels").cast("long").alias("rz_channels"),
+            F.round(F.col("mean_val") * 1000).cast("long")
+            .alias("rz_mean_mil"),
+        )
+
+    def _dhash_docs(spark, sf):
+        # r12 perceptual-hash fixture: 9×8 BMP images whose every pixel
+        # is an md5 value of (p, x, y) — px = first-2-hex-digits of
+        # md5("p:x:y") mod 251, the same md5 discipline as the audio
+        # fixture, so gradient-sign bits are cryptographically mixed:
+        # unrelated images sit at Hamming ≈ 32 (measured: 36 pairs ≤ 4
+        # across all 1.39M sf0.1 pairs, all planned). Arithmetic pixel
+        # formulas were tried first and REJECTED — any v = f(p) + g(x,y)
+        # form makes two docs' images differ by a constant shift, so
+        # bits differ only where values cross a wrap boundary and ~2%
+        # of ALL pairs landed under the Hamming threshold. Planned
+        # duplicates: doc_id%91==0 reuses the previous subset member's
+        # param (exact dup, Hamming 0); %91==7 reuses it with ONE pixel
+        # perturbed +40 (near dup, Hamming ≤ 2).
+        import hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        from enrich_spark.datapipe.media_codecs import encode_bmp
+
+        docs = _load_docs(spark, sf).where(
+            F.col("doc_id") % 3 == 0).select("doc_id")
+
+        def gen(it):
+            for pdf in it:
+                medias = []
+                for did in pdf["doc_id"]:
+                    did = int(did)
+                    p = (did - 3 if did % 91 in (0, 7) and did >= 3
+                         else did)
+                    v = np.array(
+                        [[int(hashlib.md5(f"{p}:{x}:{y}".encode())
+                              .hexdigest()[:2], 16) % 251
+                          for x in range(9)] for y in range(8)])
+                    if did % 91 == 7:
+                        x0, y0 = did % 9, did % 8
+                        v[y0, x0] = (v[y0, x0] + 40) % 251
+                    px = np.repeat(v.astype(np.uint8), 3, axis=1)
+                    medias.append(encode_bmp(9, 8, px))
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"].astype("int64"),
+                     "media": medias})
+
+        return _cached_fixture(
+            spark, "dhash_docs", sf,
+            lambda: docs.mapInPandas(gen, "doc_id long, media binary"))
+
+    def q_image_dhash(spark, sf):
+        # perceptual dHash (multimodal.image_dhash): real BMP decode →
+        # integer grayscale → 9×8 floor resample → 64 gradient-sign
+        # bits packed two's-complement — all-integer, so the SQL oracle
+        # rebuilds every hash from the fixture arithmetic
+        from enrich_spark.datapipe.multimodal import image_dhash
+
+        return image_dhash(_dhash_docs(spark, sf)).select(
+            "doc_id", "dhash",
+            F.col("src_width").cast("long").alias("dh_w"),
+            F.col("src_height").cast("long").alias("dh_h"),
+            F.col("codec").alias("dh_codec"))
+
+    def q_dhash_pairs(spark, sf):
+        # image near-dup pairs: hamming_pairs (the generic banded
+        # simhash join) over a STORED fingerprint table — like the
+        # incremental_dedup minhash index, the hash column is computed
+        # once and persisted (a real pipeline stores fingerprints next
+        # to the corpus); recomputing the Python decode on BOTH sides
+        # of the band self-join would time the decode twice, not the
+        # join. Oracle = brute all-pairs bit_count(xor) on the
+        # SQL-rebuilt hashes.
+        from enrich_spark.datapipe.dedup import hamming_pairs
+        from enrich_spark.datapipe.multimodal import image_dhash
+
+        h = _cached_fixture(
+            spark, "dhash_hashes", sf,
+            lambda: image_dhash(_dhash_docs(spark, sf)).where(
+                F.col("dhash").isNotNull()).select("doc_id", "dhash"))
+        return hamming_pairs(h, hash_col="dhash", id_col="doc_id",
+                             max_hamming=4).select(
+            F.col("id_a").cast("long").alias("id_a"),
+            F.col("id_b").cast("long").alias("id_b"),
+            F.col("hamming").cast("long").alias("hamming"))
+
+    def _afp_docs(spark, sf):
+        # r12 audio-fingerprint fixture: 9 frames × 360 samples of
+        # on-bin sine mixtures (one tone per band, bin 20b+11, exact
+        # rectangular-window energies) whose band-energy LEVEL (LO/HI)
+        # per (frame, band) cell is an md5 bit of (p, t, b) — so every
+        # Haitsma-Kalker sign bit is pure integer arithmetic the SQL
+        # oracle replays, with three deterministic margins: HI−LO
+        # dominates the bit, the +30000·t·b energy ramp contributes
+        # EXACTLY −30000·(L/2)² to every time-difference (so a 0
+        # β-combination is a firm negative, never a noise coin-flip),
+        # and int16 quantization noise sits ~10× below the ramp
+        # (mismatches: 0/170 docs in the build-time check). Planned
+        # dups: doc_id%89==1 reuses the previous subset member's p
+        # (Hamming 0); %89==38 reuses it with ONE β cell flipped
+        # (Hamming ≤ 4: a cell touches 4 sign bits).
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        from enrich_spark.datapipe.media_codecs import encode_wav
+
+        docs = _load_docs(spark, sf).where(
+            F.col("doc_id") % 3 == 1).select("doc_id")
+        L, NF, NB, RATE = 360, 9, 9, 8000
+        LO2, HI2, KA = 600 ** 2, 2000 ** 2, 30000
+        s = np.arange(L)
+
+        def beta(p, t, b):
+            import hashlib
+            return int(hashlib.md5(
+                f"{p}:{t}:{b}".encode()).hexdigest()[0], 16) % 2
+
+        def gen(it):
+            for pdf in it:
+                medias = []
+                for did in pdf["doc_id"]:
+                    did = int(did)
+                    p = (did - 3 if did % 89 in (1, 38) and did >= 3
+                         else did)
+                    flip = ((did % 9, (did // 9) % 9)
+                            if did % 89 == 38 else None)
+                    x = np.zeros(L * NF)
+                    for t in range(NF):
+                        fr = np.zeros(L)
+                        for b in range(NB):
+                            bb = beta(p, t, b)
+                            if flip == (t, b):
+                                bb ^= 1
+                            a2 = (HI2 if bb else LO2) + KA * t * b
+                            fr += math.sqrt(a2) * np.sin(
+                                2 * np.pi * (20 * b + 11) * s / L)
+                        x[t * L:(t + 1) * L] = fr
+                    medias.append(
+                        encode_wav(RATE, np.round(x).astype("<i2")))
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"].astype("int64"),
+                     "media": medias})
+
+        return _cached_fixture(
+            spark, "afp_docs", sf,
+            lambda: docs.mapInPandas(gen, "doc_id long, media binary"))
+
+    def q_audio_afp(spark, sf):
+        # Haitsma-Kalker fingerprint (multimodal.audio_fingerprint):
+        # REAL rFFT band energies → 64 time-difference sign bits
+        from enrich_spark.datapipe.multimodal import audio_fingerprint
+
+        return audio_fingerprint(_afp_docs(spark, sf)).select(
+            "doc_id", "afp",
+            F.col("rate").alias("afp_rate"),
+            F.col("n_samples").alias("afp_samples"))
+
+    def q_afp_pairs(spark, sf):
+        # audio near-dup pairs: the SAME hamming_pairs banded join the
+        # image dHash uses, over a stored fingerprint table
+        from enrich_spark.datapipe.dedup import hamming_pairs
+        from enrich_spark.datapipe.multimodal import audio_fingerprint
+
+        h = _cached_fixture(
+            spark, "afp_hashes", sf,
+            lambda: audio_fingerprint(_afp_docs(spark, sf)).where(
+                F.col("afp").isNotNull()).select("doc_id", "afp"))
+        return hamming_pairs(h, hash_col="afp", id_col="doc_id",
+                             max_hamming=4).select(
+            F.col("id_a").cast("long").alias("id_a"),
+            F.col("id_b").cast("long").alias("id_b"),
+            F.col("hamming").cast("long").alias("hamming"))
+
+    def q_incfp_pairs(spark, sf):
+        # r13: INCREMENTAL fingerprint near-dedup (dedup.
+        # build_fingerprint_index + incremental_hamming_pairs) — the
+        # doc_id % 5 == 0 rows play the "new shard", the rest the
+        # stored corpus index; only new-vs-corpus pairs are computed
+        # (old-vs-old is structurally absent: the corpus side is the
+        # index table, not a self-join). Oracle = brute new-vs-corpus
+        # bit_count(xor) over the SQL-rebuilt hashes.
+        from enrich_spark.datapipe.dedup import (
+            build_fingerprint_index, incremental_hamming_pairs,
+        )
+        from enrich_spark.datapipe.multimodal import image_dhash
+
+        # shares q_dhash_pairs' fixture KEY deliberately: a separate
+        # key cannot buy a separate cache lifetime anyway — the two
+        # plans are byte-identical, so Spark's CacheManager dedupes
+        # them into ONE cached entry and unpersisting either DF drops
+        # it for both.
+        h = _cached_fixture(
+            spark, "dhash_hashes", sf,
+            lambda: image_dhash(_dhash_docs(spark, sf)).where(
+                F.col("dhash").isNotNull()).select("doc_id", "dhash"))
+        idx = build_fingerprint_index(
+            h.where(F.col("doc_id") % 5 != 0), hash_col="dhash",
+            max_hamming=4)
+        return incremental_hamming_pairs(
+            h.where(F.col("doc_id") % 5 == 0), idx, hash_col="dhash",
+            max_hamming=4).select(
+            F.col("new_id").cast("long").alias("new_id"),
+            F.col("corpus_id").cast("long").alias("corpus_id"),
+            F.col("hamming").cast("long").alias("hamming"))
+
+    def q_multimodal(spark, sf):
+        # decode + frame-sampling + audio features + resize + dHash
+        # near-dup in one row
+        return _union_parts(
+            [("decode", q_media_decode(spark, sf)),
+             ("frames", q_media_frames(spark, sf)),
+             ("audio", q_audio_features(spark, sf)),
+             ("resize", q_media_resize(spark, sf)),
+             ("dhash", q_image_dhash(spark, sf)),
+             ("dhpairs", q_dhash_pairs(spark, sf)),
+             ("incfp", q_incfp_pairs(spark, sf)),
+             ("afp", q_audio_afp(spark, sf)),
+             ("afppairs", q_afp_pairs(spark, sf))],
+            fill=("doc_id", "width", "height", "channels", "duration_ms",
+                  "mean_val", "meta_width", "meta_height",
+                  "meta_duration_ms", "frame_ts_ms", "vid_width",
+                  "vid_duration_ms",
+                  "rate", "n_samples", "a_channels", "dominant_bin",
+                  "dominant_freq_mhz",
+                  "rz_src_w", "rz_src_h", "rz_w", "rz_h", "rz_channels",
+                  "rz_mean_mil",
+                  "dhash", "dh_w", "dh_h", "dh_codec",
+                  "id_a", "id_b", "hamming",
+                  "new_id", "corpus_id",
+                  "afp", "afp_rate", "afp_samples"),
+        )
+
+    q["multimodal"] = q_multimodal
+
     # Memoize every query's analyzed plan per (session, sf_dir): plans are
-    # immutable, and re-invocations (oracle checks, plan sweeps) should
+    # immutable, and re-invocations (bench warm runs, driver passes) should
     # pay execution cost, not the seconds of py4j/analysis reconstruction.
     def _memoized(name, fn):
         def wrapper(spark, sf):
@@ -2357,8 +4995,6 @@ config:
         return wrapper
 
     return {name: _memoized(name, fn) for name, fn in q.items()}
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -2518,6 +5154,8 @@ def oracle_sql() -> dict[str, str]:
         FROM events e
     """
 
+    from enrich_spark.datapipe.graph import pagerank_sql as _pr_sql
+
     o["cross_navigation"] = _union_oracle([
         ("nav", """
         SELECT e.event_id AS src_event_id,
@@ -2526,6 +5164,10 @@ def oracle_sql() -> dict[str, str]:
         FROM events e
         """, {"src_event_id": "num", "refr_domain_userid": "str",
               "refr_dvce_us": "num"}),
+        ("pagerank", _pr_sql(
+            "SELECT user_id % 41 AS src, (user_id * 7 + event_id) % 41"
+            " AS dst FROM events", iters=5),
+         {"node": "num", "rank": "num"}),
     ])
 
     o["schema_fields"] = """
@@ -2573,6 +5215,8 @@ def oracle_sql() -> dict[str, str]:
               "uap_os": "str", "uap_os_v1": "str", "uap_device": "str"}),
     ])
 
+    _asof_vals = ", ".join(
+        f"('{c}', TIMESTAMP '{t}', {r})" for c, t, r in _ASOF_RATES)
     o["currency_conversion"] = _union_oracle([
         ("convert", """
         SELECT e.event_id AS src_event_id,
@@ -2587,6 +5231,22 @@ def oracle_sql() -> dict[str, str]:
         """, {"src_event_id": "num", "tr_currency": "str",
               "tr_total": "fnum", "tr_total_base": "fnum",
               "base_currency": "str"}),
+        ("asof", f"""
+        WITH t AS (
+            SELECT event_id AS src_event_id,
+                   CASE user_id % 3 WHEN 0 THEN 'GBP' WHEN 1 THEN 'USD'
+                        ELSE 'JPY' END AS ccy,
+                   ts
+            FROM events
+        ),
+        r(ccy, valid_from, rate) AS (VALUES {_asof_vals})
+        SELECT t.src_event_id, t.ccy,
+               CAST(r.rate AS DOUBLE) AS rate,
+               CAST(CAST(r.valid_from AS DATE) AS VARCHAR) AS rate_day
+        FROM t ASOF LEFT JOIN r
+          ON t.ccy = r.ccy AND t.ts >= r.valid_from
+        """, {"src_event_id": "num", "ccy": "str", "rate": "fnum",
+              "rate_day": "str"}),
     ])
 
     o["adapter_explode"] = """
@@ -2649,6 +5309,17 @@ def oracle_sql() -> dict[str, str]:
     # fields derive from event_type (struct events map to the legacy GA
     # vendor), app/platform from user_id % 3, and the derived-entity set is
     # the constant ua_parser context attached by the default config
+    from enrich_spark.plans.manifest import dataset_manifest_sql as _mf_sql
+
+    def _spread_sql(col: str) -> str:
+        # the Morton spread-bits chain (layout._spread16) in SQL: each
+        # step is x = (x | x<<s) & mask over BIGINTs
+        expr = f"({col} & 65535)"
+        for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F),
+                            (2, 0x33333333), (1, 0x55555555)):
+            expr = f"(({expr} | ({expr} << {shift})) & {mask})"
+        return expr
+
     o["metadata_aggregation"] = _union_oracle([
         ("meta", """
         WITH g AS (
@@ -2674,7 +5345,130 @@ def oracle_sql() -> dict[str, str]:
               "event_format": "str", "event_version": "str",
               "app_id": "str", "v_tracker": "str", "platform": "str",
               "n_events": "num", "entity_schemas": "str"}),
+        ("manifest", _mf_sql(
+            "SELECT source, doc_id, text FROM documents",
+            ["doc_id", "text"], group_cols=["source"]),
+         {"source": "str", "n_rows": "num", "content_xor": "num",
+          "bytes_total": "num"}),
+        # r12: per-shard manifests over the md5(seed:id) mod 16
+        # assignment (positive hash, so Spark pmod == DuckDB %)
+        ("shards", _mf_sql(
+            "SELECT CAST(('0x' || substr(md5('0:' || doc_id), 1, 15))"
+            " AS BIGINT) % 16 AS shard_id, doc_id, text FROM documents",
+            ["doc_id", "text"], group_cols=["shard_id"]),
+         {"shard_id": "num", "n_rows": "num", "content_xor": "num",
+          "bytes_total": "num"}),
+        ("card", _dc_sql("documents"),
+         {"n_docs": "num", "total_chars": "num", "total_bytes": "num",
+          "total_tokens": "num", "n_sources": "num", "n_langs": "num",
+          "n_unique_texts": "num", "n_exact_dups": "num",
+          "min_tokens": "num", "max_tokens": "num", "p50_tokens": "num",
+          "p90_tokens": "num", "pii_emails": "num", "pii_ipv4": "num",
+          "n_docs_10plus_tokens": "num", "n_fenced_docs": "num",
+          "n_fences": "num", "fenced_code_chars": "num",
+          "n_code_docs": "num"}),
+        ("comp", """
+        WITH w AS (
+          SELECT source,
+                 len(list_filter(string_split(trim(regexp_replace(text,
+                     '\\s+', ' ', 'g')), ' '), x -> x <> '')) AS _w
+          FROM documents
+        ),
+        per AS (
+          SELECT source, count(*) AS src_docs,
+                 CAST(sum(_w) AS BIGINT) AS src_tokens
+          FROM w GROUP BY source
+        ),
+        tot AS (SELECT sum(src_docs) AS t FROM per)
+        SELECT source, src_docs, src_tokens,
+               CAST(src_docs * 10000 // (SELECT greatest(t, 1) FROM tot)
+                    AS BIGINT) AS share_bp
+        FROM per
+        """, {"source": "str", "src_docs": "num", "src_tokens": "num",
+              "share_bp": "num"}),
+        ("zorder", f"""
+        WITH n AS (
+          SELECT doc_id, doc_id % 65536 AS a, n_chars % 65536 AS b
+          FROM documents
+        ), s AS (
+          SELECT doc_id, {_spread_sql('a')} AS sa, {_spread_sql('b')} AS sb
+          FROM n
+        )
+        SELECT doc_id, CAST(sa | (sb << 1) AS BIGINT) AS zkey FROM s
+        """, {"doc_id": "num", "zkey": "num"}),
+        ("ksample", """
+        SELECT doc_id FROM documents
+        ORDER BY md5('42:' || doc_id), doc_id LIMIT 100
+        """, {"doc_id": "num"}),
+        ("kgroup", """
+        SELECT doc_id, source FROM (
+          SELECT doc_id, source,
+                 row_number() OVER (PARTITION BY source
+                     ORDER BY md5('42:' || doc_id), doc_id) AS rn
+          FROM documents) WHERE rn <= 20
+        """, {"doc_id": "num", "source": "str"}),
+        ("wsample", _wsk_sql(
+            "(SELECT doc_id, 1 + n_chars % 16 AS weight FROM documents)",
+            50, "weight"),
+         {"doc_id": "num", "weight": "num"}),
+        ("fit", _ridge_sql(
+            "(SELECT len(list_filter(string_split(trim(regexp_replace("
+            "text, '\\s+', ' ', 'g')), ' '), w -> w <> '')) AS x1, "
+            "doc_id % 97 AS x2, n_chars AS y FROM documents)",
+            "x1", "x2", "y"),
+         {"b0": "fnum", "b1": "fnum", "b2": "fnum", "n": "num"}),
+        ("skew", _kskew_sql("events", ["event_type"], top_n=10),
+         {"event_type": "str", "cnt": "num", "share_bp": "num",
+          "total_rows": "num", "n_keys": "num"}),
     ])
+
+    o["sessionize"] = """
+        WITH g AS (
+          SELECT user_id,
+                 CASE WHEN lag(ts) OVER w IS NULL
+                      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800 * 1000000
+                      THEN 1 ELSE 0 END AS new_sess
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        )
+        SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_events
+        FROM g GROUP BY user_id
+    """
+
+    # streaming sessionize parity: the applyInPandasWithState path with
+    # watermark=0 emits exactly the sessions whose ms-truncated timeout
+    # (last event + gap) is strictly before the final watermark
+    # (ms-truncated max ts) — plus every session closed by a later
+    # in-gap-violating event; with the strict `<` both sets collapse to
+    # the WHERE below.
+    o["sessionize_stream"] = """
+        WITH g AS (
+          SELECT user_id, ts, event_id,
+                 CASE WHEN lag(ts) OVER w IS NULL
+                      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800 * 1000000
+                      THEN 1 ELSE 0 END AS new_sess
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ), s AS (
+          SELECT user_id, ts,
+                 sum(new_sess) OVER w2 AS session_index
+          FROM g
+          WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id
+                        ROWS UNBOUNDED PRECEDING)
+        ), agg AS (
+          SELECT user_id, session_index,
+                 min(ts) AS session_start, max(ts) AS session_end,
+                 count(*) AS n_events
+          FROM s GROUP BY user_id, session_index
+        )
+        SELECT CAST(user_id AS BIGINT) AS user_id,
+               CAST(session_index AS BIGINT) AS session_index,
+               epoch_us(session_start) AS ss_us,
+               epoch_us(session_end) AS se_us,
+               CAST(n_events AS BIGINT) AS n_events
+        FROM agg
+        WHERE epoch_ms(session_end) + 1800000 < (SELECT epoch_ms(max(ts)) FROM events)
+    """
 
     o["sql_lookup_join"] = """
         SELECT e.event_id AS src_event_id, c.c_name AS c_name,
@@ -2935,6 +5729,29 @@ def oracle_sql() -> dict[str, str]:
                CAST(COALESCE(sum(digit) FILTER (WHERE plen <= 4096), 0) AS BIGINT) AS digit_sum
         FROM p GROUP BY batch_id
     """
+    # WARC round-trip prediction: the parser must recover exactly the
+    # payload the fixture wrote (decoy prefix = 18 bytes, ASCII);
+    # strlen = BYTE length (Content-Length semantics), substr = chars
+    _warc_sql = """
+        WITH d AS (
+          SELECT doc_id,
+                 CASE WHEN doc_id % 5 = 0
+                      THEN 'decoy WARC/1.0' || chr(13) || chr(10)
+                           || chr(13) || chr(10) END AS pfx,
+                 replace(text, chr(13), '') AS clean
+          FROM documents)
+        SELECT doc_id,
+               CASE WHEN doc_id % 7 = 0 THEN 'metadata'
+                    ELSE 'response' END AS warc_type,
+               CAST(strlen(COALESCE(pfx, '')) + strlen(clean) AS BIGINT)
+                 AS content_length,
+               CAST(strlen(COALESCE(pfx, '')) + strlen(clean) AS BIGINT)
+                 AS payload_len,
+               substr(COALESCE(pfx, '') || clean, 1, 24) AS payload_head,
+               CAST(4 AS BIGINT) AS n_headers,
+               CAST(0 AS BIGINT) AS has_err
+        FROM d
+    """
     _zstd_sql = _gzip_sql.replace(
         "FROM events e)", "FROM events e WHERE e.event_id % 5 = 0)")
     o["payload_decompress"] = _union_oracle([
@@ -2944,6 +5761,27 @@ def oracle_sql() -> dict[str, str]:
         ("zstd", _zstd_sql,
          {"batch_id": "num", "n_ok": "num", "n_too_big": "num",
           "bytes_ok": "num", "digit_sum": "num"}),
+        ("warc", _warc_sql,
+         {"doc_id": "num", "warc_type": "str", "content_length": "num",
+          "payload_len": "num", "payload_head": "str", "n_headers": "num",
+          "has_err": "num"}),
+        ("robots", """
+        SELECT doc_id,
+               'd' || (doc_id % 10) || '.example' AS host,
+               CASE doc_id % 4
+                 WHEN 0 THEN '/p' || (doc_id % 10) || '/x'
+                 WHEN 1 THEN '/p' || (doc_id % 10) || '/pub/y'
+                 WHEN 2 THEN '/t' || (doc_id % 10) || 'z'
+                 ELSE '/ok/' || doc_id END AS path,
+               CAST(CASE doc_id % 4 WHEN 0 THEN 0 WHEN 1 THEN 1
+                    WHEN 2 THEN 0 ELSE 1 END AS BIGINT) AS allowed,
+               CAST(CASE doc_id % 4 WHEN 0 THEN 4 WHEN 1 THEN 8
+                    WHEN 2 THEN 4 ELSE 0 END AS BIGINT)
+                 AS deciding_rule_len
+        FROM documents
+        """,
+         {"doc_id": "num", "host": "str", "path": "str",
+          "allowed": "num", "deciding_rule_len": "num"}),
     ])
 
     # GA adapter: 2 hit lines per payload → 2 RawEvents (page_view + event
@@ -3116,9 +5954,56 @@ def oracle_sql() -> dict[str, str]:
                md5('du-' || (e.user_id % 50) || '|nu-' || e.user_id) AS snowplow_id
         FROM events e
     """
+    from enrich_spark.plans.merge import merge_snapshot_sql as _merge_sql
+
+    _cdc_sql = _merge_sql(
+        "SELECT o_orderkey AS okey, o_orderstatus AS status, "
+        "CAST(0 AS BIGINT) AS seq FROM orders",
+        """
+        SELECT o_orderkey AS okey, 'U' AS status, CAST(10 AS BIGINT) AS seq,
+               FALSE AS deleted FROM orders WHERE o_orderkey % 7 = 0
+        UNION ALL
+        SELECT o_orderkey, 'S', CAST(-5 AS BIGINT), FALSE FROM orders
+        WHERE o_orderkey % 13 = 0
+        UNION ALL
+        SELECT o_orderkey, NULL, CAST(20 AS BIGINT), TRUE FROM orders
+        WHERE o_orderkey % 11 = 0
+        UNION ALL
+        SELECT o_orderkey + 10000000, 'N', CAST(10 AS BIGINT), FALSE
+        FROM orders WHERE o_orderkey % 17 = 0
+        """,
+        ["okey"], "seq", ["okey", "status", "seq"], delete_col="deleted")
     o["identity_stitch"] = _union_oracle([
         ("identity", _identity_sql,
          {"src_event_id": "num", "snowplow_id": "str"}),
+        ("merge", _cdc_sql,
+         {"okey": "num", "status": "str", "seq": "num"}),
+        ("snapdiff", """
+        WITH old AS (SELECT doc_id, text FROM documents),
+        new AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 7 = 0 THEN text || '!' ELSE text END
+                       AS text
+            FROM documents WHERE doc_id % 13 <> 0
+            UNION ALL
+            SELECT doc_id + 1000000, text FROM documents
+            WHERE doc_id % 11 = 0
+        ),
+        ho AS (SELECT doc_id,
+                      md5(COALESCE(CAST(text AS VARCHAR), chr(0)))
+                          AS hash_old FROM old),
+        hn AS (SELECT doc_id,
+                      md5(COALESCE(CAST(text AS VARCHAR), chr(0)))
+                          AS hash_new FROM new)
+        SELECT COALESCE(ho.doc_id, hn.doc_id) AS okey,
+               CASE WHEN ho.doc_id IS NULL THEN 'added'
+                    WHEN hn.doc_id IS NULL THEN 'removed'
+                    WHEN hash_old <> hash_new THEN 'changed'
+                    ELSE 'unchanged' END AS status,
+               hash_old, hash_new
+        FROM ho FULL OUTER JOIN hn ON ho.doc_id = hn.doc_id
+        """, {"okey": "num", "status": "str", "hash_old": "str",
+              "hash_new": "str"}),
     ])
 
     o["script_hook"] = _union_oracle([
@@ -3140,7 +6025,355 @@ def oracle_sql() -> dict[str, str]:
               "tag_len": "num"}),
     ])
 
-    # ---- data-pipeline side: the curate ops (datapipe/pipeline.py) ----
+    # k-word gram without list SLICING: element indexing via
+    # list_transform(range(k)) is unambiguous across DuckDB versions
+    # (slice-bound semantics `w[a:b]` are not — a suspected source of the
+    # driver-vs-replica dedup_exact divergence); fracs are integer basis
+    # points (floor division, no DOUBLE column anywhere in this row)
+    def _gram(k: int) -> str:
+        return (f"array_to_string(list_transform(range({k}), "
+                f"j -> w[t.i + j]), ' ')")
+
+    o["dedup_exact"] = _union_oracle([
+        ("exact", """
+            SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
+                   count(*) AS dup_count
+            FROM documents GROUP BY md5(text)
+        """, {"content_hash": "str", "keep_id": "num", "dup_count": "num"}),
+        ("substr", f"""
+            WITH d AS (
+              SELECT doc_id,
+                     string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+              FROM documents
+            ),
+            g AS (
+              SELECT doc_id, t.i AS pos, {_gram(8)} AS gram
+              FROM d, LATERAL unnest(
+                CASE WHEN len(w) >= 8 THEN range(1, len(w) - 8 + 2) ELSE [] END
+              ) AS t(i)
+            ),
+            dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
+            agg AS (
+              SELECT doc_id, count(*) AS n_windows,
+                     sum(CASE WHEN gram IN (SELECT gram FROM dup) THEN 1 ELSE 0 END) AS n_dup
+              FROM g GROUP BY doc_id
+            )
+            SELECT doc_id AS keep_id,
+                   COALESCE(a.n_windows, 0) AS n_windows,
+                   COALESCE(a.n_dup, 0) AS n_dup_windows,
+                   CAST(CASE WHEN COALESCE(a.n_windows, 0) > 0
+                        THEN (a.n_dup * 10000) // a.n_windows
+                        ELSE 0 END AS BIGINT) AS dup_frac_bp
+            FROM documents LEFT JOIN agg a USING (doc_id)
+        """, {"keep_id": "num", "n_windows": "num", "n_dup_windows": "num",
+              "dup_frac_bp": "num"}),
+        ("contam", f"""
+            WITH d AS (
+              SELECT doc_id,
+                     string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+              FROM documents
+            ),
+            g AS (
+              SELECT doc_id, {_gram(8)} AS gram
+              FROM d, LATERAL unnest(
+                CASE WHEN len(w) >= 8 THEN range(1, len(w) - 8 + 2) ELSE [] END
+              ) AS t(i)
+            ),
+            bg AS (SELECT DISTINCT doc_id AS bench_id, gram FROM g WHERE doc_id % 17 = 0),
+            agg AS (
+              SELECT g.doc_id,
+                     count(*) AS n_windows,
+                     sum(CASE WHEN EXISTS (SELECT 1 FROM bg WHERE bg.gram = g.gram)
+                              THEN 1 ELSE 0 END) AS contam_windows
+              FROM g GROUP BY g.doc_id
+            ),
+            hits AS (
+              SELECT g.doc_id, count(DISTINCT bg.bench_id) AS n_bench_hits
+              FROM g JOIN bg ON g.gram = bg.gram GROUP BY g.doc_id
+            )
+            SELECT doc_id AS keep_id,
+                   COALESCE(a.contam_windows, 0) AS contam_windows,
+                   CAST(CASE WHEN COALESCE(a.n_windows, 0) > 0
+                        THEN (a.contam_windows * 10000) // a.n_windows
+                        ELSE 0 END AS BIGINT) AS contam_frac_bp,
+                   COALESCE(h.n_bench_hits, 0) AS n_bench_hits
+            FROM documents LEFT JOIN agg a USING (doc_id)
+                           LEFT JOIN hits h USING (doc_id)
+        """, {"keep_id": "num", "contam_windows": "num",
+              "contam_frac_bp": "num", "n_bench_hits": "num"}),
+        ("split", _lss_sql(
+            "documents", "doc_id",
+            "SELECT doc_id AS keep_id, cluster_id FROM (VALUES "
+            + ", ".join(f"({2 * k}, {2 * k}), ({2 * k + 1}, {2 * k})"
+                        for k in range(10))
+            + ") t(doc_id, cluster_id)",
+            id_alias="keep_id"),
+         {"keep_id": "num", "cluster_id": "num", "split": "str"}),
+    ])
+
+    from enrich_spark.datapipe.dedup import (
+        remove_boilerplate_lines_sql as _rbl_sql)
+
+    _despan_sql = """
+        WITH d AS (
+          SELECT doc_id,
+                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+          FROM documents
+        ),
+        g AS (
+          SELECT doc_id, t.i AS pos,
+                 array_to_string(list_transform(range(8), j -> w[t.i + j]), ' ') AS gram
+          FROM d, LATERAL unnest(
+            CASE WHEN len(w) >= 8 THEN range(1, len(w) - 8 + 2) ELSE [] END
+          ) AS t(i)
+        ),
+        dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
+        dp AS (SELECT doc_id, pos FROM g WHERE gram IN (SELECT gram FROM dup)),
+        -- islands: a window chains while its coverage overlaps-or-adjoins
+        -- the previous one (gap in start positions ≤ k = 8)
+        isl AS (
+          SELECT doc_id, pos,
+                 CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 8
+                      THEN 1 ELSE 0 END AS brk
+          FROM dp
+        ),
+        grp AS (
+          SELECT doc_id, pos,
+                 sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
+          FROM isl
+        ),
+        spans AS (
+          SELECT doc_id, gid, min(pos) AS s, max(pos) + 7 AS e
+          FROM grp GROUP BY doc_id, gid
+        ),
+        nsp AS (SELECT doc_id, count(*) AS n_spans FROM spans GROUP BY doc_id),
+        covered AS (
+          SELECT DISTINCT doc_id, u.wi
+          FROM spans, LATERAL unnest(range(s, e + 1)) AS u(wi)
+        ),
+        wpos AS (
+          SELECT doc_id, t.i AS wi, w[t.i] AS word
+          FROM d, LATERAL unnest(range(1, len(w) + 1)) AS t(i)
+        ),
+        kept AS (
+          SELECT wp.doc_id, wp.wi, wp.word
+          FROM wpos wp ANTI JOIN covered c
+            ON wp.doc_id = c.doc_id AND wp.wi = c.wi
+        ),
+        cleaned AS (
+          SELECT doc_id, string_agg(word, ' ' ORDER BY wi) AS cleaned_text,
+                 count(*) AS kept_n
+          FROM kept GROUP BY doc_id
+        )
+        SELECT d.doc_id AS doc_id,
+               COALESCE(c.cleaned_text, '') AS cleaned_text,
+               len(w) AS n_words,
+               len(w) - COALESCE(c.kept_n, 0) AS removed_words,
+               COALESCE(n.n_spans, 0) AS n_spans
+        FROM d LEFT JOIN cleaned c USING (doc_id)
+               LEFT JOIN nsp n USING (doc_id)
+    """
+
+    # the lines part replays q_boiler_lines' deterministic multi-line
+    # synthesis, then runs the operator's own 1:1 SQL mirror over it
+    _boiler_fixture = """(SELECT doc_id, concat_ws(chr(10),
+        substr(text, 1, 40),
+        'subscribe to our newsletter today',
+        substr(text, 41, 40),
+        CASE WHEN doc_id % 2 = 0 THEN 'all rights reserved worldwide'
+             ELSE substr(text, 81, 40) END,
+        text) AS text FROM documents)"""
+    _boiler_sql = (
+        "SELECT doc_id, clean_text AS cleaned_text, n_lines, kept_lines,"
+        " removed_lines FROM (" + _rbl_sql(_boiler_fixture) + ")")
+    from enrich_spark.datapipe.dedup import (
+        ngram_novelty_sql as _novelty_sql,
+    )
+
+    o["dedup_despan"] = _union_oracle([
+        ("despan", _despan_sql,
+         {"doc_id": "num", "cleaned_text": "str", "n_words": "num",
+          "removed_words": "num", "n_spans": "num"}),
+        ("lines", _boiler_sql,
+         {"doc_id": "num", "cleaned_text": "str", "n_lines": "num",
+          "kept_lines": "num", "removed_lines": "num"}),
+        ("novelty", _novelty_sql("documents", n=3),
+         {"doc_id": "num", "n_grams": "num", "n_novel": "num",
+          "novelty_bp": "num"}),
+    ])
+
+    def _dm_part(k, mod, name):
+        return f"""
+          g{k} AS (
+            SELECT doc_id, {_gram(k)} AS gram,
+                   greatest(len(w) - {k - 1}, 0) AS nw
+            FROM d, LATERAL unnest(
+              CASE WHEN len(w) >= {k} THEN range(1, len(w) - {k} + 2) ELSE [] END
+            ) AS t(i)
+          ),
+          bg{k} AS (SELECT DISTINCT gram FROM g{k} WHERE doc_id % {mod} = 0),
+          hit{k} AS (
+            SELECT doc_id, '{name}' AS benchmark, {k} AS k,
+                   max(nw) AS n_windows, count(*) AS contam_windows
+            FROM g{k} WHERE gram IN (SELECT gram FROM bg{k})
+            GROUP BY doc_id
+          )"""
+
+    _decontam_multi_sql = f"""
+        WITH d AS (
+          SELECT doc_id,
+                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+          FROM documents
+        ),{_dm_part(8, 17, "eval17")},{_dm_part(13, 23, "eval23")}
+        SELECT doc_id, benchmark, CAST(k AS BIGINT) AS k,
+               CAST(n_windows AS BIGINT) AS n_windows,
+               CAST(contam_windows AS BIGINT) AS contam_windows,
+               CAST((contam_windows * 10000) // n_windows AS BIGINT) AS contam_frac_bp,
+               CAST(CASE WHEN contam_windows >= 2 THEN 1 ELSE 0 END AS BIGINT)
+                 AS contaminated
+        FROM (SELECT * FROM hit8 UNION ALL SELECT * FROM hit13)
+    """
+    # bloom part: the Bloom path's output contract is exact equality
+    # with plain decontamination, so its oracle is the PLAIN SQL
+    _decontam_bloom_sql = f"""
+        WITH d AS (
+          SELECT doc_id,
+                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+          FROM documents
+        ),
+        g AS (
+          SELECT doc_id, {_gram(8)} AS gram
+          FROM d, LATERAL unnest(
+            CASE WHEN len(w) >= 8 THEN range(1, len(w) - 8 + 2) ELSE [] END
+          ) AS t(i)
+        ),
+        bg AS (SELECT DISTINCT gram, doc_id AS bench_id
+               FROM g WHERE doc_id % 17 = 0),
+        contam AS (
+          SELECT doc_id, count(*) AS contam_windows
+          FROM g WHERE gram IN (SELECT gram FROM bg) GROUP BY doc_id
+        ),
+        hitset AS (
+          SELECT g.doc_id, count(DISTINCT b.bench_id) AS n_hit_sets,
+                 min(b.bench_id) AS first_hit
+          FROM g JOIN bg b ON g.gram = b.gram GROUP BY g.doc_id
+        )
+        SELECT d.doc_id, CAST(8 AS BIGINT) AS k,
+               CAST(greatest(len(d.w) - 7, 0) AS BIGINT) AS n_windows,
+               CAST(COALESCE(c.contam_windows, 0) AS BIGINT) AS contam_windows,
+               CAST(CASE WHEN len(d.w) - 7 > 0
+                    THEN (COALESCE(c.contam_windows, 0) * 10000) // (len(d.w) - 7)
+                    ELSE 0 END AS BIGINT) AS contam_frac_bp,
+               CAST(COALESCE(h.n_hit_sets, 0) AS BIGINT) AS n_hit_sets,
+               CAST(COALESCE(h.first_hit, -1) AS BIGINT) AS first_hit
+        FROM d LEFT JOIN contam c USING (doc_id)
+               LEFT JOIN hitset h USING (doc_id)
+    """
+    o["decontam_multi"] = _union_oracle([
+        ("multi", _decontam_multi_sql,
+         {"doc_id": "num", "benchmark": "str", "k": "num",
+          "n_windows": "num", "contam_windows": "num",
+          "contam_frac_bp": "num", "contaminated": "num"}),
+        ("kmv", _kmv_overlap_sql(
+            _kmv_sk_sql("(SELECT text FROM documents WHERE CAST("
+                        "regexp_extract(source, 'src(\\d+)', 1) AS INT)"
+                        " < 10)", "text", k=64),
+            _kmv_sk_sql("(SELECT text FROM documents WHERE CAST("
+                        "regexp_extract(source, 'src(\\d+)', 1) AS INT)"
+                        " >= 10)", "text", k=64),
+            k=64),
+         {"n_union_sketch": "num", "n_both": "num", "jaccard_bp": "num",
+          "est_union": "num", "est_intersection": "num"}),
+        ("bloom", _decontam_bloom_sql,
+         {"doc_id": "num", "k": "num", "n_windows": "num",
+          "contam_windows": "num", "contam_frac_bp": "num",
+          "n_hit_sets": "num", "first_hit": "num"}),
+        # r12: token-distribution drift over the same corpus halves
+        ("drift",
+         "SELECT CAST(count(*) AS BIGINT) AS vocab, "
+         "CAST(sum(cnt_a) AS BIGINT) AS tokens_a, "
+         "CAST(sum(cnt_b) AS BIGINT) AS tokens_b, "
+         "CAST(sum(kl_ab_micro) AS BIGINT) AS kl_ab_micro, "
+         "CAST(sum(kl_ba_micro) AS BIGINT) AS kl_ba_micro, "
+         "CAST(sum(js_micro) AS BIGINT) AS js_micro FROM ("
+         + _tok_div_sql(
+             _lm_counts_sql("(SELECT text FROM documents WHERE CAST("
+                            "regexp_extract(source, 'src(\\d+)', 1)"
+                            " AS INT) < 10)"),
+             _lm_counts_sql("(SELECT text FROM documents WHERE CAST("
+                            "regexp_extract(source, 'src(\\d+)', 1)"
+                            " AS INT) >= 10)"))
+         + ")",
+         {"vocab": "num", "tokens_a": "num", "tokens_b": "num",
+          "kl_ab_micro": "num", "kl_ba_micro": "num",
+          "js_micro": "num"}),
+        # r14: cross-corpus SFT decontamination — the sftdedup
+        # dialogue fixture's MASKED (assistant) content gram-checked
+        # against the raw assistant docs of every 19th conv; conv 13
+        # flags via the substitution (laundered benchmark answer)
+        ("sftdecon", f"""
+        WITH turns AS (
+          SELECT d.doc_id // 4 AS conv_id, d.doc_id % 4 AS t,
+                 CASE WHEN (d.doc_id % 4) % 2 = 0 THEN 'user'
+                      ELSE 'assistant' END AS role,
+                 substring(s.text, 1, 60) AS txt
+          FROM documents d JOIN documents s
+            ON s.doc_id = CASE WHEN (d.doc_id // 4) % 13 = 0
+                                AND d.doc_id // 4 >= 13
+                                AND (d.doc_id % 4) % 2 = 1
+                               THEN d.doc_id - 52 ELSE d.doc_id END
+        ),
+        masked AS (
+          SELECT conv_id,
+                 COALESCE(string_agg(
+                   CASE WHEN role = 'assistant' THEN txt END,
+                   chr(10) ORDER BY t), '') AS mtext
+          FROM turns GROUP BY conv_id
+        ),
+        mw AS (
+          SELECT conv_id, string_split(trim(regexp_replace(
+                   lower(mtext), '\\s+', ' ', 'g')), ' ') AS w
+          FROM masked
+        ),
+        g AS (
+          SELECT conv_id, {_gram(6)} AS gram,
+                 greatest(len(w) - 5, 0) AS nw
+          FROM mw, LATERAL unnest(
+            CASE WHEN len(w) >= 6 THEN range(1, len(w) - 6 + 2)
+                 ELSE [] END) AS t(i)
+        ),
+        bw AS (
+          SELECT string_split(trim(regexp_replace(
+                   lower(substring(text, 1, 60)), '\\s+', ' ', 'g')),
+                 ' ') AS w
+          FROM documents
+          WHERE (doc_id // 4) % 19 = 0 AND (doc_id % 4) % 2 = 1
+        ),
+        bg AS (
+          SELECT DISTINCT {_gram(6)} AS gram
+          FROM bw, LATERAL unnest(
+            CASE WHEN len(w) >= 6 THEN range(1, len(w) - 6 + 2)
+                 ELSE [] END) AS t(i)
+        ),
+        hit AS (
+          SELECT conv_id, 'eval19' AS benchmark,
+                 max(nw) AS n_windows, count(*) AS contam_windows
+          FROM g WHERE gram IN (SELECT gram FROM bg)
+          GROUP BY conv_id
+        )
+        SELECT conv_id AS doc_id, benchmark, CAST(6 AS BIGINT) AS k,
+               CAST(n_windows AS BIGINT) AS n_windows,
+               CAST(contam_windows AS BIGINT) AS contam_windows,
+               CAST((contam_windows * 10000) // n_windows AS BIGINT)
+                 AS contam_frac_bp,
+               CAST(CASE WHEN contam_windows >= 2 THEN 1 ELSE 0 END
+                 AS BIGINT) AS contaminated
+        FROM hit
+        """,
+         {"doc_id": "num", "benchmark": "str", "k": "num",
+          "n_windows": "num", "contam_windows": "num",
+          "contam_frac_bp": "num", "contaminated": "num"}),
+    ])
 
     _pii_email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     _pii_ip = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
@@ -3177,13 +6410,179 @@ def oracle_sql() -> dict[str, str]:
         FROM i6
     """
 
+    # Luhn fold mirrored natively: list_filter + list_transform over the
+    # reversed digit string; list_reduce with the text PREPENDED as the
+    # seed (DuckDB 1.0's list_reduce has no seed argument) replays the
+    # per-candidate literal replacement
+    _luhn_digits = "regexp_replace(c, '[^0-9]', '', 'g')"
+    _luhn_dv = f"(ascii(substr(reverse({_luhn_digits}), i, 1)) - 48)"
+    _pii_fin_sql = rf"""
+        WITH d AS (
+          SELECT doc_id,
+                 text || ' pay ' ||
+                 CASE doc_id % 6
+                   WHEN 0 THEN '4111 1111 1111 1111'
+                   WHEN 1 THEN '5500-0000-0000-0004'
+                   WHEN 2 THEN '378282246310005'
+                   WHEN 3 THEN '4111 1111 1111 1112'
+                   WHEN 4 THEN '6011000000000004'
+                   ELSE '1234 5678 9012 3456' END
+                 || ' ssn 123-45-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+                 || ' end' AS t
+          FROM documents
+        ),
+        cand AS (
+          SELECT doc_id, t,
+                 regexp_extract_all(t, '\b\d(?:[ -]?\d){{12,18}}\b') AS cands
+          FROM d
+        ),
+        val AS (
+          SELECT doc_id, t, cands,
+                 list_filter(cands, c ->
+                   length({_luhn_digits}) BETWEEN 13 AND 19
+                   AND list_sum(list_transform(
+                         range(1, length({_luhn_digits}) + 1),
+                         i -> CASE WHEN i % 2 = 1 THEN {_luhn_dv}
+                              ELSE CASE WHEN {_luhn_dv} * 2 > 9
+                                   THEN {_luhn_dv} * 2 - 9
+                                   ELSE {_luhn_dv} * 2 END END)) % 10 = 0
+                 ) AS valid
+          FROM cand
+        ),
+        scr AS (
+          SELECT doc_id, cands, valid,
+                 list_reduce(list_prepend(t, valid),
+                             (acc, x) -> replace(acc, x, '<CC>')) AS t1
+          FROM val
+        )
+        SELECT doc_id,
+               regexp_replace(t1, '\b\d{{3}}-\d{{2}}-\d{{4}}\b', '<SSN>', 'g')
+                 AS scrubbed_text,
+               CAST(len(valid) AS BIGINT) AS n_ccs,
+               CAST(len(cands) AS BIGINT) AS n_cc_cands,
+               CAST(len(regexp_extract_all(t1, '\b\d{{3}}-\d{{2}}-\d{{4}}\b'))
+                 AS BIGINT) AS n_ssns
+        FROM scr
+    """
+
     o["text_pii_scrub"] = _union_oracle([
         ("base", _pii_base_sql,
          {"doc_id": "num", "scrubbed_text": "str", "n_emails": "num",
           "n_ips": "num", "n_ipv6": "num"}),
+        ("fin", _pii_fin_sql,
+         {"doc_id": "num", "scrubbed_text": "str", "n_ccs": "num",
+          "n_cc_cands": "num", "n_ssns": "num"}),
     ])
 
+    _mix_bucket = "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 15)) AS BIGINT) % 1000000"
+    _mix_parts = [
+        ("sample", f"""
+            SELECT doc_id, source FROM documents
+            WHERE {_mix_bucket} <
+                  CASE source WHEN 'src0' THEN 800000 WHEN 'src1' THEN 500000
+                       WHEN 'src2' THEN 250000 ELSE 100000 END
+        """, {"doc_id": "num", "source": "str"}),
+        ("pack", """
+            WITH d AS (
+              SELECT doc_id, source,
+                     len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS n_tokens
+              FROM documents
+            ),
+            c AS (
+              SELECT doc_id, source, n_tokens,
+                     COALESCE(sum(n_tokens) OVER (
+                       PARTITION BY source ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+              FROM d
+            ),
+            b AS (
+              SELECT doc_id, source, n_tokens,
+                     source || '#' || CAST(cum // 256 AS VARCHAR) AS seq_id
+              FROM c
+            )
+            SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens, seq_id,
+                   CAST(row_number() OVER (PARTITION BY seq_id ORDER BY doc_id) - 1
+                        AS BIGINT) AS seq_pos
+            FROM b
+        """, {"doc_id": "num", "source": "str", "n_tokens": "num",
+              "seq_id": "str", "seq_pos": "num"}),
+        # inverse-sqrt temperature mixing: isqrt = floor(sqrt(n)) is
+        # exact below 2^52 docs, weights/epochs all-integer basis points
+        ("mix", """
+            WITH s AS (
+              SELECT source, count(*) AS n_docs,
+                     CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) AS isqrt_n
+              FROM documents GROUP BY source
+            ),
+            t AS (
+              SELECT source, n_docs, isqrt_n,
+                     CAST(sum(isqrt_n) OVER () AS BIGINT) AS tot
+              FROM s
+            ),
+            w AS (
+              SELECT source, n_docs, isqrt_n,
+                     CAST((isqrt_n * 10000) // tot AS BIGINT) AS weight_bp
+              FROM t
+            )
+            SELECT source, CAST(n_docs AS BIGINT) AS n_docs, isqrt_n, weight_bp,
+                   CAST((10000 * weight_bp) // (10 * n_docs) AS BIGINT) AS epochs_mbp
+            FROM w
+        """, {"source": "str", "n_docs": "num", "isqrt_n": "num",
+              "weight_bp": "num", "epochs_mbp": "num"}),
+    ]
+
+    _corpus_stats_sql = """
+        WITH d AS (
+          SELECT source AS grp,
+                 len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS nt,
+                 length(text) AS nc, md5(text) AS h
+          FROM documents
+        )
+        SELECT grp AS source,
+               count(*) AS n_docs,
+               CAST(sum(nt) AS BIGINT) AS total_tokens,
+               round(avg(nt), 4) AS mean_tokens,
+               CAST(quantile_cont(nt, 0.5) AS DOUBLE) AS p50_tokens,
+               CAST(quantile_cont(nt, 0.9) AS DOUBLE) AS p90_tokens,
+               CAST(sum(nc) AS BIGINT) AS total_chars,
+               CAST(count(*) - count(DISTINCT h) AS BIGINT) AS dup_docs
+        FROM d GROUP BY grp
+    """
+
+    _qc_case = ("CASE x WHEN 'spark' THEN 1.5 WHEN 'join' THEN 0.75 "
+                "WHEN 'merge' THEN 0.5 WHEN 'slow' THEN -1.25 "
+                "WHEN 'dup' THEN -2.0 WHEN 'scan' THEN -0.5 ELSE NULL END")
+    _qc_sql = f"""
+        WITH d AS (
+          SELECT doc_id,
+                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+          FROM documents
+        ),
+        s AS (
+          SELECT doc_id, len(w) AS n_tokens,
+                 list_filter(list_transform(w, x -> {_qc_case}),
+                             x -> x IS NOT NULL) AS tw
+          FROM d
+        )
+        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+               CAST(len(tw) AS BIGINT) AS n_hits,
+               round(1.0 / (1.0 + exp(-(0.25 + COALESCE(list_sum(tw), 0)
+                     / greatest(n_tokens, 1)))), 6) AS score
+        FROM s
+    """
+    _qc_cols = {"doc_id": "num", "n_tokens": "num", "n_hits": "num",
+                "score": "fnum"}
+    # data_mix bundles sampling + packing + both quality-scoring vocab
+    # paths (mirrors the Spark-side 50-cap bundle)
+    _salted_sql = """
+        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+               CAST(min(n_chars) AS BIGINT) AS min_chars,
+               CAST(max(n_chars) AS BIGINT) AS max_chars
+        FROM documents GROUP BY source
+    """
     from enrich_spark.datapipe.curation import c4_filters_sql as _c4_sql
+    from enrich_spark.datapipe.curation import chunk_documents_sql as _chunk_sql
 
     _c4_fixture = (
         "(select doc_id, text || (case when doc_id % 4 = 0 then "
@@ -3191,12 +6590,81 @@ def oracle_sql() -> dict[str, str]:
         "chr(10) || 'lorem ipsum dolor sit.' else "
         "chr(10) || 'tail line with words but no period' end) as text "
         "from documents)")
-    o["c4_filters"] = _union_oracle([
-        ("c4", _c4_sql(_c4_fixture, "doc_id", "text"),
-         {"doc_id": "num", "n_lines": "num", "n_kept_lines": "num",
-          "kept_chars": "num", "n_sentences": "num", "has_brace": "num",
-          "has_lorem": "num", "has_jswarn": "num", "is_kept": "num"}),
-    ])
+    o["data_mix"] = _union_oracle(
+        _mix_parts + [("q_lit", _qc_sql, _qc_cols),
+                      ("q_join", _qc_sql, _qc_cols),
+                      ("salted", _salted_sql,
+                       {"source": "str", "n_docs": "num",
+                        "sum_chars": "num", "min_chars": "num",
+                        "max_chars": "num"}),
+                      ("c4", _c4_sql(_c4_fixture, "doc_id", "text"),
+                       {"doc_id": "num", "n_lines": "num",
+                        "n_kept_lines": "num", "kept_chars": "num",
+                        "n_sentences": "num", "has_brace": "num",
+                        "has_lorem": "num", "has_jswarn": "num",
+                        "is_kept": "num"}),
+                      ("chunk",
+                       "select doc_id, chunk_id, n_sentences, n_tokens, "
+                       "substr(chunk_text, 1, 80) as chunk_head from ("
+                       + _chunk_sql("documents", "doc_id", "text", 64) + ")",
+                       {"doc_id": "num", "chunk_id": "num",
+                        "n_sentences": "num", "n_tokens": "num",
+                        "chunk_head": "str"}),
+                      ("hh", """
+        WITH t AS (
+          SELECT unnest(string_split(trim(regexp_replace(lower(text),
+                 '\\s+', ' ', 'g')), ' ')) AS token
+          FROM documents
+        ), n AS (SELECT count(*) AS total FROM t)
+        SELECT token, CAST(count(*) AS BIGINT) AS cnt
+        FROM t GROUP BY token
+        HAVING count(*) >= (SELECT CAST(ceil(total * 0.005) AS BIGINT)
+                            FROM n)
+                       """,
+                       {"token": "str", "cnt": "num"}),
+                      ("dsir",
+                       _dsir_sql("documents", "doc_id", "text",
+                                 _DSIR_RATIOS, n_buckets=128),
+                       {"doc_id": "num", "n_grams": "num",
+                        "weight_unats": "num"}),
+                      ("hll", _hll_sql("documents", "text", ("source",)),
+                       {"source": "str", "n_registers_set": "num",
+                        "est_distinct": "fnum"}),
+                      ("qbins",
+                       "SELECT doc_id, qb_score, CAST(bin AS BIGINT) AS "
+                       "qbin FROM (" + _qbins_sql(
+                           "(SELECT doc_id, n_chars AS qb_score "
+                           "FROM documents)", "qb_score", 10) + ")",
+                       {"doc_id": "num", "qb_score": "num",
+                        "qbin": "num"}),
+                      ("budget",
+                       "SELECT doc_id, tb_score, tb_tokens FROM ("
+                       + _stb_sql(
+                           "(SELECT doc_id, doc_id % 11 AS tb_score, "
+                           "1 + n_chars % 500 AS tb_tokens "
+                           "FROM documents)",
+                           30000, "tb_score", "tb_tokens") + ")",
+                       {"doc_id": "num", "tb_score": "num",
+                        "tb_tokens": "num"}),
+                      ("dcap",
+                       "SELECT doc_id, source, dc_score, domain_rank "
+                       "FROM (" + _dcap_sql(
+                           "(SELECT doc_id, source, "
+                           "CAST(n_chars AS BIGINT) AS dc_score "
+                           "FROM documents) t",
+                           400, "source", "dc_score") + ")",
+                       {"doc_id": "num", "source": "str",
+                        "dc_score": "num", "domain_rank": "num"}),
+                      ("gqbins",
+                       "SELECT doc_id, source, gq_score, "
+                       "CAST(bin AS BIGINT) AS gqbin FROM ("
+                       + _gqbins_sql(
+                           "(SELECT doc_id, source, "
+                           "CAST(n_chars AS BIGINT) AS gq_score "
+                           "FROM documents) t",
+                           "gq_score", "source", 4) + ")",
+                       {"doc_id": "num", "source": "str",
+                        "gq_score": "num", "gqbin": "num"})])
 
     _norm = "trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))"
     _words = f"list_distinct(string_split({_norm}, ' '))"
@@ -3241,6 +6709,441 @@ def oracle_sql() -> dict[str, str]:
         WHERE CAST(len(list_intersect(wa, wb)) AS DOUBLE) / len(list_distinct(list_concat(wa, wb))) >= 0.5
     """
 
+    # exact 3-gram jaccard with first-word blocking
+    shingle3 = (
+        "list_distinct(CASE WHEN len(words) >= 3 THEN "
+        "list_transform(range(1, len(words) - 1), i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]) "
+        "ELSE [array_to_string(words, ' ')] END)"
+    )
+    o["dedup_ngram_jaccard"] = f"""
+        WITH base AS (
+          SELECT d.doc_id,
+                 string_split(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')), ' ') AS words
+          FROM documents d
+        ),
+        sh AS (
+          SELECT doc_id, words[1] AS blk, {shingle3} AS grams FROM base
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+                     / len(list_distinct(list_concat(a.grams, b.grams))), 4) AS jaccard
+        FROM sh a JOIN sh b ON a.blk = b.blk AND a.doc_id < b.doc_id
+        WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+              / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.15
+    """
+
+    def _brute_topk_sql(maxq):
+        return f"""
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+             q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qemb FROM embeddings WHERE vec_id < {maxq}),
+        scored AS (
+          SELECT q.query_id, v.vec_id,
+                 round(list_dot_product(v.emb, q.qemb)
+                       / (sqrt(list_dot_product(v.emb, v.emb)) * sqrt(list_dot_product(q.qemb, q.qemb))), 4) AS cosine_sim
+          FROM v, q
+        ),
+        ranked AS (
+          SELECT query_id, vec_id, cosine_sim,
+                 row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id ASC) AS rank
+          FROM scored
+        )
+        SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= 10
+    """
+
+    o["ann_cosine_topk"] = _brute_topk_sql(5)
+
+    # simhash oracle: 60-bit md5-prefix token hashes (same family as the
+    # minhash oracle) — per-bit ±1 votes replayed with nested lambdas;
+    # band split and hamming mirror dedup.simhash_pairs exactly
+    o["dedup_simhash"] = """
+        WITH base AS (
+          SELECT doc_id,
+                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
+          FROM documents
+        ),
+        sh AS (
+          SELECT doc_id,
+                 list_distinct(CASE WHEN len(words) >= 2
+                   THEN list_transform(range(1, len(words)), i -> words[i] || ' ' || words[i+1])
+                   ELSE [array_to_string(words, ' ')] END) AS grams
+          FROM base
+        ),
+        hs AS (
+          SELECT doc_id,
+                 list_transform(grams, w ->
+                   CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT)) AS hlist
+          FROM sh
+        ),
+        sim AS (
+          SELECT doc_id,
+                 CAST(list_sum(list_transform(range(0, 60), b ->
+                   CASE WHEN list_sum(list_transform(hlist, h ->
+                          CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
+                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS BIGINT) AS simh
+          FROM hs
+        ),
+        banded AS (
+          SELECT doc_id, simh, t.t AS band, (simh >> (t.t * 16)) & 65535 AS bhash
+          FROM sim, (SELECT unnest(range(4)) AS t) t
+        ),
+        pairs AS (
+          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+                 bit_count(xor(a.simh, b.simh)) AS hamming
+          FROM banded a JOIN banded b
+            ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id
+        )
+        SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 8
+    """
+
+    # LSH oracle: the random hyperplanes are deterministic (md5-seeded),
+    # so the exact same constants are inlined into the DuckDB SQL and the
+    # signature computation is replayed bit-for-bit.
+    from enrich_spark.datapipe.similarity import _hyperplane
+
+    def _lsh_sig_sql(col, table, bits=6, dim=64):
+        terms = []
+        for b in range(bits):
+            arr = "[" + ", ".join(repr(v) for v in _hyperplane(dim, table, b)) + "]"
+            terms.append(
+                f"(CASE WHEN list_dot_product({col}, {arr}) > 0 THEN {1 << b} ELSE 0 END)"
+            )
+        return "(" + " + ".join(terms) + ")"
+
+    def _lsh_sigs_union(src, idc, emb):
+        return " UNION ALL ".join(
+            f"SELECT {idc}, {emb} AS emb, {t} AS tbl,"
+            f" {_lsh_sig_sql(emb, t)} AS sig FROM {src}"
+            for t in range(4)
+        )
+
+    def _ann_lsh_sql(probe_bits):
+        probes = "SELECT query_id, emb, tbl, sig FROM qs"
+        for b in range(probe_bits):
+            probes += (f"\n          UNION ALL SELECT query_id, emb, tbl, "
+                       f"xor(sig, {1 << b}) AS sig FROM qs")
+        return f"""
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb0 FROM embeddings),
+             q AS (SELECT vec_id AS query_id, emb0 AS qemb0 FROM v WHERE vec_id < 3),
+        vs AS ({_lsh_sigs_union('v', 'vec_id', 'emb0')}),
+        qs AS ({_lsh_sigs_union('q', 'query_id', 'qemb0')}),
+        qp AS ({probes}),
+        cand AS (
+          SELECT DISTINCT qp.query_id, vs.vec_id,
+                 round(list_dot_product(vs.emb, qp.emb)
+                       / (sqrt(list_dot_product(vs.emb, vs.emb))
+                          * sqrt(list_dot_product(qp.emb, qp.emb))), 4) AS cosine_sim
+          FROM vs JOIN qp ON vs.tbl = qp.tbl AND vs.sig = qp.sig),
+        ranked AS (
+          SELECT query_id, vec_id, cosine_sim,
+                 row_number() OVER (PARTITION BY query_id
+                                    ORDER BY cosine_sim DESC, vec_id ASC) AS rank
+          FROM cand)
+        SELECT query_id, vec_id, cosine_sim FROM ranked WHERE rank <= 10
+        """
+
+    from enrich_spark.datapipe.similarity import (
+        topk_recall_sql as _rec_sql,
+        topk_recall_summary_sql as _rec_sum_sql,
+    )
+
+    _ann_cols = {"query_id": "num", "vec_id": "num", "cosine_sim": "fnum"}
+    _rec_cols = {"query_id": "num", "n_true": "num", "n_hits": "num",
+                 "recall_bp": "num"}
+    _rec_sum_cols = {"n_queries": "num", "n_true": "num", "n_hits": "num",
+                     "recall_bp": "num", "perfect_queries": "num"}
+    o["ann_lsh_topk"] = _union_oracle([
+        ("plain", _ann_lsh_sql(0), _ann_cols),
+        ("probe", _ann_lsh_sql(2), _ann_cols),
+        ("recall", _rec_sql(_ann_lsh_sql(0), _brute_topk_sql(3)),
+         _rec_cols),
+        ("recall_sum", _rec_sum_sql(_ann_lsh_sql(0), _brute_topk_sql(3)),
+         _rec_sum_cols),
+    ])
+
+    o["ann_ivf_topk"] = """
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+             c AS (SELECT vec_id AS cid, emb AS cvec FROM v WHERE vec_id < 16),
+             q AS (SELECT vec_id AS query_id, emb AS qemb FROM v WHERE vec_id < 5),
+        assign AS (
+          SELECT vec_id, emb, cid FROM (
+            SELECT v.vec_id, v.emb, c.cid,
+                   row_number() OVER (
+                     PARTITION BY v.vec_id
+                     ORDER BY round(list_dot_product(v.emb, c.cvec)
+                              / (sqrt(list_dot_product(v.emb, v.emb))
+                                 * sqrt(list_dot_product(c.cvec, c.cvec))), 6) DESC,
+                              c.cid ASC) AS r
+            FROM v, c)
+          WHERE r = 1),
+        probe AS (
+          SELECT query_id, qemb, cid FROM (
+            SELECT q.query_id, q.qemb, c.cid,
+                   row_number() OVER (
+                     PARTITION BY q.query_id
+                     ORDER BY round(list_dot_product(q.qemb, c.cvec)
+                              / (sqrt(list_dot_product(q.qemb, q.qemb))
+                                 * sqrt(list_dot_product(c.cvec, c.cvec))), 6) DESC,
+                              c.cid ASC) AS r
+            FROM q, c)
+          WHERE r <= 4),
+        cand AS (
+          SELECT p.query_id, a.vec_id,
+                 round(list_dot_product(a.emb, p.qemb)
+                       / (sqrt(list_dot_product(a.emb, a.emb))
+                          * sqrt(list_dot_product(p.qemb, p.qemb))), 4) AS cosine_sim
+          FROM assign a JOIN probe p USING (cid)),
+        ranked AS (
+          SELECT query_id, vec_id, cosine_sim,
+                 row_number() OVER (PARTITION BY query_id
+                                    ORDER BY cosine_sim DESC, vec_id ASC) AS rank
+          FROM cand)
+        SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= 10
+    """
+    # clustering rollup: same assignment CTE as the IVF oracle, then a
+    # per-centroid integer rollup (floor-division mean)
+    _cluster_sql = """
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+             c AS (SELECT vec_id AS cid, emb AS cvec FROM v WHERE vec_id < 16),
+        assign AS (
+          SELECT vec_id, cid, sim_bp FROM (
+            SELECT v.vec_id, c.cid,
+                   CAST(round(round(list_dot_product(v.emb, c.cvec)
+                        / (sqrt(list_dot_product(v.emb, v.emb))
+                           * sqrt(list_dot_product(c.cvec, c.cvec))), 6)
+                        * 10000, 0) AS BIGINT) AS sim_bp,
+                   row_number() OVER (
+                     PARTITION BY v.vec_id
+                     ORDER BY round(list_dot_product(v.emb, c.cvec)
+                              / (sqrt(list_dot_product(v.emb, v.emb))
+                                 * sqrt(list_dot_product(c.cvec, c.cvec))), 6) DESC,
+                              c.cid ASC) AS r
+            FROM v, c)
+          WHERE r = 1)
+        SELECT cid, CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(sim_bp) AS BIGINT) AS sum_sim_bp,
+               CAST(floor(sum(sim_bp) * 1.0 / count(*)) AS BIGINT) AS mean_sim_bp,
+               CAST(min(sim_bp) AS BIGINT) AS min_sim_bp,
+               CAST(max(sim_bp) AS BIGINT) AS max_sim_bp
+        FROM assign GROUP BY cid
+    """
+    from enrich_spark.datapipe.pq import (
+        adc_topk_sql as _adc_sql, pq_codes_sql as _pqc_sql,
+    )
+
+    from enrich_spark.datapipe.pca import pca_gram_sql as _pgram_sql
+
+    def _pca_proj_oracle():
+        # mirror of q_pca_proj: same pinned components/mean/eigenvalues,
+        # same (dot − offset) / √(eig + eps) then 4dp round; repr()
+        # floats parse to the identical IEEE double in DuckDB
+        import math as _math
+
+        model = _pca_fixed_model()
+        sels = ["vec_id"]
+        for j, comp in enumerate(model.components):
+            arr = "[" + ", ".join(repr(float(w)) for w in comp) + "]"
+            off = sum(m * w for m, w in zip(model.mean, comp))
+            s = _math.sqrt(model.eigenvalues[j] + 1e-9)
+            sels.append(
+                f"round((list_dot_product(embedding::DOUBLE[], {arr}) "
+                f"- ({off!r})) / ({s!r}), 4) AS pc{j}")
+        return "SELECT " + ", ".join(sels) + " FROM embeddings"
+
+    # kmeans Lloyd-update stats: same table-derived vec_id<16 centroids
+    # and 6dp-rounded assignment as the cluster oracle, then 64
+    # per-component floor(x·1e6) integer sums digested to one md5
+    _km_sums = ", ".join(
+        f"CAST(sum(CAST(floor(emb[{i + 1}] * 1000000) AS BIGINT))"
+        f" AS BIGINT) AS s{i}" for i in range(64))
+    # concat_ws (one 65-arg call), NOT chained || — 64 nested binary
+    # concats exceed DuckDB's 128-deep binder recursion limit
+    _km_digest = "md5(concat_ws(','," + ", ".join(
+        f"CAST(s{i} AS VARCHAR)" for i in range(64)) + "))"
+    _kmeans_sql = f"""
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb
+                   FROM embeddings),
+             c AS (SELECT vec_id AS cid, emb AS cvec FROM v
+                   WHERE vec_id < 16),
+        assign AS (
+          SELECT emb, cid FROM (
+            SELECT v.vec_id, v.emb, c.cid,
+                   row_number() OVER (
+                     PARTITION BY v.vec_id
+                     ORDER BY round(list_dot_product(v.emb, c.cvec)
+                              / (sqrt(list_dot_product(v.emb, v.emb))
+                                 * sqrt(list_dot_product(c.cvec,
+                                                         c.cvec))), 6)
+                              DESC, c.cid ASC) AS r
+            FROM v, c)
+          WHERE r = 1),
+        g AS (
+          SELECT cid, CAST(count(*) AS BIGINT) AS n_members, {_km_sums}
+          FROM assign GROUP BY cid)
+        SELECT cid, n_members, {_km_digest} AS sums_digest FROM g
+    """
+
+    _emb_dbl = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+    _ivf_sql = o["ann_ivf_topk"]
+    o["ann_ivf_topk"] = _union_oracle([
+        ("ivf", _ivf_sql,
+         {"query_id": "num", "vec_id": "num", "cosine_sim": "fnum",
+          "rank": "num"}),
+        ("cluster", _cluster_sql,
+         {"cid": "num", "n": "num", "sum_sim_bp": "num",
+          "mean_sim_bp": "num", "min_sim_bp": "num", "max_sim_bp": "num"}),
+        ("pq_codes", _pqc_sql("embeddings", "vec_id", _emb_dbl, _PQ_MODEL),
+         {"vec_id": "num", "codes_str": "str"}),
+        ("pq_adc", _adc_sql("embeddings", "vec_id", _emb_dbl,
+                            "vec_id < 4", _PQ_MODEL, k=10),
+         {"query_id": "num", "vec_id": "num", "adc_dist": "num",
+          "rank": "num"}),
+        ("recall", _rec_sql(_ivf_sql, _brute_topk_sql(5)), _rec_cols),
+        ("pca_gram", _pgram_sql("embeddings", dim=64),
+         {"i": "num", "j": "num", "v": "num"}),
+        ("pca_proj", _pca_proj_oracle(),
+         {"vec_id": "num", "pc0": "fnum", "pc1": "fnum",
+          "pc2": "fnum", "pc3": "fnum"}),
+        ("kmeans", _kmeans_sql,
+         {"cid": "num", "n_members": "num", "sums_digest": "str"}),
+    ])
+
+    _emb_pairs_sql = """
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               round(list_dot_product(a.emb, b.emb)
+                     / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) AS cosine_sim
+        FROM v a JOIN v b ON a.vec_id < b.vec_id
+        WHERE round(list_dot_product(a.emb, b.emb)
+                    / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) >= 0.4
+    """
+    # SemDeDup: same assignment CTE discipline as the cluster oracle,
+    # then the deterministic lower-id-keeps rule within each cluster
+    _semdedup_sql = """
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+                          sqrt(list_dot_product(embedding::DOUBLE[],
+                               embedding::DOUBLE[])) AS vn
+                   FROM embeddings),
+             c AS (SELECT vec_id AS cid, emb AS cvec, vn AS cn
+                   FROM v WHERE vec_id < 16),
+        assign AS (
+          SELECT vec_id, emb, vn, cid, sim_bp FROM (
+            SELECT v.vec_id, v.emb, v.vn, c.cid,
+                   CAST(round(round(list_dot_product(v.emb, c.cvec)
+                        / (v.vn * c.cn), 6) * 10000, 0) AS BIGINT) AS sim_bp,
+                   row_number() OVER (
+                     PARTITION BY v.vec_id
+                     ORDER BY round(list_dot_product(v.emb, c.cvec)
+                              / (v.vn * c.cn), 6) DESC, c.cid ASC) AS r
+            FROM v, c)
+          WHERE r = 1),
+        earlier AS (
+          SELECT a.vec_id, CAST(count(*) AS BIGINT) AS n_dups,
+                 max(round(list_dot_product(a.emb, b.emb)
+                     / (a.vn * b.vn), 4)) AS max_sim
+          FROM assign a JOIN assign b
+            ON a.cid = b.cid AND a.vec_id > b.vec_id
+          WHERE round(list_dot_product(a.emb, b.emb)
+                / (a.vn * b.vn), 4) >= 0.55
+          GROUP BY a.vec_id)
+        SELECT a.vec_id, a.cid, a.sim_bp,
+               CAST(COALESCE(e.n_dups, 0) AS BIGINT) AS n_dups,
+               round(COALESCE(e.max_sim, -1.0), 4) AS max_sim,
+               CAST(CASE WHEN e.vec_id IS NULL THEN 1 ELSE 0 END
+                    AS BIGINT) AS is_kept
+        FROM assign a LEFT JOIN earlier e USING (vec_id)
+    """
+    # lsh_pairs: replay the PRODUCTION bucketed dup-pair plan — the same
+    # md5-seeded hyperplanes inline into DuckDB (bits=8 here, vs the
+    # ann_lsh gate's 6), bucket join on (tbl, sig), DISTINCT pair,
+    # 4dp-rounded cosine threshold (matching the Spark side's
+    # round-then-filter contract)
+    _lsh_pairs_sigs = " UNION ALL ".join(
+        f"SELECT vec_id, emb0 AS emb, {t} AS tbl,"
+        f" {_lsh_sig_sql('emb0', t, bits=8)} AS sig FROM v"
+        for t in range(4))
+    _lsh_pairs_sql = f"""
+        WITH v AS (SELECT vec_id,
+                          list_transform(embedding, x -> CAST(x AS DOUBLE))
+                            AS emb0
+                   FROM embeddings),
+        vs AS ({_lsh_pairs_sigs}),
+        pairs AS (
+          SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
+                 round(list_dot_product(a.emb, b.emb)
+                       / (sqrt(list_dot_product(a.emb, a.emb))
+                          * sqrt(list_dot_product(b.emb, b.emb))), 4)
+                   AS cosine_sim
+          FROM vs a JOIN vs b
+            ON a.tbl = b.tbl AND a.sig = b.sig AND a.vec_id < b.vec_id)
+        SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= 0.4
+    """
+    o["embedding_dup_pairs"] = _union_oracle([
+        ("pairs", _emb_pairs_sql,
+         {"id_a": "num", "id_b": "num", "cosine_sim": "fnum"}),
+        ("lsh_pairs", _lsh_pairs_sql,
+         {"id_a": "num", "id_b": "num", "cosine_sim": "fnum"}),
+        ("semdedup", _semdedup_sql,
+         {"vec_id": "num", "cid": "num", "sim_bp": "num", "n_dups": "num",
+          "max_sim": "fnum", "is_kept": "num"}),
+        ("int8", """
+        WITH b AS (
+          -- CAST chain matters: DuckDB's bare 127.0 is DECIMAL and a
+          -- float/decimal division rounds differently from Spark's
+          -- double path by 1 ulp, flipping floor() at boundaries
+          SELECT vec_id, embedding AS v,
+                 CAST(list_max(list_transform(embedding, x -> abs(x)))
+                      AS DOUBLE) / CAST(127 AS DOUBLE) AS s
+          FROM embeddings)
+        SELECT vec_id,
+               md5(array_to_string(list_transform(v,
+                   x -> CAST(round(x / s) AS INT)), ',')) AS q_digest,
+               CAST(floor(s * 1000000000) AS BIGINT) AS scale_1e9,
+               CAST(floor(list_max(list_transform(v,
+                   x -> abs(x - round(x / s) * s))) * 1000000) AS BIGINT)
+                 AS max_abs_err_1e6
+        FROM b
+        """,
+         {"vec_id": "num", "q_digest": "str", "scale_1e9": "num",
+          "max_abs_err_1e6": "num"}),
+        ("margin", """
+        WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e
+                   FROM embeddings),
+        cosq AS (
+          SELECT s.vec_id AS x, t.vec_id AS y,
+                 CAST(floor(list_dot_product(s.e, t.e)
+                   / (sqrt(list_dot_product(s.e, s.e))
+                      * sqrt(list_dot_product(t.e, t.e))) * 1000000)
+                   AS BIGINT) AS cos_u
+          FROM v s, v t WHERE s.vec_id < 40 AND t.vec_id >= 40
+        ),
+        x2y AS (
+          SELECT x, y, cos_u,
+                 row_number() OVER (PARTITION BY x
+                     ORDER BY cos_u DESC, y ASC) AS rk
+          FROM cosq
+        ),
+        xs AS (SELECT x, sum(cos_u) AS sum_x_u FROM x2y
+               WHERE rk <= 4 GROUP BY x),
+        best AS (SELECT x, y, cos_u FROM x2y WHERE rk = 1),
+        y2x AS (
+          SELECT c.y, c.x, c.cos_u,
+                 row_number() OVER (PARTITION BY c.y
+                     ORDER BY c.cos_u DESC, c.x ASC) AS rk
+          FROM cosq c JOIN (SELECT DISTINCT y FROM best) b ON c.y = b.y
+        ),
+        ys AS (SELECT y, sum(cos_u) AS sum_y_u FROM y2x
+               WHERE rk <= 4 GROUP BY y)
+        SELECT best.x, best.y, best.cos_u,
+               (2 * 4 * best.cos_u * 1000000)
+                 // (xs.sum_x_u + ys.sum_y_u) AS margin_ppm
+        FROM best JOIN xs ON best.x = xs.x JOIN ys ON best.y = ys.y
+        WHERE (2 * 4 * best.cos_u * 1000000)
+              // (xs.sum_x_u + ys.sum_y_u) > 1000000
+        """,
+         {"x": "num", "y": "num", "cos_u": "num", "margin_ppm": "num"}),
+        ("negs", _negs_sql("documents", 3, "doc_id", 42, 64),
+         {"anchor_id": "num", "j": "num", "neg_id": "num"}),
+    ])
 
     # language-ID: replay the character-trigram profile model bit-for-bit
     # — the SAME LANG_PROFILES constants drive both sides; first language
@@ -3345,6 +7248,303 @@ def oracle_sql() -> dict[str, str]:
         FROM r
     """
 
+    o["text_token_counts"] = """
+        SELECT doc_id,
+               CASE WHEN trim(text) = '' THEN 0
+                    ELSE len(string_split_regex(trim(text), '\\s+')) END AS ws_tokens,
+               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]'))
+                    + list_sum(list_transform(string_split_regex(trim(text), '\\s+'),
+                                              w -> greatest((length(w) - 1) // 4, 0))) AS BIGINT) AS bpe_est_tokens
+        FROM documents
+    """
+
+    o["doc_fingerprint"] = """
+        WITH n AS (
+          SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS norm
+          FROM documents
+        )
+        SELECT doc_id, md5(norm) AS content_hash,
+               list_min(list_transform(
+                 range(1, greatest(length(norm) - 7, 1) + 1),
+                 i -> CAST(('0x' || substr(md5(substr(norm, i, 8)), 1, 15)) AS BIGINT)
+               )) AS winnow_hash
+        FROM n
+    """
+
+    # byte k (1-based hex pair) of a sha256 hex digest, as an integer
+    def _sha_byte(k: int) -> str:
+        return (
+            f"(16*(strpos('0123456789abcdef', substr(hx,{2*k - 1},1))-1)"
+            f" + (strpos('0123456789abcdef', substr(hx,{2*k},1))-1))"
+        )
+
+    # real decode: PNG/BMP dims + constant-pixel means and WAV duration/
+    # sample mean are doc_id arithmetic; the unknown branch replays the
+    # digest stub (sha256 of the UTF-8 text = the media bytes)
+    o["multimodal_decode"] = f"""
+        WITH h AS (SELECT doc_id, sha256(text) AS hx FROM documents)
+        SELECT doc_id,
+               CASE WHEN doc_id % 8 = 3 THEN 'jpeg' WHEN doc_id % 16 = 7 THEN 'gif'
+                    WHEN doc_id % 32 = 15 THEN 'mp3'
+                    WHEN doc_id % 32 = 31 THEN 'jpeg'
+                    WHEN doc_id % 16 = 6 THEN 'mp4'
+                    WHEN doc_id % 32 = 20 THEN 'jpeg' ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp'
+                      WHEN 2 THEN 'wav' ELSE 'unknown' END END AS format,
+               CASE WHEN doc_id % 8 = 3 OR doc_id % 16 = 7 THEN 'image'
+                    WHEN doc_id % 32 = 15 THEN 'audio'
+                    WHEN doc_id % 32 = 31 THEN 'image'
+                    WHEN doc_id % 16 = 6 THEN 'video'
+                    WHEN doc_id % 32 = 20 THEN 'image' ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 'image' WHEN 1 THEN 'image'
+                      WHEN 2 THEN 'audio' ELSE 'unknown' END END AS media_type,
+               CAST(CASE WHEN doc_id % 8 = 3 THEN 8 + doc_id % 9
+                    WHEN doc_id % 16 = 7 THEN 4 + doc_id % 6
+                    WHEN doc_id % 32 = 15 THEN -1
+                    WHEN doc_id % 32 = 31 THEN 8 + doc_id % 9
+                    WHEN doc_id % 16 = 6 THEN 16 * (1 + doc_id % 60)
+                    WHEN doc_id % 32 = 20 THEN 1 + doc_id % 11 ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 1 + doc_id % 13
+                      WHEN 1 THEN 1 + doc_id % 9 WHEN 2 THEN -1
+                      ELSE 1 + ({_sha_byte(1)} % 64) END END AS BIGINT) AS width,
+               CAST(CASE WHEN doc_id % 8 = 3 THEN 8 + doc_id % 5
+                    WHEN doc_id % 16 = 7 THEN 3 + doc_id % 4
+                    WHEN doc_id % 32 = 15 THEN -1
+                    WHEN doc_id % 32 = 31 THEN 8 + doc_id % 5
+                    WHEN doc_id % 16 = 6 THEN 9 * (1 + doc_id % 60)
+                    WHEN doc_id % 32 = 20 THEN 1 + doc_id % 6 ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 1 + doc_id % 7
+                      WHEN 1 THEN 1 + doc_id % 5 WHEN 2 THEN -1
+                      ELSE 1 + ({_sha_byte(2)} % 64) END END AS BIGINT) AS height,
+               CAST(CASE WHEN doc_id % 8 = 3 OR doc_id % 16 = 7 THEN 3
+                    WHEN doc_id % 32 = 15 THEN 2
+                    WHEN doc_id % 32 = 31 THEN 1
+                    WHEN doc_id % 16 = 6 THEN -1
+                    WHEN doc_id % 32 = 20 THEN 1 ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 3 WHEN 1 THEN 3
+                      WHEN 2 THEN 1 ELSE -1 END END AS BIGINT) AS channels,
+               CAST(CASE WHEN doc_id % 32 = 15
+                         THEN ((10 + doc_id % 50) * 1152000) // 44100
+                    WHEN doc_id % 16 = 6 THEN 1000 + doc_id % 977
+                    WHEN doc_id % 4 = 2 THEN 100 + doc_id % 100
+                    ELSE -1 END AS BIGINT) AS duration_ms,
+               CAST(CASE WHEN doc_id % 8 = 3 THEN (doc_id * 7) % 256
+                    WHEN doc_id % 16 = 7 THEN (doc_id * 11) % 256
+                    WHEN doc_id % 32 = 15 THEN -1
+                    WHEN doc_id % 32 = 31 THEN (doc_id * 13) % 4096
+                    WHEN doc_id % 16 = 6 THEN -1
+                    WHEN doc_id % 32 = 20 THEN doc_id % 256 ELSE
+                 CASE doc_id % 4 WHEN 0 THEN doc_id % 256
+                      WHEN 1 THEN (doc_id * 3) % 256
+                      WHEN 2 THEN doc_id % 127 ELSE -1 END END AS DOUBLE) AS mean_val,
+               CASE WHEN doc_id % 8 = 3 THEN 'jpeg' WHEN doc_id % 16 = 7 THEN 'gif'
+                    WHEN doc_id % 32 = 15 THEN 'mp3'
+                    WHEN doc_id % 32 = 31 THEN 'jpeg'
+                    WHEN doc_id % 16 = 6 THEN 'mp4/' ||
+                      CASE (doc_id // 16) % 4 WHEN 0 THEN 'avc1'
+                           WHEN 1 THEN 'hev1' WHEN 2 THEN 'av01'
+                           ELSE 'vp09' END
+                    WHEN doc_id % 32 = 20 THEN 'jpeg' ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp'
+                      WHEN 2 THEN 'wav' ELSE 'stub' END END AS codec,
+               CAST(CASE WHEN doc_id % 8 = 3 OR doc_id % 32 = 15 OR doc_id % 32 = 31
+                         OR doc_id % 16 = 6 OR doc_id % 32 = 20 THEN -1
+                    WHEN doc_id % 16 = 7 THEN 4 + doc_id % 6 ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 1 + doc_id % 13
+                      WHEN 1 THEN 1 + doc_id % 9 ELSE -1 END END AS BIGINT) AS meta_width,
+               CAST(CASE WHEN doc_id % 8 = 3 OR doc_id % 32 = 15 OR doc_id % 32 = 31
+                         OR doc_id % 16 = 6 OR doc_id % 32 = 20 THEN -1
+                    WHEN doc_id % 16 = 7 THEN 3 + doc_id % 4 ELSE
+                 CASE doc_id % 4 WHEN 0 THEN 1 + doc_id % 7
+                      WHEN 1 THEN 1 + doc_id % 5 ELSE -1 END END AS BIGINT) AS meta_height,
+               CAST(CASE WHEN doc_id % 32 = 15
+                         THEN ((10 + doc_id % 50) * 417 * 8) // 128
+                    WHEN doc_id % 16 = 6 THEN -1
+                    WHEN doc_id % 4 = 2 THEN 100 + doc_id % 100
+                    ELSE -1 END AS BIGINT) AS meta_duration_ms
+        FROM h
+    """
+
+    o["multimodal_frames"] = """
+        SELECT doc_id,
+               unnest(range(0, greatest(40 * (doc_id % 120) - 1, 0) + 1, 500)) AS frame_ts_ms,
+               CAST(64 AS BIGINT) AS vid_width,
+               CAST(40 * (doc_id % 120) AS BIGINT) AS vid_duration_ms
+        FROM documents WHERE doc_id % 4 = 2
+    """
+
+    # Gopher repetition suite — all-integer basis points, mirrored with
+    # DuckDB list functions (range(a,b) is half-open; Spark sequence is
+    # inclusive, hence the +2/+nn offsets)
+    def _rep_grams(nn):
+        return (f"list_transform(range(1, greatest(len(w) - {nn} + 2, 1)), "
+                f"i -> array_to_string(list_transform(range({nn}), "
+                f"j -> w[i + j]), ' '))")
+
+    def _rep_top(nn):
+        g = f"g{nn}"
+        return (f"COALESCE(list_max(list_transform(list_distinct({g}), "
+                f"x -> CASE WHEN len(list_filter({g}, y -> y = x)) >= 2 "
+                f"THEN len(list_filter({g}, y -> y = x)) * length(x) "
+                f"ELSE 0 END)), 0)")
+
+    def _rep_dupcov(nn):
+        g = f"g{nn}"
+        starts = (f"list_filter(range(1, greatest(len(w) - {nn} + 2, 1)), "
+                  f"i -> len(list_filter({g}, y -> y = {g}[i])) >= 2)")
+        covered = (f"list_distinct(flatten(list_transform({starts}, "
+                   f"p -> range(p, p + {nn}))))")
+        return (f"COALESCE(list_sum(list_transform({covered}, "
+                f"p -> length(w[p]))), 0)")
+
+    _rep_bp = lambda num, den: (  # noqa: E731
+        f"CAST(CASE WHEN {den} > 0 THEN least(({num} * 10000) // {den}, 10000) "
+        f"ELSE 0 END AS BIGINT)")
+    _seg_len = lambda col: (  # noqa: E731
+        f"COALESCE(list_sum(list_transform({col}, s -> length(s))), 0)")
+    _rep_sql = f"""
+        WITH d AS (
+          SELECT doc_id,
+                 trim(regexp_replace(text, '\\s+', ' ', 'g')) AS norm,
+                 string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS w,
+                 list_filter(list_transform(string_split(text, chr(10)),
+                                            s -> trim(s)), s -> s <> '') AS lines,
+                 list_filter(list_transform(string_split_regex(text, '\\n{{2,}}'),
+                                            s -> trim(s)), s -> s <> '') AS paras
+          FROM documents
+        ),
+        g AS (
+          SELECT doc_id, norm, w, lines, paras,
+                 {_rep_grams(2)} AS g2, {_rep_grams(3)} AS g3,
+                 {_rep_grams(4)} AS g4, {_rep_grams(5)} AS g5,
+                 {_rep_grams(10)} AS g10
+          FROM d
+        ),
+        n AS (
+          SELECT doc_id,
+                 CAST(len(lines) AS BIGINT) AS n_lines,
+                 CAST(len(paras) AS BIGINT) AS n_paras,
+                 len(lines) - len(list_distinct(lines)) AS dup_lines,
+                 {_seg_len('lines')} AS line_ch,
+                 {_seg_len('lines')} - {_seg_len('list_distinct(lines)')} AS dup_line_ch,
+                 len(paras) - len(list_distinct(paras)) AS dup_paras,
+                 {_seg_len('paras')} AS para_ch,
+                 {_seg_len('paras')} - {_seg_len('list_distinct(paras)')} AS dup_para_ch,
+                 length(norm) AS nc,
+                 COALESCE(list_sum(list_transform(w, x -> length(x))), 0) AS wc,
+                 {_rep_top(2)} AS top2, {_rep_top(3)} AS top3,
+                 {_rep_top(4)} AS top4,
+                 {_rep_dupcov(5)} AS dup5, {_rep_dupcov(10)} AS dup10
+          FROM g
+        )
+        SELECT doc_id, n_lines, n_paras,
+               {_rep_bp('dup_lines', 'n_lines')} AS dup_line_bp,
+               {_rep_bp('dup_line_ch', 'line_ch')} AS dup_line_char_bp,
+               {_rep_bp('dup_paras', 'n_paras')} AS dup_para_bp,
+               {_rep_bp('dup_para_ch', 'para_ch')} AS dup_para_char_bp,
+               {_rep_bp('top2', 'nc')} AS top2gram_bp,
+               {_rep_bp('top3', 'nc')} AS top3gram_bp,
+               {_rep_bp('top4', 'nc')} AS top4gram_bp,
+               {_rep_bp('dup5', 'wc')} AS dup5gram_bp,
+               {_rep_bp('dup10', 'wc')} AS dup10gram_bp
+        FROM n
+    """
+
+    # bigram-LM surprisal in whole bits: floor(log2 n) = length(bin(n))-1
+    # is pure integer arithmetic on both engines — no float log anywhere
+    _lm_sql = """
+        WITH d AS (
+          SELECT doc_id,
+                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+          FROM documents
+        ),
+        bg AS (
+          SELECT doc_id, w[t.i] AS prev, w[t.i + 1] AS cur
+          FROM d, LATERAL unnest(
+            CASE WHEN len(w) >= 2 THEN range(1, len(w)) ELSE [] END
+          ) AS t(i)
+        ),
+        bc AS (SELECT prev, cur, count(*) AS c_big FROM bg GROUP BY prev, cur),
+        cc AS (SELECT prev, count(*) AS c_ctx FROM bg GROUP BY prev),
+        j AS (
+          SELECT bg.doc_id,
+                 (length(bin(cc.c_ctx)) - 1) - (length(bin(bc.c_big)) - 1) AS bits,
+                 CASE WHEN bc.c_big = 1 THEN 1 ELSE 0 END AS oov
+          FROM bg JOIN bc ON bg.prev = bc.prev AND bg.cur = bc.cur
+                  JOIN cc ON bg.prev = cc.prev
+        ),
+        a AS (
+          SELECT doc_id, count(*) AS n_bigrams,
+                 CAST(sum(oov) AS BIGINT) AS oov_bigrams,
+                 CAST(sum(bits) AS BIGINT) AS info_bits
+          FROM j GROUP BY doc_id
+        )
+        SELECT doc_id, n_bigrams, oov_bigrams, info_bits,
+               CAST(CASE WHEN n_bigrams > 0
+                    THEN (info_bits * 10000) // n_bigrams
+                    ELSE 0 END AS BIGINT) AS avg_info_bp
+        FROM a
+    """
+
+    # webtext.html_extract mirror: same RE2-safe chain, same synthetic
+    # page fixture as q_html_extract; chr(9)/chr(10) stand in for \t/\n
+    # literals inside SQL
+    _html_sql = r"""
+        WITH src AS (
+          SELECT doc_id,
+            '<html><head><title>Doc ' || doc_id ||
+            '</title><script type="text/javascript">var x = 1 < 2 && "a";</script>' ||
+            '<style>p { color: red }</style></head><body><!-- nav -->' ||
+            '<NAV><ul>' ||
+            CASE WHEN doc_id % 7 = 0
+              THEN '<li><a href="/a">Home &amp; more</a></li><li><a href="/b">About &nbsp;us</a></li><li><a href="/c">Contact</a></li><li><a href="/d">Shop &lt;new&gt;</a></li>'
+              ELSE '<li><a href="/a">Home</a></li>' END ||
+            '</ul></nav><h1>Title &quot;h&#39;s&quot;</h1><p>' || substr(text, 1, 400) ||
+            '</p><div>tail &#160;x</div></body></html>' AS html
+          FROM documents
+        ), ext AS (
+          SELECT doc_id, html,
+            regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+              replace(replace(replace(replace(replace(replace(replace(
+                regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+                  html,
+                  '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
+                  '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
+                  '(?s)<!--.*?-->', ' ', 'g'),
+                  '(?i)</?(p|div|br|li|ul|ol|h[1-6]|tr|table|blockquote|section|article|header|footer|nav)[^>]*>', chr(10), 'g'),
+                  '<[^>]*>', ' ', 'g'),
+                '&nbsp;', ' '), '&#160;', ' '), '&lt;', '<'), '&gt;', '>'),
+                '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
+              '[ ' || chr(9) || ']+', ' ', 'g'),
+              ' ?' || chr(10) || ' ?', chr(10), 'g'),
+              chr(10) || '{3,}', chr(10) || chr(10), 'g'),
+              '^\s+|\s+$', '', 'g') AS text
+          FROM src
+        ), sig AS (
+          SELECT doc_id, html, text,
+            CAST(length(html) AS BIGINT) AS html_len,
+            CAST(length(text) AS BIGINT) AS text_len,
+            CAST(COALESCE(list_sum(list_transform(
+                   regexp_extract_all(html, '(?is)<a[^>]*>(.*?)</a>', 1),
+                   a -> length(regexp_replace(a, '<[^>]*>', '', 'g')))), 0)
+              AS BIGINT) AS anchor_chars
+          FROM ext
+        )
+        SELECT doc_id, text AS extracted_text, html_len, text_len,
+               CAST(len(regexp_extract_all(html, '<[A-Za-z/][^>]*>')) AS BIGINT) AS n_tags,
+               CAST(len(regexp_extract_all(html, '(?i)<a[\s>]')) AS BIGINT) AS n_links,
+               anchor_chars,
+               (text_len * 10000) // greatest(html_len, 1) AS text_density_bp,
+               (anchor_chars * 10000) // greatest(text_len, 1) AS link_density_bp,
+               CAST(CASE WHEN (text_len * 10000) // greatest(html_len, 1) < 2500
+                          OR (anchor_chars * 10000) // greatest(text_len, 1) > 3333
+                    THEN 1 ELSE 0 END AS BIGINT) AS is_boilerplate
+        FROM sig
+    """
+
+    # ---- 50-cap bundles: fold the text/multimodal singles into ONE
+    # oracle row each (standalone rows rotated out of the driver's
+    # 50-query gate in r6 and went driver-unverified)
     o["text_analysis"] = _union_oracle([
         ("lang", o.pop("text_language_id"),
          {"doc_id": "num", "detected_lang": "str"}),
@@ -3354,9 +7554,282 @@ def oracle_sql() -> dict[str, str]:
           "stopword_ratio": "fnum", "distinct_word_ratio": "fnum",
           "dup_line_ratio": "fnum", "top_bigram_char_ratio": "fnum",
           "quality_score": "fnum"}),
+        ("tokens", o.pop("text_token_counts"),
+         {"doc_id": "num", "ws_tokens": "num", "bpe_est_tokens": "num"}),
+        ("fprint", o.pop("doc_fingerprint"),
+         {"doc_id": "num", "content_hash": "str", "winnow_hash": "num"}),
+        ("stats", _corpus_stats_sql,
+         {"source": "str", "n_docs": "num", "total_tokens": "num",
+          "mean_tokens": "fnum", "p50_tokens": "fnum", "p90_tokens": "fnum",
+          "total_chars": "num", "dup_docs": "num"}),
+        ("rep", _rep_sql,
+         {"doc_id": "num", "n_lines": "num", "n_paras": "num",
+          "dup_line_bp": "num", "dup_line_char_bp": "num",
+          "dup_para_bp": "num", "dup_para_char_bp": "num",
+          "top2gram_bp": "num", "top3gram_bp": "num", "top4gram_bp": "num",
+          "dup5gram_bp": "num", "dup10gram_bp": "num"}),
+        ("lm", _lm_sql,
+         {"doc_id": "num", "n_bigrams": "num", "oov_bigrams": "num",
+          "info_bits": "num", "avg_info_bp": "num"}),
+        ("html", _html_sql,
+         {"doc_id": "num", "extracted_text": "str", "html_len": "num",
+          "text_len": "num", "n_tags": "num", "n_links": "num",
+          "anchor_chars": "num", "text_density_bp": "num",
+          "link_density_bp": "num", "is_boilerplate": "num"}),
+        ("bpe", _bpe_apply_sql("documents", "doc_id", "text", _BPE_MERGES),
+         {"doc_id": "num", "n_words": "num", "n_tokens": "num",
+          "tokens_head": "str"}),
+        ("unigram", _unigram_apply_sql("documents", "doc_id", "text",
+                                       _UNIGRAM_PIECES),
+         {"doc_id": "num", "n_words": "num", "n_tokens": "num",
+          "cost_unats": "num"}),
+        ("bm25",
+         "select doc_id, dl as bm_dl, bm25, n_hit_terms from ("
+         + _bm25_sql("documents", "doc_id", "text",
+                     ["window", "join", "scan", "zebra"]) + ")",
+         {"doc_id": "num", "bm_dl": "num", "bm25": "fnum",
+          "n_hit_terms": "num"}),
+        ("url", _url_norm_sql(
+            "(select doc_id, "
+            "(case when doc_id % 2 = 0 then 'https://' else 'HTTP://' end)"
+            " || list_extract(['WWW.Example.CO.UK:80', 'Shop.Example.COM', "
+            "'news.example.com.au:443', 'example.org:8080', 'a.b.co.jp', "
+            "'www.foo.net'], cast(doc_id % 6 as int) + 1)"
+            " || '/Docs//' || source || '/' || cast(doc_id as varchar)"
+            " || '/?utm_source=feed&id=' || cast(doc_id as varchar)"
+            " || '&b=2&a=1&gclid=x#sec' as url from documents)",
+            "doc_id", "url"),
+         {"doc_id": "num", "canonical_url": "str", "host": "str",
+          "reg_domain": "str", "path_depth": "num", "n_params": "num",
+          "n_tracking": "num"}),
         ("clean", _text_norm_oracle_sql(),
          {"doc_id": "num", "text_norm": "str", "norm_changed": "num",
           "norm_delta_chars": "num"}),
+        ("script", _script_sql(
+            "(select doc_id, substring(text, 1, 80) || ' ' || "
+            "list_extract(['Привет мир', '中文文本内容', "
+            "'مرحبا بالعالم', '한국어 텍스트', 'ひらがな καλημέρα', "
+            "'שלום नमस्ते ৳'], cast(doc_id % 6 as int) + 1) as text "
+            "from documents)"),
+         {"doc_id": "num", "n_chars": "num", "n_latin": "num",
+          "n_cyrillic": "num", "n_greek": "num", "n_arabic": "num",
+          "n_hebrew": "num", "n_devanagari": "num", "n_cjk": "num",
+          "n_kana": "num", "n_hangul": "num", "n_other": "num",
+          "dominant_script": "str", "nonascii_bp": "num"}),
+        # r12: stupid-backoff LM (datapipe/lm.py) — counts + scoring
+        # replayed entirely in SQL; per-token micro-log flooring makes
+        # the sums integer-exact across engines
+        ("sbo", _lm_score_sql("documents", _lm_counts_sql("documents")),
+         {"doc_id": "num", "n_tokens": "num", "logp_micro": "num",
+          "avg_logp_micro": "num"}),
+        # r13: code-vs-prose router — RE2-safe regexp counts + the
+        # integer blend, replayed verbatim
+        ("code",
+         "SELECT doc_id, n_chars AS cp_chars, n_lines AS cp_lines, "
+         "n_sym, n_ops, n_indent_lines, n_kw, code_score_bp, is_code "
+         "FROM (" + _code_sql("documents") + ")",
+         {"doc_id": "num", "cp_chars": "num", "cp_lines": "num",
+          "n_sym": "num", "n_ops": "num", "n_indent_lines": "num",
+          "n_kw": "num", "code_score_bp": "num", "is_code": "num"}),
+        # r14: fenced-code extraction — same doc_id-arithmetic fences
+        # (terminated at %3==0, unterminated at %7==1), split by the
+        # same pattern; streams compared by md5
+        ("fence",
+         "SELECT doc_id, md5(prose_text) AS prose_md5, "
+         "md5(code_text) AS code_md5, fence_langs, n_fences, "
+         "code_chars, prose_chars FROM (" + _fence_sql(
+             "(SELECT doc_id, substring(text, 1, 120) || "
+             "CASE WHEN doc_id % 3 = 0 THEN chr(10) || '```' || "
+             "list_extract(['py','js','rust',''], "
+             "CAST(doc_id % 4 AS INT) + 1) || "
+             "chr(10) || 'x = ' || doc_id || ';' || chr(10) || "
+             "'    y[0] += 2;' || chr(10) || '```' || chr(10) || "
+             "'tail ' ELSE ' plain ' END || "
+             "CASE WHEN doc_id % 7 = 1 THEN chr(10) || '```js' || "
+             "chr(10) || 'unterminated' ELSE '' END AS text "
+             "FROM documents)") + ")",
+         {"doc_id": "num", "prose_md5": "str", "code_md5": "str",
+          "fence_langs": "str", "n_fences": "num",
+          "code_chars": "num", "prose_chars": "num"}),
+        # r14: corpus code-mix over the same fence fixture (no
+        # unterminated tail — fmix reads only real fences)
+        ("fmix",
+         "SELECT lang AS fence_langs, n_blocks, code_chars, n_docs "
+         "FROM (" + _fmix_sql(
+             "(SELECT doc_id, substring(text, 1, 120) || "
+             "CASE WHEN doc_id % 3 = 0 THEN chr(10) || '```' || "
+             "list_extract(['py','js','rust',''], "
+             "CAST(doc_id % 4 AS INT) + 1) || "
+             "chr(10) || 'x = ' || doc_id || ';' || chr(10) || "
+             "'    y[0] += 2;' || chr(10) || '```' || chr(10) || "
+             "'tail ' ELSE ' plain ' END AS text "
+             "FROM documents)") + ")",
+         {"fence_langs": "str", "n_blocks": "num",
+          "code_chars": "num", "n_docs": "num"}),
+    ])
+    # dHash fixture replay: param p (planned dup/near-dup reuse of the
+    # previous subset member), optional one-pixel +40 perturbation at
+    # (doc_id%9, doc_id%8), pixel = first-2-hex md5("p:x:y") mod 251
+    # — identical to _dhash_docs
+    _DHASH_CTE = """
+        WITH dbase AS (
+          SELECT doc_id,
+                 CASE WHEN doc_id % 91 IN (0, 7) AND doc_id >= 3
+                      THEN doc_id - 3 ELSE doc_id END AS p,
+                 CASE WHEN doc_id % 91 = 7 THEN doc_id % 9 ELSE -1 END
+                   AS qx,
+                 CASE WHEN doc_id % 91 = 7 THEN doc_id % 8 ELSE -1 END
+                   AS qy
+          FROM documents WHERE doc_id % 3 = 0),
+        cells AS (
+          SELECT doc_id, p, qx, qy, r.range AS r, c.range AS c
+          FROM dbase, range(8) r, range(8) c),
+        vpix AS (
+          SELECT doc_id, r, c,
+            CASE WHEN c = qx AND r = qy
+                 THEN (CAST(('0x' || substr(md5(p || ':' || c || ':'
+                        || r), 1, 2)) AS INT) % 251 + 40) % 251
+                 ELSE CAST(('0x' || substr(md5(p || ':' || c || ':'
+                        || r), 1, 2)) AS INT) % 251
+            END AS lv,
+            CASE WHEN c + 1 = qx AND r = qy
+                 THEN (CAST(('0x' || substr(md5(p || ':' || (c+1)
+                        || ':' || r), 1, 2)) AS INT) % 251 + 40) % 251
+                 ELSE CAST(('0x' || substr(md5(p || ':' || (c+1)
+                        || ':' || r), 1, 2)) AS INT) % 251
+            END AS rv
+          FROM cells),
+        dh AS (
+          SELECT doc_id,
+                 CAST(sum(CASE WHEN rv > lv THEN
+                       CASE WHEN r*8 + c = 63
+                            THEN -9223372036854775807 - 1
+                            ELSE CAST(1 AS BIGINT) << (r*8 + c) END
+                      ELSE 0 END) AS BIGINT) AS dhash
+          FROM vpix GROUP BY doc_id)
+    """
+
+    # audio fingerprint replay: p / one-flipped-cell rules as in
+    # _afp_docs; beta = first md5 hex digit of "p:t:b" mod 2
+    _AFP_CTE = """
+        WITH abase AS (
+          SELECT doc_id,
+                 CASE WHEN doc_id % 89 IN (1, 38) AND doc_id >= 3
+                      THEN doc_id - 3 ELSE doc_id END AS p,
+                 CASE WHEN doc_id % 89 = 38 THEN doc_id % 9 ELSE -1 END
+                   AS ft,
+                 CASE WHEN doc_id % 89 = 38 THEN (doc_id // 9) % 9
+                      ELSE -1 END AS fb
+          FROM documents WHERE doc_id % 3 = 1),
+        bcells AS (
+          SELECT doc_id, t.range AS t, b.range AS b,
+                 CASE WHEN t.range = ft AND b.range = fb THEN
+                   1 - (CAST(('0x' || substr(md5(p || ':' || t.range
+                        || ':' || b.range), 1, 1)) AS INT) % 2)
+                 ELSE
+                   CAST(('0x' || substr(md5(p || ':' || t.range
+                        || ':' || b.range), 1, 1)) AS INT) % 2
+                 END AS beta
+          FROM abase, range(9) t, range(9) b),
+        abits AS (
+          SELECT a.doc_id, a.t, a.b,
+                 CASE WHEN a.beta - ab.beta - pa.beta + pb.beta >= 1
+                      THEN 1 ELSE 0 END AS bit
+          FROM bcells a
+          JOIN bcells ab ON ab.doc_id = a.doc_id AND ab.t = a.t
+                        AND ab.b = a.b + 1
+          JOIN bcells pa ON pa.doc_id = a.doc_id AND pa.t = a.t - 1
+                        AND pa.b = a.b
+          JOIN bcells pb ON pb.doc_id = a.doc_id AND pb.t = a.t - 1
+                        AND pb.b = a.b + 1
+          WHERE a.t >= 1 AND a.b <= 7),
+        afp AS (
+          SELECT doc_id,
+                 CAST(sum(CASE WHEN bit = 1 THEN
+                       CASE WHEN (t-1)*8 + b = 63
+                            THEN -9223372036854775807 - 1
+                            ELSE CAST(1 AS BIGINT) << ((t-1)*8 + b) END
+                      ELSE 0 END) AS BIGINT) AS afp
+          FROM abits GROUP BY doc_id)
+    """
+
+    o["multimodal"] = _union_oracle([
+        ("decode", o.pop("multimodal_decode"),
+         {"doc_id": "num", "format": "str", "media_type": "str",
+          "width": "num", "height": "num", "channels": "num",
+          "duration_ms": "num", "mean_val": "fnum", "codec": "str",
+          "meta_width": "num", "meta_height": "num",
+          "meta_duration_ms": "num"}),
+        ("frames", o.pop("multimodal_frames"),
+         {"doc_id": "num", "frame_ts_ms": "num", "vid_width": "num",
+          "vid_duration_ms": "num"}),
+        # on-bin sine fixtures: dominant bin/freq are exact integers
+        # (bin k = 3 + doc_id % 97; mhz = k * rate * 1000 // n)
+        ("audio",
+         "SELECT doc_id, CAST(8000 AS BIGINT) AS rate, "
+         "CAST(2000 AS BIGINT) AS n_samples, "
+         "CAST(1 AS BIGINT) AS a_channels, "
+         "CAST(3 + doc_id % 97 AS BIGINT) AS dominant_bin, "
+         "CAST((3 + doc_id % 97) * 4000 AS BIGINT) AS dominant_freq_mhz "
+         "FROM documents",
+         {"doc_id": "num", "rate": "num", "n_samples": "num",
+          "a_channels": "num", "dominant_bin": "num",
+          "dominant_freq_mhz": "num"}),
+        # constant-pixel PNGs (w=1+id%13, h=1+id%7, value id%256):
+        # nearest-neighbor resample of a constant is the constant, so
+        # target dims and the milli-mean are doc_id arithmetic
+        ("resize",
+         "SELECT doc_id, CAST(1 + doc_id % 13 AS BIGINT) AS rz_src_w, "
+         "CAST(1 + doc_id % 7 AS BIGINT) AS rz_src_h, "
+         "CAST(5 AS BIGINT) AS rz_w, CAST(4 AS BIGINT) AS rz_h, "
+         "CAST(3 AS BIGINT) AS rz_channels, "
+         "CAST((doc_id % 256) * 1000 AS BIGINT) AS rz_mean_mil "
+         "FROM documents WHERE doc_id % 4 = 0 AND doc_id % 32 <> 20",
+         {"doc_id": "num", "rz_src_w": "num", "rz_src_h": "num",
+          "rz_w": "num", "rz_h": "num", "rz_channels": "num",
+          "rz_mean_mil": "num"}),
+        # dHash: the 9×8 gradient fixture's pixels are pure doc_id
+        # arithmetic, so every gradient-sign bit — and hence the whole
+        # 64-bit hash, bit 63 as −2⁶³ two's complement — is rebuilt
+        # here cell by cell; pairs replay as brute all-pairs
+        # bit_count(xor) over the rebuilt hashes
+        ("dhash",
+         _DHASH_CTE + " SELECT doc_id, dhash, "
+         "CAST(9 AS BIGINT) AS dh_w, CAST(8 AS BIGINT) AS dh_h, "
+         "'bmp' AS dh_codec FROM dh",
+         {"doc_id": "num", "dhash": "num", "dh_w": "num",
+          "dh_h": "num", "dh_codec": "str"}),
+        ("dhpairs",
+         _DHASH_CTE + " SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
+         "CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming "
+         "FROM dh a JOIN dh b ON a.doc_id < b.doc_id "
+         "WHERE bit_count(xor(a.dhash, b.dhash)) <= 4",
+         {"id_a": "num", "id_b": "num", "hamming": "num"}),
+        # r13 incremental fingerprint near-dedup: new shard (doc_id
+        # % 5 = 0) vs the stored corpus index — brute new-vs-corpus
+        ("incfp",
+         _DHASH_CTE + " SELECT n.doc_id AS new_id, "
+         "c.doc_id AS corpus_id, "
+         "CAST(bit_count(xor(n.dhash, c.dhash)) AS BIGINT) AS hamming "
+         "FROM dh n JOIN dh c ON n.doc_id % 5 = 0 AND c.doc_id % 5 <> 0 "
+         "WHERE bit_count(xor(n.dhash, c.dhash)) <= 4",
+         {"new_id": "num", "corpus_id": "num", "hamming": "num"}),
+        # audio fingerprint: every Haitsma-Kalker sign bit is the
+        # integer beta-combination B[t][b]−B[t][b+1]−B[t−1][b]+
+        # B[t−1][b+1] ≥ 1 (the fixture's −30000·t·b energy ramp makes
+        # the 0 case a firm negative), beta = md5 bit of (p, t, b)
+        ("afp",
+         _AFP_CTE + " SELECT doc_id, afp, "
+         "CAST(8000 AS BIGINT) AS afp_rate, "
+         "CAST(3240 AS BIGINT) AS afp_samples FROM afp",
+         {"doc_id": "num", "afp": "num", "afp_rate": "num",
+          "afp_samples": "num"}),
+        ("afppairs",
+         _AFP_CTE + " SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
+         "CAST(bit_count(xor(a.afp, b.afp)) AS BIGINT) AS hamming "
+         "FROM afp a JOIN afp b ON a.doc_id < b.doc_id "
+         "WHERE bit_count(xor(a.afp, b.afp)) <= 4",
+         {"id_a": "num", "id_b": "num", "hamming": "num"}),
     ])
 
     o["api_request"] = """
@@ -3426,6 +7899,165 @@ def oracle_sql() -> dict[str, str]:
          {"src_event_id": "num", "e": "str", "aid": "str", "k": "str",
           "src": "str", "is_err": "num"}),
     ])
+    from enrich_spark.datapipe.rlhf import (
+        preference_pairs_sql as _pref_sql,
+    )
+
+    # the pref fixture's responses table, rebuilt in SQL: prompt =
+    # doc_id div 5, verbatim-reuse of the previous response's text at
+    # (doc_id % 5 = 3 AND doc_id % 3 = 0), score = 13·doc_id mod 7
+    _PREF_RESPONSES_SQL = """(
+        SELECT d.doc_id // 5 AS prompt_id, d.doc_id AS response_id,
+               substring(s.text, 1, 80) AS text,
+               (d.doc_id * 13) % 7 AS score
+        FROM documents d JOIN documents s
+          ON s.doc_id = CASE WHEN d.doc_id % 5 = 3 AND d.doc_id % 3 = 0
+                             THEN d.doc_id - 1 ELSE d.doc_id END
+    )"""
+
+    o["sessionize"] = _union_oracle([
+        ("stats", o.pop("sessionize"),
+         {"user_id": "num", "n_sessions": "num", "n_events": "num"}),
+        ("stream_closed", o.pop("sessionize_stream"),
+         {"user_id": "num", "session_index": "num", "ss_us": "num",
+          "se_us": "num", "n_events": "num"}),
+        # streaming cross-batch dedup parity: re-delivered copies of
+        # every event_id % 3 == 0 row must collapse to the distinct set
+        ("stream_dedup", "SELECT event_id, user_id FROM events",
+         {"event_id": "num", "user_id": "num"}),
+        # r12: conversation assembly — same doc_id-arithmetic dialogue
+        # table, same cumsum span arithmetic, md5 of the assembled text
+        ("chat",
+         "SELECT conv_id, n_turns, n_mask_turns, md5(text) AS chat_md5,"
+         " mask_spans_str, total_chars, mask_chars, alternation_ok,"
+         " roles_ok, ends_with_mask, no_empty FROM ("
+         + _chat_sql(
+             "(SELECT doc_id // 4 AS conv_id, doc_id % 4 AS turn_idx, "
+             "CASE WHEN (doc_id // 4) % 7 = 0 AND doc_id % 4 = 0 "
+             "THEN 'system' "
+             "WHEN (doc_id // 4) % 11 = 0 AND doc_id % 4 = 1 "
+             "THEN 'user' "
+             "WHEN (doc_id % 4) % 2 = 0 THEN 'user' "
+             "ELSE 'assistant' END AS role, "
+             "substring(text, 1, 60) AS text FROM documents)")
+         + ")",
+         {"conv_id": "num", "n_turns": "num", "n_mask_turns": "num",
+          "chat_md5": "str", "mask_spans_str": "str",
+          "total_chars": "num", "mask_chars": "num",
+          "alternation_ok": "num", "roles_ok": "num",
+          "ends_with_mask": "num", "no_empty": "num"}),
+        # r13: SFT-aware masked dedup — assistant bodies only (every
+        # 13th conv takes conv c-13's RAW assistant docs under its own
+        # prompts; the only resulting content dup is (13, 0) — see the
+        # q_sft_dedup comment), simhash over the masked side,
+        # recursive-CTE connected components, keep-most-masked-chars
+        # policy
+        ("sftdedup", """
+        WITH RECURSIVE turns AS (
+          SELECT d.doc_id // 4 AS conv_id, d.doc_id % 4 AS t,
+                 CASE WHEN (d.doc_id % 4) % 2 = 0 THEN 'user'
+                      ELSE 'assistant' END AS role,
+                 substring(s.text, 1, 60) AS txt
+          FROM documents d JOIN documents s
+            ON s.doc_id = CASE WHEN (d.doc_id // 4) % 13 = 0
+                                AND d.doc_id // 4 >= 13
+                                AND (d.doc_id % 4) % 2 = 1
+                               THEN d.doc_id - 52 ELSE d.doc_id END
+        ),
+        masked AS (
+          SELECT conv_id,
+                 COALESCE(string_agg(
+                   CASE WHEN role = 'assistant' THEN txt END,
+                   chr(10) ORDER BY t), '') AS mtext,
+                 COALESCE(sum(CASE WHEN role = 'assistant'
+                              THEN length(txt) END), 0) AS mask_chars
+          FROM turns GROUP BY conv_id
+        ),
+        base AS (
+          SELECT conv_id, string_split(trim(regexp_replace(
+                   lower(mtext), '\\s+', ' ', 'g')), ' ') AS words
+          FROM masked
+        ),
+        sh AS (
+          SELECT conv_id,
+                 list_distinct(CASE WHEN len(words) >= 2
+                   THEN list_transform(range(1, len(words)),
+                        i -> words[i] || ' ' || words[i+1])
+                   ELSE [array_to_string(words, ' ')] END) AS grams
+          FROM base
+        ),
+        sim AS (
+          SELECT conv_id,
+                 CAST(list_sum(list_transform(range(0, 60), b ->
+                   CASE WHEN list_sum(list_transform(grams, w ->
+                          CASE WHEN (CAST(('0x' || substr(
+                                 md5('0:' || w), 1, 15)) AS BIGINT)
+                                 >> b) & 1 = 1
+                               THEN 1 ELSE -1 END)) > 0
+                        THEN (CAST(1 AS BIGINT) << b) ELSE 0 END))
+                   AS BIGINT) AS simh
+          FROM sh
+        ),
+        banded AS (
+          SELECT conv_id, simh, t.t AS band,
+                 (simh >> (t.t * 16)) & 65535 AS bhash
+          FROM sim, (SELECT unnest(range(4)) AS t) t
+        ),
+        prs AS (
+          SELECT DISTINCT a.conv_id AS id_a, b.conv_id AS id_b
+          FROM banded a JOIN banded b
+            ON a.band = b.band AND a.bhash = b.bhash
+               AND a.conv_id < b.conv_id
+          WHERE bit_count(xor(a.simh, b.simh)) <= 8
+        ),
+        edges AS (
+          SELECT id_a AS s, id_b AS d FROM prs
+          UNION SELECT id_b, id_a FROM prs
+        ),
+        reach(n, m) AS (
+          SELECT s, s FROM edges
+          UNION
+          SELECT e.s, r.m FROM edges e JOIN reach r ON e.d = r.n
+        ),
+        clus AS (SELECT n AS conv_id, min(m) AS cluster_id
+                 FROM reach GROUP BY n),
+        lab AS (
+          SELECT k.conv_id,
+                 COALESCE(c.cluster_id, k.conv_id) AS cluster_id,
+                 k.mask_chars AS q
+          FROM masked k LEFT JOIN clus c ON k.conv_id = c.conv_id
+        )
+        SELECT conv_id,
+               CAST(cluster_id AS BIGINT) AS cluster_id,
+               CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+                 AS cluster_size,
+               CAST(CASE WHEN row_number() OVER (
+                      PARTITION BY cluster_id
+                      ORDER BY q DESC, conv_id ASC) = 1
+                    THEN 1 ELSE 0 END AS BIGINT) AS is_kept
+        FROM lab
+        """,
+         {"conv_id": "num", "cluster_id": "num", "cluster_size": "num",
+          "is_kept": "num"}),
+        # r13: preference pairs — same doc_id-arithmetic responses
+        # (verbatim reuse at %5==3 & %3==0, score = 13·doc_id mod 7),
+        # both modes replayed via datapipe/rlhf.py's SQL mirror
+        ("pref",
+         "SELECT prompt_id, chosen_id, rejected_id, score_margin, "
+         "'bvw' AS pmode FROM ("
+         + _pref_sql(_PREF_RESPONSES_SQL) + ") UNION ALL "
+         "SELECT prompt_id, chosen_id, rejected_id, score_margin, "
+         "'all' AS pmode FROM ("
+         + _pref_sql(_PREF_RESPONSES_SQL, margin=3, mode="all_pairs")
+         + ") UNION ALL "
+         "SELECT prompt_id, chosen_id, rejected_id, score_margin, "
+         "'cap' AS pmode FROM ("
+         + _pref_sql(_PREF_RESPONSES_SQL, margin=1, mode="all_pairs",
+                     max_responses_per_prompt=4, max_pairs_per_prompt=3)
+         + ")",
+         {"prompt_id": "num", "chosen_id": "num", "rejected_id": "num",
+          "score_margin": "num", "pmode": "str"}),
+    ])
     o["iglu_validation"] = _union_oracle([
         ("basic", o.pop("iglu_validation"),
          {"src_event_id": "num", "is_bad": "num"}),
@@ -3433,6 +8065,29 @@ def oracle_sql() -> dict[str, str]:
          {"src_event_id": "num", "is_bad": "num", "has_vinfo": "num",
           "ue_schema": "str"}),
     ])
+    _kanon_audit_sql = """
+        SELECT c_mktsegment AS segment,
+               CAST(floor(c_acctbal / 1000) * 1000 AS BIGINT) AS bal_band,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(count(DISTINCT c_nationkey) AS BIGINT) AS l_div,
+               CAST(CASE WHEN count(*) < 20 THEN 1 ELSE 0 END AS BIGINT)
+                 AS at_risk,
+               CAST(CASE WHEN count(DISTINCT c_nationkey) = 1 THEN 1
+                    ELSE 0 END AS BIGINT) AS homogeneous
+        FROM customer GROUP BY 1, 2
+    """
+    _kanon_report_sql = f"""
+        SELECT CAST(count(*) AS BIGINT) AS n_classes,
+               CAST(sum(at_risk) AS BIGINT) AS at_risk_classes,
+               CAST(sum(CASE WHEN at_risk = 1 THEN n ELSE 0 END) AS BIGINT)
+                 AS at_risk_rows,
+               CAST(sum(n) AS BIGINT) AS total_rows,
+               CAST(sum(CASE WHEN at_risk = 1 THEN n ELSE 0 END) * 10000
+                    // sum(n) AS BIGINT) AS risk_bp,
+               CAST(min(n) AS BIGINT) AS min_class_size,
+               CAST(sum(homogeneous) AS BIGINT) AS homogeneous_classes
+        FROM ({_kanon_audit_sql})
+    """
     o["pii_pseudonymize"] = _union_oracle([
         ("scalar", o.pop("pii_pseudonymize"),
          {"src_event_id": "num", "uid_hash": "str", "ip_hash": "str",
@@ -3445,13 +8100,135 @@ def oracle_sql() -> dict[str, str]:
          {"parent_event_id": "str", "event": "str", "event_name": "str",
           "platform": "str", "app_id": "str", "pii_schema": "str",
           "field_name": "str", "orig_value": "str"}),
+        ("kanon", _kanon_audit_sql,
+         {"segment": "str", "bal_band": "num", "n": "num", "l_div": "num",
+          "at_risk": "num", "homogeneous": "num"}),
+        ("kanon_rpt", _kanon_report_sql,
+         {"n_classes": "num", "at_risk_classes": "num",
+          "at_risk_rows": "num", "total_rows": "num", "risk_bp": "num",
+          "min_class_size": "num", "homogeneous_classes": "num"}),
     ])
+    # incremental dedup: same md5-minhash sigs; NEW batch (doc_id%4=0)
+    # vs corpus index (the rest); any-band collision + signature
+    # agreement >= ceil(0.5*8)=4; distinct pairs; integer bp estimate
+    _incr_agree = " + ".join(
+        f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(8))
+    _incr_sql = f"""
+        WITH base AS (
+          SELECT d.doc_id,
+                 string_split(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')), ' ') AS words
+          FROM documents d
+        ),
+        sh AS (
+          SELECT doc_id,
+                 list_distinct(CASE WHEN len(words) >= 2
+                   THEN list_transform(range(1, len(words)), i -> words[i] || ' ' || words[i+1])
+                   ELSE [array_to_string(words, ' ')] END) AS grams
+          FROM base
+        ),
+        sigs AS (SELECT doc_id, {sig_cols} FROM sh)
+        SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
+               CAST(({_incr_agree}) * 10000 // 8 AS BIGINT) AS est_jaccard_bp
+        FROM sigs a JOIN sigs b
+          ON a.doc_id % 4 = 0 AND b.doc_id % 4 != 0
+         AND ((a.h0 = b.h0 AND a.h1 = b.h1) OR (a.h2 = b.h2 AND a.h3 = b.h3)
+           OR (a.h4 = b.h4 AND a.h5 = b.h5) OR (a.h6 = b.h6 AND a.h7 = b.h7))
+        WHERE ({_incr_agree}) >= 4
+    """
     o["dedup_minhash_lsh"] = _union_oracle([
         ("sig", o.pop("dedup_minhash_signature"),
          {"doc_id": "num", "mh0": "num", "mh1": "num", "mh2": "num",
           "mh3": "num"}),
         ("lsh", o.pop("dedup_minhash_lsh"),
          {"id_a": "num", "id_b": "num", "jaccard": "fnum"}),
+        ("incr", _incr_sql,
+         {"new_id": "num", "corpus_id": "num", "est_jaccard_bp": "num"}),
+    ])
+
+    # ngram jaccard: blocked pairs + exact prefix-filter pairs (oracle =
+    # brute force, completeness is the guarantee under test) + connected
+    # components over the blocked pairs via a recursive-CTE closure
+    blocked_sql = o.pop("dedup_ngram_jaccard")
+    prefix_sql = f"""
+        WITH base AS (
+          SELECT d.doc_id,
+                 string_split(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')), ' ') AS words
+          FROM documents d
+        ),
+        sh AS (SELECT doc_id, {shingle3} AS grams FROM base)
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+                     / len(list_distinct(list_concat(a.grams, b.grams))), 4) AS jaccard
+        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+        WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+              / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.15
+    """
+    clusters_sql = f"""
+        WITH RECURSIVE prs AS (SELECT id_a, id_b FROM ({blocked_sql})),
+        edges AS (
+          SELECT id_a AS s, id_b AS d FROM prs
+          UNION SELECT id_b, id_a FROM prs
+        ),
+        reach(n, m) AS (
+          SELECT s, s FROM edges
+          UNION
+          SELECT e.s, r.m FROM edges e JOIN reach r ON e.d = r.n
+        )
+        SELECT n AS doc_id, min(m) AS cluster_id,
+               CAST(n = min(m) AS BIGINT) AS is_keeper
+        FROM reach GROUP BY n
+    """
+    policy_sql = f"""
+        WITH RECURSIVE prs AS (SELECT id_a, id_b FROM ({blocked_sql})),
+        edges AS (
+          SELECT id_a AS s, id_b AS d FROM prs
+          UNION SELECT id_b, id_a FROM prs
+        ),
+        reach(n, m) AS (
+          SELECT s, s FROM edges
+          UNION
+          SELECT e.s, r.m FROM edges e JOIN reach r ON e.d = r.n
+        ),
+        clus AS (SELECT n AS doc_id, min(m) AS cluster_id FROM reach GROUP BY n),
+        lab AS (
+          SELECT d.doc_id,
+                 COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
+                 COALESCE(d.n_chars, 0) AS q
+          FROM documents d LEFT JOIN clus c ON d.doc_id = c.doc_id
+        )
+        SELECT doc_id,
+               CAST(cluster_id AS BIGINT) AS cluster_id,
+               CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+                 AS cluster_size,
+               CAST(CASE WHEN row_number() OVER (
+                      PARTITION BY cluster_id ORDER BY q DESC, doc_id ASC) = 1
+                    THEN 1 ELSE 0 END AS BIGINT) AS is_kept
+        FROM lab
+    """
+    from enrich_spark.datapipe.dedup import (
+        containment_pairs_sql as _contain_sql,
+    )
+
+    o["dedup_ngram_jaccard"] = _union_oracle([
+        ("blocked", blocked_sql,
+         {"id_a": "num", "id_b": "num", "jaccard": "fnum"}),
+        ("prefix", prefix_sql,
+         {"id_a": "num", "id_b": "num", "jaccard": "fnum"}),
+        ("clusters", clusters_sql,
+         {"doc_id": "num", "cluster_id": "num", "is_keeper": "num"}),
+        ("policy", policy_sql,
+         {"doc_id": "num", "cluster_id": "num", "cluster_size": "num",
+          "is_kept": "num"}),
+        ("contain", _contain_sql("documents", shingle_k=3,
+                                 threshold_bp=5000),
+         {"id_a": "num", "id_b": "num", "contain_a_bp": "num",
+          "contain_b_bp": "num", "jaccard_bp": "num"}),
+        # r12: the prefix-filtered scale path is COMPLETE, so its
+        # oracle is the brute all-pairs containment (no block clause)
+        ("containp", _contain_sql("documents", shingle_k=3,
+                                  threshold_bp=5000, blocked=False),
+         {"id_a": "num", "id_b": "num", "contain_a_bp": "num",
+          "contain_b_bp": "num", "jaccard_bp": "num"}),
     ])
 
     return o

@@ -1,17 +1,21 @@
-"""Corpus-curation operators of the curate pipeline: text PII
-scrubbing and the C4 line/document heuristics.
+"""Corpus-curation operators for a large-scale training-data pipeline:
+text PII scrubbing, deterministic stratified sampling, and fixed-budget
+sequence packing.
 
 Beyond-reference: the reference enriches events (its PII pseudonymizer
 mutates event fields, registry/pii/*.scala); these operators curate a
-DOCUMENT corpus before pretraining. Both are pure Catalyst plans —
-native regexp/window expressions, zero Python in the data path — so
-they inherit whole-stage codegen and scale with executors.
+DOCUMENT corpus before pretraining. All three are pure Catalyst plans —
+native regexp/hash/window expressions, zero Python in the data path —
+so they inherit whole-stage codegen and scale with executors.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+__all__ = ["scrub_text_pii", "scrub_financial_pii", "stratified_sample",
+           "domain_mix_weights", "pack_sequences", "score_linear_model"]
 
 
 # ---------------------------------------------------------------------------
@@ -72,6 +76,721 @@ def scrub_text_pii(
         F.coalesce(n_ip6, F.lit(0)).alias("n_ipv6"),
         F.coalesce(n_phone, F.lit(0)).cast("int").alias("n_phones"),
     )
+
+
+# ---------------------------------------------------------------------------
+# deterministic stratified sampling
+
+
+def stratified_sample(
+    docs: DataFrame,
+    fractions: dict[str, float],
+    stratum_col: str = "source",
+    id_col: str = "doc_id",
+    seed: int = 42,
+    default_fraction: float = 0.0,
+    bucket: Column | None = None,
+) -> DataFrame:
+    """Per-stratum sampling by DETERMINISTIC hash, not RNG: a doc is
+    kept iff ``xxhash64(id, seed) mod 1e6 < fraction·1e6``. Unlike
+    ``df.sample``, the decision is a pure function of (id, seed) — the
+    same docs survive on any cluster size, any partitioning, any retry,
+    which is what a reproducible training-data mix requires (and what
+    makes an exact SQL oracle possible).
+
+    Scale shape: one map-side filter, no shuffle, no state. Strata not
+    in ``fractions`` fall back to ``default_fraction`` (0 = drop).
+    ``bucket`` overrides the hash with any Column in [0, 1e6) — e.g. an
+    md5-derived bucket when an external system must replay the exact
+    sample in SQL (xxhash64 stays the scale default).
+    """
+    if bucket is None:
+        bucket = F.pmod(
+            F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)),
+            F.lit(1_000_000))
+    frac = None
+    for name, f in sorted(fractions.items()):
+        cond = F.col(stratum_col) == name
+        thr = F.lit(int(round(f * 1_000_000)))
+        frac = F.when(cond, thr) if frac is None else frac.when(cond, thr)
+    frac = (frac.otherwise(F.lit(int(round(default_fraction * 1_000_000))))
+            if frac is not None
+            else F.lit(int(round(default_fraction * 1_000_000))))
+    return docs.where(bucket < frac)
+
+
+# ---------------------------------------------------------------------------
+# score-quantile binning — curriculum / mixing buckets
+
+
+def quantile_bins(
+    docs: DataFrame,
+    score_col: str,
+    k: int = 10,
+    max_distinct: int = 1_000_000,
+) -> DataFrame:
+    """Assign every doc an integer quantile bin 1..k by ``score_col`` —
+    the bucketing behind curriculum ordering and quality-tier mixing
+    ("train on the top decile first", "sample tier 1 at 3×").
+
+    NOT ntile: a global ntile needs an unpartitioned global-order
+    window (the single-reducer sort the plan-contract lockout forbids).
+    Instead the bin is a pure function of the score VALUE: one groupBy
+    on the score (shuffle bounded by distinct scores), the ≤
+    ``max_distinct`` (score, count) rows come to the driver, cumulative
+    counts give each score's bin as ``1 + (cum_incl − 1)·k div n`` —
+    integer arithmetic, engine-exact — and the assignment re-enters the
+    plan as a broadcast join. Ties share a bin by construction (equal
+    scores are indistinguishable), so bins are only approximately equal
+    -sized under heavy ties — the correct semantics for binning, and
+    the property that makes the result independent of row order.
+
+    Intended for integer/fixed-point scores (quality bp, token counts);
+    raises if the score cardinality exceeds ``max_distinct`` rather
+    than silently shipping an unbounded table to the driver.
+    """
+    # .limit(max_distinct + 1) bounds the driver fetch BEFORE
+    # materializing: a high-cardinality score column hits the ValueError,
+    # never an unbounded driver collect.
+    cnts = (docs.groupBy(F.col(score_col).alias("_s"))
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .limit(max_distinct + 1)
+            .collect())
+    if len(cnts) > max_distinct:
+        raise ValueError(
+            f"quantile_bins: more than max_distinct={max_distinct} "
+            "distinct scores; quantize the score first "
+            "(e.g. integer basis points)")
+    cnts.sort(key=lambda r: (r._s is None, r._s))
+    n = sum(r._c for r in cnts) or 1
+    cum = 0
+    rows = []
+    for r in cnts:
+        cum += r._c
+        rows.append((r._s, 1 + (cum - 1) * k // n))
+    spark = docs.sparkSession
+    bins = spark.createDataFrame(
+        rows, schema=f"_s {docs.schema[score_col].dataType.simpleString()},"
+                     " bin int")
+    return (docs.join(
+        F.broadcast(bins), docs[score_col].eqNullSafe(bins["_s"]), "left")
+        .drop("_s"))
+
+
+def quantile_bins_grouped(
+    docs: DataFrame,
+    score_col: str,
+    group_col: str,
+    k: int = 10,
+    max_distinct: int = 1_000_000,
+) -> DataFrame:
+    """Per-GROUP quantile bins — "top decile within each source", the
+    group-aware curriculum/mixing variant of :func:`quantile_bins`
+    (a global bin is wrong when domains have different score scales:
+    one domain's median may be another's top percentile).
+
+    Same construction, keyed by (group, score): one groupBy bounded by
+    Σ_g distinct-scores(g) ≤ ``max_distinct`` (LIMIT-guarded before the
+    driver fetch), cumulative counts walked per group, assignment
+    re-enters as a broadcast join on (group, score). All-integer bin
+    arithmetic; ties share a bin within their group by construction.
+    """
+    cnts = (docs.groupBy(F.col(group_col).alias("_g"),
+                         F.col(score_col).alias("_s"))
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .limit(max_distinct + 1)
+            .collect())
+    if len(cnts) > max_distinct:
+        raise ValueError(
+            f"quantile_bins_grouped: more than max_distinct="
+            f"{max_distinct} (group, score) combinations; quantize the "
+            "score first (e.g. integer basis points)")
+    by_group: dict = {}
+    for r in cnts:
+        by_group.setdefault(r._g, []).append(r)
+    rows = []
+    for g, grp in by_group.items():
+        grp.sort(key=lambda r: (r._s is None, r._s))
+        n = sum(r._c for r in grp) or 1
+        cum = 0
+        for r in grp:
+            cum += r._c
+            rows.append((g, r._s, 1 + (cum - 1) * k // n))
+    spark = docs.sparkSession
+    bins = spark.createDataFrame(
+        rows,
+        schema=f"_g {docs.schema[group_col].dataType.simpleString()},"
+               f" _s {docs.schema[score_col].dataType.simpleString()},"
+               " bin int")
+    return (docs.join(
+        F.broadcast(bins),
+        docs[group_col].eqNullSafe(bins["_g"])
+        & docs[score_col].eqNullSafe(bins["_s"]), "left")
+        .drop("_g", "_s"))
+
+
+def quantile_bins_grouped_sql(
+    from_sql: str,
+    score_expr: str,
+    group_expr: str,
+    k: int = 10,
+) -> str:
+    """DuckDB mirror of :func:`quantile_bins_grouped` (the oracle may
+    use a per-group window; the Spark side must not)."""
+    return f"""
+        WITH src AS (SELECT *, {score_expr} AS _s, {group_expr} AS _g
+                     FROM {from_sql}),
+        c AS (SELECT _g, _s, count(*) AS _c FROM src GROUP BY _g, _s),
+        b AS (
+          SELECT _g, _s,
+                 CAST(1 + (sum(_c) OVER (PARTITION BY _g
+                           ORDER BY _s NULLS LAST) - 1)
+                      * {k} // greatest(sum(_c) OVER (PARTITION BY _g), 1)
+                   AS INT) AS bin
+          FROM c
+        )
+        SELECT src.* EXCLUDE (_s, _g), b.bin AS bin
+        FROM src LEFT JOIN b ON src._s IS NOT DISTINCT FROM b._s
+                            AND src._g IS NOT DISTINCT FROM b._g
+    """
+
+
+def quantile_bins_sql(
+    from_sql: str,
+    score_expr: str,
+    k: int = 10,
+) -> str:
+    """DuckDB mirror of :func:`quantile_bins` — the same value-keyed
+    cumulative-count bin (the oracle may use a window freely; the Spark
+    side must not)."""
+    return f"""
+        WITH src AS (SELECT *, {score_expr} AS _s FROM {from_sql}),
+        c AS (SELECT _s, count(*) AS _c FROM src GROUP BY _s),
+        b AS (
+          SELECT _s,
+                 CAST(1 + (sum(_c) OVER (ORDER BY _s NULLS LAST) - 1)
+                      * {k} // greatest((SELECT sum(_c) FROM c), 1)
+                   AS INT) AS bin
+          FROM c
+        )
+        SELECT src.* EXCLUDE (_s), b.bin AS bin
+        FROM src LEFT JOIN b ON src._s IS NOT DISTINCT FROM b._s
+    """
+
+
+# ---------------------------------------------------------------------------
+# token-budget selection — "take the best N tokens"
+
+
+def _budget_key(score_col: str, id_col: str, seed: int):
+    """Total selection order as ONE hex string key: score DESC (hex of
+    2^31-1−score, so bigger scores sort first), then md5(seed:id) (a
+    deterministic shuffle among equal scores), then the id itself (16
+    hex digits) — keys are UNIQUE per row, so the budget cutoff is a
+    single point in the key domain with no tie handling."""
+    inv = (F.lit((1 << 31) - 1)
+           - F.col(score_col).cast("long")).cast("long")
+    return F.concat(
+        F.lpad(F.lower(F.conv(inv.cast("string"), 10, 16)), 8, "0"),
+        F.md5(F.concat(F.lit(f"{seed}:"),
+                       F.col(id_col).cast("string"))),
+        F.lpad(F.lower(F.conv(F.col(id_col).cast("string"), 10, 16)),
+               16, "0"),
+    )
+
+
+def select_token_budget(
+    docs: DataFrame,
+    budget_tokens: int,
+    score_col: str,
+    token_col: str = "n_tokens",
+    id_col: str = "doc_id",
+    seed: int = 42,
+    cell_cap: int = 65536,
+) -> DataFrame:
+    """Select the highest-priority documents whose token counts fit a
+    budget — the "pick the best 1B tokens" primitive of data-constrained
+    training recipes. A doc is selected iff its INCLUSIVE cumulative
+    token count, walking docs in selection order, is ≤ ``budget_tokens``
+    (equal scores are tie-broken by a seeded hash, then id, so the
+    selection is a pure function of (corpus, seed)).
+
+    The naive plan — global sort + running sum — is the single-reducer
+    pattern this repo forbids. Instead the cutoff KEY is found by
+    ITERATIVE RADIX REFINEMENT: each round groups the current key-prefix
+    range by its next two hex digits (≤256 groups, one map-side-combined
+    aggregate), the driver walks the ≤256 (bucket, token-sum) rows to
+    find the straddling bucket, and recurses into it; when the
+    straddling cell holds ≤ ``cell_cap`` rows its (key, tokens) pairs
+    come to the driver for the exact cutoff. md5 keys make cells shrink
+    ~256× per round, so rounds = O(log₂₅₆ n) full-scan aggregates (each
+    a narrowing map-side filter — NO shuffle of the data itself), and
+    driver state never exceeds max(256, cell_cap) rows. The final
+    selection is one map-side ``key ≤ cutoff`` filter.
+
+    Scores must be non-negative integers < 2^31 (quantize first — the
+    repo-wide integer-score rule) and token counts non-null (a NULL
+    would vanish from the budget sums yet pass the key filter —
+    ``coalesce`` upstream). Output: the selected docs' columns plus
+    ``sel_key`` (the selection-order commitment).
+    """
+    keyed = docs.withColumn(
+        "sel_key", _budget_key(score_col, id_col, seed))
+    tok = F.col(token_col).cast("long")
+
+    # Cache `keyed` for the whole search: the validation pass below
+    # doubles as the cache fill, so the O(log₂₅₆ n) radix rounds (and
+    # the straddling-cell fetch) read the cache instead of re-scanning
+    # the source once per round. Unpersisted before returning — the
+    # final filter recomputes from source exactly once at the caller's
+    # action, as before (total source scans: 1 search + 1 action).
+    keyed.persist()
+    try:
+        return _budget_search(keyed, tok, budget_tokens, score_col,
+                              id_col, token_col, cell_cap)
+    finally:
+        keyed.unpersist()
+
+
+def _budget_search(keyed, tok, budget_tokens, score_col, id_col,
+                   token_col, cell_cap):
+    # One initial pass computes the total AND validates the documented
+    # preconditions (score ∈ [0, 2^31), no NULL score/id/token) — a NULL
+    # or out-of-range score would otherwise mis-sort silently (conv()
+    # overflows 8 hex digits at 2^31; NULL keys vanish from filters).
+    total = keyed.agg(
+        F.sum(tok).alias("t"), F.count(F.lit(1)).alias("n"),
+        F.min(F.col(score_col).cast("long")).alias("smin"),
+        F.max(F.col(score_col).cast("long")).alias("smax"),
+        F.sum(F.when(F.col(score_col).isNull()
+                     | F.col(id_col).isNull()
+                     | F.col(token_col).isNull(), 1)
+              .otherwise(0)).alias("nbad")).collect()[0]
+    if (total.nbad or 0) > 0:
+        raise ValueError(
+            f"select_token_budget: {total.nbad} rows have NULL "
+            f"{score_col}/{id_col}/{token_col}; coalesce or filter "
+            "upstream — NULLs would be silently mis-selected")
+    if total.n and (total.smin < 0 or total.smax >= (1 << 31)):
+        raise ValueError(
+            f"select_token_budget: scores must be integers in "
+            f"[0, 2^31), got range [{total.smin}, {total.smax}]; "
+            "quantize the score first")
+    if total.n == 0 or (total.t or 0) <= budget_tokens:
+        return keyed  # everything fits
+
+    prefix = ""
+    remaining = budget_tokens
+    cutoff = None
+    while cutoff is None:
+        depth = len(prefix)
+        cand = keyed.where(F.col("sel_key").startswith(prefix)) \
+            if prefix else keyed
+        cells = (cand.groupBy(
+            F.substring("sel_key", depth + 1, 2).alias("_cell"))
+            .agg(F.sum(tok).alias("_t"), F.count(F.lit(1)).alias("_n"))
+            .collect())
+        cells.sort(key=lambda r: r._cell)
+        for c in cells:
+            if c._t <= remaining:
+                remaining -= c._t
+                continue
+            # straddling cell
+            if c._n <= cell_cap:
+                rows = (keyed.where(
+                    F.col("sel_key").startswith(prefix + c._cell))
+                    .select("sel_key", tok.alias("_tok")).collect())
+                rows.sort(key=lambda r: r.sel_key)
+                cutoff = prefix  # sentinel: nothing more fits
+                for r in rows:
+                    if r._tok > remaining:
+                        break
+                    remaining -= r._tok
+                    cutoff = r.sel_key
+            else:
+                prefix = prefix + c._cell
+            break
+        else:
+            # defensive: every cell fit (unreachable — we only
+            # descend into a cell whose token sum exceeds the
+            # remaining budget). 'z' sorts after every hex digit,
+            # closing the whole range.
+            cutoff = prefix + "zz"
+    if cutoff == prefix:
+        # nothing inside the straddling cell fit: everything strictly
+        # below the cell boundary is selected
+        return keyed.where(F.col("sel_key") < prefix + c._cell)
+    return keyed.where(F.col("sel_key") <= cutoff)
+
+
+def select_token_budget_sql(
+    from_sql: str,
+    budget_tokens: int,
+    score_expr: str,
+    token_expr: str,
+    id_expr: str = "doc_id",
+    seed: int = 42,
+) -> str:
+    """DuckDB mirror of :func:`select_token_budget` — the oracle may use
+    the global cumulative window the Spark side must avoid."""
+    inv = f"({(1 << 31) - 1} - CAST({score_expr} AS BIGINT))"
+    key = (f"lpad(format('{{:x}}', {inv}), 8, '0') || "
+           f"md5('{seed}:' || {id_expr}) || "
+           f"lpad(format('{{:x}}', CAST({id_expr} AS BIGINT)), 16, '0')")
+    return f"""
+        WITH k AS (
+          SELECT *, {key} AS sel_key,
+                 CAST({token_expr} AS BIGINT) AS _tok
+          FROM {from_sql}
+        ),
+        c AS (
+          SELECT *, sum(_tok) OVER (ORDER BY sel_key
+                 ROWS UNBOUNDED PRECEDING) AS _cum
+          FROM k
+        )
+        SELECT * EXCLUDE (_tok, _cum) FROM c
+        WHERE _cum <= {budget_tokens}
+    """
+
+
+# ---------------------------------------------------------------------------
+# sequence packing
+
+
+def pack_sequences(
+    docs: DataFrame,
+    budget_tokens: int,
+    token_col: Column | str | None = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    group_col: str | None = "source",
+) -> DataFrame:
+    """Assign docs to fixed-token-budget training sequences ("packing"):
+    within each group (ordered by id for determinism), running token
+    sums place each doc in bin ``floor(cumsum_before / budget)``.
+
+    This is the shuffle-free analogue of greedy first-fit: bins can
+    overflow by at most one document (the straddler stays in the bin
+    where its prefix began — the downstream loader truncates or spills
+    it), in exchange for a plan that is ONE window function over the
+    group partition instead of a sequential packer. Oversized docs
+    (> budget on their own) land in a bin alone.
+
+    Output: doc_id, group, n_tokens, seq_id (globally unique string
+    ``group#bin``), seq_pos (0-based position inside the sequence).
+
+    Scale shape: one shuffle on the group key; within-group window sums
+    are O(n log n) sort + linear scan. Groups are corpus sources —
+    hundreds, not billions — so the window partitions stay coarse; for
+    a single-source corpus pass ``group_col=None`` sparingly (one
+    partition = one task; salt the corpus into synthetic groups
+    instead).
+    """
+    if token_col is None:
+        tokens = F.size(F.split(F.trim(F.regexp_replace(
+            F.col(text_col), r"\s+", " ")), " "))
+    else:
+        tokens = F.col(token_col) if isinstance(token_col, str) else token_col
+    grp = (F.col(group_col) if group_col is not None
+           else F.lit("all")).alias("group")
+    base = docs.select(
+        F.col(id_col), grp, tokens.cast("long").alias("n_tokens"))
+    w = Window.partitionBy("group").orderBy(id_col)
+    cum_before = F.coalesce(
+        F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.lit(0),
+    )
+    bin_id = F.floor(cum_before / F.lit(budget_tokens))
+    out = base.select(
+        id_col, "group", "n_tokens",
+        F.concat_ws("#", F.col("group"), bin_id.cast("string")).alias("seq_id"),
+    )
+    wp = Window.partitionBy("seq_id").orderBy(id_col)
+    return out.withColumn(
+        "seq_pos", (F.row_number().over(wp) - 1).cast("long"))
+
+
+# ---------------------------------------------------------------------------
+# linear quality-classifier scoring
+
+
+def score_linear_model(
+    docs: DataFrame,
+    weights,
+    bias: float = 0.0,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    normalize: bool = True,
+) -> DataFrame:
+    """Score each doc with a linear bag-of-words model (the
+    fasttext-style quality classifier used to filter pretraining
+    corpora): ``sigmoid(bias + sum(weight[token]) / n_tokens)``.
+
+    ``weights`` is either a dict {token: weight} — compiled into ONE
+    map-literal expression, so scoring is a zero-shuffle projection
+    (right for curated lexicons up to a few thousand terms) — or a
+    DataFrame (token STRING, weight DOUBLE) for big vocabularies:
+    explode → broadcast hash join → per-doc sum (one shuffle on the id).
+
+    Output: doc_id, n_tokens, n_hits (tokens found in the vocabulary),
+    score in (0,1). ``normalize`` divides the logit by n_tokens (mean
+    pooling, fasttext default); off = raw sum.
+    """
+    words = F.split(F.trim(F.regexp_replace(
+        F.lower(F.col(text_col)), r"\s+", " ")), " ")
+    n_tok = F.size(words)
+
+    if isinstance(weights, dict):
+        pairs = []
+        for k in sorted(weights):
+            pairs.extend([F.lit(k), F.lit(float(weights[k]))])
+        wmap = F.create_map(*pairs) if pairs else F.create_map()
+        per_tok = F.transform(words, lambda w: wmap.getItem(w))
+        z = F.aggregate(
+            per_tok, F.lit(0.0),
+            lambda acc, x: acc + F.coalesce(x, F.lit(0.0)))
+        hits = F.size(F.filter(per_tok, lambda x: x.isNotNull()))
+        logit = F.lit(float(bias)) + (
+            z / F.greatest(n_tok, F.lit(1)) if normalize else z)
+        return docs.select(
+            F.col(id_col),
+            n_tok.alias("n_tokens"),
+            hits.alias("n_hits"),
+            (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("score"),
+        )
+
+    from ..plans.stagecut import stage_boundary
+
+    # boundary: n_tokens and the token Generate both consume the word
+    # array — materialize the split once (SCALE.md §7e)
+    pre = stage_boundary(docs.select(F.col(id_col), words.alias("_ws")))
+    base = pre.select(F.col(id_col), F.size("_ws").alias("n_tokens"),
+                      F.explode_outer("_ws").alias("_w"))
+    joined = base.join(
+        F.broadcast(weights.select(F.col("token").alias("_w"),
+                                   F.col("weight").alias("_wt"))),
+        "_w", "left")
+    agg = joined.groupBy(id_col).agg(
+        F.max("n_tokens").alias("n_tokens"),
+        F.count("_wt").alias("n_hits"),
+        F.coalesce(F.sum("_wt"), F.lit(0.0)).alias("_z"),
+    )
+    logit = F.lit(float(bias)) + (
+        F.col("_z") / F.greatest(F.col("n_tokens"), F.lit(1))
+        if normalize else F.col("_z"))
+    return agg.select(
+        id_col, "n_tokens", "n_hits",
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("score"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# financial PII — credit cards (Luhn-validated) and SSNs
+
+# 13-19 digits with optional single space/dash separators between them.
+# Luhn validation below cuts the false positives a bare digit-run regex
+# would flag (timestamps, ids); RE2-safe (no lookarounds) so the exact
+# candidate set replays in SQL engines.
+_CC_CAND = r"\b\d(?:[ -]?\d){12,18}\b"
+_SSN = r"\b\d{3}-\d{2}-\d{4}\b"
+
+
+def _digit(s: Column, i: Column) -> Column:
+    return F.ascii(F.substr(s, i, F.lit(1))) - 48
+
+
+def _luhn_valid(digits: Column) -> Column:
+    """Luhn checksum over a digit string, as ONE native fold: from the
+    rightmost digit, double every second digit (−9 when > 9), total
+    ≡ 0 (mod 10). Zero Python — the whole check inlines into the
+    filter lambda and stays in codegen."""
+    r = F.reverse(digits)
+    total = F.aggregate(
+        F.sequence(F.lit(1), F.length(digits)),
+        F.lit(0).cast("long"),
+        lambda acc, i: acc + F.when(
+            i % 2 == 1, _digit(r, i)
+        ).otherwise(
+            F.when(_digit(r, i) * 2 > 9, _digit(r, i) * 2 - 9)
+            .otherwise(_digit(r, i) * 2)
+        ),
+    )
+    return (F.length(digits).between(13, 19)) & (total % 10 == 0)
+
+
+def scrub_financial_pii(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    cc_token: str = "<CC>",
+    ssn_token: str = "<SSN>",
+) -> DataFrame:
+    """Redact Luhn-valid credit-card numbers and SSN-shaped ids.
+
+    Cards: extract digit-run candidates (13-19 digits, optional single
+    space/dash separators), keep only those whose digits pass the Luhn
+    checksum, then literal-replace each surviving candidate — so
+    ``4111 1111 1111 1111`` is scrubbed while a 16-digit order id that
+    fails the checksum is left alone. The candidate extraction, the
+    checksum fold, and the replacement fold are all native Catalyst
+    expressions: one map-side projection, no shuffle, no Python.
+
+    Output: doc_id, scrubbed_text, n_ccs (Luhn-valid cards), n_cc_cands
+    (candidates seen), n_ssns.
+    """
+    t = F.col(text_col)
+    cands = F.regexp_extract_all(t, F.lit(_CC_CAND), 0)
+    valid = F.filter(
+        cands, lambda c: _luhn_valid(F.regexp_replace(c, "[^0-9]", "")))
+    scrubbed = F.aggregate(
+        valid, t, lambda acc, c: F.replace(acc, c, F.lit(cc_token)))
+    n_ssn = F.size(F.regexp_extract_all(scrubbed, F.lit(_SSN), 0))
+    scrubbed = F.regexp_replace(scrubbed, _SSN, ssn_token)
+    return docs.select(
+        F.col(id_col),
+        scrubbed.alias("scrubbed_text"),
+        F.size(valid).cast("long").alias("n_ccs"),
+        F.size(cands).cast("long").alias("n_cc_cands"),
+        n_ssn.cast("long").alias("n_ssns"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# temperature-smoothed domain mixing
+
+
+def domain_mix_weights(
+    docs: DataFrame,
+    stratum_col: str = "source",
+    id_col: str = "doc_id",
+    budget_docs: int | None = None,
+) -> DataFrame:
+    """Inverse-sqrt temperature smoothing of domain sampling weights
+    (the α=0.5 multilingual-sampling standard: small domains are
+    up-weighted relative to their share, large ones damped).
+
+    All-integer discipline: isqrt_n = floor(sqrt(n)) is exact for any
+    corpus size below 2^52 docs, and weights are basis points via
+    integer floor division — so the mix replays bit-identically on any
+    engine (the dedup_exact lesson: no float column ever reaches a
+    comparator). With ``budget_docs``, adds ``epochs_mbp`` — how many
+    milli-epochs of each domain the budget consumes at its weight
+    (> 1000 means the domain repeats).
+
+    Scale shape: one groupBy over the corpus (partial-agg, one
+    shuffle) down to a per-domain table of hundreds of rows; the
+    scalar Σ isqrt is a window over that tiny frame, not the corpus.
+    """
+    stats = docs.groupBy(F.col(stratum_col).alias("source")).agg(
+        F.count(F.lit(1)).alias("n_docs"))
+    isqrt = F.floor(F.sqrt(F.col("n_docs").cast("double"))).cast("long")
+    stats = stats.select("source", "n_docs", isqrt.alias("isqrt_n"))
+    total = F.sum("isqrt_n").over(Window.partitionBy())
+    out = stats.select(
+        "source",
+        F.col("n_docs").cast("long").alias("n_docs"),
+        "isqrt_n",
+        F.expr("isqrt_n * 10000").cast("long").alias("_w_num"),
+        total.alias("_w_den"),
+    ).select(
+        "source", "n_docs", "isqrt_n",
+        F.expr("_w_num div _w_den").alias("weight_bp"),
+    )
+    if budget_docs is not None:
+        out = out.withColumn(
+            "epochs_mbp",
+            F.expr(f"CAST({int(budget_docs)} AS BIGINT) * weight_bp "
+                   f"div (10 * n_docs)"))
+    return out
+
+
+def domain_cap(
+    docs: DataFrame,
+    cap: int,
+    domain_col: str = "source",
+    score_col: str | None = None,
+    id_col: str = "doc_id",
+    seed: int = 42,
+    salt_factor: int = 64,
+) -> DataFrame:
+    """Per-domain document cap — the RefinedWeb/FineWeb-style frequency
+    cap ("no domain contributes more than N docs"), the standard
+    anti-SEO-farm / anti-mirror measure a web-scale corpus applies
+    after dedup: keep at most ``cap`` docs per domain, preferring
+    higher ``score_col``; ties (and the unscored case) break by a
+    seeded md5 hash then id, so the kept set is a pure function of
+    (corpus, seed) — retry/partitioning-invariant and SQL-replayable.
+
+    Scale shape (r12, two-phase salted top-cap): a single window
+    partitioned by the raw domain key is a COMPUTE-skew trap — a
+    mega-domain holding 1% of a 100 TB corpus puts ~1 TB through one
+    window task's sort before the cap filter drops the rows, and AQE
+    cannot split window partitions. This operator's entire purpose is
+    to meet mega-domains, so the production plan salts first:
+
+    - phase 1: rank within ``(domain, pmod(xxhash64(id), salt_factor))``
+      and keep rank ≤ cap — the hot-domain sort is divided across
+      ``salt_factor`` tasks, and at most ``salt_factor × cap`` rows per
+      domain survive;
+    - phase 2: re-rank the survivors within the raw domain key — now a
+      provably tiny partition (≤ salt_factor × cap rows), bounded
+      per-task state by construction.
+
+    EXACTNESS: for any split of a domain's rows into buckets, a row's
+    rank within its bucket never exceeds its rank within the domain,
+    so every true top-``cap`` row survives phase 1; and every row
+    ranked ahead of a top-cap row is itself top-cap, so it survives
+    too — phase 2's ranks over the survivors therefore EQUAL the true
+    domain ranks for every kept row. Output (and the DuckDB
+    ``domain_cap_sql`` single-window oracle) is byte-identical to the
+    unsalted plan; the salt value never reaches the output.
+    ``salt_factor=1`` selects the plain single-window plan (the oracle
+    shape) for small inputs. Output: input columns + ``domain_rank``
+    (1-based within domain, the keep-priority commitment).
+    """
+    if cap < 1:
+        raise ValueError("domain_cap: cap must be >= 1")
+    if salt_factor < 1:
+        raise ValueError("domain_cap: salt_factor must be >= 1")
+    tie = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
+    order = ([F.col(score_col).cast("long").desc_nulls_last()]
+             if score_col else [])
+    order += [tie.asc(), F.col(id_col).asc()]
+    base = docs
+    if salt_factor > 1:
+        salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_factor))
+        w1 = Window.partitionBy(F.col(domain_col),
+                                F.col("_dcap_salt")).orderBy(*order)
+        base = (docs.withColumn("_dcap_salt", salt)
+                .withColumn("_dcap_prank", F.row_number().over(w1))
+                .where(F.col("_dcap_prank") <= cap)
+                .drop("_dcap_salt", "_dcap_prank"))
+    w2 = Window.partitionBy(F.col(domain_col)).orderBy(*order)
+    return (base.withColumn("domain_rank",
+                            F.row_number().over(w2).cast("long"))
+            .where(F.col("domain_rank") <= cap))
+
+
+def domain_cap_sql(
+    from_sql: str,
+    cap: int,
+    domain_expr: str = "source",
+    score_expr: str | None = None,
+    id_expr: str = "doc_id",
+    seed: int = 42,
+) -> str:
+    """DuckDB mirror of :func:`domain_cap` (same md5 tie-break, same
+    NULLS LAST score order)."""
+    order = (f"CAST({score_expr} AS BIGINT) DESC NULLS LAST, "
+             if score_expr else "")
+    order += f"md5('{seed}:' || {id_expr}) ASC, {id_expr} ASC"
+    return f"""
+        SELECT * EXCLUDE (rn), CAST(rn AS BIGINT) AS domain_rank FROM (
+          SELECT *, row_number() OVER (PARTITION BY {domain_expr}
+                    ORDER BY {order}) AS rn
+          FROM {from_sql})
+        WHERE rn <= {cap}
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -167,3 +886,273 @@ def c4_filters_sql(from_sql: str, id_expr: str, text_expr: str,
         f"cast(case when n_sentences >= {C4_MIN_SENTENCES} "
         "and has_brace + has_lorem + has_jswarn = 0 then 1 else 0 end "
         "as bigint) as is_kept from (" + l3 + ")")
+
+
+# ---------------------------------------------------------------------------
+# document chunking (RAG-ingestion segmentation)
+
+# RE2-safe sentence segmentation: a run up to terminal punctuation
+# (inclusive, plus trailing spaces), or a final unpunctuated remnant.
+# Leftmost-alternation is identical in java.util.regex and RE2, so the
+# split replays bit-for-bit in the SQL oracle.
+_SENT_RE = r"[^.!?]*[.!?]+[ ]*|[^.!?]+$"
+
+
+def chunk_documents(
+    docs: DataFrame,
+    chunk_tokens: int = 128,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Split documents into sentence-aligned, token-budgeted chunks —
+    the retrieval-ingestion step of a RAG pipeline.
+
+    Same packing contract as :func:`pack_sequences` (bin =
+    ``floor(cumsum_before / budget)``: shuffle-free-greedy, a chunk may
+    overflow by one sentence, an oversized sentence chunks alone).
+    Output: id, chunk_id, n_sentences, n_tokens, chunk_text.
+
+    Scale shape: one window shuffle on the doc id (chunking is per-doc,
+    so partitions are naturally balanced — no hot keys by
+    construction), then the rollup reuses the same key prefix. Sentence
+    order inside a chunk is restored via sort_array over (pos, sent)
+    structs — never a bare collect_list, whose order is
+    partition-nondeterministic.
+    """
+    sents = F.filter(
+        F.transform(
+            F.regexp_extract_all(F.col(text_col), F.lit(_SENT_RE), 0),
+            lambda s: F.trim(s)),
+        lambda s: s != "")
+    ex = docs.select(
+        F.col(id_col), F.posexplode(sents).alias("pos", "sent"))
+    n_tok = F.size(F.split(F.regexp_replace(F.col("sent"), r"\s+", " "), " "))
+    w = Window.partitionBy(id_col).orderBy("pos")
+    cum_before = F.coalesce(
+        F.sum("n_tok").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.lit(0))
+    assigned = (
+        ex.withColumn("n_tok", n_tok.cast("long"))
+        .withColumn("chunk_id", F.floor(cum_before / F.lit(chunk_tokens)))
+    )
+    return assigned.groupBy(id_col, "chunk_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_sentences"),
+        F.sum("n_tok").cast("long").alias("n_tokens"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "sent"))),
+                lambda x: x["sent"]),
+            " ").alias("chunk_text"),
+    )
+
+
+def chunk_documents_sql(
+    from_sql: str, id_expr: str, text_expr: str,
+    chunk_tokens: int = 128, id_alias: str = "doc_id",
+) -> str:
+    """DuckDB mirror of :func:`chunk_documents`."""
+    sents = (
+        f"list_filter(list_transform(regexp_extract_all({text_expr}, "
+        rf"'{_SENT_RE}'), s -> trim(s)), s -> s <> '')")
+    base = (
+        f"select {id_expr} as {id_alias}, unnest(range(len({sents}))) "
+        f"as pos, unnest({sents}) as sent from {from_sql}")
+    ntok = ("cast(len(string_split(regexp_replace(sent, '\\s+', ' ', 'g'), "
+            "' ')) as bigint)")
+    l2 = (f"select {id_alias}, pos, sent, {ntok} as n_tok "
+          "from (" + base + ")")
+    l3 = (
+        f"select {id_alias}, pos, sent, n_tok, "
+        "cast(floor(coalesce(sum(n_tok) over (partition by "
+        f"{id_alias} order by pos rows between unbounded preceding and "
+        f"1 preceding), 0) * 1.0 / {chunk_tokens}) as bigint) as chunk_id "
+        "from (" + l2 + ")")
+    return (
+        f"select {id_alias}, chunk_id, "
+        "cast(count(*) as bigint) as n_sentences, "
+        "cast(sum(n_tok) as bigint) as n_tokens, "
+        "string_agg(sent, ' ' order by pos) as chunk_text "
+        f"from (" + l3 + f") group by {id_alias}, chunk_id")
+
+
+# ---------------------------------------------------------------------------
+# k-anonymity / quasi-identifier re-identification risk
+
+
+def generalize_numeric(col: Column, width: int) -> Column:
+    """Band a numeric quasi-identifier into fixed-width buckets (the
+    standard generalization step: age → decade, balance → band).
+    Emits the bucket FLOOR so the value stays ordinal and joinable."""
+    return (F.floor(col / F.lit(width)) * width).cast("long")
+
+
+def generalize_prefix(col: Column, n: int) -> Column:
+    """Truncate a string quasi-identifier to its first ``n`` chars
+    (zip → zip3, ip → /16-ish, date → month)."""
+    return F.substring(col, 1, n)
+
+
+def k_anonymity_audit(
+    df: DataFrame,
+    qi_cols: list[str],
+    k: int = 5,
+    sensitive_col: str | None = None,
+) -> DataFrame:
+    """Per-equivalence-class re-identification risk: one row per
+    distinct quasi-identifier tuple with its population ``n`` and
+    ``at_risk = n < k`` (a released row in such a class narrows to
+    fewer than k candidate individuals). With ``sensitive_col``, also
+    the class's distinct sensitive-value count (``l_div``) — classes
+    with ``l_div = 1`` leak the sensitive attribute even at n ≥ k
+    (homogeneity attack; Machanavajjhala et al. 2007 l-diversity).
+
+    Scale shape: ONE shuffle (groupBy the QI tuple, map-side combined);
+    the distinct-count for l-diversity rides the same aggregate. The
+    audit output is ≤ |distinct QI tuples| rows — by construction far
+    smaller than the corpus (that is what anonymity means).
+    """
+    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+    if sensitive_col:
+        aggs.append(
+            F.countDistinct(sensitive_col).cast("long").alias("l_div"))
+    out = df.groupBy(*qi_cols).agg(*aggs)
+    out = out.withColumn("at_risk", (F.col("n") < k).cast("long"))
+    if sensitive_col:
+        out = out.withColumn(
+            "homogeneous", (F.col("l_div") == 1).cast("long"))
+    return out
+
+
+def k_anonymity_report(
+    df: DataFrame,
+    qi_cols: list[str],
+    k: int = 5,
+    sensitive_col: str | None = None,
+) -> DataFrame:
+    """Corpus-level rollup of :func:`k_anonymity_audit`: class count,
+    at-risk classes, at-risk ROWS (the release-blocking number), and
+    risk fraction in integer basis points (engine-portable)."""
+    audit = k_anonymity_audit(df, qi_cols, k, sensitive_col)
+    at_risk_rows = F.sum(F.when(F.col("at_risk") == 1, F.col("n"))
+                         .otherwise(F.lit(0)))
+    total_rows = F.sum(F.col("n"))
+    aggs = [
+        F.count(F.lit(1)).cast("long").alias("n_classes"),
+        F.sum("at_risk").cast("long").alias("at_risk_classes"),
+        at_risk_rows.cast("long").alias("at_risk_rows"),
+        total_rows.cast("long").alias("total_rows"),
+        F.expr("sum(case when at_risk = 1 then n else 0 end) * 10000"
+               " div sum(n)").cast("long").alias("risk_bp"),
+        F.min("n").cast("long").alias("min_class_size"),
+    ]
+    if sensitive_col:
+        aggs.append(F.sum("homogeneous").cast("long")
+                    .alias("homogeneous_classes"))
+    return audit.agg(*aggs)
+
+
+# ---------------------------------------------------------------------------
+# leakage-safe dataset splitting
+
+
+def leakage_safe_split(
+    docs: DataFrame,
+    pairs: DataFrame | None = None,
+    fractions: dict[str, float] | None = None,
+    id_col: str = "doc_id",
+    seed: int = 7,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+) -> DataFrame:
+    """Deterministic train/val/test assignment that near-duplicate
+    clusters can never straddle — the split-leakage guard a training
+    pipeline needs before eval-set construction (a near-copy of a test
+    document in train silently inflates eval scores; splitting by
+    CLUSTER representative, not by document, makes that impossible by
+    construction).
+
+    ``pairs`` is any near-dup pair list (minhash LSH / simhash /
+    n-gram Jaccard / embedding cosine / SemDeDup); documents in no
+    pair are their own singleton cluster. The split key is the md5
+    bucket of the cluster representative (minimum member id via
+    dedup.dup_clusters), so: (a) every member of a cluster lands in
+    the SAME split, (b) assignment is independent of partitioning and
+    engine (the md5-prefix idiom every sampler here uses), (c) adding
+    unrelated documents never moves an existing cluster.
+
+    Output: (id, cluster_id, split). Fractions default to
+    train/val/test = 0.9/0.05/0.05 and are consumed in sorted-name
+    order over a 1e6 bucket space.
+
+    100 TB shape: cluster labels come from the key-bounded dup_clusters
+    propagation (pairs only — the full corpus never enters the loop);
+    the corpus itself pays ONE left join against the label table and a
+    map-side md5. No other shuffle.
+    """
+    from .dedup import dup_clusters
+
+    fractions = dict(fractions or {"train": 0.90, "val": 0.05, "test": 0.05})
+    total = sum(fractions.values())
+    if abs(total - 1.0) > 1e-9:
+        raise ValueError(f"fractions must sum to 1, got {total}")
+
+    base = docs.select(F.col(id_col).cast("long").alias(id_col))
+    if pairs is not None:
+        labels = dup_clusters(pairs, id_a=id_a, id_b=id_b).select(
+            F.col("doc_id").alias(id_col),
+            F.col("cluster_id").cast("long").alias("cluster_id"))
+        base = base.join(labels, on=id_col, how="left")
+        rep = F.coalesce(F.col("cluster_id"), F.col(id_col))
+    else:
+        rep = F.col(id_col)
+    bucket = (
+        F.conv(F.substring(
+            F.md5(F.concat(rep.cast("string"), F.lit(f":{seed}"))),
+            1, 15), 16, 10).cast("long") % 1_000_000
+    )
+    expr = None
+    lo = 0.0
+    names = sorted(fractions)
+    for name in names[:-1]:
+        lo += fractions[name]
+        cond = bucket < F.lit(int(lo * 1_000_000))
+        expr = (F.when(cond, F.lit(name)) if expr is None
+                else expr.when(cond, F.lit(name)))
+    expr = (expr.otherwise(F.lit(names[-1])) if expr is not None
+            else F.lit(names[-1]))
+    return base.select(
+        F.col(id_col),
+        rep.alias("cluster_id"),
+        expr.alias("split"))
+
+
+def leakage_safe_split_sql(
+    docs_sql: str,
+    id_expr: str,
+    cluster_sql: str | None,
+    fractions: dict[str, float] | None = None,
+    seed: int = 7,
+    id_alias: str = "doc_id",
+) -> str:
+    """DuckDB mirror. ``cluster_sql`` yields (doc_id, cluster_id) for
+    paired documents (or None for the no-pairs case)."""
+    fractions = dict(fractions or {"train": 0.90, "val": 0.05, "test": 0.05})
+    names = sorted(fractions)
+    rep = (f"COALESCE(c.cluster_id, d.{id_alias})" if cluster_sql
+           else f"d.{id_alias}")
+    bucket = (f"CAST(('0x' || substr(md5(CAST({rep} AS VARCHAR) "
+              f"|| ':{seed}'), 1, 15)) AS BIGINT) % 1000000")
+    case, lo = "CASE", 0.0
+    for name in names[:-1]:
+        lo += fractions[name]
+        case += f" WHEN {bucket} < {int(lo * 1_000_000)} THEN '{name}'"
+    case += f" ELSE '{names[-1]}' END"
+    join = (f"LEFT JOIN ({cluster_sql}) c ON c.{id_alias} = d.{id_alias}"
+            if cluster_sql else "")
+    return f"""
+        SELECT d.{id_alias} AS {id_alias},
+               {rep} AS cluster_id,
+               {case} AS split
+        FROM (SELECT {id_expr} AS {id_alias} FROM {docs_sql}) d
+        {join}
+    """

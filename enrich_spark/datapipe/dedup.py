@@ -1,14 +1,37 @@
-"""Near-duplicate removal for the curate pipeline's ``near_dedup_keep``
-step, designed for the 100 TB shape:
+"""Deduplication operators for large-scale training-data pipelines.
 
+Strategies over a document table (doc_id, text), each designed for the
+100 TB shape:
+
+* exact_dedup          — hash-groupBy. One shuffle on a 128-bit digest;
+                         AQE handles skew (empty/boilerplate docs).
 * minhash_lsh_pairs    — shingle → minhash (k hash funcs) → band-bucket
                          explode → self-join per bucket. The shuffle key
                          is (band, bucket-signature); candidate pairs are
                          verified with exact Jaccard. Scales as
                          O(docs × bands) rows, never O(docs²).
+* simhash_pairs        — 64-bit simhash from token hashes; Hamming-ball
+                         candidate generation via band rotation.
+* ngram_jaccard_pairs  — exact n-gram Jaccard on LSH candidates (or
+                         within explicit buckets for small inputs);
+                         ngram_jaccard_pairs_prefix is the PPJoin-style
+                         skew-free scale path.
+* embedding_dup_pairs  — cosine near-dup over an embedding column (see
+                         similarity.py for the shared primitives).
 * dup_clusters         — connected components over near-dup pairs
                          (iterative min-label propagation).
-* apply_dedup_policy   — one kept representative per cluster.
+* duplicate_substring_windows — exact substring-duplication marking
+                         (Lee et al. 2022 at word-window granularity).
+* remove_duplicate_spans — applies those spans: cuts duplicated runs
+                         out of the text (the paper's actual output).
+* remove_boilerplate_lines — cross-document LINE dedup (MassiveText/
+                         RefinedWeb): lines repeating in > N distinct
+                         docs are chrome, cut from every doc.
+* contamination_check  — benchmark decontamination via broadcast
+                         window-hash join; contamination_check_multi
+                         for several eval sets with per-set n-gram size.
+* streaming_dedup      — cross-micro-batch first-arrival dedup
+                         (dropDuplicatesWithinWatermark, bounded state).
 
 All hashing is Spark-native (xxhash64 / md5-prefix) so results are
 deterministic, reproducible in SQL oracles, and JVM-side.
@@ -20,6 +43,27 @@ import warnings
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# ---------------------------------------------------------------------------
+# exact
+
+
+def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Keep the lowest-id representative of each exact-duplicate group.
+
+    Plan shape: partial hash-agg (map-side) → shuffle on md5 → final agg.
+    """
+    return (
+        docs.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
+        .agg(
+            F.min(id_col).alias(id_col),
+            F.count(F.lit(1)).alias("dup_count"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# shingles + minhash
 
 
 def _normalize(text: Column) -> Column:
@@ -138,11 +182,154 @@ def minhash_lsh_pairs(
     )
 
 
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    threshold: float = 0.5,
+    block_col: Column | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard within blocks (default: first-token block —
+    cheap blocking; swap in LSH buckets at scale). Returns pairs ≥ threshold."""
+    block = block_col if block_col is not None else F.split(F.trim(_normalize(F.col(text_col))), " ")[0]
+    base = docs.select(
+        F.col(id_col).alias("_id"),
+        shingles(F.col(text_col), shingle_k).alias("_sh"),
+        block.alias("_blk"),
+    )
+    l, r = base.alias("l"), base.alias("r")
+    cand = l.join(
+        r, (F.col("l._blk") == F.col("r._blk")) & (F.col("l._id") < F.col("r._id"))
+    )
+    inter = F.size(F.array_intersect(F.col("l._sh"), F.col("r._sh")))
+    # |A∪B| = sa + sb − inter exactly (shingles() arrays are distinct);
+    # identical int → bit-identical double jaccard, no merged array.
+    union = F.size(F.col("l._sh")) + F.size(F.col("r._sh")) - inter
+    return (
+        cand.select(
+            F.col("l._id").alias("id_a"),
+            F.col("r._id").alias("id_b"),
+            (inter / union).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def ngram_jaccard_pairs_prefix(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Exact n-gram Jaccard ≥ threshold via PREFIX FILTERING (PPJoin
+    family) — the scale path that replaces first-token blocking.
+
+    Completeness guarantee: order every doc's shingles by ascending
+    global document frequency (ties by shingle value); two sets with
+    Jaccard ≥ t MUST share at least one element inside each one's prefix
+    of length ``n - ceil(t·n) + 1``. Candidates therefore come from an
+    equi-join on prefix shingles only — pair volume is governed by RARE
+    shingles, not the Zipf-head first token, so no hot-block skew.
+
+    Strategy switch (both exact; measured crossover): the prefix length
+    is ``n − ceil(t·n) + 1 ≈ (1−t)·n``, so at LOW thresholds the prefix
+    covers most tokens and candidate generation degenerates toward
+    every-pair-sharing-a-token — there the cheaper plan is the classic
+    inverted-index COUNT join (full token self-join → per-pair overlap
+    count → Jaccard from sizes; no array materialization, sizes
+    broadcast). At HIGH thresholds candidates shrink superlinearly and
+    prefix-join + array verification wins. Crossover sits near t≈0.4
+    (at t=0.15, sf0.1: count plan 5.1 s vs prefix plan 13.7 s,
+    identical 256-row output). Both paths apply the PPJoin LENGTH
+    filter (J ≥ t ⇒ t·|A| ≤ |B| ≤ |A|/t) inside the join condition.
+
+    Shuffle budget (either path): shingle/token exchanges + one
+    key-bounded equi-join + one per-pair aggregate — no cross join at
+    any size; pair volume is governed by shared-token frequency, not
+    the Zipf-head first token, so no hot-block skew.
+    """
+    t = float(threshold)
+    # NO .where(size(_sh) > 0) here: shingles() never yields an empty
+    # array (short docs collapse to one whole-doc shingle), and Catalyst
+    # pushes such a filter BELOW the upstream repartition, recomputing
+    # the full shingle expression single-threaded on the raw scan split
+    # (measured: 3.8 s of the old 4.9 s total was that pushed filter)
+    from ..plans.stagecut import stage_boundary
+
+    # boundary: without it CollapseProject inlines the shingle
+    # expression into BOTH its consumers (size() and the explode
+    # Generate), doubling the most expensive scalar work of the plan
+    base = stage_boundary(docs.select(
+        F.col(id_col).alias("_id"),
+        shingles(F.col(text_col), shingle_k).alias("_sh"),
+    ))
+    tok = base.select("_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_t"))
+    len_ok = ((F.col("a._n") * t <= F.col("b._n"))
+              & (F.col("b._n") * t <= F.col("a._n")))
+
+    if t < 0.4:
+        # inverted-index count plan: overlap = shared distinct tokens
+        a, b = tok.alias("a"), tok.alias("b")
+        ov = (
+            a.join(b, (F.col("a._t") == F.col("b._t"))
+                   & (F.col("a._id") < F.col("b._id")) & len_ok)
+            .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("_o"),
+                 F.first(F.col("a._n")).alias("_na"),
+                 F.first(F.col("b._n")).alias("_nb"))
+        )
+        return ov.select(
+            "id_a", "id_b",
+            (F.col("_o") / (F.col("_na") + F.col("_nb") - F.col("_o")))
+            .alias("jaccard"),
+        ).where(F.col("jaccard") >= threshold)
+
+    freq = tok.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
+    ordered = (
+        tok.join(freq, "_t")
+        .groupBy("_id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("_df", "_t"))).alias("_ord"),
+            F.count(F.lit(1)).alias("_n"),
+        )
+    )
+    plen = (F.col("_n") - F.ceil(F.col("_n") * F.lit(t)) + 1).cast("int")
+    pref = ordered.select(
+        "_id", "_n",
+        F.explode(
+            F.slice(F.transform("_ord", lambda s: s.getField("_t")), F.lit(1), plen)
+        ).alias("_t"),
+    )
+    a, b = pref.alias("a"), pref.alias("b")
+    cand = (
+        a.join(b, (F.col("a._t") == F.col("b._t"))
+               & (F.col("a._id") < F.col("b._id")) & len_ok)
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+    )
+    withsh = cand.join(
+        base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
+    ).join(
+        base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b"
+    )
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    # |A∪B| = sa + sb − inter exactly (shingles() arrays are distinct);
+    # identical int → bit-identical double jaccard, no merged array.
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        withsh.select("id_a", "id_b", (inter / union).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def dup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
+    fixed_rounds: int | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id,
     is_keeper). The step after pair generation a real dedup pipeline
@@ -155,7 +342,14 @@ def dup_clusters(
     diameter) rounds (near-dup clusters are shallow, typically ≤ 4).
     `localCheckpoint` truncates lineage each round so the plan doesn't
     grow; the loop exits early on a zero `changed` count (one scalar
-    per round, not a data collect)."""
+    per round, not a data collect).
+
+    ``fixed_rounds``: run exactly N propagation rounds with NO
+    per-round convergence action — the whole computation is one Spark
+    job instead of one per round, for schedulers where per-iteration
+    job launches dominate. Propagation advances one hop per round, so
+    the caller picks N ≥ the expected cluster diameter; no convergence
+    check or warning is possible in this mode."""
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -168,7 +362,7 @@ def dup_clusters(
         .localCheckpoint()
     )
     changed = 0
-    for _ in range(max_iter):
+    for rnd in range(fixed_rounds if fixed_rounds is not None else max_iter):
         msgs = (
             edges.join(labels, edges["src"] == labels["node"])
             .groupBy("dst").agg(F.min("label").alias("nbr"))
@@ -181,13 +375,21 @@ def dup_clusters(
                 (F.col("nbr") < F.col("label")).alias("chg"),
             )
         )
+        if fixed_rounds is not None:
+            # no per-round convergence count; truncate lineage (an eager
+            # materialization) only every 5th round, so N rounds cost
+            # ~N/5 jobs instead of 2N actions
+            labels = merged.drop("chg")
+            if (rnd + 1) % 5 == 0 or rnd + 1 == fixed_rounds:
+                labels = labels.localCheckpoint()
+            continue
         merged = merged.localCheckpoint()
         changed = merged.where(F.col("chg")).limit(1).count()
         labels = merged.drop("chg")
         if changed == 0:
             break
     edges.unpersist()
-    if changed != 0:
+    if fixed_rounds is None and changed != 0:
         # A component with diameter > max_iter (long near-dup chains) would
         # otherwise silently yield split clusters with multiple keepers.
         warnings.warn(
@@ -201,6 +403,1133 @@ def dup_clusters(
         F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("node") == F.col("label")).alias("is_keeper"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# simhash
+
+
+def _bit_masks() -> Column:
+    """The 64 single-bit masks as a literal array; mask[63] is the sign
+    bit (LONG_MIN). Doubles as the per-bit addend when assembling the
+    final hash (adding LONG_MIN sets the sign bit)."""
+    return F.array(*[F.lit(1 << b) for b in range(63)], F.lit(-(2 ** 63)))
+
+
+def simhash64(text: Column, shingle_k: int = 2, hasher=None) -> Column:
+    """64-bit simhash over word-shingle token hashes (default xxhash64).
+
+    For each bit b: sum(+1 if bit set else -1 over tokens) > 0 → bit set.
+
+    `hasher` swaps the token hash family: pass `md5_hash_family(0)` for
+    the 60-bit md5-prefix hash that an ANSI-SQL oracle can replay
+    (bits 60..63 then always vote −1 → zero, identically on both sides);
+    keep the xxhash64 default for the JVM-native scale path.
+
+    Single pass over the token array: the accumulator is a 64-wide vote
+    vector updated with one zip_with per token (a naive per-bit aggregate
+    would re-evaluate the shingle+hash expression 64× per row — measured
+    40× slower at sf0.1).
+    """
+    if hasher is None:
+        hasher = F.xxhash64
+    masks = _bit_masks()
+    tokens = F.transform(shingles(text, shingle_k), lambda s: hasher(s))
+    votes = F.aggregate(
+        tokens,
+        F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, t: F.zip_with(
+            acc,
+            F.transform(
+                masks,
+                lambda m: F.when(t.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)).cast("long"),
+            ),
+            lambda a, v: a + v,
+        ),
+    )
+    return F.aggregate(
+        F.zip_with(votes, masks, lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long"))),
+        F.lit(0).cast("long"),
+        lambda a, x: a + x,
+    )
+
+
+def simhash_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    bands: int = 4,
+    hasher=None,
+) -> DataFrame:
+    """Near-dup pairs by simhash Hamming distance ≤ max_hamming.
+
+    Candidate generation: split the 64-bit hash into `bands` 16-bit bands;
+    by pigeonhole any pair within Hamming ≤ bands-1 collides on ≥1 band.
+    """
+    from ..plans.stagecut import stage_boundary
+
+    # boundary: the 4 band structs + the carried `_sim` column would
+    # otherwise each re-inline the whole simhash aggregate (5× the
+    # plan's most expensive expression)
+    sh = stage_boundary(docs.select(
+        F.col(id_col).alias("_id"), simhash64(F.col(text_col), hasher=hasher).alias("_sim")
+    ))
+    banded = sh.select(
+        "_id", "_sim",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftrightunsigned("_sim", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bhash"),
+                )
+                for b in range(bands)
+            ])
+        ).alias("bk"),
+    ).select("_id", "_sim", "bk.band", "bk.bhash")
+    l, r = banded.alias("l"), banded.alias("r")
+    hamming = F.bit_count(F.col("l._sim").bitwiseXOR(F.col("r._sim")))
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bhash") == F.col("r.bhash"))
+            & (F.col("l._id") < F.col("r._id")),
+        )
+        .select(
+            F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"),
+            hamming.alias("hamming"),
+        )
+        # filter BEFORE the pair dedup: hamming is a pure function of the
+        # pair, so the two commute — and the dedup exchange should carry
+        # only surviving pairs, not every band collision (the
+        # containment-prefix rule, see containment_pairs_prefix below:
+        # "dedupe the (tiny) post-filter output, not the full candidate
+        # stream"). Catalyst cannot push a filter on a non-grouping
+        # column below the aggregate, so the ordering here is load-bearing.
+        .where(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _banded_hash_frame(
+    hashes: DataFrame,
+    hash_col: str,
+    id_col: str,
+    bands: int | None,
+    max_hamming: int,
+) -> DataFrame:
+    """The banded-slice frame every Hamming-family plan shares:
+    (_id, _h, band, bhash), one row per (id, band). Slice widths are
+    distributed EVENLY — base 64//bands with the remainder over the
+    first bands (ceil-width slicing broke for bands in 33..63:
+    trailing negative/zero widths meant a negative shift at plan build
+    or a constant-0 band key degenerating into an all-pairs self-join
+    on that band). Any partition of the 64 bits keeps the pigeonhole
+    guarantee, so even widths are strictly better."""
+    if bands is None:
+        bands = max_hamming + 1
+    if not 1 <= bands <= 64:
+        raise ValueError("hamming bands must be in 1..64")
+    base, rem = divmod(64, bands)
+    widths = [base + (1 if b < rem else 0) for b in range(bands)]
+    offsets = [sum(widths[:b]) for b in range(bands)]
+
+    def _slice(b: int):
+        width = widths[b]
+        shifted = F.shiftrightunsigned("_h", offsets[b])
+        if width >= 64:                       # bands=1: the whole hash
+            return shifted
+        return shifted.bitwiseAND(F.lit((1 << width) - 1))
+
+    sh = hashes.select(F.col(id_col).alias("_id"),
+                       F.col(hash_col).cast("long").alias("_h"))
+    return sh.select(
+        "_id", "_h",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     _slice(b).alias("bhash"))
+            for b in range(bands)
+        ])).alias("bk"),
+    ).select("_id", "_h", "bk.band", "bk.bhash")
+
+
+def hamming_pairs(
+    hashes: DataFrame,
+    hash_col: str = "hash",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    bands: int | None = None,
+) -> DataFrame:
+    """Near-dup pairs by Hamming distance over an EXISTING 64-bit hash
+    column — the generic banded join :func:`simhash_pairs` specializes
+    for text, factored out (r12) so ANY 64-bit fingerprint family
+    (simhash, image dHash, audio chromaprint-style hashes) gets the
+    same scale-safe candidate plan: split the hash into ``bands``
+    slices (default max_hamming+1 — by pigeonhole a pair within
+    Hamming ≤ bands−1 collides on ≥ 1 slice), equi-join per slice,
+    verify with one ``bit_count(xor)``.
+
+    Output: id_a < id_b, hamming. Shuffle budget: one explode (rows ×
+    bands), one equi-join keyed by (band, slice) — near-uniform keys
+    for well-mixed hashes — no cross join at any size.
+    """
+    banded = _banded_hash_frame(hashes, hash_col, id_col, bands,
+                                max_hamming)
+    l, r = banded.alias("l"), banded.alias("r")
+    hamming = F.bit_count(F.col("l._h").bitwiseXOR(F.col("r._h")))
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bhash") == F.col("r.bhash"))
+            & (F.col("l._id") < F.col("r._id")),
+        )
+        .select(
+            F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"),
+            hamming.alias("hamming"),
+        )
+        # filter before the dedup — same commuting argument as
+        # simhash_pairs above: the dedup exchange must not carry band
+        # collisions the Hamming filter drops for free.
+        .where(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+# ---------------------------------------------------------------------------
+# exact substring duplication (Lee et al. 2022, "Deduplicating Training
+# Data Makes Language Models Better" — word-window granularity)
+
+
+def duplicate_substring_windows(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 8,
+) -> DataFrame:
+    """Mark exact duplicated substrings across the corpus: hash every
+    k-word window, count occurrences corpus-wide, and merge the windows
+    seen more than once into per-doc character-of-word spans.
+
+    Output per doc: n_windows, n_dup_windows, dup_window_frac, and
+    dup_spans — merged [start_word, end_word] intervals covering every
+    duplicated window (adjacent/overlapping windows chain into one
+    span, the fold is a native higher-order aggregate).
+
+    Scale shape: 2 shuffles total — a window-function count over the
+    window-hash partition (uniform 64-bit keys, no skew), then the
+    per-doc groupBy. The suffix-array of the paper is replaced by
+    fixed-k window hashing: a recall-bounded approximation (runs ≥ k
+    words are always found; shorter duplicates are not) that stays an
+    embarrassingly-parallel DataFrame plan at 100 TB.
+    """
+    from ..plans.stagecut import stage_boundary
+
+    # materialize the word array behind a boundary: the window-hash
+    # Generate and the n_words column otherwise BOTH re-inline the
+    # normalize+split expression (no CSE across Generate/Project nodes)
+    base = stage_boundary(docs.select(
+        F.col(id_col),
+        F.split(F.trim(_normalize(F.col(text_col))), " ").alias("_w"),
+    ))
+    words = F.col("_w")
+    n = F.size(words)
+    idx = F.when(n >= k, F.sequence(F.lit(1), n - k + 1)) \
+        .otherwise(F.array().cast("array<int>"))
+    grams = F.transform(
+        idx, lambda i: F.struct(
+            i.alias("pos"),
+            F.xxhash64(F.concat_ws(" ", F.slice(words, i, k))).alias("h"),
+        ),
+    )
+    exploded = base.select(
+        F.col(id_col), n.alias("n_words"), F.explode_outer(grams).alias("g")
+    ).select(id_col, "n_words", F.col("g.pos").alias("pos"), F.col("g.h").alias("h"))
+
+    w = Window.partitionBy("h")
+    counted = exploded.withColumn(
+        "dup", F.col("h").isNotNull() & (F.count(F.lit(1)).over(w) > 1)
+    )
+
+    per_doc = counted.groupBy(id_col).agg(
+        F.max("n_words").alias("n_words"),
+        F.count(F.col("pos")).alias("n_windows"),
+        F.sum(F.col("dup").cast("long")).alias("n_dup_windows"),
+        F.array_sort(F.collect_list(F.when(F.col("dup"), F.col("pos"))))
+        .alias("dup_pos"),
+    )
+    # merge adjacent/overlapping duplicated windows into word spans:
+    # window at pos covers [pos, pos+k-1] WORDS, so its coverage
+    # overlaps-or-adjoins the running span (ending at word ce+k-1)
+    # whenever pos ≤ ce+k — chaining on start positions alone (pos ≤
+    # ce+1) would emit overlapping spans that double-count words
+    fold_init = F.struct(
+        F.array().cast("array<struct<start:int,end:int>>").alias("spans"),
+        F.lit(-1).cast("int").alias("cs"),
+        F.lit(-1).cast("int").alias("ce"),
+    )
+
+    def _fold(acc, p):
+        cs, ce = acc.getField("cs"), acc.getField("ce")
+        start_new = (cs < 0) | (p > ce + F.lit(k))
+        flushed = F.when(
+            (cs >= 0) & start_new,
+            F.array_append(acc.getField("spans"),
+                           F.struct(cs.alias("start"),
+                                    (ce + F.lit(k) - 1).alias("end"))),
+        ).otherwise(acc.getField("spans"))
+        return F.struct(
+            flushed.alias("spans"),
+            F.when(start_new, p).otherwise(cs).alias("cs"),
+            F.greatest(p, ce).alias("ce"),
+        )
+
+    folded = F.aggregate(
+        F.col("dup_pos").cast("array<int>"), fold_init, _fold,
+        lambda acc: F.when(
+            acc.getField("cs") >= 0,
+            F.array_append(acc.getField("spans"),
+                           F.struct(acc.getField("cs").alias("start"),
+                                    (acc.getField("ce") + F.lit(k) - 1)
+                                    .alias("end"))),
+        ).otherwise(acc.getField("spans")),
+    )
+    return per_doc.select(
+        id_col, "n_windows", "n_dup_windows",
+        F.when(F.col("n_windows") > 0,
+               F.round(F.col("n_dup_windows") / F.col("n_windows"), 4))
+        .otherwise(F.lit(0.0)).alias("dup_window_frac"),
+        folded.alias("dup_spans"),
+    )
+
+
+def remove_duplicate_spans(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 8,
+) -> DataFrame:
+    """Apply the spans from :func:`duplicate_substring_windows`: CUT the
+    corpus-duplicated substrings out of the text — the actual output of
+    Lee et al. 2022 ("each time a substring is duplicated we remove it"),
+    where the marking operator only reports them.
+
+    Output per doc: cleaned_text (the normalized text with every word
+    inside a dup span removed, single-space joined), n_words,
+    removed_words, n_spans. cleaned_text is in NORMALIZED coordinates
+    (lowercased, whitespace collapsed) because spans are word offsets
+    into the normalized token stream.
+
+    Scale shape: the marking plan's 2 shuffles plus one doc_id-keyed
+    join to bring spans back beside the text; the cut itself is a native
+    higher-order filter (no Python). Same recall bound as the marker:
+    only duplicated runs ≥ k words are removed.
+    """
+    spans = duplicate_substring_windows(docs, text_col, id_col, k).select(
+        id_col, "dup_spans")
+    words = F.split(F.trim(_normalize(F.col(text_col))), " ")
+    sp = F.coalesce(
+        F.col("dup_spans"),
+        F.array().cast("array<struct<start:int,end:int>>"),
+    )
+    # word i (0-based lambda index; spans are 1-based) survives unless
+    # some span covers it — nested higher-order functions stay JVM-side
+    kept = F.filter(
+        words,
+        lambda w, i: ~F.exists(
+            sp, lambda s: (i + 1 >= s.getField("start"))
+            & (i + 1 <= s.getField("end"))),
+    )
+    return (
+        docs.join(spans, id_col, "left")
+        .select(
+            id_col,
+            F.concat_ws(" ", kept).alias("cleaned_text"),
+            F.size(words).alias("n_words"),
+            (F.size(words) - F.size(kept)).alias("removed_words"),
+            F.size(sp).alias("n_spans"),
+        )
+    )
+
+
+def remove_boilerplate_lines(
+    docs: DataFrame,
+    max_doc_freq: int = 2,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_line_chars: int = 8,
+) -> DataFrame:
+    """Corpus-level boilerplate LINE removal — the cross-document line
+    dedup every published web-corpus recipe applies (MassiveText /
+    RefinedWeb: "remove any line that appears in more than N documents"):
+    navigation chrome, cookie banners, subscribe prompts and license
+    footers repeat across unrelated pages, so a line whose normalized
+    form (lowercased, trimmed) occurs in MORE THAN ``max_doc_freq``
+    DISTINCT documents is dropped from every document. Lines shorter
+    than ``min_line_chars`` (rulers, blank lines) are exempt — the
+    frequency table is built only from eligible lines, and since equal
+    digests imply equal normalized text, short lines can never collide
+    into a flagged digest.
+
+    Scale shape (100 TB): posexplode lines map-side; ONE groupBy on the
+    md5 line digest (the 32-char digest keeps shuffle rows narrow no
+    matter how long the line is) counting distinct source docs; flagged
+    digests join back — boilerplate is by definition the heavy head of
+    the line-frequency distribution, so the flagged set is tiny and AQE
+    broadcasts the anti-join — then one groupBy(doc) reassembles the
+    surviving lines in original order. Two key-hashed shuffles total,
+    no pair joins, no global sort.
+
+    Output per doc: clean_text (kept lines joined by newline), n_lines,
+    kept_lines, removed_lines. Docs whose every line is removed survive
+    with clean_text = ''.
+    """
+    norm = F.lower(F.trim(F.col("_line")))
+    lines = docs.select(
+        F.col(id_col),
+        F.posexplode(F.split(F.col(text_col), "\n")).alias("_pos", "_line"),
+    ).withColumn("_digest", F.md5(norm)) \
+     .withColumn("_elig", F.length(norm) >= min_line_chars)
+    flagged = (
+        lines.where(F.col("_elig"))
+        .groupBy("_digest")
+        .agg(F.countDistinct(id_col).alias("_df"))
+        .where(F.col("_df") > max_doc_freq)
+        .select("_digest")
+    )
+    kept = lines.join(flagged, "_digest", "left_anti")
+    rebuilt = kept.groupBy(id_col).agg(
+        F.array_join(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("_pos", "_line"))),
+                lambda s: s.getField("_line"),
+            ),
+            "\n",
+        ).alias("clean_text"),
+        F.count(F.lit(1)).alias("kept_lines"),
+    )
+    n_lines = F.size(F.split(F.col(text_col), "\n"))
+    return (
+        docs.join(rebuilt, id_col, "left")
+        .select(
+            F.col(id_col),
+            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+            n_lines.alias("n_lines"),
+            F.coalesce("kept_lines", F.lit(0)).cast("long")
+            .alias("kept_lines"),
+            (n_lines - F.coalesce("kept_lines", F.lit(0)))
+            .cast("long").alias("removed_lines"),
+        )
+    )
+
+
+def remove_boilerplate_lines_sql(
+    from_sql: str,
+    id_expr: str = "doc_id",
+    text_expr: str = "text",
+    max_doc_freq: int = 2,
+    min_line_chars: int = 8,
+) -> str:
+    """DuckDB mirror of :func:`remove_boilerplate_lines` (1:1 per step:
+    zipped unnest = posexplode, HAVING on distinct-doc count = the
+    flagged-digest filter, ordered string_agg = the positional
+    reassembly)."""
+    return f"""
+        WITH d AS (
+          SELECT {id_expr} AS doc_id,
+                 string_split({text_expr}, chr(10)) AS ls
+          FROM {from_sql}
+        ),
+        l AS (
+          SELECT doc_id,
+                 unnest(generate_series(1, len(ls))) AS pos,
+                 unnest(ls) AS line
+          FROM d
+        ),
+        n AS (
+          SELECT doc_id, pos, line, lower(trim(line)) AS nrm FROM l
+        ),
+        flagged AS (
+          SELECT md5(nrm) AS digest FROM n
+          WHERE len(nrm) >= {min_line_chars}
+          GROUP BY nrm HAVING count(DISTINCT doc_id) > {max_doc_freq}
+        ),
+        kept AS (
+          SELECT doc_id, pos, line FROM n
+          WHERE md5(nrm) NOT IN (SELECT digest FROM flagged)
+        ),
+        rb AS (
+          SELECT doc_id,
+                 string_agg(line, chr(10) ORDER BY pos) AS clean_text,
+                 count(*) AS kept_lines
+          FROM kept GROUP BY doc_id
+        )
+        SELECT d.doc_id AS doc_id,
+               COALESCE(rb.clean_text, '') AS clean_text,
+               CAST(len(ls) AS BIGINT) AS n_lines,
+               CAST(COALESCE(rb.kept_lines, 0) AS BIGINT) AS kept_lines,
+               CAST(len(ls) - COALESCE(rb.kept_lines, 0) AS BIGINT)
+                 AS removed_lines
+        FROM d LEFT JOIN rb USING (doc_id)
+    """
+
+
+def contamination_check(
+    docs: DataFrame,
+    benchmark: DataFrame,
+    k: int = 8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bench_text_col: str = "text",
+    bench_id_col: str = "bench_id",
+) -> DataFrame:
+    """Benchmark decontamination: mark training docs that share any
+    exact k-word window with an evaluation/benchmark corpus (the
+    standard n-gram-overlap decontamination used before pretraining).
+
+    Scale shape: the benchmark side is tiny next to a 100 TB corpus —
+    its distinct (window-hash, bench_id) set BROADCASTS, so the check
+    is a map-side hash join over the corpus grams plus the one per-doc
+    groupBy. Returns per doc: n_windows, contaminated_windows,
+    contaminated_frac, and the distinct benchmark ids hit.
+    """
+    def grams(df, idc, txt):
+        words = F.split(F.trim(_normalize(F.col(txt))), " ")
+        n = F.size(words)
+        idx = F.when(n >= k, F.sequence(F.lit(1), n - k + 1)) \
+            .otherwise(F.array().cast("array<int>"))
+        g = F.transform(
+            idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, k))))
+        return df.select(F.col(idc), F.explode_outer(g).alias("h"))
+
+    # one row per gram on the benchmark side (bench ids aggregated into
+    # an array) so the broadcast join NEVER fans doc windows out — a
+    # gram present in several benchmarks still counts one window
+    bench_map = (
+        grams(benchmark, bench_id_col, bench_text_col)
+        .where(F.col("h").isNotNull()).distinct()
+        .groupBy("h")
+        .agg(F.collect_set(bench_id_col).alias("_bids"))
+    )
+    doc_grams = grams(docs, id_col, text_col)
+    joined = doc_grams.join(F.broadcast(bench_map), "h", "left")
+    n_win = F.count(F.col("h"))
+    n_contam = F.count(F.col("_bids"))
+    return joined.groupBy(id_col).agg(
+        n_win.alias("n_windows"),
+        n_contam.alias("contaminated_windows"),
+        F.when(n_win > 0, F.round(n_contam / n_win, 4))
+        .otherwise(F.lit(0.0)).alias("contaminated_frac"),
+        F.array_sort(F.array_distinct(F.flatten(F.collect_list(F.col("_bids")))))
+        .alias("hit_benchmarks"),
+    )
+
+
+def contamination_check_multi(
+    docs: DataFrame,
+    benchmarks: list,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bench_text_col: str = "text",
+    min_overlap_windows: int = 1,
+) -> DataFrame:
+    """Decontamination against SEVERAL eval sets, each with its own
+    n-gram size — published recipes use per-benchmark k (typically 8–13
+    grams), and a hit threshold rather than any-overlap.
+
+    ``benchmarks`` is a list of ``(name, df, k)``; returns ONE row per
+    (doc, benchmark) pair with ≥1 shared window: doc id, benchmark name,
+    k, n_windows (doc windows at that k), contaminated_windows,
+    contaminated_frac, and ``contaminated`` (windows ≥
+    ``min_overlap_windows``). Pairs with zero overlap are omitted —
+    absence means clean.
+
+    Scale shape (r15, the packed-key single pass the r14 round's
+    struct/stack variants were reverted in favor of): ALL distinct k's
+    share ONE normalize+split+gram pass over the corpus — per window
+    the emission is a single LONG, ``xxhash64(window_string, k)``, so
+    the k spaces stay disjoint without any struct/row tagging (the
+    measured cost of the reverted forms) and the per-window hashing
+    work is unchanged. One combined broadcast gram map (hash →
+    benchmark set + k) and ONE (doc, set, k)-keyed groupBy replace the
+    per-k join+groupBy+union. The hash is a JOIN KEY only, never an
+    output value; a collision needs two distinct (window, k) pairs to
+    share an xxhash64 — the same negligible approximation the r13+
+    gram-hashing family already accepts.
+    """
+    from functools import reduce
+
+    from ..plans.stagecut import stage_boundary
+
+    def gram_rows(df, idc, txt, ks):
+        # boundary: the k gram Generates all consume the word array —
+        # materialize it once (see duplicate_substring_windows); one
+        # pass emits every k's windows as a single concat'd long array
+        base = stage_boundary(df.select(
+            F.col(idc),
+            F.split(F.trim(_normalize(F.col(txt))), " ").alias("_w"),
+        ))
+        words = F.col("_w")
+        n = F.size(words)
+
+        def grams(k):
+            idx = F.when(n >= k, F.sequence(F.lit(1), n - k + 1)) \
+                .otherwise(F.array().cast("array<int>"))
+            return F.transform(
+                idx,
+                lambda i: F.xxhash64(
+                    F.concat_ws(" ", F.slice(words, i, k)), F.lit(k)))
+
+        allg = grams(ks[0]) if len(ks) == 1 else F.concat(*[grams(k)
+                                                            for k in ks])
+        return base.select(
+            F.col(idc),
+            n.alias("_nwords"),
+            F.explode(allg).alias("h"),
+        )
+
+    by_k: dict[int, list] = {}
+    for name, bdf, k in benchmarks:
+        by_k.setdefault(int(k), []).append((name, bdf))
+
+    tagged = []
+    for k, sets in sorted(by_k.items()):
+        for name, bdf in sets:
+            b = bdf.select(F.lit(1).alias("_one"), F.col(bench_text_col))
+            tagged.append(
+                gram_rows(b, "_one", bench_text_col, [k])
+                .select("h", F.lit(name).alias("_set"),
+                        F.lit(k).alias("_bk"))
+            )
+    # one row per gram hash: the benchmark names sharing it, and its k
+    # (k is determined by the hash's construction; max is a formality)
+    bench_map = (
+        reduce(DataFrame.unionByName, tagged)
+        .distinct().groupBy("h")
+        .agg(F.collect_set("_set").alias("_sets"),
+             F.max("_bk").alias("_bk"))
+    )
+
+    doc_g = gram_rows(docs, id_col, text_col, sorted(by_k))
+    return (
+        doc_g.join(F.broadcast(bench_map), "h")
+        .select(id_col, "_nwords", "_bk",
+                F.explode("_sets").alias("benchmark"))
+        # group by k too: a benchmark NAME may legally appear at
+        # several k's, and the per-k form emitted one row per (doc,
+        # name, k) — preserve that exactly
+        .groupBy(id_col, "benchmark", "_bk")
+        .agg(F.max(F.greatest(F.col("_nwords") - F.col("_bk") + 1,
+                              F.lit(0))).alias("n_windows"),
+             F.count(F.lit(1)).alias("contaminated_windows"))
+        .select(
+            id_col,
+            "benchmark",
+            F.col("_bk").alias("k"),
+            "n_windows",
+            "contaminated_windows",
+            F.round(F.col("contaminated_windows") / F.col("n_windows"), 4)
+            .alias("contaminated_frac"),
+            (F.col("contaminated_windows") >= min_overlap_windows)
+            .alias("contaminated"),
+        )
+    )
+
+
+def contamination_check_bloom(
+    docs: DataFrame,
+    benchmark: DataFrame,
+    k: int = 8,
+    m_bits: int = 1 << 17,
+    n_hashes: int = 5,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bench_text_col: str = "text",
+    bench_id_col: str = "bench_id",
+) -> DataFrame:
+    """:func:`contamination_check` with a BLOOM-FILTER broadcast instead
+    of the full benchmark gram map — the artifact every executor holds
+    shrinks from 8 bytes × |distinct grams| (plus the id arrays) to a
+    fixed ``m_bits/8`` bytes, while the OUTPUT stays bit-identical to
+    the exact operator.
+
+    Two-stage sketch-to-prune / exact-to-confirm:
+
+    1. The benchmark grams fold into an m-bit Bloom filter with one
+       distributed ``bit_or`` aggregate (≤ m/64 rows ever reach the
+       driver); the filter embeds in the plan as a literal long array,
+       so the membership probe is a pure map-side codegen'd expression
+       over the corpus scan — no join, no shuffle.
+    2. Only bloom-POSITIVE doc grams (true hits + the ~(1/2)^n_hashes
+       false-positive trickle) enter the exact confirm join against the
+       benchmark gram table. That join shuffles just the candidate
+       slice, so Bloom false positives cost bandwidth, never
+       correctness: the confirm join removes them all.
+
+    Per-doc counters (n_windows) aggregate the UNPRUNED gram stream
+    map-side, so the result schema and values match
+    :func:`contamination_check` exactly — same oracle SQL.
+    """
+    if m_bits % 64:
+        raise ValueError("m_bits must be a multiple of 64")
+    n_words = m_bits // 64
+
+    def grams(df, idc, txt):
+        words = F.split(F.trim(_normalize(F.col(txt))), " ")
+        n = F.size(words)
+        idx = F.when(n >= k, F.sequence(F.lit(1), n - k + 1)) \
+            .otherwise(F.array().cast("array<int>"))
+        g = F.transform(
+            idx, lambda i: F.concat_ws(" ", F.slice(words, i, k)))
+        return df.select(F.col(idc), F.explode_outer(g).alias("_g"))
+
+    # double hashing (Kirsch–Mitzenheimer): position_j = h1 + j·h2 mod m.
+    # mod-first keeps every intermediate inside int64 under ANSI mode.
+    h1 = "pmod(xxhash64(_g), {m})"
+    h2 = "pmod(xxhash64(_g, 1), {m})"
+    pos = f"pmod({h1} + j * {h2}, {{m}})".replace("{m}", str(m_bits))
+
+    bench_g = grams(benchmark, bench_id_col, bench_text_col) \
+        .where(F.col("_g").isNotNull())
+    bits = (
+        bench_g.select(F.explode(F.expr(
+            f"transform(sequence(0, {n_hashes - 1}), j -> {pos})"
+        )).alias("p"))
+        .select((F.col("p") / 64).cast("int").alias("w"),
+                F.expr("shiftleft(1L, cast(p % 64 as int))").alias("m"))
+        .groupBy("w").agg(F.bit_or("m").alias("bits"))
+        .collect()
+    )
+    words = [0] * n_words
+    for r in bits:
+        words[r["w"]] = r["bits"]
+    bloom = "array(" + ",".join(f"{w}L" for w in words) + ")"
+    probe = (
+        f"forall(sequence(0, {n_hashes - 1}), j -> "
+        f"(element_at({bloom}, cast(({pos}) div 64 as int) + 1)"
+        f" & shiftleft(1L, cast(({pos}) % 64 as int))) != 0)"
+    )
+
+    bench_map = (
+        bench_g.select(F.xxhash64("_g").alias("h"), F.col(bench_id_col))
+        .distinct()
+        .groupBy("h").agg(F.collect_set(bench_id_col).alias("_bids"))
+    )
+    doc_g = grams(docs, id_col, text_col)
+    per_doc = doc_g.groupBy(id_col).agg(
+        F.count(F.col("_g")).alias("n_windows"))
+    confirmed = (
+        doc_g.where(F.col("_g").isNotNull()).where(F.expr(probe))
+        .select(F.col(id_col), F.xxhash64("_g").alias("h"))
+        .join(bench_map, "h")  # exact confirm: kills bloom FPs
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("contaminated_windows"),
+             F.array_sort(F.array_distinct(F.flatten(
+                 F.collect_list("_bids")))).alias("hit_benchmarks"))
+    )
+    n_win = F.col("n_windows")
+    n_contam = F.coalesce("contaminated_windows", F.lit(0))
+    return per_doc.join(confirmed, [id_col], "left").select(
+        F.col(id_col),
+        n_win.alias("n_windows"),
+        n_contam.alias("contaminated_windows"),
+        F.when(n_win > 0, F.round(n_contam / n_win, 4))
+        .otherwise(F.lit(0.0)).alias("contaminated_frac"),
+        F.coalesce("hit_benchmarks",
+                   F.array().cast("array<string>")).alias("hit_benchmarks"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# streaming cross-batch dedup
+
+
+def streaming_dedup(
+    events: DataFrame,
+    key_cols: tuple = ("event_id",),
+    ts_col: str = "ts",
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Cross-micro-batch exact dedup for at-least-once sources
+    (re-delivered collector payloads): keep the first arrival of each
+    key, drop re-deliveries within the watermark horizon.
+
+    The reference pipeline relies on the event fingerprint + downstream
+    warehouse dedup for this (fingerprint enrichment,
+    registry/EventFingerprintEnrichment.scala); on Spark the streaming-
+    native form is ``dropDuplicatesWithinWatermark`` — state holds one
+    entry per key seen within the watermark and is evicted as event time
+    advances, so state is bounded by (keys per watermark window), not by
+    stream lifetime. A duplicate arriving AFTER its key's state expired
+    is re-admitted — at-least-once delivery lag beyond the watermark is
+    the deployment's explicit trade-off knob, same contract as the
+    sessionize watermark.
+
+    Works on batch DataFrames too (falls back to plain dropDuplicates —
+    no watermark semantics needed when the whole input is present).
+    """
+    if not events.isStreaming:
+        return events.dropDuplicates(list(key_cols))
+    return (
+        events.withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(list(key_cols))
+    )
+
+
+def streaming_near_dedup(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    ts_col: str = "ts",
+    num_hashes: int = 8,
+    bands: int = 4,
+    shingle_k: int = 5,
+    sim_threshold: float = 0.8,
+    watermark: str = "1 hour",
+    max_bucket_state: int = 64,
+    family=xxhash_family,
+) -> DataFrame:
+    """Cross-micro-batch NEAR-duplicate candidates: the streaming twin
+    of :func:`minhash_lsh_pairs`, via ``applyInPandasWithState``.
+
+    Signatures are computed map-side (the same minhash family as the
+    batch path) and exploded into LSH bands; state is keyed by
+    ``(band_id, band_hash)`` and holds the bucket's recent members —
+    ids + full signatures, LRU-capped at ``max_bucket_state`` and
+    event-time-evicted past the watermark, so state is bounded by
+    (buckets live within the watermark) × (cap), not stream lifetime.
+    A new document emits ``(doc_id, matched_id, est_jaccard_bp,
+    band_id)`` for every stored member whose signature agreement ≥
+    ``sim_threshold`` (estimated Jaccard = matching minhash fraction,
+    in basis points — integer, engine-stable).
+
+    Contract notes mirroring the batch operator:
+    - a pair colliding in SEVERAL bands is emitted once per colliding
+      band (kernels are band-local); consumers that need set semantics
+      drop duplicates inside their foreachBatch
+    - estimation, not verification: the batch path re-checks exact
+      shingle Jaccard; a streaming kernel only has signatures, so the
+      threshold applies to the estimate (documented approximation)
+    - a duplicate arriving after its bucket's state expired is
+      re-admitted — the same watermark trade-off as streaming_dedup
+
+    Works on batch frames too (falls back to minhash candidates with
+    the same signature-agreement semantics for parity tests).
+    """
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    assert num_hashes % bands == 0
+    rows_per_band = num_hashes // bands
+    need = int(sim_threshold * num_hashes + 0.9999)  # min matching comps
+
+    sig = minhash_signature(shingles(F.col(text_col), shingle_k),
+                            num_hashes, family)
+    exploded = (
+        docs.select(
+            F.col(id_col).cast("long").alias("doc_id"),
+            F.col(ts_col).alias("_ts"),
+            sig.alias("_sig"))
+        .where(F.size("_sig") == num_hashes)  # empty text → no shingles
+        .select(
+            "doc_id", "_ts", "_sig",
+            F.explode(F.array(*[
+                F.struct(
+                    F.lit(b).alias("band_id"),
+                    F.xxhash64(F.concat_ws(
+                        ",",
+                        F.lit(b),
+                        *[F.element_at("_sig", b * rows_per_band + j + 1)
+                          for j in range(rows_per_band)],
+                    )).alias("band_hash"))
+                for b in range(bands)
+            ])).alias("_band"))
+        .select("doc_id", "_ts", "_sig",
+                F.col("_band.band_id").alias("band_id"),
+                F.col("_band.band_hash").alias("band_hash"))
+    )
+
+    out_schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("matched_id", T.LongType()),
+        T.StructField("est_jaccard_bp", T.LongType()),
+        T.StructField("band_id", T.IntegerType()),
+    ])
+
+    if not docs.isStreaming:
+        # batch parity path: self-join per bucket, same agreement rule
+        a, b = exploded.alias("a"), exploded.alias("b")
+        agree = F.size(F.filter(
+            F.zip_with(F.col("a._sig"), F.col("b._sig"),
+                       lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1))
+        return (
+            a.join(b, ["band_id", "band_hash"])
+            .where(F.col("a.doc_id") > F.col("b.doc_id"))
+            .where(agree >= need)
+            .select(
+                F.col("a.doc_id").alias("doc_id"),
+                F.col("b.doc_id").alias("matched_id"),
+                # floor, not truncating cast, so this path matches the
+                # streaming kernel's integer `match * 10000 //
+                # num_hashes` on quotients inexact in binary
+                F.floor(agree * 10000 / num_hashes).cast("long")
+                .alias("est_jaccard_bp"),
+                F.col("band_id").cast("int").alias("band_id"))
+        )
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    state_schema = T.StructType([
+        T.StructField("ids", T.ArrayType(T.LongType())),
+        T.StructField("sigs", T.ArrayType(T.StringType())),
+        T.StructField("last_us", T.LongType()),
+    ])
+    wm_us = _parse_duration_us(watermark)
+
+    def fn(key, pdfs, state):
+        band = int(key[0])
+        ids, sigs, last_us = (
+            state.get if state.exists else ([], [], None))
+        ids, sigs = list(ids), list(sigs)
+        if state.hasTimedOut:
+            state.remove()
+            return
+        hits: list[tuple] = []
+        rows: list[tuple] = []
+        for pdf in pdfs:
+            for did, ts, s in zip(pdf["doc_id"], pdf["_ts"], pdf["_sig"]):
+                if pd.isna(ts):
+                    continue
+                rows.append((int(pd.Timestamp(ts).value // 1000),
+                             int(did), [int(x) for x in s]))
+        for t_us, did, s in sorted(rows):
+            for mid, stored in zip(ids, sigs):
+                if mid == did:
+                    continue
+                comp = stored.split(",")
+                match = sum(1 for x, y in zip(comp, s)
+                            if int(x) == y)
+                if match >= need:
+                    hits.append((did, mid,
+                                 match * 10000 // num_hashes, band))
+            ids.append(did)
+            sigs.append(",".join(str(x) for x in s))
+            if len(ids) > max_bucket_state:  # LRU cap
+                ids.pop(0), sigs.pop(0)
+            last_us = t_us if last_us is None else max(last_us, t_us)
+        if last_us is None:
+            if state.exists:
+                state.remove()
+        else:
+            state.update((ids, sigs, last_us))
+            state.setTimeoutTimestamp((last_us + wm_us) // 1000)
+        if hits:
+            yield pd.DataFrame(
+                hits, columns=["doc_id", "matched_id",
+                               "est_jaccard_bp", "band_id"])
+
+    return (
+        exploded.withWatermark("_ts", watermark)
+        .groupBy("band_id", "band_hash")
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
+def _parse_duration_us(s: str) -> int:
+    """'1 hour' / '30 Minutes' / '2 days' → microseconds.  Accepts the
+    same unit set Spark's CalendarInterval watermark parser does
+    (ms/second/minute/hour/day/week, any case, singular or plural)."""
+    parts = s.strip().split()
+    if len(parts) != 2:
+        raise ValueError(f"duration must be '<n> <unit>': {s!r}")
+    n, unit = parts
+    unit = unit.lower()
+    if unit != "ms":
+        unit = unit.rstrip("s")
+    mult = {"millisecond": 0.001, "ms": 0.001, "second": 1,
+            "minute": 60, "hour": 3600, "day": 86400,
+            "week": 604800}.get(unit)
+    if mult is None:
+        raise ValueError(f"unsupported duration unit in {s!r}")
+    return int(float(n) * mult * 1_000_000)
+
+
+# ---------------------------------------------------------------------------
+# dedup keep-policy: clusters → one surviving representative each
+
+
+def build_minhash_index(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_k: int = 5,
+    family=xxhash_family,
+) -> DataFrame:
+    """The persistable side of INCREMENTAL near-dedup: the corpus's
+    banded minhash table — ``(doc_id, band_id, band_hash, sig)``, one
+    row per (doc, band).
+
+    Production shape: compute ONCE per corpus snapshot and write it out
+    (``.write.bucketBy(N, "band_id", "band_hash")`` or partitioned
+    parquet); every subsequent crawl increment joins against the stored
+    index instead of re-hashing the full corpus — at 100 TB that is the
+    difference between an O(increment) job and an O(corpus) one per
+    ingest."""
+    from ..plans.stagecut import stage_boundary
+
+    rows_per_band = num_hashes // bands
+    # boundary: every band below slices `sig`, and CollapseProject
+    # would otherwise re-inline the full num_hashes-wide minhash
+    # expression (itself over the shingle expression) into each band —
+    # the same O(bands × num_hashes) blowup minhash_lsh_pairs guards
+    # against (measured here: 41 s → ~1 s for a 5k-doc index build)
+    base = stage_boundary(docs.select(
+        F.col(id_col).alias("doc_id"),
+        minhash_signature(shingles(F.col(text_col), shingle_k),
+                          num_hashes, family).alias("sig")))
+    return base.where(F.size("sig") == num_hashes).select(
+        "doc_id", "sig",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.xxhash64(F.slice("sig", b * rows_per_band + 1,
+                                   rows_per_band)).alias("band_hash"))
+            for b in range(bands)
+        ])).alias("_b"),
+    ).select("doc_id", F.col("_b.band_id").alias("band_id"),
+             F.col("_b.band_hash").alias("band_hash"), "sig")
+
+
+def incremental_dedup_pairs(
+    new_docs: DataFrame,
+    index: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_k: int = 5,
+    sim_threshold: float = 0.8,
+    family=xxhash_family,
+) -> DataFrame:
+    """Near-dup candidates of a NEW batch against an existing corpus
+    index (from :func:`build_minhash_index`, same parameters) — the
+    recurring-ingest twin of :func:`minhash_lsh_pairs`: only the new
+    batch pays signature compute; the corpus side is a stored table.
+
+    Semantics match :func:`streaming_near_dedup`'s batch contract:
+    a (new, corpus) pair is emitted (once, distinct) when some band
+    collides AND signature agreement ≥ ``ceil(sim_threshold ·
+    num_hashes)``; ``est_jaccard_bp`` is the integer basis-point
+    agreement estimate (floor, engine-stable).
+
+    Scale shape: banded equi-join on (band_id, band_hash) — with the
+    index bucketed on those keys the corpus side never reshuffles; the
+    increment side (small) is the one that moves. Pinned by the plan
+    contract in tests/test_incremental_index.py (one band-keyed
+    Exchange bucketed vs two plain; corpus scan `Bucketed: true`).
+    """
+    need = int(sim_threshold * num_hashes + 0.9999)
+    fresh = build_minhash_index(
+        new_docs, text_col, id_col, num_hashes, bands, shingle_k, family)
+    n, c = fresh.alias("n"), index.alias("c")
+    agree = F.size(F.filter(
+        F.zip_with(F.col("n.sig"), F.col("c.sig"),
+                   lambda x, y: (x == y).cast("int")),
+        lambda v: v == 1))
+    return (
+        n.join(c, ["band_id", "band_hash"])
+        .where(F.col("n.doc_id") != F.col("c.doc_id"))
+        .select(
+            F.col("n.doc_id").alias("new_id"),
+            F.col("c.doc_id").alias("corpus_id"),
+            agree.alias("_agree"))
+        # filter BEFORE the pair dedup (r13, the pair-family rule):
+        # agreement is a pure function of the two signatures, so the
+        # dedup exchange needn't carry sub-threshold band collisions
+        .where(F.col("_agree") >= need)
+        .dropDuplicates(["new_id", "corpus_id"])
+        .select(
+            "new_id", "corpus_id",
+            F.floor(F.col("_agree") * 10000 / num_hashes).cast("long")
+            .alias("est_jaccard_bp"))
+    )
+
+
+def build_fingerprint_index(
+    hashes: DataFrame,
+    hash_col: str = "hash",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    bands: int | None = None,
+) -> DataFrame:
+    """The persistable side of INCREMENTAL fingerprint near-dedup —
+    :func:`build_minhash_index`'s twin for ANY 64-bit fingerprint
+    column (simhash, image dHash, audio sub-fingerprints): the banded
+    slice table ``(doc_id, band, bhash, fp)``, one row per (doc,
+    band), same even-width slicing as :func:`hamming_pairs`.
+
+    Production shape: compute once per corpus snapshot, write out
+    bucketed on (band, bhash); each ingest increment joins against the
+    stored index — O(increment), never O(corpus) (r12 fingerprints
+    were batch-only; this gives streaming corpora the same near-dup
+    increment the minhash path has)."""
+    return _banded_hash_frame(hashes, hash_col, id_col, bands,
+                              max_hamming).select(
+        F.col("_id").alias("doc_id"), "band", "bhash",
+        F.col("_h").alias("fp"))
+
+
+def incremental_hamming_pairs(
+    new_hashes: DataFrame,
+    index: DataFrame,
+    hash_col: str = "hash",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    bands: int | None = None,
+) -> DataFrame:
+    """Hamming near-dup candidates of a NEW batch against a stored
+    :func:`build_fingerprint_index` (built with the same
+    max_hamming/bands): banded equi-join on (band, bhash) + one
+    ``bit_count(xor)`` verify — only new-vs-corpus pairs are computed,
+    never old-vs-old (the increment contract
+    :func:`incremental_dedup_pairs` defines for minhash).
+
+    Output: (new_id, corpus_id, hamming), hamming ≤ max_hamming, one
+    row per DISTINCT-id pair. A new-batch id that is ALSO in the index
+    does NOT pair with itself (the join requires new_id ≠ corpus_id):
+    same-id re-ingest is exact-identity territory — detect it with the
+    shard manifest / content hash, not the near-dup path. A re-ingest
+    under a NEW id pairs at hamming 0 like any other near-dup.
+
+    Scale shape: the corpus side never reshuffles when the index is
+    bucketed on (band, bhash); the (small) increment is the moving
+    side. PLAN CONTRACT, not prose: tests/test_incremental_index.py
+    writes the index via plans.bucketing.write_bucketed, reads it
+    back, and asserts the final plan has exactly one band-keyed
+    Exchange (the increment) with the corpus scan `Bucketed: true` —
+    vs two when the same files are read as plain parquet.
+    Filter-then-dedup per the pair-family rule."""
+    fresh = _banded_hash_frame(new_hashes, hash_col, id_col, bands,
+                               max_hamming)
+    n, c = fresh.alias("n"), index.alias("c")
+    hamming = F.bit_count(F.col("n._h").bitwiseXOR(F.col("c.fp")))
+    return (
+        n.join(c, (F.col("n.band") == F.col("c.band"))
+               & (F.col("n.bhash") == F.col("c.bhash"))
+               & (F.col("n._id") != F.col("c.doc_id")))
+        .select(F.col("n._id").alias("new_id"),
+                F.col("c.doc_id").alias("corpus_id"),
+                hamming.alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["new_id", "corpus_id"])
     )
 
 
@@ -254,3 +1583,463 @@ def apply_dedup_policy(
         .cast("long").alias("cluster_size"),
         (F.row_number().over(w) == 1).cast("int").alias("is_kept"),
     )
+
+
+# ---------------------------------------------------------------------------
+# per-document n-gram novelty — the "unique n-gram fraction" card metric
+
+
+def ngram_novelty(
+    docs: DataFrame,
+    n: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Per-document NOVELTY: what share of a doc's distinct word
+    n-grams appears in no other document. The dataset-card diversity
+    metric (a corpus whose docs average 20% novel n-grams is mostly
+    re-statements of itself), the memorization-risk signal (low-novelty
+    docs are the ones a model can reproduce from elsewhere in the
+    corpus), and the complement of the dedup family: despan REMOVES
+    cross-doc repeated windows, novelty MEASURES per-doc how much would
+    survive.
+
+    Same shingle normalization as the minhash/despan family
+    (:func:`shingles` — lowercased, whitespace-collapsed, distinct;
+    docs shorter than n words contribute their whole text as one
+    gram). Grams travel as 60-bit md5 integers, never strings.
+
+    Output: id, ``n_grams`` (distinct in the doc), ``n_novel`` (corpus
+    doc-frequency = 1), ``novelty_bp`` (integer basis points).
+
+    Scale shape (r12 — no gram join-back): a NOVEL gram (corpus
+    doc-frequency 1) has exactly one owner, so ``min(id)`` inside the
+    gram-frequency aggregate attributes it for free — per-doc novel
+    counts then come from a second (map-side-combined, ≤ one row per
+    doc) groupBy over the df==1 slice, and ``n_grams`` is just
+    ``size(shingles())`` computed natively on the scan. The gram
+    stream is therefore exploded + hashed ONCE and shuffled ONCE (the
+    doc-frequency groupBy); the old plan joined the full gram stream
+    back to its own frequency table — a second full-width shuffle AND
+    a second explode+md5 pass (the r11 bench's noisiest row: ±55%
+    spread from exactly that GC pressure). No pair joins, no global
+    sort; every post-explode intermediate is bounded by the
+    distinct-gram or doc count.
+    """
+    h = md5_hash_family(0)
+    counts = docs.select(
+        F.col(id_col),
+        F.size(shingles(F.col(text_col), n)).cast("long")
+        .alias("n_grams"),
+    ).where(F.col("n_grams").isNotNull())   # NULL text ⇒ no output row
+    gh = docs.select(
+        F.col(id_col),
+        F.explode(shingles(F.col(text_col), n)).alias("_g"),
+    ).select(F.col(id_col), h(F.col("_g")).alias("_h"))
+    novel = (
+        gh.groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_df"), F.min(id_col).alias(id_col))
+        .where(F.col("_df") == 1)
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_novel"))
+    )
+    return counts.join(novel, id_col, "left").select(
+        id_col, "n_grams",
+        F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),
+    ).withColumn(
+        "novelty_bp",
+        F.expr("n_novel * 10000 div n_grams").cast("long"))
+
+
+def ngram_novelty_sql(
+    from_sql: str,
+    n: int = 3,
+    text_expr: str = "text",
+    id_expr: str = "doc_id",
+    id_alias: str = "doc_id",
+) -> str:
+    """DuckDB mirror of :func:`ngram_novelty` (same normalization,
+    same md5 gram hash, same doc-frequency join)."""
+    slice_end = f"i + {n - 1}"
+    return f"""
+        WITH base AS (
+          SELECT {id_expr} AS {id_alias},
+                 string_split(trim(regexp_replace(lower({text_expr}),
+                     '\\s+', ' ', 'g')), ' ') AS words
+          FROM {from_sql}
+        ),
+        sh AS (
+          SELECT {id_alias},
+                 list_distinct(CASE WHEN len(words) >= {n}
+                   THEN list_transform(range(1, len(words) - {n} + 2),
+                        i -> array_to_string(
+                               list_slice(words, i, {slice_end}), ' '))
+                   ELSE [array_to_string(words, ' ')] END) AS grams
+          FROM base
+        ),
+        gh AS (
+          SELECT {id_alias},
+                 CAST(('0x' || substr(md5('0:' || g), 1, 15)) AS BIGINT)
+                   AS h
+          FROM sh, unnest(grams) AS t(g)
+        ),
+        freq AS (SELECT h, count(*) AS df FROM gh GROUP BY h)
+        SELECT gh.{id_alias} AS {id_alias},
+               CAST(count(*) AS BIGINT) AS n_grams,
+               CAST(sum(CASE WHEN freq.df = 1 THEN 1 ELSE 0 END)
+                 AS BIGINT) AS n_novel,
+               CAST(sum(CASE WHEN freq.df = 1 THEN 1 ELSE 0 END)
+                 * 10000 // count(*) AS BIGINT) AS novelty_bp
+        FROM gh JOIN freq USING (h)
+        GROUP BY gh.{id_alias}
+    """
+
+
+def containment_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    threshold_bp: int = 8000,
+    block_col: Column | None = None,
+) -> DataFrame:
+    """ASYMMETRIC n-gram containment pairs — the quote/mirror detector
+    Jaccard misses: a short document wrapped in boilerplate inside a
+    long one has LOW Jaccard (union is dominated by the long doc) but
+    HIGH containment C(B⊆A) = |grams(A)∩grams(B)| / |grams(B)|. This
+    is the asymmetric complement of :func:`ngram_jaccard_pairs` (same
+    shingles, same blocking contract — swap LSH buckets in via
+    ``block_col`` at scale), keeping pairs where EITHER direction's
+    containment reaches ``threshold_bp``.
+
+    All-integer output: ``contain_a_bp`` (how much of A is inside B),
+    ``contain_b_bp`` (how much of B is inside A), ``jaccard_bp`` rides
+    along for context. Scale shape: identical to the Jaccard path —
+    blocked equi-join candidates, per-pair array intersection, no
+    global state.
+    """
+    block = (block_col if block_col is not None
+             else F.split(F.trim(_normalize(F.col(text_col))), " ")[0])
+    base = docs.select(
+        F.col(id_col).alias("_id"),
+        shingles(F.col(text_col), shingle_k).alias("_sh"),
+        block.alias("_blk"),
+    )
+    l, r = base.alias("l"), base.alias("r")
+    cand = l.join(
+        r, (F.col("l._blk") == F.col("r._blk"))
+        & (F.col("l._id") < F.col("r._id")))
+    inter = F.size(F.array_intersect(F.col("l._sh"), F.col("r._sh")))
+    sa = F.size(F.col("l._sh"))
+    sb = F.size(F.col("r._sh"))
+    # |A∪B| = sa + sb − inter exactly (shingles() arrays are distinct);
+    # the integer div below sees the identical int without array_union
+    # materializing a merged array per candidate row.
+    union = sa + sb - inter
+    out = cand.select(
+        F.col("l._id").alias("id_a"),
+        F.col("r._id").alias("id_b"),
+        # long BEFORE the multiply: F.size is int32, and a >~214k-gram
+        # document would wrap inter*10000 (DuckDB computes it in BIGINT)
+        (inter.cast("long") * 10000).alias("_i10k"),
+        sa.alias("_sa"), sb.alias("_sb"), union.alias("_u"),
+    ).select(
+        "id_a", "id_b",
+        F.expr("_i10k div _sa").cast("long").alias("contain_a_bp"),
+        F.expr("_i10k div _sb").cast("long").alias("contain_b_bp"),
+        F.expr("_i10k div _u").cast("long").alias("jaccard_bp"),
+    )
+    return out.where(
+        (F.col("contain_a_bp") >= threshold_bp)
+        | (F.col("contain_b_bp") >= threshold_bp))
+
+
+def containment_pairs_sql(
+    from_sql: str,
+    text_expr: str = "text",
+    id_expr: str = "doc_id",
+    shingle_k: int = 3,
+    threshold_bp: int = 8000,
+    blocked: bool = True,
+) -> str:
+    """DuckDB mirror of :func:`containment_pairs` (same shingles, same
+    first-token block, same integer bp). ``blocked=False`` drops the
+    block clause — the ALL-pairs reference that mirrors
+    :func:`containment_pairs_prefix` (whose prefix filter is complete,
+    so brute force is the right oracle)."""
+    k = shingle_k
+    join_on = ("a.blk = b.blk AND a.id < b.id" if blocked
+               else "a.id < b.id")
+    return f"""
+        WITH base AS (
+          SELECT {id_expr} AS id,
+                 string_split(trim(regexp_replace(lower({text_expr}),
+                     '\\s+', ' ', 'g')), ' ') AS words
+          FROM {from_sql}
+        ),
+        sh AS (
+          SELECT id, words[1] AS blk,
+                 list_distinct(CASE WHEN len(words) >= {k}
+                   THEN list_transform(range(1, len(words) - {k} + 2),
+                        i -> array_to_string(
+                               list_slice(words, i, i + {k - 1}), ' '))
+                   ELSE [array_to_string(words, ' ')] END) AS grams
+          FROM base
+        ),
+        pairs AS (
+          SELECT a.id AS id_a, b.id AS id_b,
+                 len(list_intersect(a.grams, b.grams)) * 10000 AS i10k,
+                 len(a.grams) AS sa, len(b.grams) AS sb,
+                 len(list_distinct(list_concat(a.grams, b.grams))) AS u
+          FROM sh a JOIN sh b ON {join_on}
+        )
+        SELECT id_a, id_b,
+               CAST(i10k // sa AS BIGINT) AS contain_a_bp,
+               CAST(i10k // sb AS BIGINT) AS contain_b_bp,
+               CAST(i10k // u AS BIGINT) AS jaccard_bp
+        FROM pairs
+        WHERE i10k // sa >= {threshold_bp}
+           OR i10k // sb >= {threshold_bp}
+    """
+
+
+def containment_pairs_prefix(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    threshold_bp: int = 8000,
+) -> DataFrame:
+    """Exact containment pairs via PREFIX FILTERING — the production
+    scale path for :func:`containment_pairs`, complete over ALL pairs
+    (no first-token block, whose Zipf-head bucket goes quadratic at
+    corpus scale — the same reason :func:`ngram_jaccard_pairs_prefix`
+    exists for the Jaccard sibling).
+
+    Completeness guarantee (SSJoin/PPJoin prefix principle applied to
+    the CONTAINMENT bound): order every doc's shingles by ascending
+    global document frequency (ties by shingle value). A kept pair has
+    some direction with ``(inter·10000) div |B| ≥ threshold_bp``, i.e.
+    ``inter ≥ α_B = ceil(|B|·threshold_bp / 10000)`` — so at most
+    ``|B| − α_B`` of B's shingles lie outside A, and B's PREFIX of
+    length ``|B| − α_B + 1`` must contain a shingle of A. Candidates
+    therefore come from joining each doc's prefix shingles against
+    EVERY doc's full shingle postings: the head-of-Zipf shingle is
+    LAST in the DF order, so it enters a prefix only for docs whose
+    prefix is nearly the whole doc — pair volume is governed by RARE
+    shingles on the prefix side, never full×full on a hot key.
+
+    Shuffle budget: one DF groupBy, one join back, one prefix⋈full
+    equi-join on the shingle, two hash joins to re-attach the shingle
+    arrays for verification. No cross join at any size; all-integer bp
+    output identical to the brute path. Shingles are hashed to int64
+    (xxhash64) immediately after shingling, so every downstream
+    shuffle, sort, and intersect moves 8-byte longs instead of ~25-char
+    gram strings (measured 4.1 s → 2.7 s at sf0.1); a count divergence
+    from the string path needs an xxhash64 collision between two grams
+    of the same candidate pair (~|grams|²/2⁶⁵ ≈ 1e-19 per pair — the
+    standard shingle-hashing tradeoff every minhash pipeline makes).
+    """
+    from ..plans.stagecut import stage_boundary
+
+    tb = int(threshold_bp)
+    # Explicit isnotnull(id): the brute path's `l._id < r._id` join
+    # condition already drops null-id docs (NULL comparisons are never
+    # true), and this path documents output identity with it — while
+    # least/greatest SKIP nulls, so without this filter a null-id doc
+    # could sneak a degenerate (f, f) self-pair through the candidate
+    # join. It also aligns every branch's subtree: Catalyst infers
+    # IsNotNull(_id) from the verify equi-joins on ONE consumer of the
+    # `ordered` aggregate only, and that one-sided inferred Filter is
+    # what kept AQE's ReuseExchange from unifying the aggregate's two
+    # executions (r14 runtime plan, Exchange 2086 vs 2120).
+    base = stage_boundary(docs.where(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("_id"),
+        F.transform(shingles(F.col(text_col), shingle_k),
+                    lambda g: F.xxhash64(g)).alias("_sh"),
+    ))
+    tok = base.select("_id", F.size("_sh").alias("_n"),
+                      F.explode("_sh").alias("_t"))
+    freq = tok.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
+    # ONE aggregate shape feeds both the prefix side and the verify
+    # arrays, and both consumers demand exactly (_id, _ord). The r14
+    # runtime plan showed the join+aggregate executing TWICE (Exchange
+    # plan_ids 2086 vs 2120 in containment_pairs_prefix_after_runtime)
+    # because pref also demanded the count(1) column `_n` while the
+    # verify arrays pruned it — column pruning made the two exchange
+    # subtrees differ, so AQE's ReuseExchange could not fire. `_n` is
+    # exactly size(_ord) (collect_list over never-null structs keeps
+    # one element per tok row), so the count aggregate drops and every
+    # consumer derives the doc size from the array instead.
+    ordered = (
+        tok.join(freq, "_t")
+        .groupBy("_id")
+        .agg(F.array_sort(F.collect_list(F.struct("_df", "_t")))
+             .alias("_ord"))
+    )
+    arrd = ordered.select(
+        "_id", F.transform("_ord", lambda s: s.getField("_t")).alias("_shd"))
+    # α = ceil(n·tb/10000) in pure integer math; prefix = n − α + 1
+    alpha = F.expr(f"(size(_shd) * {tb} + 9999) div 10000")
+    plen = (F.size("_shd") - alpha + 1).cast("int")
+    pref = arrd.select(
+        "_id", F.size("_shd").cast("long").alias("_np"),
+        F.explode(F.slice("_shd", F.lit(1), plen)).alias("_t"),
+    )
+    # SIZE CONDITION: the kept condition is inter ≥ ceil(t·min(sa,sb)),
+    # so only the SMALLER doc's prefix needs to hit the larger doc's
+    # postings (ties break by id so each unordered pair is generated
+    # from exactly one direction) — halves raw candidates (measured
+    # 971k → 491k at sf0.1). The FULL-side postings are the raw token
+    # explode — routing them through the DF-ordered collect/posexplode
+    # path would rebuild every array a second time for no reason
+    # (order is irrelevant on the probe side). NO distinct before
+    # verification: duplicate candidates cost a few % of verify work
+    # while a distinct would shuffle the full candidate stream; the
+    # final tiny verified output deduplicates instead.
+    p, f_ = pref.alias("p"), tok.alias("f")
+    cand = (
+        p.join(f_, (F.col("p._t") == F.col("f._t"))
+               & ((F.col("p._np") < F.col("f._n"))
+                  | ((F.col("p._np") == F.col("f._n"))
+                     & (F.col("p._id") < F.col("f._id")))))
+        .select(F.least("p._id", "f._id").alias("id_a"),
+                F.greatest("p._id", "f._id").alias("id_b"))
+    )
+    # verify arrays come from the same `arrd` projection as the prefix
+    # side (r14: from `ordered`, not two fresh base subplans — _ord
+    # already holds every distinct shingle hash and intersect/union are
+    # order-insensitive), so the aggregate executes once and its
+    # exchange is stage-reused by every consumer.
+    arr = arrd
+    withsh = cand.join(
+        arr.select(F.col("_id").alias("id_a"), F.col("_shd").alias("sh_a")),
+        "id_a",
+    ).join(
+        arr.select(F.col("_id").alias("id_b"), F.col("_shd").alias("sh_b")),
+        "id_b",
+    )
+    # |A∪B| = sa + sb − |A∩B| exactly (the shingle arrays are
+    # array_distinct'd), so array_union — which materializes the merged
+    # array per candidate row just to take its size — drops entirely;
+    # _u below is pure integer arithmetic on sizes already in hand.
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    out = withsh.select(
+        "id_a", "id_b",
+        (inter.cast("long") * 10000).alias("_i10k"),
+        F.size("sh_a").alias("_sa"), F.size("sh_b").alias("_sb"),
+    ).select(
+        "id_a", "id_b",
+        F.expr("_i10k div _sa").cast("long").alias("contain_a_bp"),
+        F.expr("_i10k div _sb").cast("long").alias("contain_b_bp"),
+        F.expr("_i10k div (_sa + _sb - (_i10k div 10000))")
+        .cast("long").alias("jaccard_bp"),
+    )
+    # a pair reached via several shared prefix tokens appears once per
+    # token; every copy carries identical bp values, so dedupe the
+    # (tiny) post-filter output rather than the full candidate stream
+    return out.where(
+        (F.col("contain_a_bp") >= tb) | (F.col("contain_b_bp") >= tb)
+    ).dropDuplicates(["id_a", "id_b"])
+
+
+class FingerprintIndexIngest:
+    """Streaming ingest for incremental fingerprint near-dedup — the
+    foreachBatch composition of :func:`build_fingerprint_index` +
+    :func:`incremental_hamming_pairs` (r14, the streaming twin of the
+    text path's index-vs-increment contract):
+
+    per micro-batch, :meth:`ingest`
+    1. dedups the NEW docs against the STORED index — new-vs-corpus
+       pairs only; old-vs-old is STRUCTURALLY absent (the index is
+       only ever the probe target of the banded equi-join, never
+       self-joined — assert it on the plan: exactly one join, one
+       index scan),
+    2. dedups new-vs-new within the batch (:func:`hamming_pairs` —
+       batch-sized, tiny),
+    3. appends the SURVIVORS' banded rows to the index, so batch N+1
+       sees them as corpus.
+
+    Keep policy (deterministic, order-free): a new doc is dropped when
+    it matches ANY corpus member, or ANY lower-id doc of its own batch
+    (greedy first-wins; a doc matching only a dropped batch-mate is
+    still dropped — conservative on transitive near-dup chains).
+
+    Index layout: append-only parquet at ``path`` in the
+    :func:`build_fingerprint_index` schema (doc_id, band, bhash, fp).
+    At scale, compact periodically into a table bucketed on
+    (band, bhash) via ``plans.bucketing.write_bucketed`` — the
+    corpus side then never reshuffles (the tests/
+    test_incremental_index.py plan contract); the per-batch appends
+    between compactions are increment-sized.
+    """
+
+    def __init__(self, path: str, hash_col: str = "hash",
+                 id_col: str = "doc_id", max_hamming: int = 3,
+                 bands: int | None = None):
+        self.path = path
+        self.hash_col = hash_col
+        self.id_col = id_col
+        self.max_hamming = max_hamming
+        self.bands = bands
+
+    def _index(self, spark):
+        from pyspark.errors import AnalysisException
+
+        try:
+            return spark.read.parquet(self.path)
+        except AnalysisException as exc:
+            # ONLY a missing path means "first batch, no index yet".
+            # Any other failure (permissions, corrupt footer, schema)
+            # must raise: swallowing it would silently restart dedup
+            # from an EMPTY index and re-admit the whole corpus's
+            # near-dups downstream.
+            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" \
+                    in str(exc):
+                return None
+            raise
+
+    def ingest(self, batch: DataFrame) -> DataFrame:
+        """→ per-new-doc verdict: (doc_id, n_corpus_matches,
+        n_batch_matches, is_kept); appends kept docs' banded rows to
+        the stored index. The verdict is computed (and the append
+        written) eagerly — foreachBatch semantics."""
+        spark = batch.sparkSession
+        new = batch.select(F.col(self.id_col).alias("doc_id"),
+                           F.col(self.hash_col).alias("hash"))
+        index = self._index(spark)
+        if index is not None:
+            cpairs = incremental_hamming_pairs(
+                new, index, max_hamming=self.max_hamming,
+                bands=self.bands)
+            corpus_hits = cpairs.groupBy("new_id").agg(
+                F.count(F.lit(1)).alias("n_corpus_matches"))
+        else:
+            corpus_hits = spark.createDataFrame(
+                [], "new_id long, n_corpus_matches long")
+        bpairs = hamming_pairs(new, max_hamming=self.max_hamming,
+                               bands=self.bands)
+        batch_hits = bpairs.groupBy("id_b").agg(
+            F.count(F.lit(1)).alias("n_batch_matches"))
+        verdict = (
+            new.join(corpus_hits,
+                     new["doc_id"] == corpus_hits["new_id"], "left")
+            .join(batch_hits, new["doc_id"] == batch_hits["id_b"],
+                  "left")
+            .select(
+                "doc_id", "hash",
+                F.coalesce("n_corpus_matches", F.lit(0)).cast("long")
+                .alias("n_corpus_matches"),
+                F.coalesce("n_batch_matches", F.lit(0)).cast("long")
+                .alias("n_batch_matches"))
+            .withColumn(
+                "is_kept",
+                ((F.col("n_corpus_matches") == 0)
+                 & (F.col("n_batch_matches") == 0)).cast("long"))
+        )
+        kept = verdict.where(F.col("is_kept") == 1) \
+            .select("doc_id", "hash")
+        build_fingerprint_index(
+            kept, max_hamming=self.max_hamming, bands=self.bands,
+        ).write.mode("append").parquet(self.path)
+        return verdict.drop("hash")

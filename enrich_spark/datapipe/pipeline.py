@@ -7,14 +7,15 @@ list configures the corpus-curation steps the same way).
 A pipeline is a list of steps; each step names a registered op and its
 params. Ops come in three kinds:
 
-- **annotate** — add columns (language, quality score). Never changes
-  row count.
+- **annotate** — add columns (language, quality score, token counts,
+  importance weight, split assignment). Never changes row count.
 - **filter** — keep a subset (language allowlist, quality floor, C4
-  verdict, exact/near dedup keep). Never changes columns the user
-  selected.
-- **transform** — rewrite the text column (normalization, PII scrub).
+  verdict, deterministic sample, exact/near dedup keep, benchmark
+  decontamination). Never changes columns the user selected.
+- **transform** — rewrite the text column (PII scrub, duplicate-span
+  removal).
 
-Everything stays one lazy DataFrame plan end-to-end — a 7-step
+Everything stays one lazy DataFrame plan end-to-end — a 10-step
 pipeline is still ONE Spark job when written to a sink, with Catalyst
 free to reorder filters below annotations it doesn't need. The
 optional report mode materializes per-step retention counts (one
@@ -30,7 +31,9 @@ Example::
         {"op": "c4_keep"},
         {"op": "pii_scrub"},
         {"op": "exact_dedup_keep"},
-        {"op": "near_dedup_keep", "jaccard_threshold": 0.8},
+        {"op": "decontaminate", "benchmark": bench_df, "k": 8},
+        {"op": "stratified_sample", "fractions": {"web": 0.5}},
+        {"op": "leakage_split", "pairs": pairs_df},
     ]
     out = run_pipeline(docs, steps)
 """
@@ -69,6 +72,12 @@ def _op_min_quality(docs, threshold=0.5, text_col="text", **_):
     if "quality_score" not in docs.columns:
         docs = _op_quality_score(docs, text_col)
     return docs.where(F.col("quality_score") >= float(threshold))
+
+
+def _op_token_counts(docs, text_col="text", **_):
+    from .text import token_counts
+
+    return token_counts(docs, text_col)
 
 
 def _op_c4_keep(docs, text_col="text", id_col="doc_id", **_):
@@ -111,6 +120,81 @@ def _op_near_dedup_keep(docs, text_col="text", id_col="doc_id",
             .where(F.col("is_kept") == 1).drop("is_kept"))
 
 
+def _op_decontaminate(docs, benchmark, k=8, text_col="text",
+                      id_col="doc_id", **_):
+    from .dedup import contamination_check
+
+    hits = contamination_check(
+        docs, benchmark, k=k, text_col=text_col, id_col=id_col,
+    ).select(id_col, "contaminated_windows")
+    return (docs.join(hits, on=id_col, how="left")
+            .where(F.coalesce(F.col("contaminated_windows"), F.lit(0)) == 0)
+            .drop("contaminated_windows"))
+
+
+def _op_stratified_sample(docs, fractions, stratum_col="source",
+                          id_col="doc_id", seed=42, default_fraction=0.0,
+                          **_):
+    from .curation import stratified_sample
+
+    return stratified_sample(docs, fractions, stratum_col, id_col,
+                             seed=seed, default_fraction=default_fraction)
+
+
+def _op_dsir_weight(docs, ratios, n_buckets=512, text_col="text",
+                    id_col="doc_id", **_):
+    from .dsir import apply_dsir
+
+    w = apply_dsir(docs, ratios, id_col=id_col, text_col=text_col,
+                   n_buckets=n_buckets).select(id_col, "weight_unats")
+    return docs.join(w, on=id_col, how="left")
+
+
+def _op_leakage_split(docs, pairs=None, fractions=None, id_col="doc_id",
+                      seed=7, **_):
+    from .curation import leakage_safe_split
+
+    s = leakage_safe_split(
+        docs.select(id_col), pairs, fractions, id_col=id_col,
+        seed=seed).select(id_col, "split")
+    return docs.join(s, on=id_col, how="inner")
+
+
+def _op_per_group_cap(docs, k, group_col="source", id_col="doc_id",
+                      seed=42, **_):
+    """At most k docs per group (deterministic md5-rank sample) — the
+    per-domain cap every web-corpus recipe applies."""
+    from .layout import sample_exact_k_per_group
+
+    return sample_exact_k_per_group(docs, k, group_col, id_col, seed)
+
+
+def _op_despan(docs, k=8, text_col="text", id_col="doc_id", **_):
+    from .dedup import remove_duplicate_spans
+
+    cleaned = remove_duplicate_spans(
+        docs, k=k, text_col=text_col, id_col=id_col).select(
+        id_col, "cleaned_text")
+    return (docs.join(cleaned, on=id_col, how="inner")
+            .drop(text_col)
+            .withColumnRenamed("cleaned_text", text_col))
+
+
+def _op_boilerplate_lines(docs, max_doc_freq=2, min_line_chars=8,
+                          text_col="text", id_col="doc_id", **_):
+    """Cut corpus-frequent lines out of every doc (cross-document line
+    dedup) — the text column is rewritten in place."""
+    from .dedup import remove_boilerplate_lines
+
+    cleaned = remove_boilerplate_lines(
+        docs, max_doc_freq=max_doc_freq, text_col=text_col,
+        id_col=id_col, min_line_chars=min_line_chars).select(
+        id_col, "clean_text")
+    return (docs.join(cleaned, on=id_col, how="inner")
+            .drop(text_col)
+            .withColumnRenamed("clean_text", text_col))
+
+
 def _op_normalize_text(docs, text_col="text", **_):
     """Rewrite the text column through the normalization chain
     (text.normalize_text_col) — pure map-side."""
@@ -119,19 +203,353 @@ def _op_normalize_text(docs, text_col="text", **_):
     return docs.withColumn(text_col, normalize_text_col(F.col(text_col)))
 
 
+def _op_quantile_bins(docs, score_col, k=10, max_distinct=1_000_000, **_):
+    """Annotate every doc with its score-quantile bin 1..k."""
+    from .curation import quantile_bins
+
+    return quantile_bins(docs, score_col, k=k, max_distinct=max_distinct)
+
+
+def _op_token_budget(docs, budget_tokens, score_col, token_col="n_tokens",
+                     id_col="doc_id", seed=42, **_):
+    """Keep the highest-priority docs whose tokens fit the budget
+    (curation.select_token_budget); the sel_key commitment is dropped
+    so the text column chain stays clean."""
+    from .curation import select_token_budget
+
+    return select_token_budget(
+        docs, budget_tokens, score_col, token_col=token_col,
+        id_col=id_col, seed=seed).drop("sel_key")
+
+
+def _op_weighted_sample(docs, k, weight_col, id_col="doc_id", seed=42,
+                        max_weight=64, **_):
+    """Keep a weighted sample of exactly min(k, n) docs (A-ES without
+    replacement, integer-exact keys — layout.weighted_sample_k)."""
+    from .layout import weighted_sample_k
+
+    return weighted_sample_k(docs, k, weight_col, id_col=id_col,
+                             seed=seed, max_weight=max_weight)
+
+
+def _op_script_profile(docs, text_col="text", id_col="doc_id", **_):
+    """Annotate with the Unicode writing-system profile (text.
+    script_profile) — per-script counts, dominant script, non-ASCII
+    share — joined back so downstream filters can route on it."""
+    from .text import script_profile
+
+    prof = script_profile(docs, text_col=text_col, id_col=id_col)
+    return docs.join(prof.drop("n_chars"), on=id_col, how="left")
+
+
+def _op_keep_scripts(docs, scripts, text_col="text", id_col="doc_id", **_):
+    """Keep docs whose dominant script is in ``scripts`` (computing the
+    profile first if absent) — the script-prior routing step that runs
+    BEFORE n-gram language ID."""
+    if "dominant_script" not in docs.columns:
+        docs = _op_script_profile(docs, text_col=text_col, id_col=id_col)
+    return docs.where(F.col("dominant_script").isin(*scripts))
+
+
+def _op_ngram_novelty(docs, n=3, text_col="text", id_col="doc_id", **_):
+    """Annotate with the per-doc novel n-gram share (dedup.
+    ngram_novelty) — n_grams / n_novel / novelty_bp columns."""
+    from .dedup import ngram_novelty
+
+    nov = ngram_novelty(docs, n=n, text_col=text_col, id_col=id_col)
+    return docs.join(nov, on=id_col, how="left")
+
+
+def _op_min_novelty(docs, threshold_bp, n=3, text_col="text",
+                    id_col="doc_id", **_):
+    """Drop docs whose novel-gram share is below ``threshold_bp`` —
+    the anti-restatement filter (computing novelty first if absent)."""
+    if "novelty_bp" not in docs.columns:
+        docs = _op_ngram_novelty(docs, n=n, text_col=text_col,
+                                 id_col=id_col)
+    return docs.where(F.col("novelty_bp") >= threshold_bp)
+
+
+def _op_lm_score(docs, text_col="text", id_col="doc_id", **_):
+    """Annotate every doc with the stupid-backoff LM score
+    (``avg_logp_micro``), counts trained on THIS corpus — the
+    self-scoring mode; to score under a reference-corpus LM call
+    :func:`enrich_spark.datapipe.lm.lm_score` with stored counts."""
+    from .lm import lm_counts, lm_score
+
+    scored = lm_score(docs, lm_counts(docs, text_col=text_col),
+                      text_col=text_col, id_col=id_col)
+    return docs.join(scored.select(id_col, "avg_logp_micro"),
+                     id_col, "left")
+
+
+def _op_min_lm_score(docs, threshold_micro, text_col="text",
+                     id_col="doc_id", **_):
+    """Drop docs whose per-token LM score is below ``threshold_micro``
+    — the CCNet perplexity-threshold filter (scoring first if the
+    column is absent)."""
+    if "avg_logp_micro" not in docs.columns:
+        docs = _op_lm_score(docs, text_col=text_col, id_col=id_col)
+    return docs.where(F.col("avg_logp_micro") >= threshold_micro)
+
+
+def _op_containment_dedup_keep(docs, threshold_bp=8000, shingle_k=3,
+                               text_col="text", id_col="doc_id", **_):
+    """Drop the CONTAINED side of each containment pair (the quote /
+    boilerplate-wrapped mirror Jaccard misses): contain_a ≥ t means A
+    is inside B → drop A; mutual containment (near-identical) drops
+    the higher id. Candidates come from the complete prefix-filtered
+    path (containment_pairs_prefix — no Zipf-head block)."""
+    from .dedup import containment_pairs_prefix
+
+    t = int(threshold_bp)
+    pairs = containment_pairs_prefix(
+        docs, text_col=text_col, id_col=id_col,
+        shingle_k=shingle_k, threshold_bp=t)
+    both = (F.col("contain_a_bp") >= t) & (F.col("contain_b_bp") >= t)
+    drop = pairs.select(
+        F.when(both, F.greatest("id_a", "id_b"))
+        .when(F.col("contain_a_bp") >= t, F.col("id_a"))
+        .otherwise(F.col("id_b")).alias(id_col)).distinct()
+    return docs.join(drop, id_col, "left_anti")
+
+
+def _op_domain_cap(docs, cap, domain_col="source", score_col=None,
+                   id_col="doc_id", **_):
+    """Keep at most ``cap`` docs per domain (curation.domain_cap's
+    salted two-phase top-cap), preferring higher ``score_col``."""
+    from .curation import domain_cap
+
+    return domain_cap(docs, int(cap), domain_col=domain_col,
+                      score_col=score_col,
+                      id_col=id_col).drop("domain_rank")
+
+
+def _op_chat_assemble(turns, conv_col="conv_id", idx_col="turn_idx",
+                      role_col="role", text_col="text",
+                      roles=("system", "user", "assistant"),
+                      mask_role="assistant", require_valid=False, **_):
+    """Transform (grain change): turn rows → one row per conversation
+    with assembled text + loss-mask spans (chat.chat_assemble).
+    ``require_valid`` drops conversations failing any structural flag
+    (alternation, known roles, ends-with-mask, no empty turns) — the
+    usual SFT ingest gate."""
+    from .chat import chat_assemble
+
+    out = chat_assemble(turns, conv_col=conv_col, idx_col=idx_col,
+                        role_col=role_col, text_col=text_col,
+                        roles=tuple(roles), mask_role=mask_role)
+    if require_valid:
+        out = out.where((F.col("alternation_ok") == 1)
+                        & (F.col("roles_ok") == 1)
+                        & (F.col("ends_with_mask") == 1)
+                        & (F.col("no_empty") == 1))
+    return out
+
+
+def _op_image_dedup_keep(docs, binary_col="media", id_col="doc_id",
+                         max_hamming=4, quality_col=None, **_):
+    """Filter: perceptual image near-dedup — dHash over the binary
+    column → banded Hamming pairs → connected components → keep one
+    representative per cluster (highest ``quality_col``, ties to the
+    lowest id). Rows whose media failed to decode (NULL dhash) are
+    KEPT — they never enter pair generation; route them separately
+    with a codec filter if they should be dropped."""
+    from .dedup import apply_dedup_policy, hamming_pairs
+    from .multimodal import image_dhash
+
+    hashes = image_dhash(docs, binary_col=binary_col, id_col=id_col) \
+        .where(F.col("dhash").isNotNull())
+    pairs = hamming_pairs(hashes, hash_col="dhash", id_col="doc_id",
+                          max_hamming=int(max_hamming))
+    verdict = apply_dedup_policy(docs, pairs, quality_col=quality_col,
+                                 id_col=id_col)
+    return docs.join(
+        verdict.where(F.col("is_kept") == 1).select(id_col),
+        id_col, "left_semi")
+
+
+def _op_code_profile(docs, text_col="text", id_col="doc_id",
+                     threshold_bp=2000, **_):
+    """Annotate: code-likeness signals + is_code flag
+    (text.code_profile) joined back onto the docs."""
+    from .text import code_profile
+
+    prof = code_profile(docs, text_col=text_col, id_col=id_col,
+                        threshold_bp=int(threshold_bp)).select(
+        id_col, "code_score_bp", "is_code")
+    return docs.join(prof, id_col, "left")
+
+
+def _op_code_filter(docs, mode="drop", text_col="text",
+                    id_col="doc_id", threshold_bp=2000, **_):
+    """Filter: route on code-likeness — mode='drop' keeps prose (the
+    web-corpus cleanup default), mode='keep' keeps code (building a
+    code corpus). The filter CONSUMES the annotation either way:
+    code_score_bp/is_code are dropped in both the pre-annotated and
+    the self-computed branch, so downstream steps see one schema
+    regardless of pipeline ordering (re-annotate with code_profile
+    after the filter if the scores are needed)."""
+    if mode not in ("drop", "keep"):
+        raise ValueError(f"code_filter: unknown mode {mode!r}")
+    if "is_code" not in docs.columns:
+        docs = _op_code_profile(docs, text_col=text_col, id_col=id_col,
+                                threshold_bp=threshold_bp)
+    return docs.where(
+        F.col("is_code") == (1 if mode == "keep" else 0)
+    ).drop("code_score_bp", "is_code")
+
+
+def _op_extract_code(docs, mode="prose", text_col="text",
+                     include_indented=False, **_):
+    """Transform: split markdown-fenced code out of each document
+    (text.extract_code_blocks) — the router composition that keeps a
+    mixed doc's prose from being penalized by its fences:
+
+    - mode='prose': ``text`` becomes the fence-stripped remainder
+      (every doc survives — prose-only gates downstream now score
+      prose only);
+    - mode='code': ``text`` becomes the joined fence bodies; docs
+      with no extracted code are dropped (the code-corpus stream);
+    - mode='annotate': keep both streams + stats as extra columns.
+    """
+    from .text import extract_code_blocks
+
+    if mode not in ("prose", "code", "annotate"):
+        raise ValueError(f"extract_code: unknown mode {mode!r}")
+    parts = extract_code_blocks(docs, text_col=text_col,
+                                include_indented=bool(include_indented))
+    if mode == "annotate":
+        return parts
+    src = "prose_text" if mode == "prose" else "code_text"
+    out = parts.drop(text_col).withColumnRenamed(src, text_col)
+    if mode == "code":
+        out = out.where(F.col("code_chars") > 0)
+    return out.drop("prose_text", "code_text", "fence_langs",
+                    "n_fences", "code_chars", "prose_chars")
+
+
+def _op_sft_dedup_keep(turns, conv_col="conv_id", idx_col="turn_idx",
+                       role_col="role", text_col="text",
+                       mask_role="assistant", max_hamming=8, **_):
+    """Transform (grain change): turn rows → assembled conversations
+    that SURVIVE assistant-content near-dedup (chat.sft_masked_dedup)
+    — the config-drivable SFT ingest: assemble, dedup on the masked
+    side only, keep the most-supervised copy per cluster."""
+    from .chat import chat_assemble, sft_masked_dedup
+
+    assembled = chat_assemble(turns, conv_col=conv_col,
+                              idx_col=idx_col, role_col=role_col,
+                              text_col=text_col, mask_role=mask_role)
+    # pass the assembled frame through: assembling twice would run the
+    # conversation window — the op's most expensive stage — twice
+    verdict = sft_masked_dedup(turns, mask_role=mask_role,
+                               max_hamming=int(max_hamming),
+                               assembled=assembled)
+    return assembled.join(
+        verdict.where(F.col("is_kept") == 1).select("conv_id"),
+        "conv_id", "left_semi")
+
+
+def _op_sft_decontam_drop(turns, benchmarks, conv_col="conv_id",
+                          idx_col="turn_idx", role_col="role",
+                          text_col="text", mask_role="assistant",
+                          min_overlap_windows=1, **_):
+    """Transform (grain change): turn rows → assembled conversations
+    whose MASKED (assistant) content shares no flagged n-gram window
+    with any benchmark (chat.sft_decontaminate) — the config-drivable
+    SFT eval-decontamination: a benchmark answer under a fresh prompt
+    is dropped with the conversation."""
+    from .chat import chat_assemble, sft_decontaminate
+
+    assembled = chat_assemble(turns, conv_col=conv_col,
+                              idx_col=idx_col, role_col=role_col,
+                              text_col=text_col, mask_role=mask_role)
+    hits = sft_decontaminate(
+        turns, benchmarks, mask_role=mask_role,
+        min_overlap_windows=int(min_overlap_windows),
+        assembled=assembled)
+    return assembled.join(
+        hits.where(F.col("contaminated")).select("conv_id"),
+        "conv_id", "left_anti")
+
+
+def _op_preference_pairs(responses, prompt_col="prompt_id",
+                         id_col="response_id", text_col="text",
+                         score_col="score", margin=1,
+                         mode="best_vs_worst",
+                         max_responses_per_prompt=None,
+                         max_pairs_per_prompt=None, **_):
+    """Transform (grain change): scored responses → (chosen, rejected)
+    preference pairs with the verbatim/margin guards and the r14
+    dirty-key caps (rlhf.preference_pairs)."""
+    from .rlhf import preference_pairs
+
+    return preference_pairs(
+        responses, prompt_col=prompt_col, id_col=id_col,
+        text_col=text_col, score_col=score_col, margin=int(margin),
+        mode=mode,
+        max_responses_per_prompt=(None if max_responses_per_prompt
+                                  is None
+                                  else int(max_responses_per_prompt)),
+        max_pairs_per_prompt=(None if max_pairs_per_prompt is None
+                              else int(max_pairs_per_prompt)))
+
+
+def _op_shard_export(docs, path, n_shards, id_col="doc_id",
+                     order_col=None, seed=0, **_):
+    """Sink: physically export as shard_id=K/ parquet (one file per
+    shard, md5 assignment — layout.write_shards) and return the
+    per-shard manifest frame. NOTE: unlike every other op this one is
+    EAGER — the write runs when the step executes, so place it last."""
+    from .layout import write_shards
+
+    return write_shards(docs, path, int(n_shards), id_col=id_col,
+                        order_col=order_col, seed=int(seed))
+
+
 CURATION_OPS = {
     # annotate
     "language_id": _op_language_id,
     "quality_score": _op_quality_score,
+    "token_counts": _op_token_counts,
+    "dsir_weight": _op_dsir_weight,
+    "leakage_split": _op_leakage_split,
+    "quantile_bins": _op_quantile_bins,
+    "script_profile": _op_script_profile,
+    "ngram_novelty": _op_ngram_novelty,
+    "lm_score": _op_lm_score,
+    "code_profile": _op_code_profile,
     # filter
+    "keep_scripts": _op_keep_scripts,
+    "min_novelty": _op_min_novelty,
+    "min_lm_score": _op_min_lm_score,
+    "code_filter": _op_code_filter,
+    "containment_dedup_keep": _op_containment_dedup_keep,
+    "domain_cap": _op_domain_cap,
     "keep_languages": _op_keep_languages,
     "min_quality": _op_min_quality,
     "c4_keep": _op_c4_keep,
     "exact_dedup_keep": _op_exact_dedup_keep,
     "near_dedup_keep": _op_near_dedup_keep,
+    "decontaminate": _op_decontaminate,
+    "stratified_sample": _op_stratified_sample,
+    "per_group_cap": _op_per_group_cap,
+    "weighted_sample": _op_weighted_sample,
+    "token_budget": _op_token_budget,
+    "image_dedup_keep": _op_image_dedup_keep,
     # transform
     "pii_scrub": _op_pii_scrub,
+    "despan": _op_despan,
+    "boilerplate_lines": _op_boilerplate_lines,
     "normalize_text": _op_normalize_text,
+    "extract_code": _op_extract_code,
+    "chat_assemble": _op_chat_assemble,
+    "preference_pairs": _op_preference_pairs,
+    "sft_dedup_keep": _op_sft_dedup_keep,
+    "sft_decontam_drop": _op_sft_decontam_drop,
+    # sink
+    "shard_export": _op_shard_export,
 }
 
 

@@ -1,5 +1,5 @@
-"""Text operators of the curate pipeline — language-ID, quality
-scoring, text normalization.
+"""Text analysis operators — language-ID, quality scoring, token
+counting, document fingerprinting.
 
 All native Spark SQL (regexp + higher-order functions) so they run
 inside codegen at 100 TB and are reproducible in ANSI-SQL oracles.
@@ -247,6 +247,34 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# token counting — whitespace + BPE-ish subword estimate
+
+
+def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """whitespace_tokens: split on \\s+; bpe_est_tokens: a BPE-ish regex
+    segmentation (word pieces + digits + punctuation as separate tokens),
+    ≈ GPT-style tokenizers' pre-tokenization."""
+    text = F.col(text_col)
+    ws = F.when(F.trim(text) == "", 0).otherwise(
+        F.size(F.split(F.trim(text), "\\s+"))
+    )
+    # pre-tokenizer pieces: runs of letters, runs of digits, single punct
+    pieces = F.regexp_count(text, F.lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"))
+    # subword inflation: ~1 token per 4 chars within long words
+    long_word_extra = F.aggregate(
+        F.split(F.trim(text), "\\s+"),
+        F.lit(0).cast("long"),
+        lambda acc, w: acc + F.greatest(
+            (F.length(w) - 1) / F.lit(4), F.lit(0).cast("double")
+        ).cast("long"),
+    )
+    return docs.withColumns({
+        "ws_tokens": ws,
+        "bpe_est_tokens": pieces + long_word_extra,
+    })
+
+
+# ---------------------------------------------------------------------------
 # corpus text normalization — the cleanup pass web-corpus recipes run
 # BEFORE any frequency-based operator (dedup, line removal, LM scoring):
 # un-normalized text fragments frequency tables (the same sentence with
@@ -359,3 +387,749 @@ def normalize_text_sql(text_expr: str) -> str:
     t = f"regexp_replace({t}, ' +\\n', chr(10), 'g')"
     t = f"regexp_replace({t}, '\\n{{3,}}', chr(10) || chr(10), 'g')"
     return f"regexp_replace({t}, '^\\s+|\\s+$', '', 'g')"
+
+
+# ---------------------------------------------------------------------------
+# document fingerprinting — content hash + rolling winnow
+
+
+def doc_fingerprint(docs: DataFrame, text_col: str = "text", window: int = 8) -> DataFrame:
+    """content_hash: md5 of whitespace-normalized lowercase text.
+    winnow_hash: min xxhash64 over character n-gram windows (a 1-hash
+    winnowing fingerprint — robust to small edits)."""
+    norm = F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")
+    n = F.length(norm)
+    idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
+    grams = F.transform(idx, lambda i: norm.substr(i, F.lit(window)))
+    winnow = F.array_min(F.transform(grams, lambda g: F.xxhash64(g)))
+    return docs.withColumns({
+        "content_hash": F.md5(norm),
+        "winnow_hash": winnow,
+    })
+
+
+def corpus_stats(
+    docs: DataFrame,
+    text_col: str = "text",
+    group_col: str = "source",
+) -> DataFrame:
+    """Per-group corpus profile: doc/token/char totals, token-length
+    mean and EXACT percentiles (p50/p90 via `percentile`, linear
+    interpolation — replayable as ANSI quantile_cont, unlike
+    percentile_approx), and the duplicate-text fraction within the
+    group. The pretraining-mix dashboard numbers.
+
+    Scale shape: one map-side token-count projection → one shuffle on
+    the group key. Exact percentiles hold the group's counts in memory
+    on the reducer — fine for coarse groups (sources); swap
+    percentile_approx in if groups ever reach billions of docs.
+    """
+    from ..plans.stagecut import stage_boundary
+
+    words = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
+    base = stage_boundary(docs.select(
+        F.col(group_col).alias("group"),
+        F.size(words).cast("long").alias("_nt"),
+        F.length(text_col).cast("long").alias("_nc"),
+        F.md5(F.col(text_col)).alias("_h"),
+    ))
+    return base.groupBy("group").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("_nt").alias("total_tokens"),
+        F.round(F.avg("_nt"), 4).alias("mean_tokens"),
+        F.expr("percentile(_nt, 0.5)").alias("p50_tokens"),
+        F.expr("percentile(_nt, 0.9)").alias("p90_tokens"),
+        F.sum("_nc").alias("total_chars"),
+        (F.count(F.lit(1)) - F.count_distinct(F.col("_h")))
+        .alias("dup_docs"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Gopher repetition signals (Rae et al. 2021, Appendix A repetition
+# filters — the dup-line/paragraph and n-gram coverage gates)
+
+
+def repetition_signals(docs: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id") -> DataFrame:
+    """The Gopher repetition-filter signal suite, exact and ALL-INTEGER
+    (fractions as basis points via integer floor division, so every
+    value replays bit-identically on any engine — the dedup_exact
+    lesson):
+
+    - ``dup_line_bp`` / ``dup_para_bp``: duplicate line / paragraph
+      fraction by count; ``dup_line_char_bp`` / ``dup_para_char_bp``
+      by character mass (occurrences beyond the first of each distinct
+      segment)
+    - ``top{2,3,4}gram_bp``: character coverage of the most frequent
+      word n-gram (only n-grams occurring ≥ 2 times count)
+    - ``dup{5,10}gram_bp``: characters of word positions covered by ANY
+      n-gram occurring ≥ 2 times within the doc
+
+    Scale shape: pure per-doc map-side higher-order array expressions —
+    zero shuffles, no Python; O(L²) worst-case gram counting bounded by
+    per-document length (documents, not corpora, set L).
+    """
+    from ..plans.stagecut import stage_boundary
+
+    text = F.col(text_col)
+    norm = F.trim(F.regexp_replace(text, r"\s+", " "))
+    words = F.split(norm, " ")
+
+    lines = F.filter(F.transform(F.split(text, "\n"), F.trim),
+                     lambda s: s != "")
+    paras = F.filter(F.transform(F.split(text, "\n{2,}"), F.trim),
+                     lambda s: s != "")
+
+    def seg_len(segs):
+        return F.aggregate(segs, F.lit(0).cast("long"),
+                           lambda a, s: a + F.length(s))
+
+    def grams(nn):
+        idx = F.when(F.size(words) >= nn,
+                     F.sequence(F.lit(1), F.size(words) - nn + 1)) \
+            .otherwise(F.array().cast("array<int>"))
+        return F.transform(
+            idx, lambda i: F.concat_ws(" ", F.slice(words, i, nn)))
+
+    def top_gram_chars(nn):
+        """count × gram-length of the most frequent n-gram (count ≥ 2)."""
+        g = grams(nn)
+        return F.aggregate(
+            F.array_distinct(g), F.lit(0).cast("long"),
+            lambda acc, x: F.greatest(
+                acc,
+                F.when(F.size(F.filter(g, lambda y: y == x)) >= 2,
+                       F.size(F.filter(g, lambda y: y == x)).cast("long")
+                       * F.length(x)).otherwise(F.lit(0).cast("long"))))
+
+    def dup_gram_word_chars(nn):
+        """chars of word positions covered by any ≥2× n-gram: mark each
+        start position whose gram repeats, expand to [p, p+n-1], sum the
+        lengths of covered (distinct) word positions."""
+        g = grams(nn)
+        dup_starts = F.filter(
+            F.when(F.size(words) >= nn,
+                   F.sequence(F.lit(1), F.size(words) - nn + 1))
+            .otherwise(F.array().cast("array<int>")),
+            lambda i: F.size(F.filter(
+                g, lambda y: y == F.element_at(g, i))) >= 2)
+        covered = F.array_distinct(F.flatten(F.transform(
+            dup_starts, lambda p: F.sequence(p, p + nn - 1))))
+        return F.aggregate(
+            covered, F.lit(0).cast("long"),
+            lambda a, p: a + F.length(F.element_at(words, p)))
+
+    word_chars = F.aggregate(words, F.lit(0).cast("long"),
+                             lambda a, w: a + F.length(w))
+
+    # stage 1: every numerator/denominator as a NAMED integer column
+    # (boundary: stop CollapseProject re-inlining the word array into
+    # each consumer — the dedup-family lesson, SCALE.md §7e)
+    base = stage_boundary(docs.select(
+        F.col(id_col),
+        F.size(lines).cast("long").alias("n_lines"),
+        (F.size(lines) - F.size(F.array_distinct(lines)))
+        .cast("long").alias("_dup_lines"),
+        seg_len(lines).alias("_line_ch"),
+        (seg_len(lines) - seg_len(F.array_distinct(lines))).alias("_dup_line_ch"),
+        F.size(paras).cast("long").alias("n_paras"),
+        (F.size(paras) - F.size(F.array_distinct(paras)))
+        .cast("long").alias("_dup_paras"),
+        seg_len(paras).alias("_para_ch"),
+        (seg_len(paras) - seg_len(F.array_distinct(paras))).alias("_dup_para_ch"),
+        F.length(norm).cast("long").alias("_nc"),
+        word_chars.alias("_wc"),
+        top_gram_chars(2).alias("_top2"),
+        top_gram_chars(3).alias("_top3"),
+        top_gram_chars(4).alias("_top4"),
+        dup_gram_word_chars(5).alias("_dup5"),
+        dup_gram_word_chars(10).alias("_dup10"),
+    ))
+    # stage 2: basis points by integer division over the named columns
+    bp = lambda num, den: (  # noqa: E731
+        f"CAST(CASE WHEN {den} > 0 THEN least({num} * 10000 div {den}, 10000) "
+        f"ELSE 0 END AS BIGINT)")
+    return base.selectExpr(
+        id_col, "n_lines", "n_paras",
+        bp("_dup_lines", "n_lines") + " AS dup_line_bp",
+        bp("_dup_line_ch", "_line_ch") + " AS dup_line_char_bp",
+        bp("_dup_paras", "n_paras") + " AS dup_para_bp",
+        bp("_dup_para_ch", "_para_ch") + " AS dup_para_char_bp",
+        bp("_top2", "_nc") + " AS top2gram_bp",
+        bp("_top3", "_nc") + " AS top3gram_bp",
+        bp("_top4", "_nc") + " AS top4gram_bp",
+        bp("_dup5", "_wc") + " AS dup5gram_bp",
+        bp("_dup10", "_wc") + " AS dup10gram_bp",
+    )
+
+
+# ---------------------------------------------------------------------------
+# bigram-LM surprisal scoring (CCNet-style LM quality signal, exact)
+
+
+def bigram_lm_score(docs: DataFrame, text_col: str = "text",
+                    id_col: str = "doc_id",
+                    train: DataFrame | None = None,
+                    broadcast_model: bool = True) -> DataFrame:
+    """Corpus-trained bigram language-model scoring (the CCNet recipe
+    scores documents with an LM and filters on perplexity; this is the
+    same signal computed EXACTLY): per document, the mean MLE bigram
+    surprisal quantized to whole bits —
+
+        bits(pos) = floor(log2 c(w_{i-1})) - floor(log2 c(w_{i-1}, w_i))
+
+    summed over bigram positions (``info_bits``) and averaged as basis
+    points (``avg_info_bp``). floor(log2 n) is computed as
+    ``length(bin(n)) - 1`` — pure integer arithmetic, so unlike a
+    float log-sum the result is identical on every engine and immune to
+    summation-order nondeterminism. High avg bits = improbable word
+    transitions (gibberish/noise); low = repetitive boilerplate.
+
+    ``oov_bigrams`` counts positions whose bigram occurs ONLY in this
+    document's own occurrences... corpus-min count is 1, so count==1
+    marks corpus-unique transitions.
+
+    Scale shape: two groupBy counts over exploded bigrams (the model),
+    then ONE join from doc bigrams to the model — broadcast when
+    ``broadcast_model`` (vocab ≪ corpus, the common case), else a
+    shuffle hash join on the gram key — and a final per-doc groupBy.
+    """
+    from .dedup import _normalize
+
+    model_src = train if train is not None else docs
+
+    def bigram_rows(df, keep_id):
+        w = F.split(F.trim(_normalize(F.col(text_col))), " ")
+        idx = F.when(F.size(w) >= 2, F.sequence(F.lit(1), F.size(w) - 1)) \
+            .otherwise(F.array().cast("array<int>"))
+        pairs = F.transform(
+            idx, lambda i: F.struct(
+                F.element_at(w, i).alias("prev"),
+                F.element_at(w, i + 1).alias("cur")))
+        cols = [F.col(id_col)] if keep_id else []
+        return df.select(*cols, F.explode(pairs).alias("p")) \
+            .select(*([id_col] if keep_id else []),
+                    F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur"))
+
+    big_counts = bigram_rows(model_src, False).groupBy("prev", "cur") \
+        .agg(F.count(F.lit(1)).alias("c_big"))
+    ctx_counts = bigram_rows(model_src, False).groupBy("prev") \
+        .agg(F.count(F.lit(1)).alias("c_ctx"))
+    model = big_counts.join(ctx_counts, "prev")
+    if broadcast_model:
+        model = F.broadcast(model)
+
+    doc_bigrams = bigram_rows(docs, True)
+    joined = doc_bigrams.join(model, ["prev", "cur"], "left")
+    bits = (F.length(F.expr("bin(c_ctx)")) - 1) \
+        - (F.length(F.expr("bin(c_big)")) - 1)
+    agg = joined.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.sum((F.col("c_big") == 1).cast("long")).alias("oov_bigrams"),
+        F.sum(bits.cast("long")).alias("info_bits"),
+    )
+    return agg.withColumn(
+        "avg_info_bp",
+        F.expr("CASE WHEN n_bigrams > 0 THEN info_bits * 10000 div n_bigrams "
+               "ELSE 0 END").cast("long"))
+
+
+# ---------------------------------------------------------------------------
+# BM25 relevance scoring (Robertson-Spärck Jones, the Okapi formula)
+
+
+def bm25_score(
+    docs: DataFrame,
+    query_terms: list[str],
+    k1: float = 1.2,
+    b: float = 0.75,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Score every document against a fixed query with Okapi BM25.
+
+    Scale shape: corpus statistics (N, avgdl, per-term document
+    frequencies) are ONE single-row aggregation — computed in the same
+    job, broadcast back via a 1-row crossJoin (the canonical scalar
+    pattern; no driver round-trip in the plan). Scoring itself is a
+    map-side projection: per-term tf via higher-order ``filter`` over
+    the split words, the summation a fixed literal chain so float
+    order is deterministic on every engine. Output: id, dl, score
+    (rounded 4dp), n_hit_terms.
+    """
+    words = F.split(
+        F.trim(F.regexp_replace(F.lower(F.col(text_col)),
+                                "[^a-z0-9]+", " ")), " ")
+    base = docs.select(
+        F.col(id_col), words.alias("w"),
+        F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0))
+        .otherwise(F.size(words)).cast("long").alias("dl"))
+
+    def tf(t: str):
+        return F.size(F.filter(F.col("w"), lambda x: x == F.lit(t)))
+
+    stats = base.agg(
+        F.count(F.lit(1)).cast("double").alias("_n"),
+        F.avg("dl").alias("_avgdl"),
+        *[F.sum((tf(t) > 0).cast("int")).cast("double").alias(f"_df_{i}")
+          for i, t in enumerate(query_terms)],
+    )
+    scored = base.crossJoin(F.broadcast(stats))
+    score = F.lit(0.0)
+    n_hit = F.lit(0)
+    for i, t in enumerate(query_terms):
+        tf_t = tf(t).cast("double")
+        idf = F.log(
+            F.lit(1.0)
+            + (F.col("_n") - F.col(f"_df_{i}") + 0.5)
+            / (F.col(f"_df_{i}") + 0.5))
+        denom = tf_t + k1 * (1.0 - b + b * F.col("dl") / F.col("_avgdl"))
+        score = score + idf * tf_t * (k1 + 1.0) / denom
+        n_hit = n_hit + (tf_t > 0).cast("int")
+    return scored.select(
+        F.col(id_col), F.col("dl"),
+        F.round(score, 4).alias("bm25"),
+        n_hit.cast("long").alias("n_hit_terms"),
+    )
+
+
+def bm25_score_sql(
+    from_sql: str, id_expr: str, text_expr: str,
+    query_terms: list[str], k1: float = 1.2, b: float = 0.75,
+    id_alias: str = "doc_id",
+) -> str:
+    """DuckDB mirror of :func:`bm25_score` — identical operation order
+    so IEEE doubles match bit-for-bit before the 4dp round."""
+    norm = (f"trim(regexp_replace(lower({text_expr}), '[^a-z0-9]+', "
+            "' ', 'g'))")
+    base = (
+        f"select {id_expr} as {id_alias}, string_split({norm}, ' ') as w, "
+        f"cast(case when length(trim({text_expr})) = 0 then 0 else "
+        f"len(string_split({norm}, ' ')) end as bigint) as dl "
+        f"from {from_sql}")
+
+    def tf(t: str) -> str:
+        return f"len(list_filter(w, x -> x = '{t}'))"
+
+    dfs = ", ".join(
+        f"cast(sum(case when {tf(t)} > 0 then 1 else 0 end) as double) "
+        f"as df_{i}"
+        for i, t in enumerate(query_terms))
+    stats = (f"select cast(count(*) as double) as n, avg(dl) as avgdl, "
+             f"{dfs} from (" + base + ")")
+    score_terms = []
+    hit_terms = []
+    for i, t in enumerate(query_terms):
+        tf_t = f"cast({tf(t)} as double)"
+        idf = f"ln(1.0 + (s.n - s.df_{i} + 0.5) / (s.df_{i} + 0.5))"
+        denom = f"({tf_t} + {k1} * (1.0 - {b} + {b} * d.dl / s.avgdl))"
+        score_terms.append(f"{idf} * {tf_t} * ({k1} + 1.0) / {denom}")
+        hit_terms.append(f"(case when {tf_t} > 0 then 1 else 0 end)")
+    score = "0.0 + " + " + ".join(score_terms)
+    return (
+        f"select d.{id_alias}, d.dl, round({score}, 4) as bm25, "
+        f"cast({' + '.join(hit_terms)} as bigint) as n_hit_terms "
+        f"from (" + base + ") d cross join (" + stats + ") s")
+
+
+# ---------------------------------------------------------------------------
+# Unicode script profile — writing-system detection
+
+# explicit code-point ranges (not \p{Script=...}: java.util.regex and
+# RE2 spell script classes differently, but literal ranges parse
+# identically in both engines — the engine-portability rule every
+# regex here follows). Each entry: (name, character-class body).
+SCRIPT_RANGES: list[tuple[str, str]] = [
+    # Latin-1/Ext-A/Ext-B/IPA minus the two non-letters × (U+00D7) and
+    # ÷ (U+00F7), plus Latin Extended Additional (U+1E00-U+1EFF) so
+    # Vietnamese letters count as latin instead of n_other (r12)
+    ("latin", "A-Za-zÀ-ÖØ-öø-ɏḀ-ỿ"),
+    ("cyrillic", "Ѐ-ӿ"),
+    ("greek", "Ͱ-Ͽ"),
+    ("arabic", "؀-ۿݐ-ݿ"),
+    ("hebrew", "֐-׿"),
+    ("devanagari", "ऀ-ॿ"),
+    ("cjk", "一-鿿㐀-䶿"),
+    ("kana", "぀-ヿ"),
+    ("hangul", "가-힯ᄀ-ᇿ"),
+]
+
+
+def script_profile(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Per-document writing-system profile: character counts per
+    Unicode script family, the dominant script, and the non-ASCII
+    share — the signal a multilingual corpus pipeline routes on
+    BEFORE n-gram language ID (script is a cheap, near-certain prior:
+    Hangul text is Korean regardless of what a trigram model thinks,
+    and mixed-script documents — a CJK page with an English boilerplate
+    footer — are exactly the ones worth flagging for segment-level
+    handling).
+
+    Output: id, n_chars, one ``n_<script>`` count per SCRIPT_RANGES
+    entry, ``n_other`` (characters outside every listed script that
+    are neither whitespace nor printable ASCII — unlisted scripts,
+    symbols, emoji), ``dominant_script`` ('none' for a letterless doc;
+    count ties break by SCRIPT_RANGES order), ``nonascii_bp`` (integer
+    basis points).
+
+    Scale shape: ONE native projection — a regexp_count per script
+    family, zero shuffles, zero Python; fully codegen'd and replayed
+    1:1 by the SQL oracle (literal ranges, integer arithmetic;
+    fractions floor()ed before the cast on BOTH engines — DuckDB's
+    double→BIGINT cast rounds where Spark's truncates).
+    """
+    t = F.col(text_col)
+    n_chars = F.length(t)
+    counts = {name: F.regexp_count(t, F.lit(f"[{body}]"))
+              for name, body in SCRIPT_RANGES}
+    all_ranges = "".join(body for _, body in SCRIPT_RANGES)
+    n_other = F.regexp_count(t, F.lit(f"[^{all_ranges}\\s!-~]"))
+    dom = F.lit("none")
+    best = F.lit(0)
+    for name, _ in SCRIPT_RANGES:       # first-listed wins ties
+        c = counts[name]
+        dom = F.when(c > best, F.lit(name)).otherwise(dom)
+        best = F.greatest(best, c)
+    nonascii = F.regexp_count(t, F.lit(r"[^\x00-\x7F]"))
+    return docs.select(
+        F.col(id_col),
+        n_chars.cast("long").alias("n_chars"),
+        *[counts[name].cast("long").alias(f"n_{name}")
+          for name, _ in SCRIPT_RANGES],
+        n_other.cast("long").alias("n_other"),
+        dom.alias("dominant_script"),
+        F.when(n_chars > 0, F.floor(nonascii * 10000 / n_chars))
+        .otherwise(F.lit(0)).cast("long").alias("nonascii_bp"),
+    )
+
+
+def script_profile_sql(
+    from_sql: str,
+    id_expr: str = "doc_id",
+    text_expr: str = "text",
+    id_alias: str = "doc_id",
+) -> str:
+    """DuckDB mirror of :func:`script_profile` (same literal ranges,
+    same tie order, same integer basis points)."""
+    def cnt(body):
+        return f"len(regexp_extract_all({text_expr}, '[{body}]'))"
+
+    counts = {name: cnt(body) for name, body in SCRIPT_RANGES}
+    all_ranges = "".join(body for _, body in SCRIPT_RANGES)
+    n_other = cnt("^" + all_ranges + "\\s!-~")
+    dom = "'none'"
+    best = "0"
+    for name, _ in SCRIPT_RANGES:
+        c = counts[name]
+        dom = f"CASE WHEN {c} > {best} THEN '{name}' ELSE {dom} END"
+        best = f"greatest({best}, {c})"
+    nonascii = cnt(r"^\x00-\x7F")
+    sels = [f"{id_expr} AS {id_alias}",
+            f"CAST(length({text_expr}) AS BIGINT) AS n_chars"]
+    sels += [f"CAST({counts[name]} AS BIGINT) AS n_{name}"
+             for name, _ in SCRIPT_RANGES]
+    sels.append(f"CAST({n_other} AS BIGINT) AS n_other")
+    sels.append(f"{dom} AS dominant_script")
+    sels.append(
+        f"CAST(CASE WHEN length({text_expr}) > 0 THEN "
+        f"floor({nonascii} * 10000 / length({text_expr})) "
+        "ELSE 0 END AS BIGINT) AS nonascii_bp")
+    return "SELECT " + ",\n               ".join(sels) \
+        + f" FROM {from_sql}"
+
+
+# ---------------------------------------------------------------------------
+# code detection — the code-vs-prose router a mixed web corpus needs
+# before setting code-mix ratios (and before prose-only quality gates
+# mis-score source files as "low quality text")
+
+# every pattern must parse identically under Java regex (Spark) AND
+# RE2 (DuckDB): no lookarounds, no backreferences
+CODE_SYM_RE = r"[{}\[\];]"
+CODE_OPS_RE = r"(==|!=|<=|>=|->|=>|::|&&|\|\||\+=|-=)"
+CODE_INDENT_RE = "\\n(    |\t)"
+# code-ONLY tokens — everyday English words (return, class, public,
+# match, self, static, void, function) were removed after review: at
+# weight 8 two of them in a short prose doc ("He will return to
+# class.") crossed the threshold with zero code symbols
+CODE_KW_RE = (r"\b(def|elif|lambda|const|var|let|println|printf|"
+              r"struct|enum|typedef|namespace|template|fn|impl|"
+              r"nullptr|usize|foreach|instanceof|endif)\b")
+
+
+def code_profile(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold_bp: int = 2000,
+) -> DataFrame:
+    """Per-document code-likeness signals — all native regexp counts,
+    zero shuffles, zero Python, replayed 1:1 by the SQL oracle:
+
+    - ``n_sym``: structural symbols ``{}[];`` (rare in prose, dense in
+      every brace/bracket language)
+    - ``n_ops``: multi-char operators (``== != <= >= -> => :: && ||
+      += -=``)
+    - ``n_indent_lines``: lines opening with 4 spaces or a tab (block
+      indentation)
+    - ``n_kw``: word-boundary hits of code-specific keywords (chosen
+      to be rare in prose: def/const/elif/impl/..., NOT if/for/while)
+    - ``code_score_bp``: integer basis points —
+      ``min(10000, floor(10000·(2·sym + 6·ops + 8·indent + 8·kw) /
+      chars))`` — measured separation: typical code ≥ ~3000 bp,
+      typical prose ≤ ~500 bp
+    - ``is_code``: score ≥ ``threshold_bp`` (default 2000)
+
+    The router application: split a web corpus into prose/code streams
+    before prose-only quality gates (which mis-score source files) and
+    before setting the training code-mix ratio."""
+    t = F.col(text_col)
+    n_chars = F.length(t)
+    # cast to LONG before the blend: regexp_count returns INT and
+    # `raw * 10000` overflows 32 bits on ~1 MB dense-code docs —
+    # ARITHMETIC_OVERFLOW under ANSI, silent wrap otherwise (the SQL
+    # mirror's len() is already BIGINT)
+    n_sym = F.regexp_count(t, F.lit(CODE_SYM_RE)).cast("long")
+    n_ops = F.regexp_count(t, F.lit(CODE_OPS_RE)).cast("long")
+    n_ind = F.regexp_count(t, F.lit(CODE_INDENT_RE)).cast("long")
+    n_kw = F.regexp_count(t, F.lit(CODE_KW_RE)).cast("long")
+    raw = n_sym * 2 + n_ops * 6 + n_ind * 8 + n_kw * 8
+    score = F.when(
+        n_chars > 0,
+        F.least(F.lit(10000),
+                F.floor(raw * 10000 / n_chars))).otherwise(F.lit(0))
+    return docs.select(
+        F.col(id_col),
+        n_chars.cast("long").alias("n_chars"),
+        (F.regexp_count(t, F.lit("\n")) + 1).cast("long")
+        .alias("n_lines"),
+        n_sym.cast("long").alias("n_sym"),
+        n_ops.cast("long").alias("n_ops"),
+        n_ind.cast("long").alias("n_indent_lines"),
+        n_kw.cast("long").alias("n_kw"),
+        score.cast("long").alias("code_score_bp"),
+        (score >= threshold_bp).cast("long").alias("is_code"),
+    )
+
+
+def code_profile_sql(
+    from_sql: str,
+    id_expr: str = "doc_id",
+    text_expr: str = "text",
+    id_alias: str = "doc_id",
+    threshold_bp: int = 2000,
+) -> str:
+    """DuckDB mirror of :func:`code_profile` (same RE2-safe patterns,
+    same integer blend)."""
+    def cnt(pat):
+        # DuckDB regular string literals are escape-free (standard
+        # SQL): pass regex backslashes through verbatim
+        esc = pat.replace("'", "''")
+        return f"len(regexp_extract_all({text_expr}, '{esc}'))"
+
+    sym, ops = cnt(CODE_SYM_RE), cnt(CODE_OPS_RE)
+    ind = (f"len(regexp_extract_all({text_expr}, "
+           "chr(10) || '(    |' || chr(9) || ')'))")
+    kw = cnt(CODE_KW_RE)
+    raw = f"({sym} * 2 + {ops} * 6 + {ind} * 8 + {kw} * 8)"
+    score = (f"CASE WHEN length({text_expr}) > 0 THEN "
+             f"least(10000, floor({raw} * 10000 / length({text_expr}))) "
+             "ELSE 0 END")
+    nl = f"len(regexp_extract_all({text_expr}, chr(10)))"
+    return f"""
+        SELECT {id_expr} AS {id_alias},
+               CAST(length({text_expr}) AS BIGINT) AS n_chars,
+               CAST({nl} + 1 AS BIGINT) AS n_lines,
+               CAST({sym} AS BIGINT) AS n_sym,
+               CAST({ops} AS BIGINT) AS n_ops,
+               CAST({ind} AS BIGINT) AS n_indent_lines,
+               CAST({kw} AS BIGINT) AS n_kw,
+               CAST({score} AS BIGINT) AS code_score_bp,
+               CAST(CASE WHEN {score} >= {int(threshold_bp)}
+                    THEN 1 ELSE 0 END AS BIGINT) AS is_code
+        FROM {from_sql}
+    """
+
+
+# ---------------------------------------------------------------------------
+# fenced-code extraction — the router's missing half: web corpora carry
+# code mostly INSIDE markdown fences in prose documents, so routing
+# whole docs (code_profile) either sends the prose to the code stream
+# or lets the fence drag the doc's prose quality score down. Split
+# first, route the parts.
+
+# ``` at line start, optional info string, body (non-greedy), closing
+# ``` at line start. Parses identically under Java regex (Spark) and
+# RE2 (DuckDB): inline (?ms) flags, non-capturing groups, no
+# lookarounds. LF line endings assumed — run normalize_text first on
+# CRLF corpora (Java's multiline $ treats \r\n as one terminator, RE2
+# does not; anchoring on \n keeps the engines in lockstep).
+FENCE_RE = "(?ms)^```([^\\n]*)\\n(.*?)^```[ \\t]*(\\n|$)"
+INDENT_BLOCK_RE = "(?m)^(?:    |\\t)(.*)$"
+_INDENT_STRIP_RE = "(?m)^(?:    |\\t).*(\\n|$)"
+
+
+def extract_code_blocks(
+    docs: DataFrame,
+    text_col: str = "text",
+    include_indented: bool = False,
+) -> DataFrame:
+    """Split each document into a PROSE stream and a CODE stream —
+    native regexp only (zero shuffles, zero Python), replayed 1:1 by
+    :func:`extract_code_blocks_sql`:
+
+    - ``code_text``: the bodies of all markdown-fenced blocks
+      (``\\u0060\\u0060\\u0060lang … \\u0060\\u0060\\u0060``), joined
+      by newlines. With ``include_indented``, 4-space/tab-indented
+      lines REMAINING in the prose (i.e. outside fences) move over
+      too — off by default because list continuations in prose also
+      indent.
+    - ``prose_text``: the document with those blocks removed (an
+      unterminated fence never matches, so it stays in prose — the
+      conservative failure mode: a prose gate sees it, nothing is
+      silently dropped from the corpus).
+    - ``n_fences``, ``code_chars``, ``prose_chars``: routing stats.
+
+    All INPUT columns are preserved (the five stream columns are
+    appended), so the pipeline op routes without a join-back. The SQL
+    mirror emits ``id + the five`` — compare on those.
+
+    The downstream composition (pipeline op ``extract_code``): run the
+    prose stream through prose-only quality gates, the code stream
+    through :func:`code_profile` / a code corpus — a mixed doc's fence
+    no longer penalizes its prose quality."""
+    t = F.col(text_col)
+    code = F.array_join(
+        F.regexp_extract_all(t, F.lit(FENCE_RE), 2), "\n")
+    prose = F.regexp_replace(t, FENCE_RE, "")
+    langs = F.array_join(
+        F.transform(F.regexp_extract_all(t, F.lit(FENCE_RE), 1),
+                    lambda x: F.lower(F.split(F.trim(x), " ")[0])),
+        ",")
+    if include_indented:
+        ind = F.array_join(
+            F.regexp_extract_all(prose, F.lit(INDENT_BLOCK_RE), 1),
+            "\n")
+        code = F.when(F.length(code) > 0,
+                      F.when(F.length(ind) > 0,
+                             F.concat(code, F.lit("\n"), ind))
+                      .otherwise(code)).otherwise(ind)
+        prose = F.regexp_replace(prose, _INDENT_STRIP_RE, "")
+    return docs.select(
+        "*",
+        prose.alias("prose_text"),
+        code.alias("code_text"),
+        langs.alias("fence_langs"),
+        F.size(F.regexp_extract_all(t, F.lit(FENCE_RE), 2))
+        .cast("long").alias("n_fences"),
+        F.length(code).cast("long").alias("code_chars"),
+        F.length(prose).cast("long").alias("prose_chars"),
+    )
+
+
+def extract_code_blocks_sql(
+    from_sql: str,
+    id_expr: str = "doc_id",
+    text_expr: str = "text",
+    id_alias: str = "doc_id",
+    include_indented: bool = False,
+) -> str:
+    """DuckDB mirror of :func:`extract_code_blocks` (same RE2-safe
+    pattern; regexp_replace needs the explicit 'g' option — DuckDB
+    replaces only the first match by default, Spark replaces all)."""
+    # DuckDB regular strings are escape-free: regex backslashes pass
+    # through verbatim. COALESCE: array_to_string of an EMPTY match
+    # list is NULL in DuckDB where Spark's array_join gives ''.
+    fre = FENCE_RE
+    code = (f"coalesce(array_to_string(regexp_extract_all({text_expr}, "
+            f"'{fre}', 2), chr(10)), '')")
+    langs = (f"coalesce(array_to_string(list_transform("
+             f"regexp_extract_all({text_expr}, '{fre}', 1), "
+             f"x -> lower(string_split(trim(x), ' ')[1])), ','), '')")
+    prose = f"regexp_replace({text_expr}, '{fre}', '', 'g')"
+    if include_indented:
+        ind = (f"coalesce(array_to_string(regexp_extract_all({prose}, "
+               f"'{INDENT_BLOCK_RE}', 1), chr(10)), '')")
+        code = (f"CASE WHEN length({code}) > 0 THEN "
+                f"CASE WHEN length({ind}) > 0 THEN "
+                f"{code} || chr(10) || {ind} ELSE {code} END "
+                f"ELSE {ind} END")
+        prose = (f"regexp_replace({prose}, '{_INDENT_STRIP_RE}', "
+                 "'', 'g')")
+    return f"""
+        SELECT {id_expr} AS {id_alias},
+               {prose} AS prose_text,
+               {code} AS code_text,
+               {langs} AS fence_langs,
+               CAST(len(regexp_extract_all({text_expr}, '{fre}', 2))
+                    AS BIGINT) AS n_fences,
+               CAST(length({code}) AS BIGINT) AS code_chars,
+               CAST(length({prose}) AS BIGINT) AS prose_chars
+        FROM {from_sql}
+    """
+
+
+def fence_language_mix(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Corpus-wide CODE-MIX table from fence info strings: one row per
+    fence language — (lang, n_blocks, code_chars, n_docs) — the number
+    a training-mix planner actually sets ratios with ("how much rust
+    vs python vs untagged code does this corpus carry"). Language =
+    first whitespace token of the fence info string, lowercased
+    (CommonMark's convention); untagged fences land on ``''``.
+
+    Plan shape: one per-row zip of the info-string and body match
+    lists → explode (rows × fences-per-doc, almost always ≪ 2) → ONE
+    groupBy(lang) whose key cardinality is the number of distinct
+    languages (dozens). Nothing else shuffles."""
+    t = F.col(text_col)
+    pairs = F.zip_with(
+        F.regexp_extract_all(t, F.lit(FENCE_RE), 1),
+        F.regexp_extract_all(t, F.lit(FENCE_RE), 2),
+        lambda info, body: F.struct(
+            F.lower(F.split(F.trim(info), " ")[0]).alias("lang"),
+            F.length(body).alias("chars")))
+    return (
+        docs.select(F.col(id_col).alias("doc_id"),
+                    F.explode(pairs).alias("_f"))
+        .groupBy(F.col("_f.lang").alias("lang"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_blocks"),
+             F.sum("_f.chars").cast("long").alias("code_chars"),
+             F.countDistinct("doc_id").cast("long").alias("n_docs"))
+    )
+
+
+def fence_language_mix_sql(
+    from_sql: str,
+    id_expr: str = "doc_id",
+    text_expr: str = "text",
+) -> str:
+    """DuckDB mirror of :func:`fence_language_mix` (index-unnest over
+    the same two capture groups)."""
+    fre = FENCE_RE
+    return f"""
+        SELECT lang, CAST(count(*) AS BIGINT) AS n_blocks,
+               CAST(sum(chars) AS BIGINT) AS code_chars,
+               CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+        FROM (
+          SELECT doc_id,
+                 lower(string_split(trim(infos[t.i + 1]), ' ')[1])
+                   AS lang,
+                 length(bodies[t.i + 1]) AS chars
+          FROM (
+            SELECT {id_expr} AS doc_id,
+                   regexp_extract_all({text_expr}, '{fre}', 1) AS infos,
+                   regexp_extract_all({text_expr}, '{fre}', 2) AS bodies
+            FROM {from_sql}),
+          LATERAL unnest(range(len(infos))) AS t(i)
+        )
+        GROUP BY lang
+    """

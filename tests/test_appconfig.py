@@ -314,7 +314,7 @@ def test_cli_curate_pipeline(spark, tmp_path):
     pipe.write_text(json.dumps([
         {"op": "normalize_text"},
         {"op": "exact_dedup_keep"},
-        {"op": "near_dedup_keep", "jaccard_threshold": 0.5, "shingle_k": 2},
+        {"op": "per_group_cap", "k": 2, "group_col": "source"},
     ]))
     out = tmp_path / "curated"
     buf = io.StringIO()
@@ -325,13 +325,13 @@ def test_cli_curate_pipeline(spark, tmp_path):
     rep = json.loads(buf.getvalue())
     assert rep["rows_in"] == 24
     steps = {s["op"]: s["rows_after"] for s in rep["steps"]}
-    # normalize is row-preserving; exact dedup collapses the 8 distinct
-    # texts; near dedup merges texts differing only in the last digit
+    # normalize is row-preserving; dedup collapses the 8 distinct texts;
+    # the per-source cap keeps at most 2 per source
     assert steps["normalize_text"] == 24
     assert steps["exact_dedup_keep"] == 8
-    assert steps["near_dedup_keep"] < 8
+    assert steps["per_group_cap"] <= 6
     got = spark.read.parquet(str(out))
-    assert got.count() == steps["near_dedup_keep"]
+    assert got.count() == steps["per_group_cap"]
     assert "\r" not in got.select("text").first().text
 
     # --report-only: no output written, counts still reported

@@ -111,25 +111,47 @@ def extract_bundle_parts() -> dict[str, list[str]]:
 # the README cross-check below enforces consistency for r8+ rows).
 EXPECTED_BUNDLE_PARTS = {
     "ip_lookups": ["chain", "mmdb"],
-    "cross_navigation": ["nav"],
+    "cross_navigation": ["nav", "pagerank"],
     "ua_classify": ["native", "uap"],
-    "currency_conversion": ["convert"],
+    "currency_conversion": ["convert", "asof"],
     "adapter_explode": ["explode", "remote"],
     "webhook_vendor_suite": ["s1", "s2"],
     "bad_row_split": ["split", "format"],
-    "metadata_aggregation": ["meta"],
+    "metadata_aggregation": ["meta", "manifest", "card", "comp",
+                             "zorder", "ksample", "kgroup", "wsample",
+                             "fit", "skew", "shards"],
+    "dedup_despan": ["despan", "lines", "novelty"],
+    "sessionize": ["stats", "stream_closed", "stream_dedup", "chat",
+                   "sftdedup", "pref"],
     "sql_lookup_join": ["broadcast", "json"],
     "yauaa_classify": ["native", "rules"],
     "iglu_validation": ["basic", "advanced"],
-    "pii_pseudonymize": ["scalar", "json", "companion"],
-    "payload_decompress": ["gzip", "zstd"],
-    "identity_stitch": ["identity"],
+    "pii_pseudonymize": ["scalar", "json", "companion", "kanon",
+                         "kanon_rpt"],
+    "payload_decompress": ["gzip", "zstd", "warc", "robots"],
+    "identity_stitch": ["identity", "merge", "snapdiff"],
     "script_hook": ["py", "js"],
     "streaming_parity": ["stream", "batch"],
-    "text_pii_scrub": ["base"],
-    "c4_filters": ["c4"],
-    "dedup_minhash_lsh": ["sig", "lsh"],
-    "text_analysis": ["lang", "quality", "clean"],
+    "dedup_exact": ["exact", "substr", "contam", "split"],
+    "decontam_multi": ["multi", "bloom", "kmv", "drift", "sftdecon"],
+    "text_pii_scrub": ["base", "fin"],
+    "data_mix": ["sample", "pack", "q_lit", "q_join", "mix", "salted",
+                 "c4", "chunk", "hh", "dsir", "hll", "qbins", "budget",
+                 "dcap", "gqbins"],
+    "dedup_minhash_lsh": ["sig", "lsh", "incr"],
+    "dedup_ngram_jaccard": ["blocked", "prefix", "clusters",
+                            "policy", "contain", "containp"],
+    "ann_lsh_topk": ["plain", "probe", "recall", "recall_sum"],
+    "ann_ivf_topk": ["ivf", "cluster", "pq_codes", "pq_adc", "recall",
+                     "pca_gram", "pca_proj", "kmeans"],
+    "embedding_dup_pairs": ["pairs", "lsh_pairs", "semdedup", "int8",
+                            "margin", "negs"],
+    "text_analysis": ["lang", "quality", "tokens", "fprint", "stats",
+                      "rep", "lm", "html", "bpe", "unigram", "url",
+                      "bm25", "clean", "script", "sbo", "code", "fence",
+                      "fmix"],
+    "multimodal": ["decode", "frames", "audio", "resize", "dhash",
+                   "dhpairs", "incfp", "afp", "afppairs"],
 }
 
 

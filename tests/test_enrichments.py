@@ -515,7 +515,7 @@ def test_javascript_sidecar_isolation_timeout_and_null_mutation(spark):
     assert out.user_id is None and out.app_id == "a1"
 
 
-def test_pii_json_mutator_arrow_matches_row_core(spark):
+def test_pii_json_mutator_batched_matches_row_mode(spark):
     from enrich_spark.config import PiiJsonFieldConf
 
     ue = json.dumps({
@@ -588,7 +588,7 @@ def test_pii_json_mutator_arrow_matches_row_core(spark):
     assert mods == {"email", "tags", "emails", "token"}
 
 
-def test_script_enrichment_arrow_matches_row_core(spark):
+def test_script_enrichment_batched_matches_row_mode(spark):
     from enrich_spark.config import JavascriptScriptConf
     from enrich_spark.operators.script import script_enrichment
 

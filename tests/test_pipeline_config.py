@@ -13,6 +13,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import functions as F
 
 from enrich_spark.datapipe.pipeline import (
     CURATION_OPS, run_pipeline, run_pipeline_observed,
@@ -39,26 +40,27 @@ def _docs(spark):
 def test_pipeline_matches_manual_chain(spark):
     docs = _docs(spark)
     steps = [
-        {"op": "normalize_text"},
         {"op": "language_id"},
         {"op": "min_quality", "threshold": 0.8},
         {"op": "pii_scrub"},
         {"op": "exact_dedup_keep"},
+        {"op": "leakage_split"},
     ]
     out = run_pipeline(docs, steps)
     rows = {r.doc_id: r for r in out.collect()}
     assert set(rows) == {0, 2, 4}             # 1 deduped, 3 junk-filtered
     assert "<EMAIL>" in rows[2].text
+    assert all(r.split in ("train", "val", "test") for r in rows.values())
     assert all(r.language is not None for r in rows.values())
 
     # equals the hand-written chain
-    manual = CURATION_OPS["exact_dedup_keep"](
-        CURATION_OPS["pii_scrub"](
-            CURATION_OPS["min_quality"](
-                CURATION_OPS["language_id"](
-                    CURATION_OPS["normalize_text"](docs)), threshold=0.8)))
-    got = sorted((r.doc_id, r.text, r.language) for r in out.collect())
-    want = sorted((r.doc_id, r.text, r.language) for r in manual.collect())
+    manual = CURATION_OPS["leakage_split"](
+        CURATION_OPS["exact_dedup_keep"](
+            CURATION_OPS["pii_scrub"](
+                CURATION_OPS["min_quality"](
+                    CURATION_OPS["language_id"](docs), threshold=0.8))))
+    got = sorted((r.doc_id, r.text, r.split) for r in out.collect())
+    want = sorted((r.doc_id, r.text, r.split) for r in manual.collect())
     assert got == want
 
 
@@ -68,16 +70,16 @@ def test_pipeline_from_json_file_and_report(spark, tmp_path):
     cfg.write_text(json.dumps([
         {"op": "min_quality", "threshold": 0.8},
         {"op": "exact_dedup_keep"},
-        {"op": "near_dedup_keep"},
+        {"op": "stratified_sample",
+         "fractions": {"web": 1.0, "books": 0.0}},
     ]))
     report: list = []
     out = run_pipeline(docs, str(cfg), report=report)
     assert [n for n, _ in report] == ["min_quality", "exact_dedup_keep",
-                                      "near_dedup_keep"]
+                                      "stratified_sample"]
     counts = [c for _, c in report]
-    # the three surviving docs share the GOOD body: one near-dup cluster
-    assert counts[0] == 4 and counts[1] == 3 and counts[2] == 1
-    assert {r.doc_id for r in out.collect()} == {0}
+    assert counts[0] == 4 and counts[1] == 3 and counts[2] == 2
+    assert {r.doc_id for r in out.collect()} == {0, 2}
 
 
 def test_pipeline_unknown_op_fails_fast(spark):
@@ -103,6 +105,76 @@ def test_pipeline_stays_lazy_single_plan(spark):
     assert out.count() == 3  # and it actually runs
 
 
+def test_pipeline_dedup_decontam_and_transform_ops(spark):
+    """The heavier registered ops compose too: near-dup keep (MinHash +
+    keep-policy), benchmark decontamination, duplicate-span removal,
+    and DSIR weight annotation."""
+    from enrich_spark.datapipe.dsir import train_dsir
+
+    body = ("the quick brown fox jumps over the lazy dog while the "
+            "spark executor shuffles partitions and prunes columns "
+            "for every stage today")
+    rows = [
+        (0, body, "web"),
+        (1, body + " slightly", "web"),       # near-dup of 0
+        (2, "completely different content about cooking pasta dishes "
+            "at home with friends on a sunday afternoon", "web"),
+        (3, "leaked benchmark sentence the model must never train on "
+            "plus some padding words to form windows", "web"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    bench = spark.createDataFrame(
+        [(100, "leaked benchmark sentence the model must never train on")],
+        "bench_id long, text string")
+    ratios = train_dsir(docs.where(F.col("doc_id") == 2), docs,
+                        n_buckets=64)
+
+    out = run_pipeline(docs, [
+        {"op": "near_dedup_keep", "jaccard_threshold": 0.5,
+         "num_hashes": 16, "bands": 8},
+        {"op": "decontaminate", "benchmark": bench, "k": 8},
+        {"op": "dsir_weight", "ratios": ratios, "n_buckets": 64},
+    ])
+    rows = {r.doc_id: r for r in out.collect()}
+    assert set(rows) == {0, 2}          # 1 near-deduped, 3 contaminated
+    assert rows[2].weight_unats > rows[0].weight_unats  # target-like up
+
+    # despan: corpus-duplicated k-gram runs get CUT from the text
+    dup_run = "alpha beta gamma delta epsilon zeta eta theta "
+    spanned = spark.createDataFrame(
+        [(0, dup_run * 2 + "unique tail one two three four five six"),
+         (1, dup_run * 2 + "other ending seven eight nine ten eleven")],
+        "doc_id long, text string")
+    cleaned = {r.doc_id: r.text for r in run_pipeline(
+        spanned, [{"op": "despan", "k": 8}]).collect()}
+    assert all("alpha beta gamma" not in t for t in cleaned.values())
+    assert "unique tail" in cleaned[0] and "other ending" in cleaned[1]
+
+
+def test_pipeline_decontaminate_custom_columns(spark):
+    """decontaminate must forward text_col/id_col to the checker: with
+    a custom text column AND a decoy 'text' column present, the hit
+    must be found in the custom column (regression: the op used to
+    silently check the default 'text')."""
+    leaked = ("leaked benchmark sentence the model must never train on "
+              "plus padding words to form enough windows here")
+    clean = ("totally original prose about gardening tomatoes in clay "
+             "pots on a rainy tuesday afternoon with good drainage")
+    docs = spark.createDataFrame(
+        [(0, leaked, clean), (1, clean, leaked)],
+        "my_id long, body string, text string")  # 'text' is the DECOY
+    bench = spark.createDataFrame(
+        [(100, "leaked benchmark sentence the model must never train on")],
+        "bench_id long, text string")
+    out = run_pipeline(docs, [
+        {"op": "decontaminate", "benchmark": bench, "k": 8,
+         "text_col": "body", "id_col": "my_id"},
+    ])
+    # doc 0's BODY is contaminated (dropped); doc 1's body is clean
+    # even though its decoy 'text' column holds the leaked sentence
+    assert [r.my_id for r in out.collect()] == [1]
+
+
 def test_pipeline_observed_report_single_job(spark, tmp_path):
     """run_pipeline_observed: retention counts ride the ONE production
     action as observe() metrics (zero extra jobs), and match the
@@ -111,7 +183,8 @@ def test_pipeline_observed_report_single_job(spark, tmp_path):
     steps = [
         {"op": "min_quality", "threshold": 0.8},
         {"op": "exact_dedup_keep"},
-        {"op": "near_dedup_keep"},
+        {"op": "stratified_sample",
+         "fractions": {"web": 1.0, "books": 0.0}},
     ]
     # reference numbers from the count()-per-step mode
     want: list = []
@@ -140,15 +213,329 @@ def test_pipeline_observed_report_single_job(spark, tmp_path):
     assert obs_jobs <= base_jobs, (
         f"observed report must add zero jobs: {obs_jobs} vs "
         f"baseline {base_jobs}")
-    assert rows == {0}
+    assert rows == {0, 2}
     assert get_report() == want
 
 
-def test_pipeline_normalize_text(spark):
-    """normalize_text rewrites the text column in place."""
+def test_pipeline_per_group_cap(spark):
     docs = spark.createDataFrame(
-        [(i, f"doc  body\r\nnumber {i}") for i in range(50)],
-        "doc_id long, text string")
-    out = run_pipeline(docs, [{"op": "normalize_text"}]).collect()
+        [(i, f"some body text number {i}", "web" if i < 8 else "books")
+         for i in range(10)],
+        "doc_id long, text string, source string")
+    out = run_pipeline(docs, [{"op": "per_group_cap", "k": 3}])
+    counts = {r.source: r["count"] for r in
+              out.groupBy("source").count().collect()}
+    assert counts == {"web": 3, "books": 2}   # books has only 2 docs
+
+
+def test_pipeline_boilerplate_lines_and_weighted_sample(spark):
+    """boilerplate_lines rewrites text in place (chrome lines cut,
+    other columns preserved); weighted_sample keeps exactly k docs and
+    both compose with downstream ops in one pipeline."""
+    chrome = "subscribe to our newsletter for updates"
+    docs = spark.createDataFrame(
+        [(i, f"unique body line number {i}\n{chrome}", "web", i % 5 + 1)
+         for i in range(12)],
+        "doc_id long, text string, source string, wt long")
+    out = run_pipeline(docs, [
+        {"op": "boilerplate_lines", "max_doc_freq": 2},
+        {"op": "weighted_sample", "k": 4, "weight_col": "wt"},
+    ]).collect()
+    assert len(out) == 4
+    for r in out:
+        assert r.text == f"unique body line number {r.doc_id}"
+        assert r.source == "web"          # non-text columns survive
+
+    # weighted_sample alone is the same selection as the raw operator
+    from enrich_spark.datapipe.layout import weighted_sample_k
+    direct = {r.doc_id for r in weighted_sample_k(
+        docs, 4, "wt").collect()}
+    assert {r.doc_id for r in out} == direct
+
+
+def test_pipeline_normalize_and_quantile_bins(spark):
+    """normalize_text rewrites the text in place; quantile_bins
+    annotates a bin; both compose in one declarative chain."""
+    docs = spark.createDataFrame(
+        [(i, f"doc  body\r\nnumber {i}", i % 10) for i in range(50)],
+        "doc_id long, text string, score long")
+    out = run_pipeline(docs, [
+        {"op": "normalize_text"},
+        {"op": "quantile_bins", "score_col": "score", "k": 5},
+    ]).collect()
     assert len(out) == 50
     assert all(r.text == f"doc body\nnumber {r.doc_id}" for r in out)
+    assert {r.bin for r in out} == {1, 2, 3, 4, 5}
+    # value-keyed: equal scores share a bin
+    seen = {}
+    for r in out:
+        assert seen.setdefault(r.score, r.bin) == r.bin
+
+
+def test_pipeline_token_budget(spark):
+    """token_budget composes in a pipeline: token counts annotated by
+    an upstream step feed the selection; output tokens fit the budget
+    and prefer higher scores."""
+    docs = spark.createDataFrame(
+        [(i, ("word " * (10 + i % 5)).strip(), i % 3)
+         for i in range(40)],
+        "doc_id long, text string, score long")
+    out = run_pipeline(docs, [
+        {"op": "token_counts"},
+        {"op": "token_budget", "budget_tokens": 150,
+         "score_col": "score", "token_col": "ws_tokens"},
+    ]).collect()
+    total = sum(r.ws_tokens for r in out)
+    assert 0 < total <= 150
+    assert all(r.score == 2 for r in out)   # budget exhausts in tier 2
+
+
+def test_pipeline_r12_ops(spark):
+    """lm_score / min_lm_score / containment_dedup_keep / domain_cap
+    as config steps: the LM filter drops word salad, the containment
+    step drops the quoted (contained) doc, the domain cap bounds each
+    source, and all four chain in one lazy pipeline."""
+    quote = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [
+        # three genuinely distinct web docs (near-identical texts would
+        # correctly fall to the containment step themselves)
+        (0, "the quick brown fox jumps over the lazy dog near the "
+            "river bank today", "web", 5),
+        (1, "spark executors shuffle wide partitions while the "
+            "optimizer prunes columns", "web", 4),
+        (2, "a completely different story about mountains and "
+            "weather patterns this season", "web", 2),
+        (3, "intro text " + quote + " outro words trail here", "web", 3),
+        (4, quote, "web", 1),                       # contained in 3
+        (5, GOOD + " books copy", "books", 9),
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, source string, score long")
+
+    out = run_pipeline(docs, [
+        {"op": "containment_dedup_keep", "threshold_bp": 8000,
+         "shingle_k": 2},
+        {"op": "domain_cap", "cap": 3, "score_col": "score"},
+        {"op": "lm_score"},
+    ])
+    got = {r.doc_id: r for r in out.collect()}
+    assert 4 not in got                  # the contained quote dropped
+    assert 3 in got                      # the containing doc kept
+    web = sorted(d for d in got if got[d].source == "web")
+    assert web == [0, 1, 3]              # cap=3 by score: 5,4,3 kept
+    assert 2 not in got                  # lowest score over the cap
+    assert all(got[d].avg_logp_micro is not None for d in got)
+
+    # threshold filter: in-domain text outscores shuffled word salad
+    shuffled = " ".join(reversed((GOOD + " one").split()))
+    mix = spark.createDataFrame(
+        [(0, GOOD + " one"), (1, GOOD + " two"), (2, shuffled)],
+        "doc_id long, text string")
+    scored = {r.doc_id: r.avg_logp_micro for r in run_pipeline(
+        mix, [{"op": "lm_score"}]).collect()}
+    cut = scored[2] + 1
+    kept = {r.doc_id for r in run_pipeline(
+        mix, [{"op": "min_lm_score", "threshold_micro": cut}]).collect()}
+    assert 2 not in kept and 0 in kept
+
+
+def test_pipeline_r13_ops(spark, tmp_path):
+    """r13: image_dedup_keep / chat_assemble / shard_export as config
+    steps — a JSON-file pipeline chains perceptual dedup into a sharded
+    export, and the chat op packs turn rows with a validity gate."""
+    import numpy as np
+
+    from enrich_spark.datapipe.media_codecs import encode_bmp
+
+    def gradient(p, perturb=None):
+        px = np.zeros((8, 9 * 3), np.uint8)
+        for y in range(8):
+            for x in range(9):
+                v = (p * 17 + x * 29 + y * 5) % 251
+                if perturb == (x, y):
+                    v = (v + 40) % 251
+                px[y, 3 * x:3 * x + 3] = v
+        return encode_bmp(9, 8, px)
+
+    rows = [
+        (1, bytearray(gradient(100)), 5),
+        (2, bytearray(gradient(100)), 9),              # dup of 1, better
+        (3, bytearray(gradient(100, perturb=(4, 2))), 1),  # near dup
+        (4, bytearray(gradient(171)), 2),              # distinct
+        (5, bytearray(b"not-an-image"), 0),            # decode failure
+    ]
+    docs = spark.createDataFrame(rows,
+                                 "doc_id LONG, media BINARY, q LONG")
+    cfg = tmp_path / "steps.json"
+    cfg.write_text(json.dumps([
+        {"op": "image_dedup_keep", "max_hamming": 4, "quality_col": "q"},
+        {"op": "shard_export", "path": str(tmp_path / "out"),
+         "n_shards": 2},
+    ]))
+    manifest = run_pipeline(docs, str(cfg))
+    # cluster {1,2,3} keeps 2 (highest q); 4 distinct; 5 undecodable
+    # is KEPT (never enters pair generation)
+    kept = {r.doc_id for r in
+            spark.read.parquet(str(tmp_path / "out")).collect()}
+    assert kept == {2, 4, 5}
+    m = manifest.collect()
+    assert sum(r.n_rows for r in m) == 3
+    assert {r.shard_id for r in m} <= {0, 1}
+
+    # chat_assemble as a step, with the validity gate
+    turns = spark.createDataFrame(
+        [(1, 0, "user", "q"), (1, 1, "assistant", "a"),
+         (2, 0, "user", "q"), (2, 1, "user", "again"),   # alternation
+         (2, 2, "assistant", "a")],
+        "conv_id long, turn_idx long, role string, text string")
+    packed = run_pipeline(turns, [{"op": "chat_assemble"}])
+    assert {r.conv_id: r.alternation_ok
+            for r in packed.collect()} == {1: 1, 2: 0}
+    gated = run_pipeline(
+        turns, [{"op": "chat_assemble", "require_valid": True}])
+    assert [r.conv_id for r in gated.collect()] == [1]
+
+
+def test_pipeline_sft_dedup_keep(spark):
+    """turns -> assembled conversations surviving assistant-content
+    dedup, as ONE config step (the SFT ingest shape): the duplicate
+    answer under a different prompt is dropped, the most-supervised
+    copy survives."""
+    ans = ("to reverse a list in python use the built in reversed "
+           "function or slice with a negative step like lst reversed")
+    turns = spark.createDataFrame(
+        [(1, 0, "user", "how?"), (1, 1, "assistant", ans),
+         (2, 0, "user", "different prompt"), (2, 1, "assistant", ans),
+         (3, 0, "user", "other"), (3, 1, "assistant", "unrelated "
+          "answer about mountains and weather patterns this season")],
+        "conv_id long, turn_idx long, role string, text string")
+    out = run_pipeline(turns, [{"op": "sft_dedup_keep"}])
+    got = {r.conv_id: r for r in out.collect()}
+    # the verbatim answer under a DIFFERENT prompt clusters 1 with 2;
+    # equal supervised chars tie -> lowest conv id survives
+    assert set(got) == {1, 3}
+    assert got[1].text.startswith("<|user|>\n")
+    assert got[1].n_mask_turns == 1
+
+
+def test_pipeline_code_profile_and_filter(spark):
+    code = ("def f(x):\n    return [i for i in range(x)];\n"
+            "class A:\n    def g(self) -> None:\n        self.x += 1\n"
+            "import os\nconst y = {};\n")
+    prose = ("The meeting covered quarterly results and the new "
+             "marketing plan for the region, with questions afterward.")
+    docs = spark.createDataFrame(
+        [(1, code, "web"), (2, prose, "web")],
+        "doc_id long, text string, source string")
+    ann = {r.doc_id: r for r in run_pipeline(
+        docs, [{"op": "code_profile"}]).collect()}
+    assert ann[1].is_code == 1 and ann[2].is_code == 0
+    assert ann[1].code_score_bp > 2000 > ann[2].code_score_bp
+    kept = {r.doc_id for r in run_pipeline(
+        docs, [{"op": "code_filter"}]).collect()}       # drop code
+    assert kept == {2}
+    kept = {r.doc_id for r in run_pipeline(
+        docs, [{"op": "code_filter", "mode": "keep"}]).collect()}
+    assert kept == {1}
+
+
+def test_code_profile_review_regressions(spark):
+    """r13 review: (a) short prose with everyday words (return/class)
+    must NOT classify as code — those words left CODE_KW_RE; (b) a
+    ~1.3 MB dense-code doc must not overflow the 32-bit blend
+    (ARITHMETIC_OVERFLOW under ANSI before the long cast)."""
+    from enrich_spark.datapipe.text import code_profile
+
+    big_code = "x={};y=[];\n    foo();\n" * 60000
+    df = spark.createDataFrame(
+        [(1, "He will return to class."), (2, big_code)],
+        "doc_id long, text string")
+    rows = {r.doc_id: r for r in code_profile(df).collect()}
+    assert rows[1].is_code == 0 and rows[1].code_score_bp == 0
+    assert rows[2].is_code == 1 and rows[2].code_score_bp == 10000
+
+
+def test_pipeline_extract_code_routes_fences(spark):
+    """r14 router composition: a prose doc with an embedded code fence
+    must survive the prose quality gate once extract_code strips the
+    fence (the raw doc fails it), and the fence body must land in the
+    code stream where code_profile flags it."""
+    prose_a = (
+        "The committee reviewed the annual budget and discussed the "
+        "upcoming schedule for regional training sessions. Members "
+        "agreed that the proposal should be revised before the next "
+        "meeting, and several questions were raised about staffing. ")
+    prose_b = (
+        "After a short break the discussion turned to the library "
+        "renovation, where the architect presented three options and "
+        "answered detailed questions from the board about cost. ")
+    fence = ("```python\n"
+             + "x={};y=[];z=[i for i in range(9)];\n"
+             "    foo(); bar(); baz();\n" * 20
+             + "```\n")
+    mixed = prose_a + "\n" + fence + prose_b
+    pure = prose_a + prose_b
+    docs = spark.createDataFrame(
+        [(1, mixed, "web"), (2, pure, "web")],
+        "doc_id long, text string, source string")
+
+    # calibrate the gate between the raw-mixed score and the
+    # prose-only score (the test then proves the ORDERING, not a
+    # hard-coded constant)
+    raw_q = {r.doc_id: r.quality_score for r in run_pipeline(
+        docs, [{"op": "quality_score"}]).collect()}
+    stripped_q = {r.doc_id: r.quality_score for r in run_pipeline(
+        docs, [{"op": "extract_code", "mode": "prose"},
+               {"op": "quality_score"}]).collect()}
+    assert stripped_q[1] > raw_q[1]          # fence was the penalty
+    assert abs(stripped_q[1] - stripped_q[2]) < 0.05   # prose ≈ prose
+    thr = (raw_q[1] + stripped_q[1]) / 2
+
+    # without extraction the mixed doc dies at the gate…
+    kept_raw = {r.doc_id for r in run_pipeline(
+        docs, [{"op": "quality_score"},
+               {"op": "min_quality", "threshold": thr}]).collect()}
+    assert 1 not in kept_raw
+    # …with extraction it survives
+    kept = {r.doc_id for r in run_pipeline(
+        docs, [{"op": "extract_code", "mode": "prose"},
+               {"op": "quality_score"},
+               {"op": "min_quality", "threshold": thr}]).collect()}
+    assert kept == {1, 2}
+
+    # the fence body went to the code stream and profiles as code
+    code_stream = {r.doc_id: r for r in run_pipeline(
+        docs, [{"op": "extract_code", "mode": "code"},
+               {"op": "code_profile"}]).collect()}
+    assert set(code_stream) == {1}
+    assert code_stream[1].is_code == 1
+    assert "foo();" in code_stream[1].text
+    assert "committee" not in code_stream[1].text
+
+    # annotate mode: both streams + stats as columns
+    ann = {r.doc_id: r for r in run_pipeline(
+        docs, [{"op": "extract_code", "mode": "annotate"}]).collect()}
+    assert ann[1].n_fences == 1 and ann[2].n_fences == 0
+    assert ann[2].prose_text == pure and ann[2].code_text == ""
+
+    import pytest as _pytest
+    with _pytest.raises(ValueError, match="extract_code"):
+        run_pipeline(docs, [{"op": "extract_code", "mode": "bogus"}])
+
+
+def test_code_filter_schema_symmetric(spark):
+    """r13 advice: code_filter must present ONE output schema whether
+    is_code was pre-annotated or self-computed — the annotation is
+    consumed in both branches."""
+    docs = spark.createDataFrame(
+        [(1, "const x = {};\n    foo();\n" * 10, "web"),
+         (2, "Plain prose about gardens and weather patterns.", "web")],
+        "doc_id long, text string, source string")
+    self_computed = run_pipeline(docs, [{"op": "code_filter"}])
+    pre_annotated = run_pipeline(
+        docs, [{"op": "code_profile"}, {"op": "code_filter"}])
+    assert self_computed.columns == pre_annotated.columns
+    assert "is_code" not in self_computed.columns
+    assert "code_score_bp" not in pre_annotated.columns
+    assert {r.doc_id for r in self_computed.collect()} \
+        == {r.doc_id for r in pre_annotated.collect()} == {2}

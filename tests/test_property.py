@@ -91,6 +91,128 @@ def test_garbage_never_throws(blob):
     assert (r.loader_error is not None) or (r.api_vendor is not None)
 
 
+@given(
+    w=st.integers(1, 24), h=st.integers(1, 24),
+    color=st.sampled_from([0, 2, 4, 6]),
+    data=st.data(),
+)
+@settings(max_examples=40, deadline=None)
+def test_png_roundtrip_property(w, h, color, data):
+    # any 8-bit image round-trips bit-exactly through encode→decode
+    import numpy as np
+
+    from enrich_spark.datapipe.media_codecs import decode_png, encode_png
+
+    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color]
+    flat = data.draw(st.lists(
+        st.integers(0, 255), min_size=w * h * ch, max_size=w * h * ch))
+    px = np.asarray(flat, dtype=np.uint8).reshape(h, w * ch)
+    ww, hh, cc, back = decode_png(encode_png(w, h, px, color=color))
+    assert (ww, hh, cc) == (w, h, ch)
+    assert np.array_equal(back, px)
+
+
+@given(data=st.binary(min_size=0, max_size=400))
+@settings(max_examples=60, deadline=None)
+def test_decode_one_never_throws(data):
+    # hostile bytes (including truncated magic prefixes) must never throw
+    from enrich_spark.datapipe.media_codecs import PNG_SIG
+    from enrich_spark.datapipe.multimodal import _decode_one
+
+    for prefix in (b"", PNG_SIG, b"BM", b"RIFF1234WAVE"):
+        row = _decode_one(prefix + data)
+        assert row["codec"] in ("png", "bmp", "wav", "stub")
+        assert isinstance(row["features"], list)
+
+
+@given(
+    n=st.integers(1, 500), rate=st.sampled_from([8000, 16000, 44100]),
+    bits16=st.booleans(), data=st.data(),
+)
+@settings(max_examples=30, deadline=None)
+def test_wav_roundtrip_property(n, rate, bits16, data):
+    import numpy as np
+
+    from enrich_spark.datapipe.media_codecs import decode_wav, encode_wav
+
+    if bits16:
+        flat = data.draw(st.lists(st.integers(-32768, 32767), min_size=n, max_size=n))
+        samples = np.asarray(flat, dtype="<i2")
+    else:
+        flat = data.draw(st.lists(st.integers(0, 255), min_size=n, max_size=n))
+        samples = np.asarray(flat, dtype=np.uint8)
+    ch, r, frames, dur, back = decode_wav(encode_wav(rate, samples))
+    assert (ch, r, frames) == (1, rate, n)
+    assert dur == n * 1000 // rate
+    assert np.array_equal(back, samples)
+
+
+@given(
+    w=st.integers(1, 20), h=st.integers(1, 20),
+    npal=st.sampled_from([2, 4, 16, 64]), data=st.data(),
+)
+@settings(max_examples=30, deadline=None)
+def test_gif_roundtrip_property(w, h, npal, data):
+    # any palette image round-trips losslessly through real LZW
+    import numpy as np
+
+    from enrich_spark.datapipe.media_codecs import decode_gif, encode_gif
+
+    pal = np.asarray(
+        data.draw(st.lists(st.integers(0, 255), min_size=npal * 3,
+                           max_size=npal * 3)), np.uint8).reshape(-1, 3)
+    idx = np.asarray(
+        data.draw(st.lists(st.integers(0, npal - 1), min_size=w * h,
+                           max_size=w * h))).reshape(h, w)
+    ww, hh, cc, back = decode_gif(encode_gif(w, h, pal, idx))
+    assert (ww, hh, cc) == (w, h, 3)
+    assert np.array_equal(back, pal[idx])
+
+
+@given(
+    w=st.integers(1, 24), h=st.integers(1, 24),
+    quality=st.integers(30, 95), sub=st.sampled_from(["444", "420"]),
+    data=st.data(),
+)
+@settings(max_examples=25, deadline=None)
+def test_jpeg_roundtrip_property(w, h, quality, sub, data):
+    # lossy, but dims/channels always survive and pixel error is bounded
+    # by the quantization scale (generous cap: smooth-ish content)
+    import numpy as np
+
+    from enrich_spark.datapipe.jpeg import decode_jpeg, encode_jpeg
+
+    base = data.draw(st.integers(0, 200))
+    # smooth gradient + small per-pixel noise (JPEG's design envelope)
+    yy, xx = np.mgrid[0:h, 0:w]
+    noise = np.asarray(
+        data.draw(st.lists(st.integers(0, 20), min_size=w * h * 3,
+                           max_size=w * h * 3))).reshape(h, w, 3)
+    px = np.clip(base + xx[..., None] * 2 + yy[..., None] + noise,
+                 0, 255).astype(np.uint8)
+    ww, hh, cc, back = decode_jpeg(encode_jpeg(w, h, px, quality=quality,
+                                               subsample=sub))
+    assert (ww, hh, cc) == (w, h, 3)
+    assert np.abs(back.astype(int) - px.astype(int)).max() <= 120
+    # progressive carries the SAME coefficients → pixel-identical
+    prog = decode_jpeg(encode_jpeg(w, h, px, quality=quality,
+                                   subsample=sub, progressive=True))[3]
+    assert np.array_equal(back, prog)
+
+
+@given(data=st.binary(min_size=0, max_size=300))
+@settings(max_examples=60, deadline=None)
+def test_decode_one_new_codecs_never_throw(data):
+    # JPEG/GIF/AVI prefixes + hostile tails must never escape the kernel
+    from enrich_spark.datapipe.multimodal import _decode_one
+
+    for prefix in (b"\xff\xd8\xff\xe0", b"GIF89a", b"GIF87a",
+                   b"RIFF1234AVI LIST"):
+        row = _decode_one(prefix + data)
+        assert row["codec"] in ("jpeg", "gif", "stub")
+        assert isinstance(row["features"], list)
+
+
 @given(st.text(max_size=200))
 @settings(max_examples=200, deadline=None)
 def test_yauaa_tree_and_matchers_total(ua):
@@ -116,7 +238,352 @@ config:
 
 
 # ---------------------------------------------------------------------------
-# curate-op properties
+# r8 operator properties
+
+
+@given(st.lists(st.binary(min_size=0, max_size=120), min_size=1, max_size=6))
+@settings(max_examples=60, deadline=None)
+def test_warc_roundtrip_property(payloads):
+    """Any payload bytes — CRLFs, fake version lines, binary — must
+    round-trip exactly through a well-formed WARC file."""
+    from enrich_spark.sources.warc import parse_warc_bytes
+
+    buf = bytearray()
+    for p in payloads:
+        buf += (b"WARC/1.0\r\nWARC-Type: response\r\n"
+                b"Content-Length: " + str(len(p)).encode() + b"\r\n\r\n"
+                + p + b"\r\n\r\n")
+    recs = parse_warc_bytes(bytes(buf))
+    assert len(recs) == len(payloads)
+    for rec, p in zip(recs, payloads):
+        assert rec["payload"] == p.decode("utf-8", "replace")
+        assert rec["payload_len"] == len(p)
+        assert rec["parse_error"] is None
+
+
+@given(st.lists(
+    st.text(alphabet=st.characters(codec="ascii"), max_size=60),
+    min_size=1, max_size=5))
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=list(HealthCheck))
+def test_bpe_native_equals_reference_property(texts):
+    """apply_bpe (native replace chain) == tokenize_py (reference
+    leftmost-greedy) for arbitrary ASCII text under a merge table
+    trained on that same text."""
+    from collections import Counter
+
+    from enrich_spark.datapipe import bpe
+
+    vocab = Counter()
+    for t in texts:
+        for w in bpe._normalize_py(t):
+            vocab[tuple(w) + (bpe.END,)] += 1
+    merges = bpe._train_merges(dict(vocab), num_merges=8)
+    spark = _get_spark()
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id INT, text STRING")
+    out = {r.doc_id: r for r in bpe.apply_bpe(df, merges).collect()}
+    for i, t in enumerate(texts):
+        toks = bpe.tokenize_py(t, merges)
+        assert out[i].n_tokens == len(toks), (t, merges)
+        assert out[i].tokens_head == " ".join(toks)[:160]
+
+
+@given(st.lists(st.sampled_from([
+    "https://www.Example.COM:443/a//b/?z=1&utm_source=x&a=2#f",
+    "HTTP://foo.co.uk:8080/PATH/?b=2&a=1&gclid=g",
+    "https://a.b.c.com.au/",
+    "http://example.org/x/y/z",
+    "https://www.test.net/?utm_campaign=c&utm_medium=m",
+]), min_size=1, max_size=5))
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=list(HealthCheck))
+def test_url_canonicalize_idempotent_property(urls):
+    """canonicalize(canonicalize(u)) == canonicalize(u) — the dedup
+    key must be a fixpoint."""
+    from pyspark.sql import functions as F
+
+    from enrich_spark.datapipe.webtext import canonicalize_url
+
+    spark = _get_spark()
+    df = spark.createDataFrame(
+        list(enumerate(urls)), "i INT, url STRING")
+    rows = df.select(
+        canonicalize_url(F.col("url")).alias("c1"),
+        canonicalize_url(canonicalize_url(F.col("url"))).alias("c2"),
+    ).collect()
+    for r in rows:
+        assert r.c1 == r.c2
+
+
+@given(st.lists(st.integers(0, 30), min_size=1, max_size=300),
+       st.integers(2, 8))
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_heavy_hitters_equals_exact_groupby_property(vals, nparts):
+    """heavy_hitters == plain GROUP BY … HAVING on arbitrary skew and
+    partitioning — the exactness contract of the sketch+confirm pattern."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from enrich_spark.datapipe.sketches import heavy_hitters
+
+    spark = _get_spark()
+    df = spark.createDataFrame(
+        [(str(v),) for v in vals], "v STRING").repartition(nparts)
+    support = 0.05
+    got = {(r.v, r.cnt)
+           for r in heavy_hitters(df, "v", support=support).collect()}
+    thr = max(1, math.ceil(len(vals) * support))
+    want = {(r.v, r.cnt) for r in df.groupBy("v")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .where(F.col("cnt") >= thr).collect()}
+    assert got == want
+
+
+@given(st.lists(
+    st.tuples(st.integers(0, 9),            # key
+              st.integers(0, 5),            # seq
+              st.sampled_from(["a", "b", "c"]),
+              st.booleans()),               # tombstone
+    min_size=0, max_size=40))
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_merge_snapshot_matches_brute_force_property(changes):
+    """merge_snapshot == a per-key brute-force replay for arbitrary
+    change streams (unique (key, seq) enforced by dedup, as real CDC
+    logs provide)."""
+    from enrich_spark.plans.merge import merge_snapshot
+
+    spark = _get_spark()
+    seen = {}
+    for k, s, v, d in changes:
+        seen[(k, s)] = (k, v, s + 10, d)   # updates live at seq ≥ 10
+    ups = list(seen.values())
+    base = [(k, f"base{k}", 0) for k in range(10)]
+    bdf = spark.createDataFrame(base, "id INT, val STRING, seq INT")
+    udf_ = spark.createDataFrame(
+        ups or [(None, None, None, None)],
+        "id INT, val STRING, seq INT, deleted BOOLEAN")
+    if not ups:
+        udf_ = udf_.where("id IS NOT NULL")
+    got = {tuple(r) for r in merge_snapshot(
+        bdf, udf_, ["id"], "seq", delete_col="deleted").collect()}
+    # brute force: per key, max-seq change wins over base; tombstone drops
+    want = set()
+    for k, bv, bs in base:
+        cand = [(s, v, d) for (kk, v, s, d) in ups if kk == k]
+        if not cand:
+            want.add((k, bv, bs))
+            continue
+        s, v, d = max(cand)
+        if not d:
+            want.add((k, v, s))
+    for kk in {u[0] for u in ups} - {b[0] for b in base}:
+        cand = [(s, v, d) for (k2, v, s, d) in ups if k2 == kk]
+        s, v, d = max(cand)
+        if not d:
+            want.add((kk, v, s))
+    assert got == want
+
+
+_NEARDUP_VOCAB = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+                  "eta", "theta", "iota", "kappa"]
+
+
+@given(st.lists(
+    st.tuples(st.lists(st.sampled_from(_NEARDUP_VOCAB),
+                       min_size=6, max_size=14),    # base words
+              st.integers(0, 3)),                   # words appended to copy
+    min_size=1, max_size=8),
+    st.sampled_from([0.5, 0.75, 1.0]))
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_streaming_near_dedup_batch_parity_property(docs_spec, thresh):
+    """streaming_near_dedup's batch-fallback emissions EXACTLY match the
+    documented signature-agreement model on generated corpora: a pair is
+    emitted once per colliding LSH band iff its minhash agreement ≥
+    ceil(threshold · num_hashes), with est_jaccard_bp =
+    floor(agree · 10000 / num_hashes) — integer, matching the streaming
+    kernel's // semantics (the documented parity contract)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from enrich_spark.datapipe.dedup import (
+        minhash_signature, shingles, streaming_near_dedup)
+
+    NUM_HASHES, BANDS, K = 8, 4, 3
+    rows_per_band = NUM_HASHES // BANDS
+    need = int(thresh * NUM_HASHES + 0.9999)
+
+    t0 = dt.datetime(2026, 1, 1)
+    rows, i = [], 0
+    for words, extra in docs_spec:
+        rows.append((i, " ".join(words), t0))
+        # a perturbed copy: same prefix + `extra` appended vocab words
+        rows.append((i + 1, " ".join(words + _NEARDUP_VOCAB[:extra]), t0))
+        i += 2
+    spark = _get_spark()
+    df = spark.createDataFrame(rows, "doc_id LONG, text STRING, ts TIMESTAMP")
+
+    got = sorted(
+        (r.doc_id, r.matched_id, r.est_jaccard_bp, r.band_id)
+        for r in streaming_near_dedup(
+            df, num_hashes=NUM_HASHES, bands=BANDS, shingle_k=K,
+            sim_threshold=thresh).collect())
+
+    # reference model from the engine's own signature primitives,
+    # evaluated per-doc then compared pure-Python (no band join reuse)
+    sigs = {r.doc_id: r.sig for r in df.select(
+        "doc_id", minhash_signature(
+            shingles(F.col("text"), K), NUM_HASHES).alias("sig"))
+        .where(F.size("sig") == NUM_HASHES).collect()}
+    want = []
+    ids = sorted(sigs)
+    for ai, a in enumerate(ids):
+        for b in ids[:ai]:
+            agree = sum(x == y for x, y in zip(sigs[a], sigs[b]))
+            if agree < need:
+                continue
+            for band in range(BANDS):
+                lo, hi = band * rows_per_band, (band + 1) * rows_per_band
+                if sigs[a][lo:hi] == sigs[b][lo:hi]:
+                    want.append((a, b, agree * 10000 // NUM_HASHES, band))
+    assert got == sorted(want)
+
+
+@given(st.lists(
+    st.tuples(st.lists(st.sampled_from(_NEARDUP_VOCAB),
+                       min_size=6, max_size=12),
+              st.integers(0, 2)),
+    min_size=2, max_size=8))
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_incremental_dedup_consistency_property(docs_spec):
+    """Incremental dedup == the batch near-dedup restricted to
+    cross-boundary pairs: splitting a corpus into (index, increment)
+    and joining the increment against the stored index must find
+    EXACTLY the (new, corpus) pairs the streaming-semantics batch
+    check finds on the combined corpus."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from enrich_spark.datapipe.dedup import (
+        build_minhash_index, incremental_dedup_pairs,
+        streaming_near_dedup)
+
+    NH, B, K, T = 8, 4, 3, 0.5
+    rows, i = [], 0
+    for words, extra in docs_spec:
+        rows.append((i, " ".join(words)))
+        rows.append((i + 1, " ".join(words + _NEARDUP_VOCAB[:extra])))
+        i += 2
+    spark = _get_spark()
+    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    corpus = docs.where("doc_id % 3 != 0")
+    new = docs.where("doc_id % 3 = 0")
+
+    idx = build_minhash_index(corpus, num_hashes=NH, bands=B, shingle_k=K)
+    got = {(r.new_id, r.corpus_id, r.est_jaccard_bp) for r in
+           incremental_dedup_pairs(new, idx, num_hashes=NH, bands=B,
+                                   shingle_k=K, sim_threshold=T).collect()}
+
+    # reference: the batch near-dedup (same signature-agreement
+    # semantics) over the COMBINED corpus, restricted to pairs that
+    # straddle the boundary; its per-band emissions dedup to pair set
+    t0 = dt.datetime(2026, 1, 1)
+    combined = docs.select("doc_id", "text", F.lit(t0).alias("ts"))
+    full = streaming_near_dedup(combined, num_hashes=NH, bands=B,
+                                shingle_k=K, sim_threshold=T).collect()
+    want = set()
+    for r in full:
+        a, b = r.doc_id, r.matched_id          # a > b by contract
+        for hi, lo in ((a, b), (b, a)):
+            if hi % 3 == 0 and lo % 3 != 0:
+                want.add((hi, lo, r.est_jaccard_bp))
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# r10: boilerplate line removal + weighted sampling invariants
+
+
+_line_txt = st.text(
+    alphabet=st.characters(codec="ascii", min_codepoint=32,
+                           exclude_characters="\x00"),
+    min_size=0, max_size=24)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.lists(_line_txt, min_size=1, max_size=6),
+                min_size=1, max_size=10),
+       st.integers(1, 3))
+def test_boilerplate_removal_matches_brute_force_property(doclines, freq):
+    """remove_boilerplate_lines == the brute-force definition: drop
+    exactly the lines whose normalized form (len >= min) appears in
+    > max_doc_freq distinct docs; survivors keep original text and
+    order. Also idempotent: line frequencies can only DROP after a
+    removal pass, so a second pass removes nothing."""
+    from pyspark.sql import functions as F
+
+    from enrich_spark.datapipe.dedup import remove_boilerplate_lines
+
+    spark = _get_spark()
+    rows = [(i, "\n".join(ls)) for i, ls in enumerate(doclines)]
+
+    # brute force in plain Python
+    df_count: dict = {}
+    for i, ls in enumerate(doclines):
+        for nrm in {ln.strip().lower() for ln in ls}:
+            df_count[nrm] = df_count.get(nrm, 0) + 1
+    flagged = {n for n, c in df_count.items()
+               if len(n) >= 8 and c > freq}
+    want = {}
+    for i, ls in enumerate(doclines):
+        kept = [ln for ln in ls if ln.strip().lower() not in flagged]
+        want[i] = ("\n".join(kept), len(ls), len(kept))
+
+    docs = spark.createDataFrame(rows, "doc_id INT, text STRING")
+    out = remove_boilerplate_lines(docs, max_doc_freq=freq)
+    got = {r.doc_id: (r.clean_text, r.n_lines, r.kept_lines)
+           for r in out.collect()}
+    assert got == want
+
+    # idempotence on the cleaned corpus
+    again = remove_boilerplate_lines(
+        out.select("doc_id", F.col("clean_text").alias("text")),
+        max_doc_freq=freq)
+    assert all(r.removed_lines == 0 for r in again.collect())
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.integers(-3, 100), min_size=1, max_size=40),
+       st.integers(1, 12))
+def test_weighted_sample_matches_reference_keys_property(weights, k):
+    """weighted_sample_k selects exactly the ids a pure-Python replay
+    of the key definition selects: key = max_{j<=clamp(w)} md5(seed:id:j),
+    top-k by (key desc, id asc)."""
+    import hashlib
+
+    from enrich_spark.datapipe.layout import weighted_sample_k
+
+    spark = _get_spark()
+    rows = [(i, w) for i, w in enumerate(weights)]
+
+    def key(i, w):
+        w = max(min(w, 64), 1)
+        return max(hashlib.md5(f"42:{i}:{j}".encode()).hexdigest()
+                   for j in range(1, w + 1))
+
+    ranked = sorted(rows, key=lambda r: (key(*r), -r[0]), reverse=True)
+    want = sorted(i for i, _ in ranked[:k])
+
+    df = spark.createDataFrame(rows, "doc_id LONG, w LONG")
+    got = sorted(r.doc_id for r in weighted_sample_k(df, k, "w").collect())
+    assert got == want
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
@@ -147,3 +614,265 @@ def test_normalize_text_idempotent_property(texts):
         assert not _re.search("[\x00-\x08\x0b\x0c\x0e-\x1f\x7f\t]", t)
         assert "  " not in t and "\n\n\n" not in t
         assert t == t.strip()
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.integers(0, 30), min_size=1, max_size=60),
+       st.integers(2, 8))
+def test_quantile_bins_matches_brute_force_property(scores, k):
+    """quantile_bins == the integer cumulative-count definition, for
+    any tie structure."""
+    from enrich_spark.datapipe.curation import quantile_bins
+
+    spark = _get_spark()
+    rows = list(enumerate(scores))
+    n = len(scores)
+    cum, want_bin, c = 0, {}, __import__("collections").Counter(scores)
+    for s in sorted(c):
+        cum += c[s]
+        want_bin[s] = 1 + (cum - 1) * k // n
+    docs = spark.createDataFrame(rows, "doc_id INT, score INT")
+    got = {r.doc_id: r.bin for r in quantile_bins(docs, "score", k=k).collect()}
+    assert got == {i: want_bin[s] for i, s in rows}
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.tuples(st.integers(0, 6), st.integers(1, 40)),
+                min_size=1, max_size=50),
+       st.integers(0, 600))
+def test_select_token_budget_matches_brute_force_property(rows_in, budget):
+    """select_token_budget == the pure-Python prefix walk of the
+    (score desc, md5, id) order, for any score/token structure and any
+    budget (including 0 and over-total)."""
+    import hashlib
+
+    from enrich_spark.datapipe.curation import select_token_budget
+
+    spark = _get_spark()
+    rows = [(i, s, t) for i, (s, t) in enumerate(rows_in)]
+
+    def key(i, s):
+        return (format((1 << 31) - 1 - s, "08x")
+                + hashlib.md5(f"42:{i}".encode()).hexdigest()
+                + format(i, "016x"))
+
+    cum, want = 0, set()
+    for i, s, t in sorted(rows, key=lambda r: key(r[0], r[1])):
+        if cum + t > budget:
+            break
+        cum += t
+        want.add(i)
+
+    docs = spark.createDataFrame(
+        rows, "doc_id LONG, score LONG, n_tokens LONG")
+    got = {r.doc_id for r in select_token_budget(
+        docs, budget, "score", cell_cap=3).collect()}
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.integers(0, 10**6), min_size=1, max_size=40, unique=True),
+       st.integers(1, 5), st.integers(4, 32))
+def test_negative_samples_matches_reference_property(ids, k, nb):
+    """negative_samples == the pure-Python replay of the bucket/rep/
+    offset definition, for any id set, k, and bucket count."""
+    import hashlib
+
+    from enrich_spark.datapipe.similarity import negative_samples
+
+    spark = _get_spark()
+
+    def bucket(i):
+        return int(hashlib.md5(f"42:neg:{i}".encode())
+                   .hexdigest()[:15], 16) % nb
+
+    reps = {}
+    for i in ids:
+        b = bucket(i)
+        reps[b] = min(reps.get(b, i), i)
+    want = set()
+    for i in ids:
+        b = bucket(i)
+        for j in range(1, k + 1):
+            rep = reps.get((b + j) % nb)
+            if rep is not None and rep != i:
+                want.add((i, j, rep))
+
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id LONG")
+    got = {(r.anchor_id, r.j, r.neg_id) for r in
+           negative_samples(docs, k=k, n_buckets=nb).collect()}
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.text(alphabet="abcdef", min_size=0, max_size=6),
+                min_size=0, max_size=60),
+       st.integers(1, 16))
+def test_kmv_sketch_matches_python_replay_property(vals, k):
+    """kmv_sketch is exactly the k smallest distinct 60-bit md5-prefix
+    hashes a pure-Python replay computes — for ANY value multiset and
+    ANY k (duplicates collapse, order-free, partitioning-free)."""
+    import hashlib
+
+    from enrich_spark.datapipe.sketches import kmv_sketch
+
+    spark = _get_spark()
+    df = spark.createDataFrame([(v,) for v in vals], "v string") \
+        if vals else spark.createDataFrame([], "v string")
+    got = [r.kmv_h for r in kmv_sketch(df, "v", k=k).collect()]
+
+    def h(v):
+        return int(hashlib.md5(f"0:{v}".encode()).hexdigest()[:15], 16)
+
+    want = sorted({h(v) for v in vals})[:k]
+    assert got == want
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.lists(st.sampled_from(
+    ["alpha", "beta", "gamma", "delta", "eps"]),
+    min_size=0, max_size=8), min_size=1, max_size=10),
+    st.integers(2, 4))
+def test_ngram_novelty_matches_brute_force_property(docs_words, n):
+    """ngram_novelty equals a brute-force Python replay of the shingle
+    + doc-frequency definition for any corpus shape (short docs fall
+    back to the whole-text gram, duplicates collapse per doc)."""
+    from collections import Counter
+
+    from enrich_spark.datapipe.dedup import ngram_novelty
+
+    spark = _get_spark()
+    texts = [" ".join(ws) for ws in docs_words]
+
+    def grams(text):
+        # mirror _normalize + shingles: whitespace collapse is a no-op
+        # here (single spaces), short docs -> whole text
+        ws = text.lower().split(" ")
+        if len(ws) >= n:
+            return {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+        return {" ".join(ws)}
+
+    per_doc = [grams(t) for t in texts]
+    df_counts = Counter(g for gs in per_doc for g in gs)
+    want = sorted(
+        (i, len(gs), sum(1 for g in gs if df_counts[g] == 1),
+         sum(1 for g in gs if df_counts[g] == 1) * 10000 // len(gs))
+        for i, gs in enumerate(per_doc))
+
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    got = sorted((r.doc_id, r.n_grams, r.n_novel, r.novelty_bp)
+                 for r in ngram_novelty(df, n=n).collect())
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# r13 operators: pure-Python replays under hypothesis
+
+
+@given(
+    hashes=st.lists(st.integers(min_value=-(1 << 63),
+                                max_value=(1 << 63) - 1),
+                    min_size=2, max_size=14, unique=True),
+    max_hamming=st.integers(min_value=0, max_value=6),
+    extra_bands=st.integers(min_value=0, max_value=60),
+)
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=list(HealthCheck))
+def test_hamming_pairs_property(hashes, max_hamming, extra_bands):
+    """Any band count ≥ max_hamming+1 (pigeonhole floor) over any
+    hash multiset returns EXACTLY the brute-force Hamming-≤k pair set
+    — including the non-divisor widths 33..63 the r13 fix opened."""
+    from enrich_spark.datapipe.dedup import hamming_pairs
+
+    bands = min(64, max_hamming + 1 + extra_bands)
+    spark = _get_spark()
+    df = spark.createDataFrame(
+        [(i, h) for i, h in enumerate(hashes)], "doc_id LONG, h LONG")
+    got = sorted((r.id_a, r.id_b, r.hamming)
+                 for r in hamming_pairs(df, hash_col="h",
+                                        max_hamming=max_hamming,
+                                        bands=bands).collect())
+    brute = sorted(
+        (a, b, bin((ha ^ hb) & ((1 << 64) - 1)).count("1"))
+        for a, ha in enumerate(hashes) for b, hb in enumerate(hashes)
+        if a < b and bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
+        <= max_hamming)
+    assert got == brute
+
+
+_role = st.sampled_from(["system", "user", "assistant", None])
+_body = st.one_of(st.none(), st.text(
+    alphabet=st.characters(codec="utf-8",
+                           exclude_characters="\x00",
+                           exclude_categories=("Cs",)),
+    max_size=12))
+
+
+@given(turns=st.lists(st.tuples(st.integers(0, 2), _role, _body),
+                      min_size=1, max_size=10))
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=list(HealthCheck))
+def test_masked_content_extracts_exactly_the_mask_bodies(turns):
+    """For ANY conversation shape (NULL roles, NULL/empty/unicode
+    bodies), the span-extracted masked content equals the newline-join
+    of the mask-role turn bodies in turn order — i.e. the cumsum span
+    arithmetic is exact in the presence of every edge the generator
+    can produce."""
+    from enrich_spark.datapipe.chat import chat_assemble, masked_content
+
+    rows = [(int(c), int(i), r, b)
+            for i, (c, r, b) in enumerate(turns)]
+    spark = _get_spark()
+    df = spark.createDataFrame(
+        rows, "conv_id long, turn_idx long, role string, text string")
+    got = {r.conv_id: r.m for r in chat_assemble(df).select(
+        "conv_id", masked_content().alias("m")).collect()}
+    want: dict = {}
+    for c, i, r, b in sorted(rows, key=lambda x: x[1]):
+        if r == "assistant":
+            want.setdefault(c, []).append(b or "")
+    for c in got:
+        assert got[c] == "\n".join(want.get(c, []))
+
+
+@given(resp=st.lists(
+    st.tuples(st.integers(0, 3), st.sampled_from(["a", "b", "c", "d"]),
+              st.integers(0, 5)),
+    min_size=1, max_size=12))
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=list(HealthCheck))
+def test_preference_pairs_property(resp):
+    """best_vs_worst and all_pairs match a pure-Python replay of the
+    guards and tie-breaks for any scored-response multiset."""
+    from enrich_spark.datapipe.rlhf import preference_pairs
+
+    rows = [(p, i, t, s) for i, (p, t, s) in enumerate(resp)]
+    spark = _get_spark()
+    df = spark.createDataFrame(
+        rows, "prompt_id long, response_id long, text string, score long")
+
+    by_prompt: dict = {}
+    for p, i, t, s in rows:
+        by_prompt.setdefault(p, []).append((i, t, s))
+    want_bvw = set()
+    for p, rs in by_prompt.items():
+        best = max(rs, key=lambda x: (x[2], -x[0]))
+        # r14 best-distinct fallback: the worst among responses whose
+        # TEXT differs from the best's (not the absolute worst)
+        distinct = [r for r in rs if r[1] != best[1]]
+        if not distinct:
+            continue
+        worst = min(distinct, key=lambda x: (x[2], x[0]))
+        if best[2] - worst[2] >= 1:
+            want_bvw.add((p, best[0], worst[0], best[2] - worst[2]))
+    got_bvw = {tuple(r) for r in preference_pairs(df).collect()}
+    assert got_bvw == want_bvw
+
+    want_all = {(p, a[0], b[0], a[2] - b[2])
+                for p, rs in by_prompt.items()
+                for a in rs for b in rs
+                if a[2] >= b[2] + 1 and a[1] != b[1]}
+    got_all = {tuple(r) for r in
+               preference_pairs(df, mode="all_pairs").collect()}
+    assert got_all == want_all

@@ -1,8 +1,12 @@
 """Import reachability over enrich_spark/: every module must be reached,
-through imports, from an entry point or from a short pinned list of
-enrich APIs that callers construct directly. A module no root reaches
-serves no workload and is deleted rather than kept; adding a root is a
-reviewed edit to ROOTS.
+through imports, from an entry point, from a short pinned list of enrich
+APIs that callers construct directly, or from the oracle query registry
+(__spark_entry__.py). A module nothing reaches serves no workload and is
+deleted rather than kept; adding a root is a reviewed edit to ROOTS.
+
+The modules that ONLY the registry reaches are pinned exactly in
+REGISTRY_ONLY: no workload runs them, so the list may shrink (a module
+cut together with its registry rows) but never silently grow.
 
 Also pins the layering: outside datapipe/ itself, only the CLI's
 ``curate`` subcommand (enrich_spark/__main__.py) imports datapipe code,
@@ -14,7 +18,9 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "enrich_spark"
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "enrich_spark"
+REGISTRY = REPO / "__spark_entry__.py"
 
 ROOTS = (
     # entry points
@@ -30,6 +36,24 @@ ROOTS = (
     "enrich_spark.operators.clients",
     "enrich_spark.operators.yauaa_rules",
 )
+
+# reached from the oracle registry and from no root above
+REGISTRY_ONLY = {
+    "enrich_spark.datapipe.datacard",
+    "enrich_spark.datapipe.graph",
+    "enrich_spark.datapipe.pca",
+    "enrich_spark.datapipe.pq",
+    "enrich_spark.datapipe.regress",
+    "enrich_spark.datapipe.session",
+    "enrich_spark.datapipe.similarity",
+    "enrich_spark.datapipe.sketches",
+    "enrich_spark.datapipe.unigram",
+    "enrich_spark.datapipe.webtext",
+    "enrich_spark.plans.asof",
+    "enrich_spark.plans.bucketing",
+    "enrich_spark.plans.merge",
+    "enrich_spark.sources.warc",
+}
 
 
 def _modules() -> dict[str, Path]:
@@ -75,11 +99,9 @@ def _graph() -> tuple[dict[str, Path], dict[str, set[str]]]:
     return modules, {m: _imports(m, p, modules) for m, p in modules.items()}
 
 
-def test_every_module_is_reached_from_a_root():
-    modules, edges = _graph()
-    assert set(ROOTS) <= set(modules), set(ROOTS) - set(modules)
+def _reach(modules, edges, roots) -> set[str]:
     reached = set()
-    todo = list(ROOTS)
+    todo = list(roots)
     while todo:
         m = todo.pop()
         if m in reached:
@@ -90,11 +112,30 @@ def test_every_module_is_reached_from_a_root():
     for m in list(reached):
         parts = m.split(".")
         reached.update(".".join(parts[:i]) for i in range(1, len(parts)))
-    unreached = sorted(set(modules) - reached)
+    return reached
+
+
+def test_every_module_is_reached_from_a_root():
+    modules, edges = _graph()
+    assert set(ROOTS) <= set(modules), set(ROOTS) - set(modules)
+    registry = _imports("__spark_entry__", REGISTRY, modules)
+    unreached = sorted(
+        set(modules) - _reach(modules, edges, [*ROOTS, *registry]))
     lines = sum(len(modules[m].read_text().splitlines()) for m in unreached)
     assert not unreached, (
         f"{len(unreached)} modules ({lines} lines) are reached from no "
         f"root: {unreached}")
+
+
+def test_registry_only_modules_are_pinned():
+    modules, edges = _graph()
+    registry = _imports("__spark_entry__", REGISTRY, modules)
+    by_roots = _reach(modules, edges, ROOTS)
+    only = _reach(modules, edges, registry) - by_roots
+    assert only == REGISTRY_ONLY, (
+        f"new registry-only modules: {sorted(only - REGISTRY_ONLY)}; "
+        f"now reached from a root or gone (unpin them): "
+        f"{sorted(REGISTRY_ONLY - only)}")
 
 
 def test_only_the_curate_cli_imports_datapipe():

@@ -13,10 +13,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as entrymod
 
 
-def test_registry_is_exactly_39_rows():
+def test_registry_is_exactly_50_rows():
     q = entrymod.queries()
-    assert len(q) == 39, (
-        f"queries() has {len(q)} rows; the pin is 39 — update it "
+    assert len(q) == 50, (
+        f"queries() has {len(q)} rows; the pin is 50 — update it "
         "together with the README bundling table when a row is added "
         "or removed")
 
