@@ -890,8 +890,8 @@ config:
 
     def q_ua(spark, sf):
         # native ruleset through the full chain, PLUS the exact uap-core
-        # rules engine (operators/ua.ua_parser_context_rules): distinct-UA
-        # Arrow walk + broadcast join, first-match/$-substitution
+        # rules engine (operators/ua.ua_parser_context_rules): Arrow walk
+        # cached per useragent, first-match/$-substitution
         # semantics (UaParserEnrichment.scala:96-190)
         from enrich_spark.operators.ua import ua_parser_context_rules
 
@@ -2092,8 +2092,8 @@ config:
         )
 
         # "rules" part: YAUAA-format BYO ruleset through the matcher
-        # engine (operators/yauaa_rules.py) — distinct-UA Arrow walk +
-        # broadcast join, confidence-resolved extracts, LookUp /
+        # engine (operators/yauaa_rules.py) — Arrow walk cached per
+        # useragent, confidence-resolved extracts, LookUp /
         # CleanVersion / variable / up-step path semantics
         from enrich_spark.operators.yauaa_rules import (
             load_yauaa_rules, yauaa_context_rules,
@@ -2939,7 +2939,7 @@ config:
         #  - NULL input → skip (no call, no error)
         #  - upstream failure → enrichment error (ignore_on_error=False)
         #    vs silently dropped (ignore_on_error=True)
-        #  - per-executor TTL cache: key cardinality is 20/5, so ~all calls
+        #  - per-worker TTL cache: key cardinality is 20/5, so ~all calls
         #    after warmup are cache hits (asserted in test_lookups)
         from enrich_spark.operators.lookups import (
             ApiRequestConf, api_request_enrichment,

@@ -204,7 +204,7 @@ class EnrichmentsConfig:
     # Callable[[SparkSession], DataFrame]
     sql_query_table: Any = None
     # per-event cached query mode (Rdbms.scala:31-66): a
-    # Callable[[dict], list[dict]] run behind a per-executor LRU+TTL
+    # Callable[[dict], list[dict]] run behind a per-worker LRU+TTL
     # cache; used when sql_query_table is None
     sql_query_fn: Any = None
     # v_collector fallback when neither the cv param nor the collector

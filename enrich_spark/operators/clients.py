@@ -9,7 +9,7 @@ topology differs by design:
   operators/currency.py — a bounded driver-side fetch of one document
   per ETL day (the public historical endpoint
   ``/api/historical/YYYY-MM-DD.json``), never a per-event call.
-* **OWM** plugs into the existing per-executor cached UDF
+* **OWM** plugs into the per-worker cached lookup
   (operators/lookups.weather_context) as its ``provider`` — request
   volume is bounded by (rounded coord, day) cardinality, not events.
 

@@ -6,25 +6,26 @@ returned ``snowplow_id`` is merged back onto events as an identity
 context. Rule-based event filtering (In / NotIn over atomic fields,
 core/Config.scala:178-204) decides which events participate.
 
-Spark shape: the filter rules compile to native predicates; the service
-call is a cached UDF keyed on the identifier tuple (same LRU+TTL +
+Spark shape: the filter rules compile to native predicates that mask
+the identifier columns, and the service call is a
+``lookups.cached_lookup`` keyed on the identifier tuple (same LRU+TTL +
 injectable-transport pattern as the API enrichment — one request per
-DISTINCT identifier tuple per executor, not per event). The reference's
-retry + circuit breaker collapse into bounded retries inside the
-transport wrapper; a persistent-failure circuit opens per executor.
+DISTINCT identifier tuple per worker, not per event). The reference's
+retry + circuit breaker collapse into bounded retries around the
+transport; a persistent-failure circuit opens per worker.
 """
 
 from __future__ import annotations
 
-import json
+import uuid
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lookups import TtlCache
+from .lookups import cached_lookup, worker_state
 from .sql_enrichments import DERIVED_COL, ensure_derived
 
 IDENTITY_CTX_SCHEMA = "iglu:com.snowplowanalytics.snowplow/identity/jsonschema/1-0-0"
@@ -48,9 +49,6 @@ class IdentityConf:
     cache_ttl_s: float = 3600.0
     max_retries: int = 3
     circuit_threshold: int = 5     # consecutive failures → open circuit
-    # "broadcast" (default): distinct identifier tuples → one service
-    # call per tuple → broadcast join back. "per_event": cached UDF.
-    mode: str = "broadcast"
 
 
 def _compile_filters(rules: list[FilterRule]) -> Column:
@@ -74,7 +72,7 @@ _RESULT = T.StructType([
 
 def _resolve_one(transport, names, values, retries, state):
     """One service call with bounded retries and a consecutive-failure
-    circuit (state = {'failures': int}, scoped per executor/partition)."""
+    circuit (state = {'failures': int}, scoped per worker)."""
     payload = {n: v for n, v in zip(names, values)}
     last = None
     for _ in range(retries):
@@ -91,92 +89,31 @@ def _resolve_one(transport, names, values, retries, state):
 def add_identity_contexts(df: DataFrame, conf: IdentityConf) -> DataFrame:
     """Identity stitching (core/Identity.scala:32-207).
 
-    mode="broadcast" (default, the 100 TB path): distinct identifier
-    tuples from ELIGIBLE events → one service call per tuple on the
-    executors → broadcast join back on null-safe tuple equality. Service
-    volume = global tuple cardinality; the event stream sees no Python.
-
-    mode="per_event": the reference's cached-UDF semantics — one call
-    per distinct tuple per executor, LRU+TTL, per-executor circuit."""
+    The filter rules mask the identifier columns, so an ineligible event
+    carries all-NULL identifiers and, like an event with no identifiers,
+    never reaches the service. Eligible tuples go through
+    ``cached_lookup``: one call per distinct tuple per worker, LRU+TTL,
+    and a per-worker circuit that stops calling after
+    ``circuit_threshold`` consecutive failures."""
     if conf.transport is None:
         raise ValueError("IdentityConf.transport is required (no default endpoint)")
     df = ensure_derived(df)
     transport = conf.transport
     names = list(conf.identifiers)
-    size, ttl = conf.cache_size, conf.cache_ttl_s
     retries, circuit_threshold = conf.max_retries, conf.circuit_threshold
-    eligible = _compile_filters(conf.filters)
+    circuit = uuid.uuid4().hex
 
-    if conf.mode == "broadcast":
-        import pandas as pd
+    def resolve(*values):
+        state = worker_state(circuit, lambda: {"failures": 0})
+        if state["failures"] >= circuit_threshold:
+            return (None, "identity circuit open")
+        return _resolve_one(transport, names, values, retries, state)
 
-        keys = (
-            df.where(eligible)
-            .select(*[F.col(c) for c in names])
-            .where(F.greatest(*[F.col(c).isNotNull() for c in names])
-                   if len(names) > 1 else F.col(names[0]).isNotNull())
-            .distinct()
-        )
-
-        def resolve_batches(batches):
-            state = {"failures": 0}
-            for pdf in batches:
-                out_id, out_err = [], []
-                for row in pdf.itertuples(index=False):
-                    values = [None if pd.isna(v)
-                              else (v.item() if hasattr(v, "item") else v)
-                              for v in row]
-                    if state["failures"] >= circuit_threshold:
-                        rid, err = None, "identity circuit open"
-                    else:
-                        rid, err = _resolve_one(transport, names, values, retries, state)
-                    out_id.append(rid)
-                    out_err.append(err)
-                pdf = pdf.copy()
-                pdf["_id_resolved"] = out_id
-                pdf["_id_error"] = out_err
-                yield pdf
-
-        key_schema = ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in names
-        )
-        lookup = keys.mapInPandas(
-            resolve_batches, f"{key_schema}, _id_resolved string, _id_error string"
-        ).withColumnsRenamed({c: f"_idk_{c}" for c in names})
-
-        cond = None
-        for c in names:
-            piece = df[c].eqNullSafe(F.col(f"_idk_{c}"))
-            cond = piece if cond is None else (cond & piece)
-        df = df.join(F.broadcast(lookup), on=cond, how="left").drop(
-            *[f"_idk_{c}" for c in names]
-        )
-        res = F.when(eligible, F.struct(
-            F.col("_id_resolved").alias("snowplow_id"),
-            F.col("_id_error").alias("error"),
-        )).otherwise(F.lit(None).cast(_RESULT.simpleString()))
-        df = df.withColumn("_identity", res).drop("_id_resolved", "_id_error")
-    else:
-        holder: dict = {}
-
-        @F.udf(returnType=_RESULT)
-        def resolve(*values):
-            if all(v is None for v in values):
-                return (None, None)
-            if "cache" not in holder:
-                holder["cache"] = TtlCache(size, ttl)
-                holder["state"] = {"failures": 0}
-            if holder["state"]["failures"] >= circuit_threshold:
-                return (None, "identity circuit open")
-            return holder["cache"].get_or(
-                tuple(values),
-                lambda: _resolve_one(transport, names, values, retries, holder["state"]),
-            )
-
-        res = F.when(eligible, resolve(*[F.col(c) for c in names])).otherwise(
-            F.lit(None).cast(_RESULT.simpleString())
-        )
-        df = df.withColumn("_identity", res)
+    df = df.withColumn("_identity", cached_lookup(
+        resolve, _RESULT, [F.col(c) for c in names],
+        when=_compile_filters(conf.filters),
+        cache_size=conf.cache_size, cache_ttl_s=conf.cache_ttl_s,
+    ))
     data = F.to_json(F.struct(F.col("_identity.snowplow_id").alias("snowplowId")))
     ctx = F.struct(F.lit(IDENTITY_CTX_SCHEMA).alias("schema"), data.alias("data"))
     df = df.withColumn(

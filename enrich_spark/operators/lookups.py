@@ -4,21 +4,21 @@ SURVEY §2.5 #22 (sqlquery/SqlQueryEnrichment.scala:156-265),
 #23 (apirequest/ApiRequestEnrichment.scala:127-230), #15
 (WeatherEnrichment.scala:96-204).
 
-Spark-first architecture — two execution modes per SURVEY §4:
+A lookup that is a table (``sql_query_enrichment``) is a broadcast
+equi-join on the extracted key columns: zero Python, zero per-row
+network I/O. Row-count contracts (EXACTLY_ONE / AT_MOST_ONE /
+AT_LEAST_ONE / ALL_ROWS, sqlquery/Output.scala:106-139) are enforced on
+the join result.
 
-* **Broadcast-join mode (default, the scale path)**: the lookup RHS is a
-  DataFrame (loaded from JDBC/parquet/csv at plan-build time) and the
-  per-event lookup becomes a *broadcast equi-join* on the extracted key
-  columns. This is the Catalyst-native rewrite of the reference's
-  per-event-query pattern: zero Python, zero per-row network I/O, scales
-  with executors. Row-count contracts (EXACTLY_ONE / AT_MOST_ONE /
-  AT_LEAST_ONE / ALL_ROWS, sqlquery/Output.scala:106-139) are enforced
-  on the join result.
-* **Cached-UDF mode (semantics-preserving fallback)**: a per-executor
-  LRU+TTL cache around a user-provided ``fetch(key...) -> rows`` callable
-  (mirrors CachingEvaluator.scala:27-127). For services that cannot be
-  snapshotted as a table (live APIs). The HTTP transport is injectable;
-  per-partition batching keeps Python overhead amortized.
+Every lookup that calls a service (the SQL query function, the API
+request, the weather provider, the identity service in identity.py and
+the rules-driven UA classifiers in ua.py / yauaa_rules.py) takes one
+path, ``cached_lookup``: Spark computes the key columns, and an
+Arrow-batched UDF calls the service once per distinct key per Python
+worker behind an LRU+TTL cache (CachingEvaluator.scala:27-127). A row
+whose keys are all NULL makes no call. The event frame is never
+collected or joined back onto itself, so the same plan runs in batch
+and over a stream.
 """
 
 from __future__ import annotations
@@ -26,14 +26,16 @@ from __future__ import annotations
 import json
 import re
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .sql_enrichments import (
     DERIVED_COL,
@@ -43,7 +45,8 @@ from .sql_enrichments import (
 )
 
 # ---------------------------------------------------------------------------
-# §2.5 #22 — SQL query enrichment, broadcast-join mode
+# §2.5 #22 — SQL query enrichment: a broadcast join over a lookup table,
+# or a cached query function (sql_query_enrichment_udf)
 
 
 @dataclass
@@ -193,18 +196,18 @@ def sql_query_enrichment_udf(
     cache_ttl_s: float = 3600.0,
     describes: str = "EVERY_ROW",
 ) -> DataFrame:
-    """Per-event cached query mode — the semantics-preserving twin of the
+    """Per-event cached query — the semantics-preserving twin of the
     broadcast join (SqlQueryEnrichment.scala:156-265 + Rdbms.scala:31-66
     + CachingEvaluator.scala:27-127).
 
     ``query_fn({placeholder: value, ...}) -> list[dict]`` runs the user
     query (a DB-API connection closure in deployment, injectable in
-    tests), wrapped in a per-executor LRU+TTL cache keyed on the bound
-    placeholder values — request volume is bounded by key cardinality ×
-    executors, not event count. Rows with any NULL placeholder skip the
-    lookup (SqlQueryEnrichment.scala:232-235). Row-count contracts are
-    enforced per event; ``describes`` = EVERY_ROW (one context per result
-    row) or ALL_ROWS (single context wrapping the row array), mirroring
+    tests) through ``cached_lookup``, keyed on the bound placeholder
+    values — request volume is bounded by key cardinality × workers,
+    not event count. Rows with any NULL placeholder skip the lookup
+    (SqlQueryEnrichment.scala:232-235). Row-count contracts are enforced
+    per event; ``describes`` = EVERY_ROW (one context per result row) or
+    ALL_ROWS (single context wrapping the row array), mirroring
     sqlquery/Output.scala:106-139."""
     df = ensure_enrich_errors(ensure_derived(df))
     json_cols = {f"_sqlin_{n}": _json_input_col(s)
@@ -215,24 +218,12 @@ def sql_query_enrichment_udf(
     in_cols = [F.col(f"_sqlin_{n}") if n in conf.json_inputs else F.col(n)
                for n in names]
     expected = conf.expected_rows
-    holder: dict = {}
 
-    @F.udf(returnType=_SQL_UDF_RESULT)
     def run(*values):
-        if any(v is None for v in values):
-            return (None, None)  # skip — missing placeholder
-        if "cache" not in holder:
-            holder["cache"] = TtlCache(cache_size, cache_ttl_s)
-
-        def go():
-            try:
-                return (query_fn(dict(zip(names, values))), None)
-            except Exception as e:  # noqa: BLE001 — never throw from the pipeline
-                return (None, f"sql_query\t{type(e).__name__}: {e}\t")
-
-        rows, err = holder["cache"].get_or(tuple(values), go)
-        if err is not None:
-            return (None, err)
+        try:
+            rows = query_fn(dict(zip(names, values)))
+        except Exception as e:  # noqa: BLE001 — never throw from the pipeline
+            return (None, f"sql_query\t{type(e).__name__}: {e}\t")
         n = len(rows)
         if expected == "EXACTLY_ONE" and n != 1:
             return (None, f"sql_query\tExpected EXACTLY_ONE row(s), got {n}\t")
@@ -246,7 +237,13 @@ def sql_query_enrichment_udf(
             return ([json.dumps(rows, separators=(",", ":"))], None)
         return ([json.dumps(r, separators=(",", ":")) for r in rows], None)
 
-    df = df.withColumn("_sqlq", run(*in_cols))
+    all_present = F.lit(True)
+    for c in in_cols:
+        all_present = all_present & c.isNotNull()
+    df = df.withColumn("_sqlq", cached_lookup(
+        run, _SQL_UDF_RESULT, in_cols, when=all_present,
+        cache_size=cache_size, cache_ttl_s=cache_ttl_s,
+    ))
     new_ctxs = F.transform(
         F.col("_sqlq.ctxs"),
         lambda d: F.struct(F.lit(conf.context_schema).alias("schema"), d.alias("data")),
@@ -264,11 +261,12 @@ def sql_query_enrichment_udf(
 
 
 # ---------------------------------------------------------------------------
-# per-executor LRU+TTL cache (CachingEvaluator.scala:27-127)
+# per-worker LRU+TTL cache (CachingEvaluator.scala:27-127) and the one
+# execution path of every service lookup
 
 
 class TtlCache:
-    """Small LRU+TTL dict — per-executor singleton inside UDF closures."""
+    """Small LRU+TTL dict — one per lookup per Python worker."""
 
     def __init__(self, size: int = 1000, ttl_s: float = 3600.0, clock=time.monotonic):
         self.size, self.ttl, self._clock = size, ttl_s, clock
@@ -287,8 +285,65 @@ class TtlCache:
         return value
 
 
+# Python-worker state of the most recently used lookups, by plan-time
+# token. A UDF's closure is unpickled afresh for every task, so state
+# that must outlive a task lives here, in the worker's module globals.
+_WORKER_STATE: dict[str, Any] = {}
+_MAX_WORKER_STATE = 64
+
+
+def worker_state(token: str, make: Callable[[], Any]) -> Any:
+    """This worker's state for ``token``, made by ``make()`` on first use.
+    Only the ``_MAX_WORKER_STATE`` most recently used tokens are kept."""
+    state = _WORKER_STATE.pop(token) if token in _WORKER_STATE else make()
+    _WORKER_STATE[token] = state
+    if len(_WORKER_STATE) > _MAX_WORKER_STATE:
+        _WORKER_STATE.pop(next(iter(_WORKER_STATE)))
+    return state
+
+
+def cached_lookup(
+    call: Callable[..., Any],
+    return_type: T.DataType,
+    keys: list[Column],
+    args: list[Column] = (),
+    when: Column | None = None,
+    cache_size: int = 1000,
+    cache_ttl_s: float = 3600.0,
+) -> Column:
+    """A service lookup as one Column: an Arrow-batched UDF over the
+    Spark-computed ``keys`` that runs ``call(*args)`` (``args`` default
+    to ``keys``) once per distinct key tuple per Python worker and
+    serves repeats from that worker's TtlCache. A key's first row seen
+    by a worker supplies the ``args``.
+
+    A row whose keys are all NULL gets NULL and makes no call. ``when``
+    masks every input first, so a row it excludes has all-NULL keys and
+    makes no call either. ``call`` returns a Python value of ``return_type`` (a tuple
+    for a struct)."""
+    token = uuid.uuid4().hex
+    arrow_type = to_arrow_type(return_type)
+    n_keys = len(keys)
+    inputs = [*keys, *args]
+    if when is not None:
+        inputs = [F.when(when, c) for c in inputs]
+
+    def run(*arrays: pa.Array) -> pa.Array:
+        cache = worker_state(token, lambda: TtlCache(cache_size, cache_ttl_s))
+        out = []
+        for row in zip(*(a.to_pylist() for a in arrays)):
+            key = row[:n_keys]
+            if all(v is None for v in key):
+                out.append(None)
+            else:
+                out.append(cache.get_or(key, lambda: call(*(row[n_keys:] or key))))
+        return pa.array(out, type=arrow_type)
+
+    return F.arrow_udf(run, return_type)(*inputs)
+
+
 # ---------------------------------------------------------------------------
-# §2.5 #23 — API request enrichment, cached-UDF mode
+# §2.5 #23 — API request enrichment
 
 
 @dataclass
@@ -304,10 +359,6 @@ class ApiRequestConf:
     # for tests and for auth/POST variants.
     transport: Callable[[str], str] | None = None
     timeout_s: float = 5.0
-    # "broadcast" (default, the 100 TB path): distinct rendered URLs →
-    # one fetch per key on executors → broadcast join back. "per_event":
-    # the reference's per-event cached-UDF semantics (CachingEvaluator).
-    mode: str = "broadcast"
 
 
 def _default_transport(timeout_s: float):
@@ -372,76 +423,18 @@ def _api_fetch_one(fetch, json_path, url):
 def api_request_enrichment(df: DataFrame, conf: ApiRequestConf) -> DataFrame:
     """Templated HTTP lookup (apirequest/ApiRequestEnrichment.scala:127-230).
 
-    mode="broadcast" (default, the 100 TB path): render the URL as a
-    native column, take DISTINCT non-null URLs, fetch each ONCE on the
-    executors (mapInPandas over the key table), broadcast-join the
-    responses back. Request volume = global key cardinality; the event
-    stream itself sees zero Python and no shuffle (one extra pruned pass
-    over the input to build the key table).
-
-    mode="per_event": the reference's per-event cached-UDF semantics —
-    a per-executor LRU+TTL cache keyed on the rendered URL, request
-    volume bounded by key cardinality × executors. Semantics-parity mode
-    for configs that rely on per-event call ordering / TTL behavior.
-
-    Both modes skip rows where any input is NULL (all placeholders must
-    be filled)."""
+    The URL is rendered as a native column (placeholder values as
+    Spark's ``cast("string")`` renders them) and is the cache key of a
+    ``cached_lookup``: one fetch per distinct URL per worker. A row with
+    any NULL input has a NULL URL and skips the request."""
     df = ensure_enrich_errors(ensure_derived(df))
-    transport = conf.transport
-    template, json_path = conf.url_template, conf.json_path
-    size, ttl, timeout = conf.cache_size, conf.cache_ttl_s, conf.timeout_s
-
-    if conf.mode == "broadcast":
-        url_col = _render_url_column(template, conf.inputs)
-        keys = (
-            df.select(url_col.alias("_api_url"))
-            .where(F.col("_api_url").isNotNull())
-            .distinct()
-        )
-
-        def fetch_batches(batches):
-            fetch = transport or _default_transport(timeout)
-            cache = TtlCache(size, ttl)
-            for pdf in batches:
-                res = [cache.get_or(u, lambda u=u: _api_fetch_one(fetch, json_path, u))
-                       for u in pdf["_api_url"]]
-                yield pd.DataFrame({
-                    "_api_url": pdf["_api_url"],
-                    "_api_data": [r[0] for r in res],
-                    "_api_error": [r[1] for r in res],
-                })
-
-        lookup = keys.mapInPandas(
-            fetch_batches, "_api_url string, _api_data string, _api_error string"
-        )
-        df = (
-            df.withColumn("_api_url", url_col)
-            .join(F.broadcast(lookup), on="_api_url", how="left")
-            .withColumn("_api", F.struct(
-                F.col("_api_data").alias("data"),
-                F.col("_api_error").alias("error"),
-            ))
-            .drop("_api_url", "_api_data", "_api_error")
-        )
-    else:
-        holder: dict = {}
-
-        @F.udf(returnType=_API_RESULT)
-        def call(*values):
-            if any(v is None for v in values):
-                return (None, None)  # skip — missing placeholder
-            if "cache" not in holder:
-                holder["cache"] = TtlCache(size, ttl)
-                holder["fetch"] = transport or _default_transport(timeout)
-            url = template
-            for name, v in zip(conf.inputs, values):
-                url = url.replace("{{%s}}" % name, str(v))
-            return holder["cache"].get_or(
-                url, lambda: _api_fetch_one(holder["fetch"], json_path, url)
-            )
-
-        res = call(*[F.col(c) for c in conf.inputs])
-        df = df.withColumn("_api", res)
+    fetch = conf.transport or _default_transport(conf.timeout_s)
+    json_path = conf.json_path
+    df = df.withColumn("_api", cached_lookup(
+        lambda url: _api_fetch_one(fetch, json_path, url), _API_RESULT,
+        [_render_url_column(conf.url_template, conf.inputs)],
+        cache_size=conf.cache_size, cache_ttl_s=conf.cache_ttl_s,
+    ))
     ctx = F.struct(
         F.lit(conf.context_schema).alias("schema"),
         F.col("_api.data").alias("data"),
@@ -471,10 +464,6 @@ class WeatherConf:
     # provider(lat, lon, epoch_s) -> dict (weather doc); None = deterministic
     # stub (the container has no network; the real OWM client drops in here)
     provider: Callable[[float, float, int], dict] | None = None
-    # "broadcast" (default): distinct (rounded-coords, day) buckets →
-    # one provider call per bucket → broadcast join back. "per_event":
-    # per-executor cached UDF (reference LRU+TTL semantics).
-    mode: str = "broadcast"
 
 
 def _stub_weather(lat: float, lon: float, epoch_s: int) -> dict:
@@ -491,91 +480,32 @@ def _stub_weather(lat: float, lon: float, epoch_s: int) -> dict:
 
 
 def weather_context(df: DataFrame, conf: WeatherConf) -> DataFrame:
-    """Weather by (geo_latitude, geo_longitude, derived_tstamp), bucketed
+    """Weather by (geo_latitude, geo_longitude, derived_tstamp), cached
     per (coords rounded to 0.1°, day) like the reference's LRU+TTL cache.
 
-    mode="broadcast" (default, the 100 TB path): group the events'
-    distinct (rounded-coords, day) buckets, call the provider ONCE per
-    bucket on the executors with a deterministic representative (the
-    bucket-min coords/timestamp — any member is equally valid, that is
-    what a cache-key approximation means), broadcast-join the documents
-    back. Provider-call volume = bucket cardinality, globally.
-
-    mode="per_event": per-executor cached UDF — the provider sees the
-    first-arriving event's full-precision coords per bucket, exactly the
-    reference's cache behavior."""
+    Spark computes the bucket key; the provider sees the full-precision
+    coords and timestamp of the first event of each bucket a worker
+    sees, exactly the reference's cache behavior. A row missing any of
+    the three skips the call."""
     df = ensure_derived(df)
     provider = conf.provider or _stub_weather
-    size, ttl = conf.cache_size, conf.cache_ttl_s
 
-    if conf.mode == "broadcast":
-        epoch = F.unix_timestamp("derived_tstamp")
-        keys = (
-            df.select(
-                F.round(F.col("geo_latitude").cast("double"), 1).alias("_w_lat1"),
-                F.round(F.col("geo_longitude").cast("double"), 1).alias("_w_lon1"),
-                F.floor(epoch / 86400).alias("_w_day"),
-                F.col("geo_latitude").alias("_lat"),
-                F.col("geo_longitude").alias("_lon"),
-                epoch.alias("_epoch"),
-            )
-            .where(F.col("_w_lat1").isNotNull() & F.col("_w_lon1").isNotNull()
-                   & F.col("_w_day").isNotNull())
-            .groupBy("_w_lat1", "_w_lon1", "_w_day")
-            .agg(F.min("_lat").alias("_lat"), F.min("_lon").alias("_lon"),
-                 F.min("_epoch").alias("_epoch"))
-        )
+    def fetch(lat, lon, epoch_s):
+        try:
+            return json.dumps(provider(lat, lon, epoch_s), separators=(",", ":"))
+        except Exception:  # noqa: BLE001
+            return None
 
-        def fetch_batches(batches):
-            for pdf in batches:
-                docs = []
-                for lat, lon, ep in zip(pdf["_lat"], pdf["_lon"], pdf["_epoch"]):
-                    try:
-                        docs.append(json.dumps(provider(float(lat), float(lon), int(ep)),
-                                               separators=(",", ":")))
-                    except Exception:  # noqa: BLE001
-                        docs.append(None)
-                yield pd.DataFrame({
-                    "_w_lat1": pdf["_w_lat1"], "_w_lon1": pdf["_w_lon1"],
-                    "_w_day": pdf["_w_day"], "_weather": docs,
-                })
-
-        lookup = keys.mapInPandas(
-            fetch_batches,
-            "_w_lat1 double, _w_lon1 double, _w_day bigint, _weather string",
-        )
-        df = (
-            df.withColumns({
-                "_w_lat1": F.round(F.col("geo_latitude").cast("double"), 1),
-                "_w_lon1": F.round(F.col("geo_longitude").cast("double"), 1),
-                "_w_day": F.floor(F.unix_timestamp("derived_tstamp") / 86400),
-            })
-            .join(F.broadcast(lookup), on=["_w_lat1", "_w_lon1", "_w_day"], how="left")
-            .drop("_w_lat1", "_w_lon1", "_w_day")
-        )
-    else:
-        holder: dict = {}
-
-        @F.udf(returnType=T.StringType())
-        def fetch(lat, lon, epoch_s):
-            if lat is None or lon is None or epoch_s is None:
-                return None
-            if "cache" not in holder:
-                holder["cache"] = TtlCache(size, ttl)
-            key = (round(lat, 1), round(lon, 1), epoch_s // 86400)
-
-            def go():
-                try:
-                    return json.dumps(provider(lat, lon, int(epoch_s)),
-                                      separators=(",", ":"))
-                except Exception:  # noqa: BLE001
-                    return None
-
-            return holder["cache"].get_or(key, go)
-
-        data = fetch(F.col("geo_latitude"), F.col("geo_longitude"),
-                     F.unix_timestamp("derived_tstamp"))
-        df = df.withColumn("_weather", data)
+    lat = F.col("geo_latitude").cast("double")
+    lon = F.col("geo_longitude").cast("double")
+    epoch = F.unix_timestamp("derived_tstamp")
+    df = df.withColumn("_weather", cached_lookup(
+        fetch, T.StringType(),
+        [F.round(lat, 1), F.round(lon, 1), F.floor(epoch / 86400)],
+        args=[lat, lon, epoch],
+        when=lat.isNotNull() & lon.isNotNull() & epoch.isNotNull(),
+        cache_size=conf.cache_size, cache_ttl_s=conf.cache_ttl_s,
+    ))
     ctx = F.struct(F.lit(conf.context_schema).alias("schema"), F.col("_weather").alias("data"))
     return df.withColumn(
         DERIVED_COL,

@@ -12,19 +12,24 @@ ruleset covering the major browser/OS/device families; exotic UA strings
 may classify differently than the Java libs. Users who need EXACT
 ua-parser semantics supply the public uap-core regexes.yaml and use
 ``ua_parser_context_rules`` (bottom of this module) — the real
-first-match/$-substitution algorithm over distinct useragents.
+first-match/$-substitution algorithm, cached per useragent.
 
 The default path is JVM-side regexp — no Python in the hot path; at
 100 TB the UA classification is part of the same codegen projection as
 the rest of the chain. The rules path bounds its Python cost by UA
-cardinality via the distinct→classify→broadcast-join shape.
+cardinality per worker with a per-useragent cache
+(``lookups.cached_lookup``).
 """
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .lookups import cached_lookup, worker_state
 from .sql_enrichments import DERIVED_COL, ensure_derived
 
 # ordered (family, detect_regex, version_regex) — first match wins
@@ -216,9 +221,8 @@ def yauaa_context(df: DataFrame) -> DataFrame:
     YAUAA-format YAML ruleset: operators/yauaa_rules.py implements the
     matcher file format (require/variable/extract/confidence/lookups
     with a documented path-expression subset) over a simplified agent
-    tree, classifying DISTINCT useragents and broadcast-joining back —
-    exotic UA strings then classify exactly as the rules say, not as
-    this module's built-in regexes guess."""
+    tree, cached per useragent — exotic UA strings then classify exactly
+    as the rules say, not as this module's built-in regexes guess."""
     df = ensure_derived(df)
     df, cols = _ua_cols(df)
     ua = F.col("useragent")
@@ -502,10 +506,9 @@ def iab_spiders_robots(df: DataFrame, bot_patterns: list[str]) -> DataFrame:
 # supplies the public uap-core regexes.yaml, `ua_parser_context_rules`
 # replays the REAL ua-parser algorithm (first matching regex per
 # category, $-substituted replacements — UaParserEnrichment.scala:96-190
-# binds the Java uap library over the same file). Scale shape: classify
-# DISTINCT useragents with an Arrow-batched walk, then broadcast-join
-# back — the regex walk cost is bounded by UA cardinality, not event
-# count (SURVEY §4's distinct-key rewrite).
+# binds the Java uap library over the same file). Scale shape: an
+# Arrow-batched walk behind a per-worker per-useragent cache — the regex
+# walk cost is bounded by UA cardinality, not event count.
 
 
 def load_uap_rules(path: str) -> dict:
@@ -587,58 +590,31 @@ def _uap_classify_one(ua: str, compiled) -> tuple:
     return fam, v1, v2, v3, os_fam, os_v1, os_v2, dev_fam
 
 
-_UAP_SCHEMA = ("useragent STRING, uap_family STRING, uap_v1 STRING, "
-               "uap_v2 STRING, uap_v3 STRING, uap_os STRING, "
-               "uap_os_v1 STRING, uap_os_v2 STRING, uap_device STRING")
+# ua_parser_context JSON keys, in _uap_classify_one's order
+_UAP_FIELDS = ("useragentFamily", "useragentMajor", "useragentMinor",
+               "useragentPatch", "osFamily", "osMajor", "osMinor", "deviceFamily")
 
 
 def ua_parser_context_rules(df: DataFrame, rules: dict) -> DataFrame:
     """ua_parser_context with exact uap-core semantics from a loaded
-    regexes.yaml. Classifies DISTINCT useragents (Arrow-batched walk),
-    broadcast-joins the result back, and attaches the same
-    ua_parser_context derived context as the native path."""
-    import pandas as pd
-
-    from .sql_enrichments import DERIVED_COL, ensure_derived
-
+    regexes.yaml. Classifies each useragent once per worker
+    (``lookups.cached_lookup``) and attaches the same ua_parser_context
+    derived context as the native path."""
     df = ensure_derived(df)
+    token = uuid.uuid4().hex
 
-    def classify(batches):
-        compiled = _uap_compile(rules)
-        for pdf in batches:
-            rows = [
-                (ua, *_uap_classify_one(ua, compiled))
-                for ua in pdf["useragent"] if ua is not None
-            ]
-            yield pd.DataFrame(
-                rows, columns=["useragent", "uap_family", "uap_v1", "uap_v2",
-                               "uap_v3", "uap_os", "uap_os_v1", "uap_os_v2",
-                               "uap_device"])
+    def classify(ua):
+        return _uap_classify_one(ua, worker_state(token, lambda: _uap_compile(rules)))
 
-    distinct = df.select("useragent").where(
-        F.col("useragent").isNotNull()).distinct()
-    classified = distinct.mapInPandas(classify, _UAP_SCHEMA)
-    joined = df.join(F.broadcast(classified), "useragent", "left")
-
-    data = F.to_json(F.struct(
-        F.col("uap_family").alias("useragentFamily"),
-        F.col("uap_v1").alias("useragentMajor"),
-        F.col("uap_v2").alias("useragentMinor"),
-        F.col("uap_v3").alias("useragentPatch"),
-        F.col("uap_os").alias("osFamily"),
-        F.col("uap_os_v1").alias("osMajor"),
-        F.col("uap_os_v2").alias("osMinor"),
-        F.col("uap_device").alias("deviceFamily"),
-    ))
+    uap = cached_lookup(classify, T.StructType(
+        [T.StructField(f, T.StringType()) for f in _UAP_FIELDS]), [F.col("useragent")])
     ctx = F.struct(
         F.lit("iglu:com.snowplowanalytics.snowplow/ua_parser_context/jsonschema/1-0-0").alias("schema"),
-        data.alias("data"),
+        F.to_json(uap).alias("data"),
     )
-    out = joined.withColumn(
+    return df.withColumn(
         DERIVED_COL,
         F.when(F.col("useragent").isNotNull(),
                F.array_append(F.col(DERIVED_COL), ctx))
         .otherwise(F.col(DERIVED_COL)),
     )
-    return out.drop("uap_family", "uap_v1", "uap_v2", "uap_v3",
-                    "uap_os", "uap_os_v1", "uap_os_v2", "uap_device")

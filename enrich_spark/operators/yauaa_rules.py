@@ -9,9 +9,10 @@ across all matchers wins, backed by `lookup` maps.
 
 This module re-implements that rule format over a simplified UA parse
 tree so users can bring real YAUAA-style YAML rule files — the same
-BYO-database pattern as the uap-core engine (ua.py:589). Supported
-subset (documented fidelity bound, everything else is rejected loudly at
-load time rather than silently misread):
+BYO-database pattern as the uap-core engine
+(ua.ua_parser_context_rules). Supported subset (documented fidelity
+bound, everything else is rejected loudly at load time rather than
+silently misread):
 
 - tree: ``agent`` → ``product`` (name, ``version`` list, ``comments``)
   → ``entry`` (text); top-level bare words parse as version-less
@@ -461,7 +462,7 @@ def evaluate_matchers(ua: str, rules: dict) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# the Spark operator (distinct-UA walk + broadcast join, ua.py pattern)
+# the Spark operator (per-useragent cached walk, ua.py pattern)
 
 
 _YAUAA_FIELD_MAP = {
@@ -480,55 +481,34 @@ _YAUAA_FIELD_MAP = {
     "AgentVersion": "agentVersion",
 }
 
-_RULES_SCHEMA = ("useragent STRING, " + ", ".join(
-    f"_y_{k} STRING" for k in _YAUAA_FIELD_MAP))
-
 
 def yauaa_context_rules(df: DataFrame, rules: dict) -> DataFrame:
-    """YAUAA context from a loaded YAUAA-format ruleset: classify
-    DISTINCT useragents with an Arrow-batched matcher walk, broadcast
-    the result back, and attach the yauaa_context derived context
-    (fields the rules don't set default to Unknown/??, YAUAA's own
-    defaults)."""
-    import pandas as pd
+    """YAUAA context from a loaded YAUAA-format ruleset: run the matcher
+    walk once per useragent per worker (``lookups.cached_lookup``) and
+    attach the yauaa_context derived context (fields the rules don't set
+    default to Unknown/??, YAUAA's own defaults)."""
+    from pyspark.sql import types as T
 
+    from .lookups import cached_lookup
     from .sql_enrichments import DERIVED_COL, ensure_derived
 
     df = ensure_derived(df)
-    fields = list(_YAUAA_FIELD_MAP)
+    # YAUAA defaults: Unknown for classes/names, ?? for versions
+    defaults = {f: "??" if f.endswith("Version") else "Unknown" for f in _YAUAA_FIELD_MAP}
 
-    def classify(batches):
-        for pdf in batches:
-            rows = []
-            for ua in pdf["useragent"]:
-                if ua is None:
-                    continue
-                got = evaluate_matchers(ua, rules)
-                rows.append((ua, *[got.get(f) for f in fields]))
-            yield pd.DataFrame(
-                rows, columns=["useragent"] + [f"_y_{f}" for f in fields])
+    def classify(ua):
+        got = evaluate_matchers(ua, rules)
+        return tuple(got[f] if got.get(f) is not None else d for f, d in defaults.items())
 
-    distinct = df.select("useragent").where(
-        F.col("useragent").isNotNull()).distinct()
-    classified = distinct.mapInPandas(classify, _RULES_SCHEMA)
-    joined = df.join(F.broadcast(classified), "useragent", "left")
-
-    def dflt(field):
-        # YAUAA defaults: Unknown for classes/names, ?? for versions
-        return "??" if field.endswith("Version") else "Unknown"
-
-    data = F.to_json(F.struct(*[
-        F.coalesce(F.col(f"_y_{f}"), F.lit(dflt(f))).alias(json_key)
-        for f, json_key in _YAUAA_FIELD_MAP.items()
-    ]))
+    ctx_type = T.StructType(
+        [T.StructField(k, T.StringType()) for k in _YAUAA_FIELD_MAP.values()])
     ctx = F.struct(
         F.lit("iglu:nl.basjes/yauaa_context/jsonschema/1-0-4").alias("schema"),
-        data.alias("data"),
+        F.to_json(cached_lookup(classify, ctx_type, [F.col("useragent")])).alias("data"),
     )
-    out = joined.withColumn(
+    return df.withColumn(
         DERIVED_COL,
         F.when(F.col("useragent").isNotNull(),
                F.array_append(F.col(DERIVED_COL), ctx))
         .otherwise(F.col(DERIVED_COL)),
     )
-    return out.drop(*[f"_y_{f}" for f in fields])

@@ -202,8 +202,8 @@ def test_yauaa_context(spark):
 
 def test_ua_parser_rules_mode(spark, tmp_path):
     """Exact uap-core semantics from a regexes.yaml: first-match wins,
-    $-substituted replacements, per-category walks, distinct-UA
-    broadcast join (UaParserEnrichment.scala:96-190 parity surface)."""
+    $-substituted replacements, per-category walks, cached per
+    useragent (UaParserEnrichment.scala:96-190 parity surface)."""
     rules_yaml = """
 user_agent_parsers:
   - regex: '(Edg)e?/(\\d+)\\.(\\d+)'
@@ -342,7 +342,7 @@ config:
             text="config:\n- matcher:\n    extract:\n"
                  "    - 'AgentName : 1 : BackToFull[agent.product.name]'\n")
 
-    # Spark operator: distinct-UA walk + broadcast join + defaults
+    # Spark operator: per-useragent cached walk + defaults
     df = spark.createDataFrame(
         [(1, chrome), (2, "UnknownBot/1.0"), (3, None)],
         "id INT, useragent STRING")
@@ -550,7 +550,7 @@ def test_sql_query_udf_mode_contracts(spark):
 
 
 def test_api_request_cache_bounds_transport_calls(spark):
-    # per-executor cache: N events with K distinct keys → exactly K
+    # per-worker cache: N events with K distinct keys → exactly K
     # transport calls per worker. One partition = one worker, and the
     # call-sequence number embedded in the response proves reuse.
     calls = [0]
@@ -575,7 +575,7 @@ def test_api_request_cache_bounds_transport_calls(spark):
     assert all(len(v) == 1 for v in by_key.values())
 
 
-def test_api_request_broadcast_matches_per_event(spark):
+def test_api_request_skips_null_inputs_and_records_failures(spark):
     def transport(url):
         k = url.rsplit("/", 1)[-1]
         if k == "7":
@@ -584,53 +584,89 @@ def test_api_request_broadcast_matches_per_event(spark):
 
     rows = [(i % 9 if i % 5 else None,) for i in range(40)]
     events = _base_df(spark, rows, "user_id INT")
+    conf = ApiRequestConf(
+        url_template="http://svc/{{user_id}}", inputs=["user_id"],
+        json_path="$.plan", transport=transport,
+    )
+    got = api_request_enrichment(events, conf).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        if r.user_id is None:            # missing placeholder: skipped
+            assert r._derived == [] and r._enrich_errors == []
+        elif r.user_id == 7:             # service failure recorded
+            assert r._derived == []
+            assert [e.split("\t")[0] for e in r._enrich_errors] == ["api_request"]
+            assert "upstream 500" in r._enrich_errors[0]
+        else:                            # INT renders without a ".0"
+            assert [tuple(c) for c in r._derived] == [
+                ("iglu:com.acme/api_context/jsonschema/1-0-0",
+                 json.dumps({"name": f"p-{r.user_id}"}, separators=(",", ":")))]
+            assert r._enrich_errors == []
 
-    def run(mode):
-        conf = ApiRequestConf(
-            url_template="http://svc/{{user_id}}", inputs=["user_id"],
-            json_path="$.plan", transport=transport, mode=mode,
-        )
-        got = api_request_enrichment(events, conf).collect()
-        return sorted(
-            (r.user_id if r.user_id is not None else -1,
-             tuple(tuple(c) for c in r._derived), tuple(r._enrich_errors))
-            for r in got
-        )
 
-    assert run("broadcast") == run("per_event")
+def test_api_request_url_renders_like_spark_cast(spark):
+    # placeholders render as Spark's cast("string") renders them:
+    # true (not Python's True), 1.0E10 (not 10000000000.0), and the
+    # session-zone timestamp text
+    events = _base_df(
+        spark,
+        [(True, 1.0e10, datetime.datetime(2026, 1, 1, 10, 0)),
+         (False, 0.5, datetime.datetime(2026, 1, 2, 0, 0, 1))],
+        "flag BOOLEAN, score DOUBLE, ts TIMESTAMP",
+    )
+    conf = ApiRequestConf(
+        url_template="http://svc/{{flag}}/{{score}}/{{ts}}",
+        inputs=["flag", "score", "ts"],
+        transport=lambda url: json.dumps({"url": url}),
+    )
+    out = api_request_enrichment(events, conf).select(
+        F.col("_derived")[0].data.alias("data"),
+        F.concat(F.lit("http://svc/"), F.col("flag").cast("string"),
+                 F.lit("/"), F.col("score").cast("string"),
+                 F.lit("/"), F.col("ts").cast("string")).alias("spark_url"),
+    ).collect()
+    urls = sorted(json.loads(r.data)["url"] for r in out)
+    assert urls == sorted(r.spark_url for r in out)
+    assert urls == ["http://svc/false/0.5/2026-01-02 00:00:01",
+                    "http://svc/true/1.0E10/2026-01-01 10:00:00"]
 
 
-def test_weather_broadcast_matches_per_event(spark):
+def test_weather_buckets_by_rounded_coords_and_day(spark):
     import datetime
 
     rows = [
         (51.5, -0.1, datetime.datetime(2026, 1, 1, 10, 0)),
-        (51.5, -0.1, datetime.datetime(2026, 1, 1, 22, 0)),   # same bucket
+        (51.52, -0.1, datetime.datetime(2026, 1, 1, 22, 0)),  # same bucket
         (51.5, -0.1, datetime.datetime(2026, 1, 2, 10, 0)),   # next day
         (40.7, -74.0, datetime.datetime(2026, 1, 1, 10, 0)),
         (None, -74.0, datetime.datetime(2026, 1, 1, 10, 0)),  # null lat → skip
     ]
+    # one partition = one worker: the first event of a bucket is row order
     df = spark.createDataFrame(
         rows, "geo_latitude DOUBLE, geo_longitude DOUBLE, derived_tstamp TIMESTAMP"
-    )
+    ).coalesce(1)
 
-    def run(mode):
-        out = weather_context(df, WeatherConf(mode=mode)).collect()
-        return sorted(
-            (r.geo_latitude if r.geo_latitude is not None else -999.0,
-             r.derived_tstamp.isoformat(),
-             tuple(tuple(c) for c in r._derived))
-            for r in out
-        )
+    def provider(lat, lon, epoch_s):
+        return {"lat": lat, "lon": lon, "epoch": epoch_s}
 
-    b, p = run("broadcast"), run("per_event")
-    assert b == p
-    # null-coord row has no weather context in either mode
-    assert all(len(x[2]) == 0 for x in b if x[0] == -999.0)
-    assert all(len(x[2]) == 1 for x in b if x[0] != -999.0)
+    out = weather_context(df, WeatherConf(provider=provider)).collect()
+    got = [(r.geo_latitude, r.derived_tstamp,
+            [json.loads(c.data) for c in r._derived]) for r in out]
+    # null-coord row has no weather context, every other row has one
+    assert all(len(d) == 0 for lat, _, d in got if lat is None)
+    assert all(len(d) == 1 for lat, _, d in got if lat is not None)
+    docs = [d[0] for lat, _, d in got if lat is not None]
+    first = {"lat": 51.5, "lon": -0.1,
+             "epoch": int(datetime.datetime(2026, 1, 1, 10, 0,
+                                            tzinfo=datetime.timezone.utc).timestamp())}
+    # same bucket: the second row reuses the first row's document
+    assert docs[0] == docs[1] == first
+    # next day and another place are buckets of their own
+    assert docs[2]["epoch"] == first["epoch"] + 86400
+    assert docs[3]["lat"] == 40.7
 
 
-def test_identity_broadcast_matches_per_event(spark):
+def test_identity_stitches_eligible_tuples(spark):
     from enrich_spark.operators.identity import (
         FilterRule, IdentityConf, add_identity_contexts,
     )
@@ -653,28 +689,53 @@ def test_identity_broadcast_matches_per_event(spark):
     df = spark.createDataFrame(
         rows, "domain_userid STRING, network_userid STRING, platform STRING"
     )
-    conf_kw = dict(
+    conf = IdentityConf(
         transport=transport,
         filters=[FilterRule("platform", "in", ["web"])],
         max_retries=1,
     )
-
-    def run(mode):
-        out = add_identity_contexts(df, IdentityConf(mode=mode, **conf_kw)).collect()
-        return sorted(
-            (r.domain_userid or "", r.network_userid or "", r.platform,
-             tuple(tuple(c) for c in r._derived),
-             (r._identity_error or "").split("\t")[0])
-            for r in out
-        )
-
-    b, p = run("broadcast"), run("per_event")
-    assert b == p
-    by = {(x[0], x[1], x[2]): x for x in b}
+    out = sorted(
+        (r.domain_userid or "", r.network_userid or "", r.platform,
+         tuple(tuple(c) for c in r._derived),
+         (r._identity_error or "").split("\t")[0])
+        for r in add_identity_contexts(df, conf).collect()
+    )
+    by = {(x[0], x[1], x[2]): x for x in out}
     assert len(by[("du-1", "nu-1", "web")][3]) == 1      # stitched
+    assert len(by[("du-2", "", "web")][3]) == 1          # partial tuple stitched
     assert len(by[("du-3", "nu-3", "srv")][3]) == 0      # filtered: no ctx
     assert len(by[("", "", "web")][3]) == 0              # all-null: no ctx
     assert by[("bad-x", "nu-9", "web")][4] == "identity"  # failure recorded
+    assert [x[4] for x in out].count("") == 5
+
+
+def test_identity_filtered_events_never_reach_the_service(spark, tmp_path):
+    from enrich_spark.operators.identity import (
+        FilterRule, IdentityConf, add_identity_contexts,
+    )
+
+    log = str(tmp_path / "payloads.jsonl")
+
+    def transport(payload):
+        # runs in the Python workers: record every payload in a file
+        with open(log, "a") as f:
+            f.write(json.dumps(payload) + "\n")
+        return {"snowplowId": "id-" + str(payload.get("domain_userid"))}
+
+    df = spark.createDataFrame(
+        [("du-1", "nu-1", "web"), ("du-3", "nu-3", "srv"),
+         ("du-4", "nu-4", "web"), ("du-5", None, "mob")],
+        "domain_userid STRING, network_userid STRING, platform STRING",
+    )
+    conf = IdentityConf(transport=transport,
+                        filters=[FilterRule("platform", "in", ["web"])])
+    out = {r.domain_userid: r for r in add_identity_contexts(df, conf).collect()}
+    with open(log) as f:
+        sent = [json.loads(line) for line in f]
+    assert sorted(p["domain_userid"] for p in sent) == ["du-1", "du-4"]
+    assert "nu-3" not in {p["network_userid"] for p in sent}
+    assert len(out["du-1"]._derived) == 1 and len(out["du-4"]._derived) == 1
+    assert out["du-3"]._derived == [] and out["du-5"]._derived == []
 
 
 def test_yauaa_rules_widened_constructs(spark):

@@ -385,3 +385,25 @@ def test_pair_dedup_exchange_above_hamming_filter(spark):
         assert not any("Filter" in ln for ln in tree[:agg_idx]), final
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_lookup_chain_plan_contract(spark, tmp_path):
+    """The service lookups (api_request, weather, identity) stay inside
+    the one enrich projection: the source is scanned once, and no
+    aggregate, MapInPandas or row-at-a-time Python stage appears — no
+    collected key table joined back onto the events."""
+    from enrich_spark.streaming.runner import StreamConfig, run_batch
+    from tests.conftest import lookup_chain_config, lookup_chain_payloads
+
+    src = str(tmp_path / "in")
+    spark.createDataFrame(lookup_chain_payloads(16), "value BINARY").write.parquet(src)
+    *_, annotated = run_batch(spark, spark.read.parquet(src),
+                              StreamConfig(enrichments=lookup_chain_config()))
+    annotated.collect()
+    final = annotated._jdf.queryExecution().executedPlan().toString() \
+        .split("Initial Plan")[0]
+    scans = [ln for ln in final.splitlines() if "FileScan" in ln and src in ln]
+    assert len(scans) == 1, final
+    for node in ("HashAggregate", "MapInPandas", "BatchEvalPython"):
+        assert node not in final, f"{node} in the lookup chain:\n{final}"
+    assert "ArrowEvalPython" in final

@@ -55,14 +55,12 @@ SINGLE_PARTITION_AUDITED = {
 }
 
 # name -> why the BatchEvalPython is acceptable: fixture synthesis (a
-# production input arrives already encoded), or an operator whose
-# per-event external call is cached per key. Keep this list MINIMAL: a
-# dead entry here masks a real operator-path regression.
+# production input arrives already encoded). Every operator path is
+# Arrow-batched, service lookups included (lookups.cached_lookup). Keep
+# this list MINIMAL: a dead entry here masks a real operator-path
+# regression.
 BATCH_EVAL_AUDITED = {
     "thrift_loader": "fixture-side thrift ENCODE udf; decode is Arrow",
-    "sql_lookup_join": "json part: per-event cached SQL query mode "
-                       "(lookups.sql_query_enrichment_udf) — one external "
-                       "query per distinct key behind an LRU+TTL cache",
 }
 
 

@@ -253,6 +253,43 @@ def test_streaming_file_source_end_to_end(spark):
         assert meta[0].n_events == 1
 
 
+def test_lookup_chain_runs_as_one_streaming_plan(spark, tmp_path):
+    """With api_request, weather and identity on, enrich_batch applies
+    straight to a readStream source (no foreachBatch), and one
+    availableNow batch gives every payload exactly one outcome."""
+    from enrich_spark.streaming.runner import enrich_batch
+    from tests.conftest import lookup_chain_config, lookup_chain_payloads
+
+    src = str(tmp_path / "in")
+    rows = lookup_chain_payloads(12) + [(b"garbage-bytes",)]
+    spark.createDataFrame(rows, "value BINARY").write.parquet(src)
+    source = spark.readStream.schema("value BINARY").parquet(src)
+    good, bad, failed, _, _ = enrich_batch(
+        source, StreamConfig(enrichments=lookup_chain_config()), spark)
+    out = (
+        good.select(F.lit("good").alias("kind"), F.col("tsv").alias("line"))
+        .unionByName(bad.select(F.lit("bad").alias("kind"),
+                                F.col("bad_row").alias("line")))
+        .unionByName(failed.select(F.lit("failed").alias("kind"),
+                                   F.col("tsv").alias("line")))
+    )
+    q = (out.writeStream.format("memory").queryName("lookup_chain_out")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    try:
+        q.awaitTermination(600)
+    finally:
+        q.stop()
+    got = spark.table("lookup_chain_out").collect()
+    kinds = sorted(r.kind for r in got)
+    assert kinds == ["bad"] + ["good"] * 12
+    for r in got:
+        if r.kind == "good":
+            assert "iglu:com.acme/api_context" in r.line
+            assert "openweathermap" in r.line
+            assert "/identity/" in r.line
+
+
 def test_asset_manager_hash_gated_refresh():
     from enrich_spark.sources.assets import AssetManager, AssetSpec
 
